@@ -20,15 +20,6 @@ def ctas(spark: SparkSession, table: str, select_sql: str, **options: str) -> No
     spark.sql(f"CREATE TABLE {table} {using} AS {select_sql}")
 
 
-def create_external_table(
-    spark: SparkSession, table: str, path: str, fmt: str = "parquet"
-) -> None:
-    """CREATE EXTERNAL TABLE ... LOCATION (schema-on-read over files)."""
-    spark.sql(
-        f"CREATE TABLE {table} USING {fmt} LOCATION '{path}'"
-    )
-
-
 def drop_table(spark: SparkSession, table: str, if_exists: bool = True) -> None:
     spark.sql(f"DROP TABLE {'IF EXISTS ' if if_exists else ''}{table}")
 

@@ -26,7 +26,7 @@ from hive_2_3_2_spark.catalog import (
     note_view_override,
     register_star_schema,
 )
-from hive_2_3_2_spark.session import get_spark
+from hive_2_3_2_spark.session import get_spark, local_frame
 
 
 class HiveQLUnsupportedError(NotImplementedError):
@@ -1575,7 +1575,7 @@ class Engine:
             )
             if remembered is None or "UNABLE_TO_INFER_SCHEMA" not in str(exc):
                 raise
-            df = self.spark.createDataFrame([], remembered)
+            df = local_frame(self.spark, [], remembered)
         if name in self.table_schemas:
             df = self._apply_char_read_semantics(
                 df, self.table_schemas[name]
@@ -1621,7 +1621,7 @@ class Engine:
                 raise
             # empty directory tree (last partition dropped/exchanged) —
             # same metastore-parity fallback as register_table
-            return self.spark.createDataFrame([], remembered)
+            return local_frame(self.spark, [], remembered)
 
     #: Roots no mutating statement may write under. The shared test
     #: fixtures are the canonical member: their files are chmod-read-
@@ -1673,7 +1673,7 @@ class Engine:
         return name.split(".")[-1].lower() in self.table_paths
 
     def _rows_affected(self, n: int) -> DataFrame:
-        return self.spark.createDataFrame([(n,)], "rows_affected bigint")
+        return local_frame(self.spark, [(n,)], "rows_affected bigint")
 
     def _semantic_rewrites(self, query: str) -> str:
         """The value-semantics pre-dispatch rewrites. EVERY path that
@@ -1795,7 +1795,11 @@ class Engine:
         (rows_affected) DataFrame like a CLI row count. Each statement
         reads its target once (plus the pruned rewrite) — the affected
         count comes from the rewrite itself (observed metric, footer
-        row counts, or the shared discovery job), never a pre-scan."""
+        row counts, or the shared discovery job), never a pre-scan.
+        The rows_affected frame and every catalog answer (SET, SHOW,
+        DESCRIBE, EXPLAIN, stats-answered aggregates) are driver-local
+        (``session.local_frame``): collecting them launches no Spark
+        job, as Hive's FetchTask reads them inside the client."""
         from pyspark.sql import functions as F
 
         # CLI command processors run BEFORE variable substitution would
@@ -1952,7 +1956,8 @@ class Engine:
             # lock manager (like Hive under the no-op DummyTxnManager):
             # the lock list is ALWAYS empty; the typed columns mirror
             # ShowLocksResponseElement so tooling can still bind.
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [],
                 "lockid string, database string, tab_name string, "
                 "partition string, lock_state string, lock_type string, "
@@ -1964,12 +1969,14 @@ class Engine:
             # non-transactional engine -> structurally-correct empty
             # result, matching Hive without ACID enabled.
             if m.group(1).upper() == "TRANSACTIONS":
-                return self.spark.createDataFrame(
+                return local_frame(
+                    self.spark,
                     [],
                     "txnid bigint, state string, startedtime bigint, "
                     "lastheartbeattime bigint, user string, host string",
                 )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [],
                 "compactionid bigint, dbname string, tabname string, "
                 "partname string, type string, state string, "
@@ -2100,6 +2107,18 @@ class Engine:
             )
             self.register_table(key, path, parts)
             return self._rows_affected(affected)
+        m = _DELETE_STMT.match(query) or _UPDATE_STMT.match(query)
+        if m and self._is_catalog_table(m.group(1)):
+            # A session-catalog table (CREATE TABLE ... STORED AS
+            # PARQUET) is not transactional: Hive refuses UPDATE/DELETE
+            # on it at compile time (ErrorMsg 10297,
+            # ACID_OP_ON_NONACID_TABLE). Spark would raise a raw
+            # UNSUPPORTED_FEATURE.TABLE_OPERATION, and for UPDATE only
+            # at the first action.
+            raise HiveQLUnsupportedError(
+                f"Attempt to do update or delete on table {m.group(1)} "
+                "that does not use an AcidOutputFormat or is not bucketed"
+            )
         ine = _INSERT_IF_NOT_EXISTS.match(query)
         if ine and (
             self._dml_registered(ine.group(2))
@@ -2581,7 +2600,7 @@ class Engine:
         )
 
     def _conf_frame(self, rows: list[tuple[str, str | None]]) -> DataFrame:
-        return self.spark.createDataFrame(rows, "name string, value string")
+        return local_frame(self.spark, rows, "name string, value string")
 
     def _run_set(self, arg: str | None) -> DataFrame:
         """SET / SET -v / SET name / SET name=value — SetProcessor parity
@@ -2665,7 +2684,8 @@ class Engine:
             listed = self.resources[kind]
             if paths:
                 listed = [p for p in listed if p in paths]
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(p,) for p in listed], "resource string"
             )
         if not paths:
@@ -2686,7 +2706,8 @@ class Engine:
             for p in paths:
                 if p in self.resources[kind]:
                     self.resources[kind].remove(p)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(p,) for p in self.resources[kind]], "resource string"
         )
 
@@ -2802,7 +2823,8 @@ class Engine:
         }.get((mode or "").lower(), "formatted")
 
         def frame(lines: list[str]) -> DataFrame:
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(ln,) for ln in lines], "plan string"
             )
 
@@ -3065,7 +3087,7 @@ class Engine:
         path = location or os.path.join(
             scratch_root("ddl"), f"like_{tkey}"
         )
-        self.spark.createDataFrame([], schema).write.mode(
+        local_frame(self.spark, [], schema).write.mode(
             "overwrite"
         ).parquet(path)
         self.register_table(tkey, path)
@@ -3112,7 +3134,8 @@ class Engine:
                 )
                 names = [n for n in names if rx.match(n)]
             if names:
-                macro_df = self.spark.createDataFrame(
+                macro_df = local_frame(
+                    self.spark,
                     [(n,) for n in names], base.schema
                 )
                 col = base.columns[0]
@@ -3214,7 +3237,8 @@ class Engine:
                 lines.extend(doc)
             else:
                 lines.append(f"Function '{key}' does not exist.")
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(ln,) for ln in lines], "function_desc string"
         )
 
@@ -3265,7 +3289,8 @@ class Engine:
                 f"{key!r} (the engine serves the Hive knobs it honors; "
                 "Spark-side settings read via SET spark....)"
             )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [info], "default string, type string, description string"
         )
 
@@ -3307,7 +3332,8 @@ class Engine:
                 walk(ch.apply(i), depth + 1)
 
         walk(qe.executedPlan(), 0)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(ln,) for ln in lines], "plan string"
         )
 
@@ -3423,7 +3449,8 @@ class Engine:
             pstr = "{" + ", ".join(
                 f"{k}={v}" for k, v in sorted(params.items())
             ) + "}"
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(name.lower(), comment, location, owner, "USER", pstr)],
             "db_name string, comment string, location string, "
             "owner_name string, owner_type string, parameters string",
@@ -3446,7 +3473,8 @@ class Engine:
             )
             lines += body.split("\n")
             lines.append(")")
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(ln,) for ln in lines], "createdb_stmt string"
         )
 
@@ -3698,7 +3726,7 @@ class Engine:
 
             n = parquet_row_count(path, self.spark)
             schema = self._target_frame(key).schema
-            empty = self.spark.createDataFrame([], schema)
+            empty = local_frame(self.spark, [], schema)
             staging = f"{path}__truncate_staging"
             shutil.rmtree(staging, ignore_errors=True)
             empty.coalesce(1).write.parquet(staging)
@@ -4045,7 +4073,8 @@ class Engine:
                         for f in data
                     )
                 rows.append((rel, nf, sz))
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 rows,
                 "partition string, num_files bigint, "
                 "total_size_bytes bigint",
@@ -4063,7 +4092,8 @@ class Engine:
                     os.path.getsize(os.path.join(root, f)) for f in data
                 )
         if noscan:
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(n_files, size)],
                 "num_files bigint, total_size_bytes bigint",
             )
@@ -4081,7 +4111,8 @@ class Engine:
             "fp": fp,
         }
         self._fp_memo[key] = fp  # ANALYZE is a re-fingerprint event
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(n, size)], "num_rows bigint, total_size_bytes bigint"
         )
 
@@ -4168,7 +4199,8 @@ class Engine:
             rows.append((rel, n, size))
         self.part_basic_stats[key] = store
         self._fp_memo[key] = fp  # ANALYZE is a re-fingerprint event
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "partition string, num_rows bigint, total_size_bytes bigint",
         )
@@ -4273,7 +4305,8 @@ class Engine:
                     str(s["max"]) if s["max"] is not None else None,
                 )
             )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             out_rows,
             "col_name string, data_type string, num_nulls bigint, "
             "distinct_count bigint, min string, max string",
@@ -4373,7 +4406,8 @@ class Engine:
                 "max_col_len": max(lens) if lens else None,
             }
         self._fp_memo[key] = fp  # ANALYZE is a re-fingerprint event
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             out_rows,
             "partition string, col_name string, data_type string, "
             "num_nulls bigint, distinct_count bigint, min string, "
@@ -4574,7 +4608,7 @@ class Engine:
         schema = StructType(
             [StructField(by_lower[c], StringType()) for c in cols]
         )
-        df = self.spark.createDataFrame(sorted(seen, key=repr), schema)
+        df = local_frame(self.spark, sorted(seen, key=repr), schema)
         declared = {
             f.name.lower(): f.dataType
             for f in self._declared_schema(key).fields
@@ -4827,7 +4861,8 @@ class Engine:
             # constants-only select returns one row PER TABLE ROW in
             # real execution — not a stats shape
             return None
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [tuple(out_vals)], StructType(out_fields)
         )
 
@@ -4859,7 +4894,8 @@ class Engine:
             ("avg_col_len", fmt(s.get("avg_col_len"))),
             ("max_col_len", fmt(s.get("max_col_len"))),
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows, "info_name string, info_value string"
         )
 
@@ -6038,7 +6074,8 @@ class Engine:
         from pyspark.sql.types import StructField, StructType
 
         try:
-            self.spark.createDataFrame(
+            local_frame(
+                self.spark,
                 [], StructType([StructField("c", old)])
             ).select(F.col("c").cast(new))
             return True
@@ -6872,7 +6909,8 @@ class Engine:
             f"DESCRIBE {modifier.strip()} {table}"
         ).collect()
         rows = [tuple(r) for r in base] + self._constraint_rows(key)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows, "col_name string, data_type string, comment string"
         )
 
@@ -7039,7 +7077,8 @@ class Engine:
             f"maxFileSize:{max(sizes) if sizes else 0}",
             f"minFileSize:{min(sizes) if sizes else 0}",
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(ln,) for ln in lines], "tab_name string"
         )
 
@@ -7067,10 +7106,12 @@ class Engine:
                 raise HiveQLUnsupportedError(
                     f"table {key!r} has no property {name!r}"
                 )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(props[name],)], "value string"
             )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             sorted(props.items()), "key string, value string"
         )
 
@@ -7078,7 +7119,8 @@ class Engine:
         """SHOW COLUMNS FROM t — column names only, declared order
         (Hive's output shape: one ``field`` column)."""
         key = self._resolve_dml_table(table)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(f.name,) for f in self._declared_schema(key).fields],
             "field string",
         )
@@ -7206,7 +7248,8 @@ class Engine:
             )
             for spec in specs
         )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(ln,) for ln in lines], "partition string"
         )
 
@@ -7418,7 +7461,8 @@ class Engine:
                 if aliases
                 else ""
             )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(f"CREATE VIEW `{vkey}` {alias_sql}AS {self.views[vkey]}",)],
                 "createtab_stmt string",
             )
@@ -7442,7 +7486,8 @@ class Engine:
         lines.append("STORED AS PARQUET")
         lines.append("LOCATION")
         lines.append(f"  '{self.table_paths[key]}'")
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [("\n".join(lines),)], "createtab_stmt string"
         )
 
@@ -7496,7 +7541,8 @@ class Engine:
                 rows += [("", "", None), ("# Table Parameters", "", None)]
                 rows += [(k, v, None) for k, v in sorted(props.items())]
             rows += self._constraint_rows(key)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows, "col_name string, data_type string, comment string"
         )
 
@@ -7561,7 +7607,8 @@ class Engine:
                         None,
                     ),
                 ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows, "col_name string, data_type string, comment string"
         )
 
@@ -7602,7 +7649,8 @@ class Engine:
                     for c, v in want.items()
                 )
             ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(r,) for r in rels], "partition string"
         )
 
@@ -7776,7 +7824,8 @@ class Engine:
             if shared_src is not None:
                 shared_src.unpersist()
                 self.spark.catalog.dropTempView("__mi_shared_src")
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             results, "target_table string, rows_affected bigint"
         )
 
@@ -8614,7 +8663,7 @@ class Engine:
                 "hive.materialize.max.rows, or pass eager=False and keep "
                 "the result distributed"
             )
-        return self.spark.createDataFrame(rows, df.schema)
+        return local_frame(self.spark, rows, df.schema)
 
     _NOAS_TRANSFORM_SUBQ = re.compile(
         r"\(\s*FROM\s+([\w.]+)\s+SELECT\s+TRANSFORM\s*\(",
@@ -8980,7 +9029,7 @@ class Engine:
                 raise ValueError(
                     f"no .avro files and no declared schema for {key!r}"
                 )
-            df = self.spark.createDataFrame([], schema)
+            df = local_frame(self.spark, [], schema)
         if key in self.table_schemas:
             df = self._apply_char_read_semantics(
                 df, self.table_schemas[key]
@@ -9135,7 +9184,7 @@ class Engine:
                 template = self.tables[src_key].schema
             else:
                 template = self.spark.table(like_src).schema
-            df = self.spark.createDataFrame([], template)
+            df = local_frame(self.spark, [], template)
         else:
             from pyspark.sql.types import StructField, StructType
 
@@ -9143,7 +9192,7 @@ class Engine:
                 StructField(n, t, True)
                 for n, t in self._parse_col_defs(coldefs)
             ]
-            df = self.spark.createDataFrame([], StructType(fields))
+            df = local_frame(self.spark, [], StructType(fields))
         # Shadow snapshot: Hive's session metastore resolves temp tables
         # FIRST, hiding a same-named permanent table until DROP
         # (temp_table.q's `create temporary table s as select * from s`;
@@ -9308,7 +9357,8 @@ class Engine:
             "input_tables": sorted(f"default@{k}" for k in tables),
             "input_partitions": sorted(partitions),
         }
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(_json.dumps(payload),)], "explain_dependency string"
         )
 

@@ -1447,9 +1447,6 @@ def _rewrite_range_frame_bounds(query: str, unit: str | None) -> str | None:
     return out if changed[0] else None
 
 
-_DW_MERGE_LAMBDA = (
-    "(__dwa, __dwv) -> coalesce(__dwa, CAST(0 AS BIGINT)) + __dwv"
-)
 _DW_REQUIRED_TYPE = re.compile(r'requires the "(DECIMAL\(\d+,\s*\d+\))"')
 # our generated seed+merge, capturing the seed's element expression so
 # the erroring aggregate can be matched back to its text position

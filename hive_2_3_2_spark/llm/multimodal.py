@@ -80,15 +80,6 @@ def attach_media(df: DataFrame, payload_col: str, id_col: str, mime: str) -> Dat
     )
 
 
-def repartition_by_bytes(
-    df: DataFrame, total_bytes: int, target_partition_mb: int = 128
-) -> DataFrame:
-    """Partition media rows by byte budget, not row count — media sizes are
-    heavy-tailed and row-count partitioning OOMs on the tail."""
-    n = max(1, total_bytes // (target_partition_mb * 1024 * 1024))
-    return df.repartition(n)
-
-
 def decode_ppm(b: bytes):
     """Pure-numpy decoder for binary PPM (P6) — no image library needed.
 

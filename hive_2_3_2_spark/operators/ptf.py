@@ -18,7 +18,7 @@ import re
 from collections.abc import Callable
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -136,14 +136,3 @@ def match_path(
         partition_col, *order_cols
     )
     return rep.mapInPandas(run_partition, schema)
-
-
-def windowing_udaf_over(
-    df: DataFrame, agg: Column, partition_cols: list[str], order_cols: list[str]
-) -> DataFrame:
-    """Any-UDAF-over-window helper (WindowFunctionInfo parity: every
-    registered UDAF is window-capable in Hive — same in Spark)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*partition_cols).orderBy(*order_cols)
-    return df.withColumn("window_value", agg.over(w))

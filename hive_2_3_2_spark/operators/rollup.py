@@ -29,8 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-PARTIAL_COLS = ("n", "sum_v", "min_v", "max_v")
-
 
 def rollup_partials(
     events: DataFrame,

@@ -27,8 +27,21 @@ from __future__ import annotations
 
 import os
 import tempfile
+from decimal import ROUND_HALF_UP, Context, Decimal
+from typing import Any, Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    DataType,
+    DecimalType,
+    StructType,
+    _create_converter,
+    _make_type_verifier,
+)
+
+# Spark's widest decimal; quantize under Python's default 28-digit
+# context would reject a value that fits decimal(38, s).
+_DEC38 = Context(prec=38)
 
 _SCRATCH_BASE = os.environ.get("SPARK_GRAFT_SCRATCH") or os.path.join(
     tempfile.gettempdir(), "hive_2_3_2_spark_scratch"
@@ -133,3 +146,49 @@ def get_spark(
     for k, v in confs.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Any], schema: StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows``, planned as a JVM
+    ``LocalRelation`` — the way Hive answers SET, DESCRIBE and row
+    counts inside the client (``SetProcessor``, ``DDLTask``, a
+    ``FetchTask`` read that starts no job).
+
+    ``spark.createDataFrame(list, schema)`` parallelizes pickled rows,
+    so every write or collect of the frame runs a Spark job whose
+    tasks each go through a Python worker. Here the rows take the list
+    path's own steps up to the wire — ``verifySchema``'s type check
+    (a bad row raises the same error), the field-name converter and
+    ``StructType.toInternal`` (naive timestamps and dates get the same
+    values), and top-level decimals round half-up to the column scale
+    as the JVM does on that path — and then cross as one Arrow table.
+    Under ``spark.sql.execution.arrow.localRelationThreshold`` Spark
+    keeps that table as a ``LocalRelation``: ``collect()`` launches no
+    job and a join sees the frame's exact size. Above it, the batches
+    become a JVM-only RDD; no Python worker runs either way.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    verify = _make_type_verifier(struct)
+    convert = _create_converter(struct)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(struct.toInternal(convert(row)))
+    columns = list(zip(*internal)) or [()] * len(struct.fields)
+    arrow_schema = to_arrow_schema(struct)
+    arrays = []
+    for values, field, arrow_field in zip(columns, struct, arrow_schema):
+        if isinstance(field.dataType, DecimalType):
+            unit = Decimal(1).scaleb(-field.dataType.scale)
+            values = [
+                v if v is None else v.quantize(unit, ROUND_HALF_UP, _DEC38)
+                for v in values
+            ]
+        arrays.append(pa.array(values, type=arrow_field.type))
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, struct)

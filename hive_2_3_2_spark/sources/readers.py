@@ -18,6 +18,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 #: a missing optional datasource (spark-avro off the classpath) — the
 #: one error class the Avro probes/fallbacks may swallow. Spark spells
@@ -151,7 +152,7 @@ def read_sequencefile(
         lambda kv: (None if kv[1] is None else str(kv[1]),)
     )
     raw = spark.createDataFrame(rdd, "__seq_value string")
-    fields = spark.createDataFrame([], schema).schema.fields
+    fields = DataType.fromDDL(schema).fields
     if len(fields) == 1:
         return raw.select(
             F.col("__seq_value").cast(fields[0].dataType).alias(fields[0].name)

@@ -20,6 +20,8 @@ import pyarrow.parquet as _pq
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from hive_2_3_2_spark.session import local_frame
+
 
 # Above this many files the per-file footer read leaves the driver:
 # serial pyarrow at ~1-5 ms/footer is fine for a write's staged files,
@@ -258,7 +260,8 @@ def merge_upsert(
         ]
         if not values:
             return
-        touched = spark.createDataFrame(
+        touched = local_frame(
+            spark,
             values, target.select(*partition_cols).schema
         )
         pred = _partition_filter(partition_cols, values)
@@ -475,7 +478,8 @@ def _touched_partitions(
     if not stats:
         return 0, None, []
     values = [tuple(r[c] for c in partition_cols) for r in stats]
-    touched = spark.createDataFrame(
+    touched = local_frame(
+        spark,
         values, target.select(*partition_cols).schema
     )
     return affected, touched, values
@@ -497,7 +501,7 @@ def _read_target(spark, target_path: str, schema=None) -> DataFrame:
     except Exception as exc:
         if schema is None or "UNABLE_TO_INFER_SCHEMA" not in str(exc):
             raise
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
 
 def delete_where(
@@ -806,7 +810,8 @@ def insert_rows(
         # staged-listing-derived swap set (touched=None).
         touched = None
         if static_partition_values and partition_cols:
-            touched = spark.createDataFrame(
+            touched = local_frame(
+                spark,
                 static_partition_values,
                 df.select(*partition_cols).schema,
             )
@@ -985,7 +990,8 @@ def merge_apply(
         ]
         if not touched_vals:
             return 0
-        touched = spark.createDataFrame(
+        touched = local_frame(
+            spark,
             touched_vals, target.select(*partition_cols).schema
         )
         # Prune set ⊇ swap set: it must ALSO cover matched-but-unchanged

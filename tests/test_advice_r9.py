@@ -72,7 +72,7 @@ def _stats_answered(df) -> bool:
 
     plan = explain_str(df)
     return (
-        "ExistingRDD" in plan
+        "LocalTableScan" in plan
         and "Scan parquet" not in plan
         and "Aggregate" not in plan
     )

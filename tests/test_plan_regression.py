@@ -337,11 +337,7 @@ def test_stats_answered_query_is_scan_free(spark, sf_dir):
     plan = _plan(spark, sf_dir, "stats_answered_aggregates")
     for op in ("Scan parquet", "FileScan", "Exchange", "Aggregate"):
         assert op not in plan, f"unexpected {op}:\n{plan}"
-    assert (
-        "LocalTableScan" in plan
-        or "LocalRelation" in plan
-        or "Scan ExistingRDD" in plan  # createDataFrame from Python
-    ), plan
+    assert "LocalTableScan" in plan, plan
 
 
 def test_noop_ptf_chain_plans_one_window_exchange(spark, sf_dir):

@@ -34,7 +34,7 @@ from tests.conftest import assert_matches_oracle
 def _answered(df) -> bool:
     plan = explain_str(df)
     return (
-        "ExistingRDD" in plan
+        "LocalTableScan" in plan
         and "Scan parquet" not in plan
         and "Aggregate" not in plan
     )

@@ -9,7 +9,7 @@ Replayed shapes: count(*)/count(1)/count(col), min/max, sum(literal),
 interleaved constant select items, PARTITIONED tables (per-partition
 stats aggregated over the pruned list), partition-column WHERE filters
 — each diffed against DuckDB over the same rows AND plan-asserted
-(stats-answered = LocalRelation/ExistingRDD, no scan, no aggregate).
+(stats-answered = LocalTableScan, no scan, no aggregate).
 The must-NOT-answer boundaries the goldens pin: un-analyzed columns,
 data-column predicates, GROUP BY, expressions over aggregates, and
 partitions without stats — all fall back to real execution with
@@ -57,7 +57,7 @@ _COLS = "t, si, i, b, f, d, bo, s"  # analyzed set — ts deliberately out
 def _is_stats_answered(df) -> bool:
     plan = explain_str(df)
     return (
-        "ExistingRDD" in plan
+        "LocalTableScan" in plan
         and "Scan parquet" not in plan
         and "Aggregate" not in plan
     )

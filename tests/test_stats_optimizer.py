@@ -34,7 +34,7 @@ def senv(spark, tmp_path):
 def _is_stats_answered(df) -> bool:
     plan = explain_str(df)
     return (
-        "ExistingRDD" in plan
+        "LocalTableScan" in plan
         and "Scan parquet" not in plan
         and "Aggregate" not in plan
     )
