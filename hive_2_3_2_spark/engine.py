@@ -1595,7 +1595,10 @@ class Engine:
         """Overlay-aware read of a registered table's path — every DML
         path must use this (a bare ``spark.read.parquet`` after schema
         evolution would adopt ONE file's schema and could silently drop
-        a column that newer files carry)."""
+        a column that newer files carry). The read carries the declared
+        schema, so it launches no schema-inference job and serves an
+        empty directory tree (last partition dropped/exchanged) as an
+        empty relation."""
         if self.table_format.get(key) == "avro":
             return self._avro_py_frame(key, self.table_paths[key])
         epoch_df = self._epoch_union_frame(key, self.table_paths[key])
@@ -1603,25 +1606,12 @@ class Engine:
             epoch_df = self._mixed_format_frame(key, self.table_paths[key])
         if epoch_df is not None:
             return epoch_df
-        reader = self.spark.read
+        df = self.spark.read.schema(self._declared_schema(key)).parquet(
+            self.table_paths[key]
+        )
         if key in self.table_schemas:
-            reader = reader.schema(self.table_schemas[key])
-        try:
-            return self._apply_char_read_semantics(
-                reader.parquet(self.table_paths[key]),
-                self.table_schemas[key],
-            ) if key in self.table_schemas else reader.parquet(
-                self.table_paths[key]
-            )
-        except Exception as exc:
-            remembered = self.table_schemas.get(key) or (
-                self.tables[key].schema if key in self.tables else None
-            )
-            if remembered is None or "UNABLE_TO_INFER_SCHEMA" not in str(exc):
-                raise
-            # empty directory tree (last partition dropped/exchanged) —
-            # same metastore-parity fallback as register_table
-            return local_frame(self.spark, [], remembered)
+            df = self._apply_char_read_semantics(df, self.table_schemas[key])
+        return df
 
     #: Roots no mutating statement may write under. The shared test
     #: fixtures are the canonical member: their files are chmod-read-
@@ -2066,12 +2056,7 @@ class Engine:
             path = self.table_paths[key]
             parts = self.table_partitions.get(key)
             affected = delete_where(
-                self.spark, path, cond, parts,
-                schema=self._declared_schema(key),
-                target_df=(
-                    self._epoch_union_frame(key, path)
-                    if key in self.schema_epochs else None
-                ),
+                self._target_frame(key), path, cond, parts
             )
             self.register_table(key, path, parts)
             return self._rows_affected(affected)
@@ -2085,25 +2070,11 @@ class Engine:
                 col: F.expr(expr)
                 for col, expr in _split_assignments(m.group(2))
             }
-            cond_txt = m.group(3)
-            cond = F.expr(cond_txt) if cond_txt else F.lit(True)
+            cond = F.expr(m.group(3)) if m.group(3) else F.lit(True)
             path = self.table_paths[key]
             parts = self.table_partitions.get(key)
             affected = update_where(
-                self.spark,
-                path,
-                sets,
-                cond,
-                parts,
-                # subquery conditions can't ride the observe metric
-                observe_count=not re.search(
-                    r"\(\s*SELECT\b", cond_txt or "", re.IGNORECASE
-                ),
-                schema=self._declared_schema(key),
-                target_df=(
-                    self._epoch_union_frame(key, path)
-                    if key in self.schema_epochs else None
-                ),
+                self._target_frame(key), path, sets, cond, parts
             )
             self.register_table(key, path, parts)
             return self._rows_affected(affected)
@@ -8216,7 +8187,6 @@ class Engine:
             )
         written: set[str] = set()
         n = insert_rows(
-            self.spark,
             path,
             aligned,
             parts or None,
@@ -8484,7 +8454,7 @@ class Engine:
         on_cond, when_part = m.group(5), m.group(6)
         path = self.table_paths[key]
         parts = self.table_partitions.get(key)
-        target_cols = self._target_frame(key).columns
+        target = self._target_frame(key)
 
         if src_spec.startswith("("):
             if not salias:
@@ -8534,7 +8504,7 @@ class Engine:
                 cols = (
                     [c.strip() for c in ins.group(1).split(",")]
                     if ins.group(1)
-                    else list(target_cols)
+                    else list(target.columns)
                 )
                 exprs = [e.strip() for e in _split_top_commas(ins.group(2))]
                 if len(cols) != len(exprs):
@@ -8590,7 +8560,7 @@ class Engine:
                 "clause would shadow the second)"
             )
         affected = merge_apply(
-            self.spark,
+            target,
             path,
             source,
             talias,
@@ -8600,7 +8570,6 @@ class Engine:
             insert_values,
             insert_condition,
             parts,
-            schema=self._declared_schema(key),
         )
         self.register_table(key, path, parts)
         return self._rows_affected(affected)

@@ -130,7 +130,7 @@ def rollup_refresh(
     never read or rewritten."""
     import os
 
-    from hive_2_3_2_spark.sources.writers import insert_overwrite_partitions
+    from hive_2_3_2_spark.sources.writers import write_partitioned
 
     keys = keys if keys is not None else ["event_type"]
     new_part = rollup_partials(new_events, unit, keys, ts_col, val_col)
@@ -146,7 +146,7 @@ def rollup_refresh(
         F.col("bucket_date").isin(touched)
     )
     merged = rollup_merge([existing, new_part], keys)
-    insert_overwrite_partitions(merged, rollup_path, ["bucket_date"])
+    write_partitioned(merged, rollup_path, ["bucket_date"])
 
 
 def rollup_partials_ndv(

@@ -15,7 +15,6 @@ from hive_2_3_2_spark.sources.readers import (
 )
 from hive_2_3_2_spark.sources.writers import (
     delete_where,
-    insert_overwrite_partitions,
     merge_upsert,
     update_where,
     write_bucketed_table,
@@ -24,7 +23,6 @@ from hive_2_3_2_spark.sources.writers import (
 
 __all__ = [
     "delete_where",
-    "insert_overwrite_partitions",
     "merge_upsert",
     "read_avro",
     "read_csv",

@@ -7,14 +7,21 @@ parse/UpdateDeleteSemanticAnalyzer.java:62-86 onto ACID deltas.
 
 Spark-first: df.write.partitionBy/bucketBy; dynamic partition overwrite
 (session conf partitionOverwriteMode=dynamic = Hive's INSERT OVERWRITE
-semantics of replacing only touched partitions); MERGE emulated as
-join + dynamic partition overwrite (documented non-atomic across
-partitions — plain parquet has no transaction log; see SURVEY §7.4).
+semantics of replacing only touched partitions). DELETE, UPDATE and
+MERGE (and the ``merge_upsert`` API, a MERGE) share one staged-rewrite
+core, ``_rewrite``: each statement is a ``build(target)`` callback that
+marks rows changed/kept/matched, and the core finds the touched
+partitions, prunes the scan, stages and swaps, and counts the affected
+rows (documented non-atomic across partitions — plain parquet has no
+transaction log; see SURVEY §7.4).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+from collections.abc import Callable
+from contextlib import contextmanager
 
 import pyarrow.parquet as _pq
 from pyspark.sql import Column, DataFrame, Observation
@@ -151,22 +158,6 @@ def write_bucketed_table(
     writer.format(fmt).mode(mode).saveAsTable(table)
 
 
-def insert_overwrite_partitions(
-    df: DataFrame, path: str, partition_cols: list[str], fmt: str = "parquet"
-) -> None:
-    """INSERT OVERWRITE with dynamic partitioning: replaces ONLY the
-    partitions present in ``df`` (session conf
-    spark.sql.sources.partitionOverwriteMode=dynamic), leaving others
-    intact — exact Hive semantics (nonstrict dynamic partition mode)."""
-    (
-        df.repartition(*partition_cols)
-        .write.partitionBy(*partition_cols)
-        .format(fmt)
-        .mode("overwrite")
-        .save(path)
-    )
-
-
 def ensure_dir_table(target_path: str) -> None:
     """Promote a single-parquet-FILE table (the driver fixtures' layout)
     to a directory table in place, so append-style file moves have a
@@ -179,11 +170,20 @@ def ensure_dir_table(target_path: str) -> None:
     os.rename(tmp, os.path.join(target_path, "part-00000-promoted.parquet"))
 
 
-def _staging_dir(target_path: str) -> str:
-    """Deterministic-per-call staging sibling of the target directory."""
+@contextmanager
+def _staging(target_path: str):
+    """A fresh staging sibling of the target (``<table>__staging_<12
+    hex>``) for one write. A write that raises removes its partial
+    output before re-raising, so a failed statement leaves no staging
+    directory behind; on success the caller moves the staged files."""
     import uuid
 
-    return f"{target_path.rstrip('/')}__staging_{uuid.uuid4().hex[:12]}"
+    staging = f"{target_path.rstrip('/')}__staging_{uuid.uuid4().hex[:12]}"
+    try:
+        yield staging
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
 
 
 def _swap_dirs(target_path: str, staging: str) -> None:
@@ -193,8 +193,6 @@ def _swap_dirs(target_path: str, staging: str) -> None:
     two renames go through the Hadoop FileSystem API. The target may be
     a single parquet FILE (the driver fixtures are) — same two renames,
     file-aware cleanup."""
-    import shutil
-
     old = f"{target_path.rstrip('/')}__old"
     if os.path.isdir(old):
         shutil.rmtree(old)
@@ -220,84 +218,41 @@ def merge_upsert(
     ``target_path`` (WHEN MATCHED THEN UPDATE / WHEN NOT MATCHED THEN
     INSERT, optional WHEN MATCHED AND cond THEN DELETE).
 
-    Reference: parse/UpdateDeleteSemanticAnalyzer.java:86 rewrites MERGE
-    onto ACID base+delta files with background compaction
-    (ql/.../txn/compactor/). Plain parquet has no delta log, so the
-    emulation rewrites affected data: full-outer join target↔updates on
-    the keys, matched rows take the update side's columns WHOLLY (a NULL
-    update column overwrites, matching Hive UPDATE SET c = NULL — not
-    per-column coalesce), and ``delete_condition`` applies to MATCHED
-    rows only (Hive WHEN MATCHED AND cond THEN DELETE never touches
-    unmatched target rows). The condition is evaluated over the merged
-    row values (update-side values for matched rows).
+    A MERGE run through ``merge_apply``: a first WHEN MATCHED DELETE on
+    ``delete_condition``, then an unconditional whole-row UPDATE and an
+    all-column INSERT. Matched rows take the update side's columns
+    WHOLLY (a NULL update column overwrites, matching Hive UPDATE SET c
+    = NULL — not per-column coalesce), so ``delete_condition``,
+    evaluated over the update row, sees the merged row values; it
+    applies to MATCHED rows only (Hive WHEN MATCHED AND cond THEN DELETE
+    never touches unmatched target rows) and, like any WHEN condition,
+    deletes only where it is TRUE.
 
-    Durability: the merged result is STAGED to a sibling directory and
-    only then moved/copied over the target — never cache-then-overwrite
-    the path being read. Spark's cache is not durable (eviction or
-    executor loss triggers recomputation, which would re-read the
-    truncated target mid-overwrite = silent data loss; at 100 TB the
-    merged table cannot be fully cached, so eviction is the normal
-    case). Unpartitioned targets swap directories (one write, two
-    renames — MoveTask parity); partitioned targets stage only the
-    touched partitions, then swap those partition directories into
-    place (non-atomicity across partitions is inherent to log-less
-    parquet, see SURVEY §7.4).
-
-    Partition-column rule (same as Hive UPDATE): for matched keys the
-    update rows must carry the target row's partition values — a
-    partition-moving upsert would need the OLD partition rewritten too,
-    which this prune does not do (use delete + insert to move rows).
+    Partitioned targets: the updates' distinct partition values
+    (collected once, metadata-sized) are the touched set, so the target
+    scan is pruned up front with no discovery scan. Partition-column
+    rule (same as Hive UPDATE): for matched keys the update rows must
+    carry the target row's partition values — a partition-moving upsert
+    would need the OLD partition rewritten too, which this prune does
+    not do (use delete + insert to move rows).
     """
     target = spark.read.parquet(target_path)
-    cols = target.columns
+    touched = None
     if partition_cols:
-        # Touched partitions collected ONCE (metadata-sized) — they both
-        # statically prune the target scan (real PartitionFilters, not a
-        # scan-everything semi join) and drive the directory swaps.
-        values = [
-            tuple(r[c] for c in partition_cols)
+        touched = [
+            tuple(r)
             for r in updates.select(*partition_cols).distinct().collect()
         ]
-        if not values:
-            return
-        touched = local_frame(
-            spark,
-            values, target.select(*partition_cols).schema
-        )
-        pred = _partition_filter(partition_cols, values)
-        if pred is not None:
-            target = target.filter(pred)
-    # Side-presence rides synthetic marker columns, NOT key-column
-    # isNotNull: a NULL-key update row never joins (NULL = NULL is not
-    # true), but Hive still routes it through WHEN NOT MATCHED INSERT —
-    # key isNotNull would misclassify it as "neither side present" and
-    # emit an all-NULL target row instead.
-    t = target.withColumn("__t_present", F.lit(True)).alias("t")
-    u = updates.withColumn("__u_present", F.lit(True)).alias("u")
-    cond = [F.col(f"t.{k}") == F.col(f"u.{k}") for k in key_cols]
-    joined = t.join(u, cond, "full_outer")
-    has_update = F.coalesce(F.col("u.__u_present"), F.lit(False))
-    matched = has_update & F.coalesce(F.col("t.__t_present"), F.lit(False))
-    merged = joined.select(
-        *[
-            F.when(has_update, F.col(f"u.{c}"))
-            .otherwise(F.col(f"t.{c}"))
-            .alias(c)
-            for c in cols
-        ],
-        matched.alias("__matched"),
-    )
+    whole_row = {c: F.col(f"u.{c}") for c in target.columns}
+    actions = [("update", whole_row, None)]
     if delete_condition is not None:
-        merged = merged.filter(
-            ~(F.col("__matched") & delete_condition)
-        )
-    merged = merged.drop("__matched")
-
-    if partition_cols:
-        merged = merged.join(F.broadcast(touched), partition_cols, "left_semi")
-        _staged_rewrite(spark, target_path, merged, partition_cols, touched)
-    else:
-        _staged_rewrite(spark, target_path, merged, None, None)
+        updates = updates.withColumn("__delete", delete_condition)
+        actions.insert(0, ("delete", None, F.col("u.__delete")))
+    merge_apply(
+        target, target_path, updates, "t", "u",
+        [(k, k) for k in key_cols], actions, whole_row,
+        partition_cols=partition_cols, touched=touched,
+    )
 
 
 def _staged_partition_rels(staging: str, depth: int) -> list[str]:
@@ -362,11 +317,10 @@ def _partition_rel_dir(partition_cols: list[str], values) -> str:
 
 
 def _staged_rewrite(
-    spark,
     target_path: str,
     df: DataFrame,
     partition_cols: list[str] | None,
-    touched: DataFrame | None,
+    touched: list[tuple] | None,
     partition_counts: dict | None = None,
     fmt: str = "parquet",
     written_rels: set | None = None,
@@ -384,46 +338,42 @@ def _staged_rewrite(
     only the TOUCHED partition directories — a touched partition whose
     staged result is empty (all rows deleted) is removed outright,
     which dynamic partition overwrite cannot express (no staged files →
-    nothing to overwrite the stale dir with). ``touched`` must list the
-    distinct partition tuples being rewritten (small: metadata-sized
-    collect, not data)."""
-    import shutil
-
-    staging = _staging_dir(target_path)
-    if partition_cols:
+    nothing to overwrite the stale dir with). ``touched`` lists the
+    distinct partition tuples being rewritten, as Spark collected them
+    (small: metadata-sized, not data)."""
+    if not partition_cols:
+        with _staging(target_path) as staging:
+            _format_writer(df.write.mode("overwrite"), fmt).save(staging)
+        _swap_dirs(target_path, staging)
+        return
+    with _staging(target_path) as staging:
         _format_writer(
             df.repartition(*partition_cols)
             .write.partitionBy(*partition_cols)
             .mode("overwrite"),
             fmt,
         ).save(staging)
-        if touched is None:
-            # Derive the touched set from what was actually staged — no
-            # recompute of df's lineage (INSERT OVERWRITE path: the df IS
-            # the new partition content, so staging's dirs are exact).
-            rels = set(_staged_partition_rels(staging, len(partition_cols)))
-        else:
-            rels = {
-                _partition_rel_dir(partition_cols, tuple(r))
-                for r in touched.collect()
-            }
-        for rel in sorted(rels):
-            tgt_dir = os.path.join(target_path, rel)
-            stg_dir = os.path.join(staging, rel)
-            shutil.rmtree(tgt_dir, ignore_errors=True)
-            if written_rels is not None:
-                written_rels.add(rel)
-            if os.path.isdir(stg_dir):
-                if partition_counts is not None and fmt == "parquet":
-                    # staged footers = this partition's NEW total
-                    # (overwrite replaces the dir wholesale)
-                    partition_counts[rel] = parquet_row_count(stg_dir)
-                os.makedirs(os.path.dirname(tgt_dir), exist_ok=True)
-                os.rename(stg_dir, tgt_dir)
-        shutil.rmtree(staging)
+    if touched is None:
+        # Derive the touched set from what was actually staged — no
+        # recompute of df's lineage (INSERT OVERWRITE path: the df IS
+        # the new partition content, so staging's dirs are exact).
+        rels = set(_staged_partition_rels(staging, len(partition_cols)))
     else:
-        _format_writer(df.write.mode("overwrite"), fmt).save(staging)
-        _swap_dirs(target_path, staging)
+        rels = {_partition_rel_dir(partition_cols, v) for v in touched}
+    for rel in sorted(rels):
+        tgt_dir = os.path.join(target_path, rel)
+        stg_dir = os.path.join(staging, rel)
+        shutil.rmtree(tgt_dir, ignore_errors=True)
+        if written_rels is not None:
+            written_rels.add(rel)
+        if os.path.isdir(stg_dir):
+            if partition_counts is not None and fmt == "parquet":
+                # staged footers = this partition's NEW total
+                # (overwrite replaces the dir wholesale)
+                partition_counts[rel] = parquet_row_count(stg_dir)
+            os.makedirs(os.path.dirname(tgt_dir), exist_ok=True)
+            os.rename(stg_dir, tgt_dir)
+    shutil.rmtree(staging)
 
 
 # Above this many touched partitions the OR-of-ANDs literal predicate
@@ -455,129 +405,135 @@ def _partition_filter(
     return pred
 
 
-def _touched_partitions(
-    spark, target: DataFrame, hit: Column, partition_cols: list[str]
-) -> tuple[int, DataFrame | None, list[tuple]]:
-    """ONE discovery job: (affected row count, touched-partitions DF,
-    touched partition-value tuples).
+def _rewrite(
+    target: DataFrame,
+    target_path: str,
+    partition_cols: list[str] | None,
+    build: Callable[[DataFrame], DataFrame],
+    touched: list[tuple] | None = None,
+) -> int:
+    """The staged-rewrite core behind DELETE, UPDATE and MERGE; returns
+    the number of affected rows.
 
-    Replaces the r2 pattern of a pre-count scan PLUS a separate
-    touched-distinct scan (judge finding: the DML front-end read the
-    target twice before the rewrite read it again). The grouped count
-    yields both answers in a single pass; the returned DF is a local
-    relation (metadata-sized), so downstream semi-joins broadcast it and
-    ``_staged_rewrite``'s collect is free; the raw tuples feed
-    ``_partition_filter`` so the rewrite scan statically prunes."""
-    stats = (
-        target.filter(hit)
-        .groupBy(*partition_cols)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .collect()
-    )
-    affected = int(sum(r["__n"] for r in stats))
-    if not stats:
-        return 0, None, []
-    values = [tuple(r[c] for c in partition_cols) for r in stats]
-    touched = local_frame(
-        spark,
-        values, target.select(*partition_cols).schema
-    )
-    return affected, touched, values
+    ``target`` is the table's current frame, read by the caller
+    (Engine.sql passes its overlay-, epoch- and empty-directory-aware
+    read). ``build(frame)`` returns the rewritten rows over ``frame`` —
+    the target's columns, in order — plus three boolean flags:
+    ``__changed`` (updated, deleted or inserted: counted as affected,
+    and its partition is rewritten), ``__keep`` (the row is written) and
+    ``__matched`` (a MERGE target row joined by a source row).
+
+    Partitioned targets rewrite only the touched partitions. Unless the
+    caller supplies the ``touched`` partition tuples, ONE discovery job
+    groups the changed-or-matched rows by partition, yielding the
+    affected count and the touched set together. The prune set also
+    covers matched-but-unchanged partitions: pruning a partition that
+    holds a source row's match would reclassify that row as unmatched
+    and spuriously INSERT it. The prune compiles to static
+    PartitionFilters, so the rewrite scan READS only those partitions;
+    above ``_MAX_STATIC_PRUNE`` partitions, or when matched-but-unchanged
+    partitions were read, a broadcast semi join against the touched set
+    selects the rows to stage.
+
+    Without a discovery job (unpartitioned targets, or a supplied touched
+    set) the count rides the write as one observed metric over the
+    ``__changed`` flag. The flag is a plain column, so a subquery in the
+    condition never sits inside the metric (Spark refuses IN/EXISTS
+    subqueries in CollectMetrics) and no separate count job runs.
+    """
+    affected = None
+    prune = touched
+    if partition_cols and touched is None:
+        stats = (
+            build(target)
+            .filter("__changed OR __matched")
+            .groupBy(*partition_cols)
+            .agg(F.sum(F.col("__changed").cast("long")).alias("__n"))
+            .collect()
+        )
+        affected = sum(r["__n"] for r in stats)
+        prune = [tuple(r[c] for c in partition_cols) for r in stats]
+        touched = [v for v, r in zip(prune, stats) if r["__n"]]
+    if partition_cols and not touched:
+        return 0
+    pred = _partition_filter(partition_cols, prune) if partition_cols else None
+    rows = build(target if pred is None else target.filter(pred))
+    if affected is None:
+        obs = Observation()
+        rows = rows.observe(
+            obs, F.sum(F.col("__changed").cast("long")).alias("__n")
+        )
+    rows = rows.filter("__keep").drop("__changed", "__keep", "__matched")
+    if partition_cols and (pred is None or len(prune) > len(touched)):
+        touched_df = local_frame(
+            target.sparkSession,
+            touched,
+            target.select(*partition_cols).schema,
+        )
+        rows = rows.join(F.broadcast(touched_df), partition_cols, "left_semi")
+    _staged_rewrite(target_path, rows, partition_cols, touched)
+    return affected if affected is not None else _obs_count(obs)
 
 
-def _read_target(spark, target_path: str, schema=None) -> DataFrame:
-    """Read a DML target, with the caller's declared schema when the
-    table has been ALTERed (parquet binds by name; a bare read after
-    schema evolution would adopt ONE file's schema and could silently
-    drop a column newer files carry). A target whose last partition was
-    dropped/exchanged away is an EMPTY directory tree — with a declared
-    schema, serve it as an empty relation (metastore parity; DML over
-    an empty table is legal and a no-op rewrite)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    try:
-        return reader.parquet(target_path)
-    except Exception as exc:
-        if schema is None or "UNABLE_TO_INFER_SCHEMA" not in str(exc):
-            raise
-        return local_frame(spark, [], schema)
+def _target_of(target, target_path: str) -> DataFrame:
+    """The frame a rewrite reads: the table frame Engine.sql passes, or,
+    for a standalone call with a SparkSession, ``target_path`` read as
+    plain parquet."""
+    if isinstance(target, DataFrame):
+        return target
+    return target.read.parquet(target_path)
 
 
 def delete_where(
-    spark,
+    target,
     target_path: str,
     condition: Column,
     partition_cols: list[str] | None = None,
-    schema=None,
-    target_df: DataFrame | None = None,
 ) -> int:
     """Standalone ``DELETE FROM t WHERE cond`` over a parquet table;
-    returns the number of deleted rows.
+    returns the number of deleted rows. ``target`` is the table's frame
+    or a SparkSession (see ``_target_of``).
 
     Reference: parse/UpdateDeleteSemanticAnalyzer.java:80 compiles DELETE
     to an insert of surviving ROW__IDs into ACID delete deltas; log-less
-    parquet instead rewrites survivors via the staged-rewrite machinery.
-    Rows where the condition is NULL survive (Hive/SQL WHERE semantics:
-    only condition=TRUE deletes). Partitioned targets rewrite ONLY the
+    parquet instead rewrites survivors through ``_rewrite``. Rows where
+    the condition is NULL survive (Hive/SQL WHERE semantics: only
+    condition=TRUE deletes). Partitioned targets rewrite ONLY the
     partitions that actually contain deleted rows — at 100 TB a DELETE
     touching one day of data rewrites one partition, not the table.
-
-    Scan budget: partitioned = one discovery job (count + touched
-    partitions together) + the pruned rewrite; unpartitioned = the
-    rewrite only, with the count derived from parquet footer row counts
-    before/after (metadata, not a scan).
     """
-    target = target_df if target_df is not None else _read_target(
-        spark, target_path, schema
-    )
-    survivors = target.filter(~F.coalesce(condition, F.lit(False)))
-    if partition_cols:
-        affected, touched, values = _touched_partitions(
-            spark, target, F.coalesce(condition, F.lit(False)), partition_cols
+
+    def build(t: DataFrame) -> DataFrame:
+        # __keep reads the __changed column: a subquery condition is
+        # evaluated once per row, not once per flag
+        return t.withColumn(
+            "__changed", F.coalesce(condition, F.lit(False))
+        ).withColumns(
+            {"__keep": ~F.col("__changed"), "__matched": F.lit(False)}
         )
-        if touched is None:
-            return 0
-        pred = _partition_filter(partition_cols, values)
-        if pred is not None:
-            # static PartitionFilters: the rewrite scan READS only the
-            # touched partitions (value-identical to the semi join)
-            survivors = target.filter(pred).filter(
-                ~F.coalesce(condition, F.lit(False))
-            )
-        else:
-            survivors = survivors.join(
-                F.broadcast(touched), partition_cols, "left_semi"
-            )
-        _staged_rewrite(spark, target_path, survivors, partition_cols, touched)
-        return affected
-    before = parquet_row_count(target_path)
-    _staged_rewrite(spark, target_path, survivors, None, None)
-    return before - parquet_row_count(target_path)
+
+    return _rewrite(
+        _target_of(target, target_path), target_path, partition_cols, build
+    )
 
 
 def update_where(
-    spark,
+    target,
     target_path: str,
     set_exprs: dict[str, Column],
     condition: Column,
     partition_cols: list[str] | None = None,
-    observe_count: bool = True,
-    schema=None,
-    target_df: DataFrame | None = None,
-) -> None:
-    """Standalone ``UPDATE t SET c = expr, ... WHERE cond``.
+) -> int:
+    """Standalone ``UPDATE t SET c = expr, ... WHERE cond``; returns the
+    number of updated rows. ``target`` is the table's frame or a
+    SparkSession (see ``_target_of``).
 
     Reference: parse/UpdateDeleteSemanticAnalyzer.java:62 — UPDATE
     compiles to a rewrite of matched rows; partition columns may not be
     updated (same restriction as Hive: moving a row between partitions
     is a delete+insert, not an update). Rows where the condition is NULL
     are untouched. Partitioned targets rewrite only partitions
-    containing matched rows. Returns the number of updated rows.
-
-    Scan budget: partitioned = one discovery job + the pruned rewrite;
-    unpartitioned = ONE scan total — the matched-row count rides the
-    rewrite job as an observed metric (df.observe), no separate count.
+    containing matched rows.
     """
     if partition_cols:
         bad = sorted(set(set_exprs) & set(partition_cols))
@@ -586,52 +542,26 @@ def update_where(
                 f"cannot UPDATE partition column(s) {bad}: Hive forbids it "
                 "(UpdateDeleteSemanticAnalyzer); use delete + insert instead"
             )
-    target = target_df if target_df is not None else _read_target(
-        spark, target_path, schema
-    )
-    hit = F.coalesce(condition, F.lit(False))
-    obs: Observation | None = None
-    pre_counted: int | None = None
-    if not partition_cols:
-        if observe_count:
-            obs = Observation()
-            target = target.observe(
-                obs, F.sum(hit.cast("long")).alias("__hits")
-            )
-        else:
-            # IN/EXISTS subquery conditions are legal in filters and
-            # projections but NOT inside CollectMetrics (Spark
-            # UNSUPPORTED_IN_EXISTS_SUBQUERY) — callers with a subquery
-            # condition pay one extra count scan instead of the
-            # observed metric.
-            pre_counted = target.filter(hit).count()
-    updated = target.select(
-        *[
-            F.when(hit, set_exprs[c]).otherwise(F.col(c)).alias(c)
-            if c in set_exprs
-            else F.col(c)
-            for c in target.columns
-        ]
-    )
-    if partition_cols:
-        affected, touched, values = _touched_partitions(
-            spark, target, hit, partition_cols
+
+    def build(t: DataFrame) -> DataFrame:
+        hit = F.col("__changed")  # the condition, evaluated once per row
+        return t.withColumn(
+            "__changed", F.coalesce(condition, F.lit(False))
+        ).select(
+            *[
+                F.when(hit, set_exprs[c]).otherwise(F.col(c)).alias(c)
+                if c in set_exprs
+                else F.col(c)
+                for c in t.columns
+            ],
+            hit,
+            F.lit(True).alias("__keep"),
+            F.lit(False).alias("__matched"),
         )
-        if touched is None:
-            return 0
-        pred = _partition_filter(partition_cols, values)
-        if pred is not None:
-            updated = updated.filter(pred)  # static scan pruning
-        else:
-            updated = updated.join(
-                F.broadcast(touched), partition_cols, "left_semi"
-            )
-        _staged_rewrite(spark, target_path, updated, partition_cols, touched)
-        return affected
-    _staged_rewrite(spark, target_path, updated, None, None)
-    if pre_counted is not None:
-        return pre_counted
-    return int(obs.get["__hits"] or 0)
+
+    return _rewrite(
+        _target_of(target, target_path), target_path, partition_cols, build
+    )
 
 
 def write_zordered(
@@ -728,7 +658,6 @@ def write_zordered(
 
 
 def insert_rows(
-    spark,
     target_path: str,
     df: DataFrame,
     partition_cols: list[str] | None = None,
@@ -765,8 +694,6 @@ def insert_rows(
     engine's version of Hive's per-partition FileSink counters
     (StatsTask aggregates one row of counters per written partition).
     """
-    import shutil
-
     if fmt == "avro":
         # jar-less avro tables write through the pure-python container
         # codec (one file per partition, from the executors). Staged
@@ -782,8 +709,8 @@ def insert_rows(
                 "(per-partition avro descriptors are out of the "
                 "mixed-format matrix)"
             )
-        staging = _staging_dir(target_path)
-        n = write_avro_py(df, staging)
+        with _staging(target_path) as staging:
+            n = write_avro_py(df, staging)
         if overwrite:
             _swap_dirs(target_path, staging)
         else:
@@ -808,27 +735,22 @@ def insert_rows(
         # the target partition regardless (an empty staging listing
         # alone would leave it intact). Dynamic overwrite keeps the
         # staged-listing-derived swap set (touched=None).
-        touched = None
-        if static_partition_values and partition_cols:
-            touched = local_frame(
-                spark,
-                static_partition_values,
-                df.select(*partition_cols).schema,
-            )
         _staged_rewrite(
-            spark, target_path, df, partition_cols or None, touched,
+            target_path, df, partition_cols or None,
+            static_partition_values or None,
             partition_counts=partition_counts,
             fmt=fmt, written_rels=written_rels,
         )
         return _obs_count(obs)
-    staging = _staging_dir(target_path)
+    with _staging(target_path) as staging:
+        if partition_cols:
+            writer = df.repartition(*partition_cols).write.partitionBy(
+                *partition_cols
+            )
+        else:
+            writer = df.write
+        _format_writer(writer.mode("overwrite"), fmt).save(staging)
     if partition_cols:
-        _format_writer(
-            df.repartition(*partition_cols)
-            .write.partitionBy(*partition_cols)
-            .mode("overwrite"),
-            fmt,
-        ).save(staging)
         staged = _staged_partition_rels(staging, len(partition_cols))
         if written_rels is not None:
             written_rels.update(staged)
@@ -837,8 +759,6 @@ def insert_rows(
                 partition_counts[rel] = parquet_row_count(
                     os.path.join(staging, rel)
                 )
-    else:
-        _format_writer(df.write.mode("overwrite"), fmt).save(staging)
     # Move staged data files into place; staged file names embed a
     # task/job UUID so collisions with existing files are impossible.
     ensure_dir_table(target_path)
@@ -854,7 +774,7 @@ def insert_rows(
 
 
 def merge_apply(
-    spark,
+    target: DataFrame,
     target_path: str,
     source: DataFrame,
     target_alias: str,
@@ -866,11 +786,11 @@ def merge_apply(
     insert_values: dict[str, Column] | None,
     insert_condition: Column | None = None,
     partition_cols: list[str] | None = None,
-    schema=None,
+    touched: list[tuple] | None = None,
 ) -> int:
     """Execute a MERGE statement (up to two WHEN MATCHED clauses plus
-    one WHEN NOT MATCHED); returns the number of affected rows
-    (updated + deleted + inserted).
+    one WHEN NOT MATCHED) over ``target``, the table's current frame;
+    returns the number of affected rows (updated + deleted + inserted).
 
     Reference: parse/UpdateDeleteSemanticAnalyzer.java:86 rewrites MERGE
     INTO onto a right-outer-join insert over ACID deltas; the log-less
@@ -893,22 +813,16 @@ def merge_apply(
     first clause whose condition holds; later clauses see only
     still-unclaimed rows (Hive's WHEN cascade).
 
-    Partitioned targets: one discovery job computes the affected count
-    plus the touched partitions (matched-changed rows keep their target
-    partition values; inserted rows contribute their INSERT partition
-    values), then only those partitions are rewritten/swapped.
-    Unpartitioned: ONE scan — the affected count rides the rewrite as an
-    observed metric.
+    The rewrite runs through ``_rewrite``: matched-changed rows keep
+    their target partition values and inserted rows contribute their
+    INSERT partition values to the touched set. ``touched`` supplies
+    that set up front (``merge_upsert``: the updates' partitions) in
+    place of the discovery job.
     """
-    target = _read_target(spark, target_path, schema)
     fields = {f.name: f.dataType for f in target.schema.fields}
     cols = target.columns
 
-    def build(tgt: DataFrame):
-        """(joined, out-exprs, changed, matched, keep) over ``tgt`` —
-        called once for discovery on the full target and, when static
-        pruning applies, again over the partition-pruned target for the
-        rewrite pass."""
+    def build(tgt: DataFrame) -> DataFrame:
         # Synthetic presence markers, not key isNotNull: a NULL-key
         # source row never joins, but Hive classifies it NOT MATCHED and
         # routes it through the INSERT clause — key isNotNull would
@@ -960,66 +874,11 @@ def merge_apply(
                 ins_e = insert_values.get(c, F.lit(None))
                 expr = F.when(ins_cond, ins_e.cast(fields[c])).otherwise(expr)
             out.append(expr.alias(c))
-        changed = upd_cond | del_cond | ins_cond
-        keep = ~del_cond & ~(s_only & ~ins_cond)
-        return joined, out, changed, matched, keep
-
-    if partition_cols:
-        joined, out, changed, matched, keep = build(target)
-        pre = joined.select(
+        return joined.select(
             *out,
-            changed.alias("__changed"),
+            (upd_cond | del_cond | ins_cond).alias("__changed"),
+            (~del_cond & ~(s_only & ~ins_cond)).alias("__keep"),
             matched.alias("__matched"),
-            keep.alias("__keep"),
         )
-        # ONE discovery job: per-partition changed AND matched counts.
-        stats = (
-            pre.filter(F.col("__changed") | F.col("__matched"))
-            .groupBy(*partition_cols)
-            .agg(
-                F.sum(F.col("__changed").cast("long")).alias("__ch"),
-                F.count(F.lit(1)).alias("__any"),
-            )
-            .collect()
-        )
-        affected = int(sum(r["__ch"] for r in stats))
-        touched_vals = [
-            tuple(r[c] for c in partition_cols)
-            for r in stats
-            if r["__ch"] > 0
-        ]
-        if not touched_vals:
-            return 0
-        touched = local_frame(
-            spark,
-            touched_vals, target.select(*partition_cols).schema
-        )
-        # Prune set ⊇ swap set: it must ALSO cover matched-but-unchanged
-        # partitions — pruning a partition holding a source row's match
-        # would reclassify that row as unmatched and spuriously INSERT it.
-        prune_vals = [tuple(r[c] for c in partition_cols) for r in stats]
-        pred = _partition_filter(partition_cols, prune_vals)
-        if pred is not None:
-            joined2, out2, _ch2, _mt2, keep2 = build(target.filter(pred))
-            merged = (
-                joined2.filter(keep2)
-                .select(*out2)
-                .join(F.broadcast(touched), partition_cols, "left_semi")
-            )
-        else:
-            merged = (
-                pre.filter("__keep")
-                .drop("__changed", "__matched", "__keep")
-                .join(F.broadcast(touched), partition_cols, "left_semi")
-            )
-        _staged_rewrite(spark, target_path, merged, partition_cols, touched)
-        return affected
 
-    joined, out, changed, _matched, keep = build(target)
-    obs = Observation()
-    pre = joined.observe(
-        obs, F.sum(changed.cast("long")).alias("__changed")
-    )
-    merged = pre.filter(keep).select(*out)
-    _staged_rewrite(spark, target_path, merged, None, None)
-    return int(obs.get["__changed"] or 0)
+    return _rewrite(target, target_path, partition_cols, build, touched)

@@ -121,8 +121,8 @@ def stream_upsert_sink(
     ``key_cols``. The target is read twice per batch (version probe +
     merge); at 100 TB the right design is a partitioned target so the
     probe and rewrite touch only partitions named by the batch's keys
-    (``merge_upsert`` already prunes touched partitions when
-    ``partition_cols`` are set on the table).
+    (the writers' staged-rewrite core, ``_rewrite``, prunes a
+    partitioned target to the touched partitions).
     """
     from hive_2_3_2_spark.sources.writers import merge_upsert
 

@@ -158,275 +158,6 @@ _MODULES = [
 # re-verifications (the 7 whose first green predates r4, then a family
 # spread across agg/clean/ddl/dedup/dml/emb/sample;
 # fn_xpath_family swapped out for the new r8 database entry).
-# R9 WINDOW (the r8 verdict's prescription): ALL 27 entries whose
-# latest green row is r4 (agg/clean/ddl/dml/emb/fn_xpath/sample/
-# similarity_topk_pq/sort/text families) + the 23 oldest-r5 entries
-# ranked by FIRST green round (the 9 r1-origin TPC-H/join/agg heads,
-# the 9 r2-origin dedup/dml/chunk/tfidf/window entries, the 3
-# r3-origin events/matchpath entries, and the 2 alphabetically-first
-# r4-origin entries — then two of those marginal picks
-# (clean_decontaminate_bloom, dml_sql_insert_into_select) swapped out
-# for the two NEW r9 entries per the freeze rule: op_noop_ptf_chain +
-# fn_int_timestamp_millis_default; a third marginal pick
-# (op_match_path_sessions, the youngest-origin r3 re-verification)
-# swapped for the NEW late-r9 op_partitionwise_fileformat entry (the
-# per-partition storage-descriptor component needs a driver row, and
-# the freeze rule puts new entries inside the window). Post-window
-# staleness floor r5.
-# R10 WINDOW (the r9 verdict's prescription): ALL 29 entries whose
-# latest green row is r5 (clean/ddl_sql/dml_sql/events/hiveql/join_smb/
-# matchpath/multimodal/pipeline/sample_group/similarity_ivf*/text/
-# tpch_q13/window families) + the 21 oldest-r6 re-verifications ranked
-# by FIRST green round (all from the r1-origin [1,6] cohort, taken
-# alphabetically: the agg_* heads, fn_* scalar heads, and join_* core).
-# New r10 entries (freeze rule) swap out the marginal picks — the
-# alphabetically-last of the 21 re-verifications.
-_R9_WINDOW = [
-    # -- stalest cohort: latest green row is r4 (all 27) --
-    "agg_histogram_equiwidth",
-    "agg_regression_family",
-    "clean_decontaminate",
-    "clean_length_outliers",
-    "clean_repeated_segments",
-    "clean_repetition_topgram",
-    "ddl_sql_show_partitions",
-    "ddl_sql_truncate_partition",
-    "dml_sql_insert_overwrite_dynamic",
-    "emb_dimension_stats",
-    "emb_quantize_int8",
-    "emb_random_projection",
-    "embedding_label_centroids",
-    "fn_xpath_family",
-    "sample_bucket_deterministic",
-    "sample_fraction",
-    "sample_temperature_mixture",
-    "similarity_topk_pq",
-    "sort_distribute_cluster_by",
-    "sort_limit_offset",
-    "sort_topk_pushdown",
-    "text_bpe_merge_candidates",
-    "text_countmin_heavy_hitters",
-    "text_lm_quality_score",
-    "text_pmi_collocations",
-    "text_top_terms_per_lang",
-    "text_zipf_head",
-    # -- 23 oldest-r5 re-verifications (ranked by first green) --
-    "agg_count_distinct",
-    "join_skew_salted",
-    "tpch_q10_returned_items",
-    "tpch_q1_pricing_summary",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q6_forecast_revenue",
-    "tpch_q9_product_profit",
-    "chunk_documents_overlapping",
-    "dedup_connected_clusters",
-    "dedup_minhash_near_duplicates",
-    "dedup_ngram_jaccard_pairs",
-    "dml_delete_where",
-    "dml_merge_upsert",
-    "similarity_topk_bruteforce",
-    "text_tfidf_keywords",
-    "window_rank_top_parts",
-    "events_session_window",
-    "events_tumbling_window",
-    # -- new in r9 (freeze rule: new entries land inside the window) --
-    "op_noop_ptf_chain",
-    "fn_int_timestamp_millis_default",
-    "op_partitionwise_fileformat",
-]
-del _R9_WINDOW  # history above; the live window follows
-
-# R10 WINDOW (verified 50/50 — the fourth consecutive all-green gate):
-_R10_WINDOW = [
-    # -- stalest cohort: latest green row is r5 (all 29) --
-    "clean_decontaminate_bloom",
-    "clean_normalize_unicode",
-    "ddl_sql_analyze_columns",
-    "ddl_sql_describe_formatted",
-    "ddl_sql_drop_recreate_latebind_view",
-    "ddl_sql_rename_metadata_migration",
-    "ddl_sql_schema_evolution",
-    "ddl_sql_temp_function",
-    "ddl_sql_view_stack",
-    "dml_sql_insert_into_select",
-    "dml_sql_merge_multi_clause",
-    "dml_sql_merge_statement",
-    "events_cohort_retention",
-    "events_funnel_ordered_steps",
-    "hiveql_greatest_least_null",
-    "hiveql_macro_expansion",
-    "join_smb_bucketed",
-    "multimodal_real_decode_ppm",
-    "op_match_path_sessions",
-    "op_matchpath_sql_invocation",
-    "pipeline_quality_classifier_bootstrap",
-    "sample_group_split_leakage_free",
-    "similarity_topk_ivf",
-    "similarity_topk_ivfpq",
-    "text_nb_lang_classifier",
-    "text_vocab_tokenize",
-    "tpch_q13_customer_distribution",
-    "window_time_range_frame",
-    "window_unordered_ranking",
-    # -- 21 oldest-r6 re-verifications (first green = r1, A-Z) --
-    "agg_collect_set_sorted",
-    "agg_cube_returnflag_linestatus",
-    "agg_exact_percentile",
-    "agg_grouping_sets_custom",
-    "agg_having_filter",
-    "agg_rollup_order_priority",
-    "agg_statistical_moments",
-    "fn_bitwise_ops",
-    "fn_months_between_trunc",
-    "fn_null_ops",
-    "fn_str_to_map",
-    "fn_string_family2",
-    "fn_unix_time_family",
-    "join_cross_region_nation",
-    "join_full_outer_daily_activity",
-    "join_inner_orders_customer",
-    "join_left_anti_inactive_customers",
-    "join_left_outer_customer_orders",
-    # -- new in r10 (freeze rule: new entries land inside the window,
-    # -- swapping the three alphabetically-last marginal picks:
-    # -- join_left_semi_active_customers, join_mixed_equi_residual,
-    # -- join_right_outer_orders_customer) --
-    "fn_decimal_float_col_compare",
-    "fn_mask_date_fields",
-    "op_testjar_udtf_count2",
-]
-del _R10_WINDOW  # history above; the live window follows
-
-# R11 WINDOW (the r10 verdict's prescription): ALL 31 entries whose
-# latest green row is r6 (the TPC-H tail q2/q4/q7/q8/q11-q22, setops
-# head, window frames, the r6-implementation-changed dedup/decontam
-# pair, statement heads, regex columns, tablesample) + the 19 oldest-r7
-# re-verifications ranked by FIRST green round then A-Z (all from the
-# r2-origin cohort: approx aggs, dedup head, DML triple, multimodal
-# quartet, pack pair, samplers head). New r11 entries (freeze rule)
-# swap out the alphabetically-last marginal picks.
-_R11_WINDOW = [
-    # -- stalest cohort: latest green row is r6 (all 31) --
-    "clean_decontaminate_embeddings",
-    "ddl_sql_describe_function",
-    "dedup_embedding_cosine_pairs",
-    "dml_dynamic_partition_insert",
-    "hiveql_regex_columns",
-    "join_left_semi_active_customers",
-    "join_mixed_equi_residual",
-    "join_right_outer_orders_customer",
-    "setop_union_all",
-    "setop_union_distinct",
-    "stmt_create_temp_table",
-    "stmt_insert_overwrite_directory",
-    "stmt_map_transform_spelling",
-    "tablesample_implicit_bucket",
-    "tpch_q11_important_stock",
-    "tpch_q12_shipmode_case_agg",
-    "tpch_q14_promo_effect",
-    "tpch_q15_top_supplier",
-    "tpch_q16_parts_supplier_counts",
-    "tpch_q17_small_quantity",
-    "tpch_q18_large_volume",
-    "tpch_q19_discounted_revenue",
-    "tpch_q20_promo_suppliers",
-    "tpch_q22_global_sales_opportunity",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q4_order_priority",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "window_range_frame",
-    "window_running_sum_rows_frame",
-    "window_string_range_frame",
-    # -- 19 oldest-r7 re-verifications (first green = r2, A-Z) --
-    "agg_approx_count_distinct",
-    "agg_approx_percentile",
-    "dedup_exact_groups",
-    "dedup_incremental_batch",
-    "dedup_simhash_near_duplicates",
-    "dml_delete_partitioned",
-    "dml_merge_matched_delete",
-    "dml_update_where",
-    "multimodal_feature_extract",
-    "multimodal_frame_sample",
-    "multimodal_metadata",
-    "multimodal_resize",
-    "pack_length_buckets",
-    "pack_sequences_greedy",
-    "sample_domain_cap",
-    "sample_hash_split",
-    "sample_interleave_weighted",
-    "sample_mixture_rates",
-    "sample_shuffle_shard",
-]
-del _R11_WINDOW  # history above; the live window follows
-
-# R12 WINDOW (the r11 verdict's prescription): ALL 30 entries whose
-# latest green row is r7 (the scalar-function families, lateral views,
-# asof/banded joins, setops tail, correlated subqueries, text-analysis
-# family, window tail) + the 20 oldest-r8 re-verifications ranked by
-# FIRST green round then A-Z (r1-origin agg/array/interval/ignore-nulls,
-# r2 LSH + sorts, r3 events/hiveql dialect cohort). Computed from
-# verification_ledger.json regenerated through r11 (histogram
-# r7:30 r8:50 r9:50 r10:50 r11:50); post-r12 staleness floor is r8.
-_R12_WINDOW = [
-    # -- stalest cohort: latest green row is r7 (all 30) --
-    "fn_cast_coercion",
-    "fn_complex_types",
-    "fn_conditional_family",
-    "fn_datetime_family",
-    "fn_hash_codec_family",
-    "fn_math_family",
-    "fn_regex_family",
-    "fn_string_family",
-    "hiveql_lateral_view",
-    "join_null_safe_equality",
-    "lateral_explode_tokens",
-    "op_asof_join_last_click",
-    "op_banded_range_join",
-    "sample_stratified_per_lang",
-    "setop_except_all",
-    "setop_except_distinct",
-    "setop_intersect_all",
-    "setop_intersect_distinct",
-    "subq_exists_correlated",
-    "subq_scalar_correlated",
-    "text_fingerprint_groups",
-    "text_lang_id",
-    "text_quality_scores",
-    "text_rolling_fingerprint",
-    "text_token_counts",
-    "window_distribution_functions",
-    "window_lead_lag_offsets",
-    "window_lead_lag_orders",
-    "window_named_window_inheritance",
-    "window_share_of_partition",
-    # -- 20 oldest-r8 re-verifications (by first green round, A-Z) --
-    "agg_boolean_family",
-    "fn_array_family",
-    "fn_interval_arithmetic",
-    "window_ignore_nulls",
-    "similarity_topk_lsh",
-    "sort_nulls_ordering",
-    "sort_order_by_multi",
-    "dedup_keep_first_by_priority",
-    "events_click_purchase_attribution",
-    "events_dedup_distinct",
-    "events_rate_per_type_share",
-    "events_rollup_incremental",
-    "events_rollup_ndv_sketch",
-    "events_sliding_window",
-    "hiveql_case_insensitive_keywords",
-    "hiveql_cluster_by",
-    "hiveql_distribute_sort_by",
-    "hiveql_grouping_sets_id",
-    "hiveql_tablesample_bucket",
-    "hiveql_tablesample_bucket_string",
-]
-del _R12_WINDOW  # history above; the live window follows
-
 # R13 WINDOW (the r12 verdict's prescription, optimization round 2/2):
 # every query whose construction or physical plan was rewritten in the
 # r12 optimization round gets a driver-side oracle row — the r12 window

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from hive_2_3_2_spark.catalog import load_table
 from hive_2_3_2_spark.sources import (
-    insert_overwrite_partitions,
     merge_upsert,
     read_csv,
     read_json,
@@ -68,7 +67,7 @@ def test_partitioned_write_and_dynamic_overwrite(spark, sf_dir, tmp_path):
         .limit(10)
         .withColumn("o_totalprice", F.lit(0.0))
     )
-    insert_overwrite_partitions(f_new, tgt, ["status"])
+    write_partitioned(f_new, tgt, ["status"])
     after = spark.read.parquet(tgt)
     # untouched partitions intact:
     o_before = orders.filter(F.col("status") == "O").count()
