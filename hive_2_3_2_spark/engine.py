@@ -567,17 +567,18 @@ def _restructure_create_table(query: str) -> str:
 # Engine intercepts the statements and routes them to the staged-rewrite
 # helpers in sources/writers.py.
 _DELETE_STMT = re.compile(
-    r"^\s*DELETE\s+FROM\s+([\w.]+)(?:\s+WHERE\s+(.*?))?\s*;?\s*$",
+    r"^\s*DELETE\s+FROM\s+(?P<table>[\w.]+)(?:\s+WHERE\s+(.*?))?\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _UPDATE_STMT = re.compile(
-    r"^\s*UPDATE\s+([\w.]+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*?))?\s*;?\s*$",
+    r"^\s*UPDATE\s+(?P<table>[\w.]+)\s+SET\s+(.*?)"
+    r"(?:\s+WHERE\s+(.*?))?\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 # INSERT INTO|OVERWRITE [TABLE] t [PARTITION (p=v | p, ...)] [(cols)]
 # SELECT ... | VALUES ... | WITH ... (body passes through spark.sql).
 _INSERT_STMT = re.compile(
-    r"^\s*INSERT\s+(INTO|OVERWRITE)\s+(?:TABLE\s+)?([\w.]+)"
+    r"^\s*INSERT\s+(INTO|OVERWRITE)\s+(?:TABLE\s+)?(?P<table>[\w.]+)"
     r"(?:\s+PARTITION\s*\(([^)]*)\))?"
     r"(?:\s*\(([\w\s,]+)\))?"
     r"\s+((?:SELECT|VALUES|WITH|FROM|TABLE)\b.*)$",
@@ -588,7 +589,7 @@ _INSERT_STMT = re.compile(
 # (insert1_overwrite_partitions.q; SemanticAnalyzer qbp.getInsertOverwriteTables
 # ifNotExists). Detected and stripped before _INSERT_STMT matching.
 _INSERT_IF_NOT_EXISTS = re.compile(
-    r"^(\s*INSERT\s+OVERWRITE\s+(?:TABLE\s+)?([\w.]+)\s+"
+    r"^(\s*INSERT\s+OVERWRITE\s+(?:TABLE\s+)?(?P<table>[\w.]+)\s+"
     r"PARTITION\s*\(([^)]*)\))\s+IF\s+NOT\s+EXISTS\b",
     re.IGNORECASE,
 )
@@ -602,10 +603,18 @@ _MULTI_INSERT_STMT = re.compile(
 _MULTI_INSERT_SPLIT = re.compile(
     r"(?=\bINSERT\s+(?:INTO|OVERWRITE)\b)", re.IGNORECASE
 )
+# WITH c AS (...) INSERT ... — the CTE written before the INSERT
+_WITH_INSERT_STMT = re.compile(r"^\s*WITH\b", re.IGNORECASE)
+#: Guards of Engine.sql's statement tables, read off a pattern's
+#: ``table`` group: ``_PATH_TABLE`` holds for a path-backed table this
+#: Engine registered, ``_ANY_TABLE`` also for a session-catalog table
+#: (not a view).
+_PATH_TABLE = "path table"
+_ANY_TABLE = "path or catalog table"
 # LOAD DATA [LOCAL] INPATH 'src' [OVERWRITE] INTO TABLE t [PARTITION(...)]
 _LOAD_DATA_STMT = re.compile(
     r"^\s*LOAD\s+DATA\s+(?:LOCAL\s+)?INPATH\s+'([^']+)'\s+"
-    r"(OVERWRITE\s+)?INTO\s+TABLE\s+([\w.]+)"
+    r"(OVERWRITE\s+)?INTO\s+TABLE\s+(?P<table>[\w.]+)"
     r"(?:\s+PARTITION\s*\(([^)]*)\))?\s*;?\s*$",
     re.IGNORECASE,
 )
@@ -613,7 +622,7 @@ _LOAD_DATA_STMT = re.compile(
 # executed by exec/DDLTask.java): TRUNCATE, SHOW PARTITIONS, ALTER TABLE
 # ADD/DROP PARTITION, ALTER TABLE [PARTITION] CONCATENATE.
 _TRUNCATE_STMT = re.compile(
-    r"^\s*TRUNCATE\s+TABLE\s+([\w.]+)"
+    r"^\s*TRUNCATE\s+TABLE\s+(?P<table>[\w.]+)"
     r"(?:\s+PARTITION\s*\(([^)]*)\))?\s*;?\s*$",
     re.IGNORECASE,
 )
@@ -633,6 +642,9 @@ _CREATE_AVRO_STMT = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 
+# Hive-form INSERT OVERWRITE DIRECTORY (plain / ROW FORMAT DELIMITED /
+# STORED AS). The Spark-native `USING fmt` form does not match (the body
+# must start at SELECT/WITH/FROM) and passes through to spark.sql.
 _INSERT_DIRECTORY_STMT = re.compile(
     r"^\s*INSERT\s+OVERWRITE\s+(LOCAL\s+)?DIRECTORY\s+'([^']+)'\s*"
     r"(?:ROW\s+FORMAT\s+DELIMITED\s+"
@@ -643,12 +655,13 @@ _INSERT_DIRECTORY_STMT = re.compile(
 )
 
 _SHOW_PARTITIONS_STMT = re.compile(
-    r"^\s*SHOW\s+PARTITIONS\s+([\w.]+)"
+    r"^\s*SHOW\s+PARTITIONS\s+(?P<table>[\w.]+)"
     r"(?:\s+PARTITION\s*\(([^)]*)\))?\s*;?\s*$",
     re.IGNORECASE,
 )
 _ALTER_PARTITION_STMT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+(ADD|DROP)\s+(IF\s+(?:NOT\s+)?EXISTS\s+)?"
+    r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.]+)\s+(ADD|DROP)\s+"
+    r"(IF\s+(?:NOT\s+)?EXISTS\s+)?"
     r"((?:PARTITION\s*\([^)]*\)\s*,?\s*)+);?\s*$",
     re.IGNORECASE,
 )
@@ -657,7 +670,7 @@ _ALTER_PARTITION_SPEC = re.compile(
     r"PARTITION\s*\(([^)]*)\)", re.IGNORECASE
 )
 _CONCATENATE_STMT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)"
+    r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.]+)"
     r"(?:\s+PARTITION\s*\(([^)]*)\))?\s+CONCATENATE\s*;?\s*$",
     re.IGNORECASE,
 )
@@ -666,14 +679,15 @@ _CONCATENATE_STMT = re.compile(
 # ImportSemanticAnalyzer.java over CopyTask/MoveTask — data files plus a
 # _metadata descriptor; here the descriptor is JSON).
 _ANALYZE_STMT = re.compile(
-    r"^\s*ANALYZE\s+TABLE\s+([\w.]+)"
+    r"^\s*ANALYZE\s+TABLE\s+(?P<table>[\w.]+)"
     r"(?:\s+PARTITION\s*\(([^)]*)\))?"
     r"\s+COMPUTE\s+STATISTICS"
     r"(\s+FOR\s+COLUMNS.*|\s+NOSCAN)?\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _MSCK_STMT = re.compile(
-    r"^\s*MSCK\s+(?:REPAIR\s+)?TABLE\s+([\w.]+)\s*;?\s*$", re.IGNORECASE
+    r"^\s*MSCK\s+(?:REPAIR\s+)?TABLE\s+(?P<table>[\w.]+)\s*;?\s*$",
+    re.IGNORECASE,
 )
 # CREATE TABLE ... AS SELECT/WITH — the head/body split for Hive's
 # _c<ordinal> auto-naming of unaliased expression columns
@@ -683,7 +697,7 @@ _CTAS_SPLIT = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 _REFRESH_STMT = re.compile(
-    r"^\s*REFRESH\s+TABLE\s+([\w.]+)\s*;?\s*$", re.IGNORECASE
+    r"^\s*REFRESH\s+TABLE\s+(?P<table>[\w.]+)\s*;?\s*$", re.IGNORECASE
 )
 # StatsOptimizer-answerable shape: a bare aggregate-only SELECT over one
 # path-backed table — no GROUP/ORDER/LIMIT/joins (any such text after
@@ -714,7 +728,7 @@ _STATS_PART_PRED = re.compile(
     r"('(?:[^']*)'|-?\d+(?:\.\d+)?)\s*$"
 )
 _RENAME_STMT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+RENAME\s+TO\s+([\w.]+)\s*;?\s*$",
+    r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.]+)\s+RENAME\s+TO\s+([\w.]+)\s*;?\s*$",
     re.IGNORECASE,
 )
 _EXPORT_STMT = re.compile(
@@ -731,7 +745,7 @@ _IMPORT_STMT = re.compile(
 )
 # MERGE INTO t [AS a] USING (subquery)|src [AS b] ON cond WHEN ...
 _MERGE_STMT = re.compile(
-    r"^\s*MERGE\s+INTO\s+([\w.]+)(?:\s+(?:AS\s+)?(\w+))?"
+    r"^\s*MERGE\s+INTO\s+(?P<table>[\w.]+)(?:\s+(?:AS\s+)?(\w+))?"
     r"\s+USING\s+(\(.*?\)|[\w.]+)(?:\s+(?:AS\s+)?(\w+))?"
     r"\s+ON\s+(.*?)"
     r"\s+(WHEN\s+.*?)\s*;?\s*$",
@@ -772,10 +786,10 @@ _RESOURCE_STMT = re.compile(
 )
 _SOURCE_STMT = re.compile(r"^\s*SOURCE\s+(.+?)\s*;?\s*$", re.IGNORECASE)
 _SHOW_CREATE_STMT = re.compile(
-    r"^\s*SHOW\s+CREATE\s+TABLE\s+([\w.]+)\s*;?\s*$", re.IGNORECASE
+    r"^\s*SHOW\s+CREATE\s+TABLE\s+(?P<table>[\w.]+)\s*;?\s*$", re.IGNORECASE
 )
 _DESCRIBE_STMT = re.compile(
-    r"^\s*DESC(?:RIBE)?\s+(EXTENDED\s+|FORMATTED\s+)?([\w.]+)"
+    r"^\s*DESC(?:RIBE)?\s+(EXTENDED\s+|FORMATTED\s+)?(?P<table>[\w.]+)"
     r"(?:\s+PARTITION\s*\(([^)]*)\))?"
     r"(?:\s+(\w+))?\s*;?\s*$",
     re.IGNORECASE,
@@ -891,7 +905,7 @@ _META_AGG_ITEM = re.compile(
 # analyzeAlterTableModifyCols' partition-column branch). Metadata-only
 # in Hive: directory VALUES reparse under the new type.
 _ALTER_PART_COLTYPE_STMT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+PARTITION\s+COLUMN\s*"
+    r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.]+)\s+PARTITION\s+COLUMN\s*"
     r"\(\s*(\w+)\s+([\w]+(?:\s*\([\d,\s]*\))?)\s*\)\s*;?\s*$",
     re.IGNORECASE,
 )
@@ -938,7 +952,7 @@ def _mangle_special_name(name: str) -> str:
 # DDLTask.createTableLike: new empty table with the source's schema).
 _CREATE_LIKE_STMT = re.compile(
     r"^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?"
-    r"([\w.]+)\s+LIKE\s+([\w.]+)(?:\s+STORED\s+AS\s+(\w+))?"
+    r"([\w.]+)\s+LIKE\s+(?P<table>[\w.]+)(?:\s+STORED\s+AS\s+(\w+))?"
     r"(?:\s+LOCATION\s+'([^']+)')?\s*;?\s*$",
     re.IGNORECASE,
 )
@@ -949,17 +963,18 @@ _CREATE_LIKE_STMT = re.compile(
 # its data (reads NULL) — this engine reproduces exactly that via a
 # declared-schema overlay applied at read time.
 _ALTER_ADD_COLS_STMT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+ADD\s+COLUMNS\s*\((.*)\)"
+    r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.]+)\s+ADD\s+COLUMNS\s*\((.*)\)"
     r"\s*(?:CASCADE|RESTRICT)?\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _ALTER_REPLACE_COLS_STMT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+REPLACE\s+COLUMNS\s*\((.*)\)"
+    r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.]+)\s+REPLACE\s+COLUMNS\s*\((.*)\)"
     r"\s*(?:CASCADE|RESTRICT)?\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _ALTER_CHANGE_COL_STMT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+CHANGE(?:\s+COLUMN)?\s+(\w+)\s+(\w+)\s+"
+    r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.]+)\s+CHANGE(?:\s+COLUMN)?\s+"
+    r"(\w+)\s+(\w+)\s+"
     r"([\w]+(?:\s*\([\d,\s]*\))?(?:\s*<[^;]*>)?)"
     r"(?:\s+COMMENT\s+'[^']*')?"
     r"(?:\s+(FIRST|AFTER\s+\w+))?\s*(?:CASCADE|RESTRICT)?\s*;?\s*$",
@@ -972,37 +987,38 @@ _ALTER_FILEFORMAT_STMT = re.compile(
     re.IGNORECASE,
 )
 _ALTER_TBLPROPS_STMT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+(SET|UNSET)\s+TBLPROPERTIES\s*"
+    r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.]+)\s+(SET|UNSET)\s+TBLPROPERTIES\s*"
     r"(IF\s+EXISTS\s+)?\((.*)\)\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _SHOW_TBLPROPS_STMT = re.compile(
-    r"^\s*SHOW\s+TBLPROPERTIES\s+([\w.]+)"
+    r"^\s*SHOW\s+TBLPROPERTIES\s+(?P<table>[\w.]+)"
     r"\s*(?:\(\s*'?([^')]+?)'?\s*\))?\s*;?\s*$",
     re.IGNORECASE,
 )
 _SHOW_TABLE_EXTENDED_STMT = re.compile(
     r"^\s*SHOW\s+TABLE\s+EXTENDED\s+(?:(?:IN|FROM)\s+[\w.]+\s+)?"
-    r"LIKE\s+['`]?([\w.]+)['`]?"
+    r"LIKE\s+['`]?(?P<table>[\w.]+)['`]?"
     r"(?:\s+PARTITION\s*\(([^)]*)\))?\s*;?\s*$",
     re.IGNORECASE,
 )
 _SHOW_COLUMNS_STMT = re.compile(
-    r"^\s*SHOW\s+COLUMNS\s+(?:FROM|IN)\s+([\w.]+)\s*;?\s*$",
+    r"^\s*SHOW\s+COLUMNS\s+(?:FROM|IN)\s+(?P<table>[\w.]+)\s*;?\s*$",
     re.IGNORECASE,
 )
 _EXCHANGE_PARTITION_STMT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+EXCHANGE\s+PARTITION\s*"
+    r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.]+)\s+EXCHANGE\s+PARTITION\s*"
     r"\(([^)]*)\)\s+WITH\s+TABLE\s+([\w.]+)\s*;?\s*$",
     re.IGNORECASE,
 )
 _RENAME_PARTITION_STMT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+PARTITION\s*\(([^)]*)\)\s+"
+    r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.]+)\s+PARTITION\s*\(([^)]*)\)\s+"
     r"RENAME\s+TO\s+PARTITION\s*\(([^)]*)\)\s*;?\s*$",
     re.IGNORECASE,
 )
 _SET_LOCATION_STMT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+SET\s+LOCATION\s+'([^']+)'\s*;?\s*$",
+    r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.]+)\s+SET\s+LOCATION\s+"
+    r"'([^']+)'\s*;?\s*$",
     re.IGNORECASE,
 )
 # View DDL (reference: parse/SemanticAnalyzer.java createView analysis +
@@ -1036,20 +1052,20 @@ _DROP_TABLE_STMT = re.compile(
     re.IGNORECASE,
 )
 _ALTER_SET_SERDE_STMT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)"
+    r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.]+)"
     r"(?:\s+PARTITION\s*\(([^)]*)\))?"
-    r"\s+SET\s+SERDE\s+'([^']+)'"
-    r"(?:\s+WITH\s+SERDEPROPERTIES\s*\((.*)\))?\s*;?\s*$",
+    r"\s+SET\s+SERDE\s+'(?P<serde>[^']+)'"
+    r"(?:\s+WITH\s+SERDEPROPERTIES\s*\((?P<props>.*)\))?\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _ALTER_SET_SERDEPROPS_STMT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)"
+    r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.]+)"
     r"(?:\s+PARTITION\s*\(([^)]*)\))?"
-    r"\s+SET\s+SERDEPROPERTIES\s*\((.*)\)\s*;?\s*$",
+    r"\s+SET\s+SERDEPROPERTIES\s*\((?P<props>.*)\)\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _ALTER_TOUCH_STMT = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+TOUCH"
+    r"^\s*ALTER\s+TABLE\s+(?P<table>[\w.]+)\s+TOUCH"
     r"(?:\s+PARTITION\s*\(([^)]*)\))?\s*;?\s*$",
     re.IGNORECASE,
 )
@@ -1543,16 +1559,7 @@ class Engine:
         partition_cols: list[str] | None,
     ) -> DataFrame:
         note_view_override(self.spark, name)
-        if self.table_format.get(name) == "avro":
-            df = self._avro_py_frame(name, path)
-            df.createOrReplaceTempView(name)
-            self.tables[name] = df
-            if self.views:
-                self._refresh_dependent_views(name)
-            return df
-        overlay_df = self._epoch_union_frame(name, path)
-        if overlay_df is None:
-            overlay_df = self._mixed_format_frame(name, path)
+        overlay_df = self._overlay_frame(name, path)
         if overlay_df is not None:
             overlay_df.createOrReplaceTempView(name)
             self.tables[name] = overlay_df
@@ -1591,6 +1598,18 @@ class Engine:
             self._refresh_dependent_views(name)
         return df
 
+    def _overlay_frame(self, key: str, path: str) -> DataFrame | None:
+        """The read of a table that is not plain parquet under one
+        schema — an engine-managed avro table, a table with schema
+        epochs (type-changing ALTERs), or one with mixed per-partition
+        formats — or None for a plain parquet table."""
+        if self.table_format.get(key) == "avro":
+            return self._avro_py_frame(key, path)
+        df = self._epoch_union_frame(key, path)
+        if df is None:
+            df = self._mixed_format_frame(key, path)
+        return df
+
     def _target_frame(self, key: str) -> DataFrame:
         """Overlay-aware read of a registered table's path — every DML
         path must use this (a bare ``spark.read.parquet`` after schema
@@ -1599,13 +1618,9 @@ class Engine:
         schema, so it launches no schema-inference job and serves an
         empty directory tree (last partition dropped/exchanged) as an
         empty relation."""
-        if self.table_format.get(key) == "avro":
-            return self._avro_py_frame(key, self.table_paths[key])
-        epoch_df = self._epoch_union_frame(key, self.table_paths[key])
-        if epoch_df is None:
-            epoch_df = self._mixed_format_frame(key, self.table_paths[key])
-        if epoch_df is not None:
-            return epoch_df
+        overlay_df = self._overlay_frame(key, self.table_paths[key])
+        if overlay_df is not None:
+            return overlay_df
         df = self.spark.read.schema(self._declared_schema(key)).parquet(
             self.table_paths[key]
         )
@@ -1653,13 +1668,17 @@ class Engine:
     def _dml_registered(self, name: str) -> bool:
         """True if ``name`` is a path-backed table this Engine manages.
 
-        Statements whose target is NOT registered fall through to
-        ``spark.sql`` (the Spark parser accepts INSERT/TRUNCATE/SHOW
-        PARTITIONS/ALTER PARTITION/... against catalog tables — e.g.
-        ones Engine.sql itself created via the STORED AS rewrite), so
-        catalog-backed tables keep working instead of getting a typed
-        rejection. Statements Spark cannot parse at all (EXPORT/IMPORT/
-        CONCATENATE) keep the typed error."""
+        The guard of Engine.sql's table entries: ``_PATH_TABLE`` holds
+        when this does, ``_ANY_TABLE`` also when ``_is_catalog_table``
+        does (checked second — it calls into the catalog). A statement
+        whose target fails its entry's guard passes to the next entry
+        and, when none takes it, to ``spark.sql`` (the Spark parser
+        accepts INSERT/TRUNCATE/SHOW PARTITIONS/ALTER PARTITION/...
+        against catalog tables — e.g. ones Engine.sql itself created via
+        the STORED AS rewrite), so catalog-backed tables keep working
+        instead of getting a typed rejection. Statements Spark cannot
+        parse at all (EXPORT/IMPORT/CONCATENATE) have unguarded entries
+        and keep the typed error."""
         return name.split(".")[-1].lower() in self.table_paths
 
     def _rows_affected(self, n: int) -> DataFrame:
@@ -1776,22 +1795,125 @@ class Engine:
         body = self._semantic_rewrites(self._expand_macros(body))
         return self.spark.sql(rewrite_hiveql(body, spark=self.spark))
 
+    #: CLI command processors, tried in order before macro expansion
+    #: (CommandProcessorFactory.java:59 picks one per command). An entry
+    #: is (pattern, guard, handler): a statement runs the first entry
+    #: whose pattern matches and whose guard holds. The handler names
+    #: an Engine method that takes the match and returns a frame, or
+    #: None to fall through to the next entry. The guard reads the
+    #: pattern's ``table`` group: None always holds, ``_PATH_TABLE``
+    #: needs a path-backed table this Engine registered, ``_ANY_TABLE``
+    #: also takes a session-catalog table (see _table_hits).
+    _CLI_COMMANDS: tuple[tuple[re.Pattern[str], str | None, str], ...] = (
+        (_SHELL_STMT, None, "_run_shell"),
+        (_DFS_STMT, None, "_run_dfs"),
+        (_SET_STMT, None, "_run_set"),
+        (_RESET_STMT, None, "_run_reset"),
+        (_RESOURCE_STMT, None, "_run_resource"),
+        (_SOURCE_STMT, None, "_run_source"),
+        (_CREATE_MACRO_STMT, None, "_run_create_macro"),
+        (_DROP_MACRO_STMT, None, "_run_drop_macro"),
+        (_CREATE_FUNCTION_STMT, None, "_run_create_function"),
+        (_DROP_FUNCTION_STMT, None, "_run_drop_function"),
+        (_SHOW_FUNCTIONS_STMT, None, "_run_show_functions"),
+        (_DESCRIBE_FUNCTION_STMT, None, "_run_describe_function"),
+        (_SHOW_CONF_STMT, None, "_run_show_conf"),
+        (_SHOW_LOCKS_STMT, None, "_run_show_locks"),
+        (_SHOW_TXN_COMPACT_STMT, None, "_run_show_txn_compact"),
+        (_CREATE_DB_STMT, None, "_run_create_database"),
+        (_ALTER_DB_STMT, None, "_run_alter_database"),
+        (_DESC_DB_STMT, None, "_run_describe_database"),
+        (_SHOW_CREATE_DB_STMT, None, "_run_show_create_database"),
+        (_DROP_DB_STMT, None, "_run_drop_database"),
+        (_ALTER_CLUSTERED_STMT, None, "_run_alter_clustered"),
+        (_CREATE_LIKE_STMT, _PATH_TABLE, "_run_create_like"),
+    )
+    #: Statements the Engine runs itself, tried in order after macro
+    #: expansion; same entry shape as _CLI_COMMANDS. A statement no
+    #: entry handles goes to rewrite_hiveql + spark.sql (_run_statement).
+    #: A new statement is one entry (plus its handler), placed before
+    #: any entry whose pattern also matches it.
+    _STATEMENTS: tuple[tuple[re.Pattern[str], str | None, str], ...] = (
+        (_EXPLAIN_ANALYZE_STMT, None, "_run_explain_analyze"),
+        (_EXPLAIN_STMT, None, "_run_explain"),
+        (_SHOW_CREATE_STMT, None, "_run_show_create"),
+        (_DESCRIBE_STMT, _PATH_TABLE, "_run_describe_table"),
+        (_DESCRIBE_STMT, None, "_describe_catalog_with_constraints"),
+        (_DELETE_STMT, _PATH_TABLE, "_run_delete"),
+        (_UPDATE_STMT, _PATH_TABLE, "_run_update"),
+        (_DELETE_STMT, _ANY_TABLE, "_run_nonacid_dml"),
+        (_UPDATE_STMT, _ANY_TABLE, "_run_nonacid_dml"),
+        (_INSERT_IF_NOT_EXISTS, _ANY_TABLE, "_run_insert_if_not_exists"),
+        (_INSERT_STMT, _PATH_TABLE, "_run_insert"),
+        (_INSERT_STMT, None, "_run_insert_catalog_table"),
+        (_WITH_INSERT_STMT, None, "_run_with_insert"),
+        (_MULTI_INSERT_STMT, None, "_run_multi_insert"),
+        (_LOAD_DATA_STMT, _PATH_TABLE, "_run_load_data"),
+        (_MERGE_STMT, _PATH_TABLE, "_run_merge"),
+        (_TRUNCATE_STMT, _PATH_TABLE, "_run_truncate"),
+        (_SHOW_PARTITIONS_STMT, None, "_run_show_view_partitions"),
+        (_SHOW_PARTITIONS_STMT, _PATH_TABLE, "_run_show_partitions"),
+        (_ALTER_PARTITION_STMT, _PATH_TABLE, "_run_alter_partition"),
+        (_CONCATENATE_STMT, None, "_run_concatenate"),
+        (_MSCK_STMT, _PATH_TABLE, "_run_msck"),
+        (_REFRESH_STMT, _PATH_TABLE, "_run_refresh"),
+        (_ANALYZE_STMT, _PATH_TABLE, "_run_analyze"),
+        (_RENAME_STMT, _PATH_TABLE, "_run_rename"),
+        (_EXCHANGE_PARTITION_STMT, _PATH_TABLE, "_run_exchange_partition"),
+        (_RENAME_PARTITION_STMT, _PATH_TABLE, "_run_rename_partition"),
+        (_SET_LOCATION_STMT, _PATH_TABLE, "_run_set_location"),
+        (_ALTER_ADD_COLS_STMT, _PATH_TABLE, "_run_add_columns"),
+        (_ALTER_REPLACE_COLS_STMT, _PATH_TABLE, "_run_replace_columns"),
+        (_ALTER_PART_COLTYPE_STMT, _PATH_TABLE, "_run_partition_coltype"),
+        (_ALTER_CHANGE_COL_STMT, _PATH_TABLE, "_run_change_column"),
+        (_ALTER_TBLPROPS_STMT, _PATH_TABLE, "_run_tblproperties"),
+        (_ALTER_FILEFORMAT_STMT, None, "_run_set_fileformat"),
+        (_ALTER_SET_SERDE_STMT, _ANY_TABLE, "_run_set_serde"),
+        (_ALTER_SET_SERDEPROPS_STMT, _ANY_TABLE, "_run_set_serde"),
+        (_ALTER_TOUCH_STMT, _ANY_TABLE, "_run_touch"),
+        (_ALTER_ADD_CONSTRAINT_STMT, None, "_run_add_constraint"),
+        (_ALTER_DROP_CONSTRAINT_STMT, None, "_run_drop_constraint"),
+        (_SHOW_TABLE_EXTENDED_STMT, _ANY_TABLE, "_run_show_table_extended"),
+        (_SHOW_TBLPROPS_STMT, None, "_run_show_tblproperties"),
+        (_SHOW_COLUMNS_STMT, _PATH_TABLE, "_run_show_columns"),
+        (_CREATE_VIEW_STMT, None, "_run_create_view"),
+        (_ALTER_VIEW_PART_STMT, None, "_run_alter_view_partition"),
+        (_ALTER_VIEW_RENAME_STMT, None, "_run_alter_view_rename"),
+        (_ALTER_VIEW_STMT, None, "_run_alter_view"),
+        (_DROP_VIEW_STMT, None, "_run_drop_view"),
+        (_DROP_TABLE_STMT, None, "_run_drop_table"),
+        (_EXPORT_STMT, None, "_run_export"),
+        (_IMPORT_STMT, None, "_run_import"),
+        (_INSERT_DIRECTORY_STMT, None, "_run_insert_directory"),
+        (_CREATE_TEMP_TABLE_STMT, None, "_run_create_temp_table"),
+        (_CREATE_AVRO_STMT, None, "_run_create_avro_fallback"),
+    )
+
     def sql(self, query: str) -> DataFrame:
         """Run HiveQL-compatible SQL (reference entry:
         ql/src/java/org/apache/hadoop/hive/ql/Driver.java:1371 ``run``).
-        SELECT/DQL passes through (plus the HiveQL rewrites); DELETE,
-        UPDATE, INSERT INTO/OVERWRITE, and single-clause MERGE route to
-        the staged-rewrite DML helpers and return a 1-row
-        (rows_affected) DataFrame like a CLI row count. Each statement
-        reads its target once (plus the pruned rewrite) — the affected
-        count comes from the rewrite itself (observed metric, footer
-        row counts, or the shared discovery job), never a pre-scan.
-        The rows_affected frame and every catalog answer (SET, SHOW,
-        DESCRIBE, EXPLAIN, stats-answered aggregates) are driver-local
+
+        After variable substitution and the pre-dispatch rewrites, the
+        statement goes through two ordered tables of (pattern, guard,
+        handler) entries: ``_CLI_COMMANDS`` (SET, resources, macros,
+        functions, database DDL), then — after macro expansion —
+        ``_STATEMENTS`` (DML, table/view DDL, SHOW/DESCRIBE, EXPLAIN).
+        A handler returning None passes the statement to the next
+        entry; when no entry handles it, the statement goes through
+        ``rewrite_hiveql`` and the error-keyed retry loop into
+        ``spark.sql`` (``_run_statement``). To add a statement, add its
+        pattern (with a ``table`` group if it needs a guard) and an
+        entry naming a ``_run_*`` method that takes the match.
+
+        DELETE, UPDATE, INSERT and MERGE on a registered table run the
+        staged-rewrite DML helpers and return a 1-row (rows_affected)
+        DataFrame like a CLI row count; the count comes from the
+        rewrite itself (observed metric, footer row counts, or the
+        partitioned discovery job), never a pre-scan. The rows_affected
+        frame and every catalog answer (SET, SHOW, DESCRIBE, EXPLAIN,
+        stats-answered aggregates) are driver-local
         (``session.local_frame``): collecting them launches no Spark
         job, as Hive's FetchTask reads them inside the client."""
-        from pyspark.sql import functions as F
-
         # CLI command processors run BEFORE variable substitution would
         # make sense for SET itself, but Hive substitutes every command
         # (VariableSubstitution wraps each processor) — so substitute
@@ -1892,451 +2014,45 @@ class Engine:
             query = self._rewrite_noop_ptf_calls(query)
         if _CTAS_SPLIT.match(query):
             query = self._ctas_hive_autonames(query)
-        m = _SHELL_STMT.match(query)
-        if m:
-            raise HiveQLUnsupportedError(
-                "'!' shell escape is not supported — no shell execution "
-                "from SQL in this engine (CliDriver.processCmd shell path)"
-            )
-        m = _DFS_STMT.match(query)
-        if m:
-            raise HiveQLUnsupportedError(
-                "'dfs' commands are not supported — there is no HDFS "
-                "shell here; use LOAD DATA / EXPORT / IMPORT instead"
-            )
-        m = _SET_STMT.match(query)
-        if m and not re.match(r"^\s*SET\s*\(", query):
-            return self._run_set(m.group(1))
-        m = _RESET_STMT.match(query)
-        if m:
-            self.hiveconf.clear()
-            return self._conf_frame([])
-        m = _RESOURCE_STMT.match(query)
-        if m:
-            return self._run_resource(m.group(1), m.group(2), m.group(3))
-        m = _SOURCE_STMT.match(query)
-        if m:
-            return self._run_source(m.group(1))
-        m = _CREATE_MACRO_STMT.match(query)
-        if m:
-            return self._run_create_macro(m)
-        m = _DROP_MACRO_STMT.match(query)
-        if m:
-            self.macros.pop(m.group(1).lower(), None)
-            return self._conf_frame([])
-        m = _CREATE_FUNCTION_STMT.match(query)
-        if m:
-            return self._run_create_function(m)
-        m = _DROP_FUNCTION_STMT.match(query)
-        if m:
-            return self._run_drop_function(m)
-        m = _SHOW_FUNCTIONS_STMT.match(query)
-        if m:
-            return self._run_show_functions(m.group(1))
-        m = _DESCRIBE_FUNCTION_STMT.match(query)
-        if m:
-            return self._run_describe_function(
-                bool(m.group(1)), m.group(2).strip("`")
-            )
-        m = _SHOW_CONF_STMT.match(query)
-        if m:
-            return self._run_show_conf(m.group(1))
-        if _SHOW_LOCKS_STMT.match(query):
-            # DDLTask.showLocks — this engine is single-session with no
-            # lock manager (like Hive under the no-op DummyTxnManager):
-            # the lock list is ALWAYS empty; the typed columns mirror
-            # ShowLocksResponseElement so tooling can still bind.
-            return local_frame(
-                self.spark,
-                [],
-                "lockid string, database string, tab_name string, "
-                "partition string, lock_state string, lock_type string, "
-                "transaction_id string",
-            )
-        m = _SHOW_TXN_COMPACT_STMT.match(query)
-        if m:
-            # ACID manager surfaces (DDLTask.showTxns/showCompactions):
-            # non-transactional engine -> structurally-correct empty
-            # result, matching Hive without ACID enabled.
-            if m.group(1).upper() == "TRANSACTIONS":
-                return local_frame(
-                    self.spark,
-                    [],
-                    "txnid bigint, state string, startedtime bigint, "
-                    "lastheartbeattime bigint, user string, host string",
-                )
-            return local_frame(
-                self.spark,
-                [],
-                "compactionid bigint, dbname string, tabname string, "
-                "partname string, type string, state string, "
-                "workerid string, starttime bigint, duration bigint",
-            )
-        m = _CREATE_DB_STMT.match(query)
-        if m:
-            return self._run_create_database(m)
-        m = _ALTER_DB_STMT.match(query)
-        if m:
-            return self._run_alter_database(m)
-        m = _DESC_DB_STMT.match(query)
-        if m:
-            return self._run_describe_database(bool(m.group(1)), m.group(2))
-        m = _SHOW_CREATE_DB_STMT.match(query)
-        if m:
-            return self._run_show_create_database(m.group(1))
-        m = _DROP_DB_STMT.match(query)
-        if m:
-            self.db_props.pop(m.group(2).lower(), None)
-            return self.spark.sql(query.rstrip().rstrip(";"))
-        m = _ALTER_CLUSTERED_STMT.match(query)
-        if m:
-            raise HiveQLUnsupportedError(
-                f"ALTER TABLE {m.group(1)} CLUSTERED BY / NOT "
-                "CLUSTERED: Hive changes bucket metadata for FUTURE "
-                "writes while existing files keep their layout — "
-                "Spark's planner trusts the (immutable) bucket spec "
-                "for shuffle elision, so a drifted spec would return "
-                "wrong joins. CREATE a new table with the target "
-                "CLUSTERED BY and INSERT ... SELECT to migrate"
-            )
-        m = _CREATE_LIKE_STMT.match(query)
-        if m and self._dml_registered(m.group(3)):
-            return self._run_create_like(m)
+        out = self._dispatch(self._CLI_COMMANDS, query)
+        if out is not None:
+            return out
         if self.macros:
             query = self._expand_macros(query)
-        m = _EXPLAIN_ANALYZE_STMT.match(query)
-        if m:
-            return self._run_explain_analyze(m.group(1))
-        m = _EXPLAIN_STMT.match(query)
-        if m:
-            if (m.group(1) or "").upper() == "DEPENDENCY":
-                return self._run_explain_dependency(m.group(2))
-            explained = self._explain_dml(m.group(1), m.group(2))
-            if explained is not None:
-                return explained
-        m = _SHOW_CREATE_STMT.match(query)
-        if m and (
-            self._dml_registered(m.group(1))
-            or m.group(1).split(".")[-1].lower() in self.views
-        ):
-            return self._run_show_create(m.group(1))
-        m = _DESCRIBE_STMT.match(query)
-        if m and self._dml_registered(m.group(2)):
-            if m.group(4):
-                if m.group(3):
-                    raise HiveQLUnsupportedError(
-                        "DESCRIBE <table> PARTITION (...) <column> is "
-                        "not supported — DESCRIBE the partition or the "
-                        "column, not both"
-                    )
-                return self._run_describe_column(m.group(2), m.group(4))
-            if m.group(3):
-                return self._run_describe_partition(
-                    m.group(2), m.group(3), m.group(1)
-                )
-            return self._run_describe(m.group(2), m.group(1))
-        if m and m.group(1) and not m.group(3) and not m.group(4):
-            dkey = m.group(2).split(".")[-1].lower()
-            if dkey in self.table_constraints and (
-                self._is_catalog_table(m.group(2))
-                or self._is_catalog_table(dkey)
+        return self._run_statement(query)
+
+    def _table_hits(self, table, query: str):
+        """(handler, match) for each entry of ``table`` whose pattern
+        matches ``query`` and whose guard holds, lazily and in order — a
+        guard is evaluated only once every earlier entry has passed.
+        ``_dml_registered`` (a dict lookup) runs before
+        ``_is_catalog_table`` (catalog calls into the JVM)."""
+        for pattern, guard, handler in table:
+            m = pattern.match(query)
+            if m and (
+                guard is None
+                or self._dml_registered(m["table"])
+                or (guard is _ANY_TABLE and self._is_catalog_table(m["table"]))
             ):
-                # catalog table with recorded informational constraints
-                # — Spark's DESCRIBE + the Constraints section
-                return self._describe_catalog_with_constraints(
-                    m.group(2), dkey, m.group(1)
-                )
-        m = _DELETE_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            from hive_2_3_2_spark.sources.writers import delete_where
+                yield handler, m
 
-            key = self._resolve_dml_table(m.group(1), mutating=True)
-            self._assert_not_mixed(key, "DELETE")
-            cond = F.expr(m.group(2)) if m.group(2) else F.lit(True)
-            path = self.table_paths[key]
-            parts = self.table_partitions.get(key)
-            affected = delete_where(
-                self._target_frame(key), path, cond, parts
-            )
-            self.register_table(key, path, parts)
-            return self._rows_affected(affected)
-        m = _UPDATE_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            from hive_2_3_2_spark.sources.writers import update_where
+    def _dispatch(self, table, query: str) -> DataFrame | None:
+        """The first frame a matching entry's handler returns, or None
+        when every matching handler passed (or nothing matched)."""
+        for handler, m in self._table_hits(table, query):
+            out = getattr(self, handler)(m)
+            if out is not None:
+                return out
+        return None
 
-            key = self._resolve_dml_table(m.group(1), mutating=True)
-            self._assert_not_mixed(key, "UPDATE")
-            sets = {
-                col: F.expr(expr)
-                for col, expr in _split_assignments(m.group(2))
-            }
-            cond = F.expr(m.group(3)) if m.group(3) else F.lit(True)
-            path = self.table_paths[key]
-            parts = self.table_partitions.get(key)
-            affected = update_where(
-                self._target_frame(key), path, sets, cond, parts
-            )
-            self.register_table(key, path, parts)
-            return self._rows_affected(affected)
-        m = _DELETE_STMT.match(query) or _UPDATE_STMT.match(query)
-        if m and self._is_catalog_table(m.group(1)):
-            # A session-catalog table (CREATE TABLE ... STORED AS
-            # PARQUET) is not transactional: Hive refuses UPDATE/DELETE
-            # on it at compile time (ErrorMsg 10297,
-            # ACID_OP_ON_NONACID_TABLE). Spark would raise a raw
-            # UNSUPPORTED_FEATURE.TABLE_OPERATION, and for UPDATE only
-            # at the first action.
-            raise HiveQLUnsupportedError(
-                f"Attempt to do update or delete on table {m.group(1)} "
-                "that does not use an AcidOutputFormat or is not bucketed"
-            )
-        ine = _INSERT_IF_NOT_EXISTS.match(query)
-        if ine and (
-            self._dml_registered(ine.group(2))
-            or self._is_catalog_table(ine.group(2))
-        ):
-            # Hive's IF NOT EXISTS overwrite guard: when the STATIC
-            # target partition already exists, the insert is a no-op —
-            # the select never runs (insert1_overwrite_partitions.q).
-            if self._static_partition_exists(ine.group(2), ine.group(3)):
-                return self._rows_affected(0)
-            query = query[: ine.end(1)] + query[ine.end(0):]
-        m = _INSERT_STMT.match(query)
-        if m and self._dml_registered(m.group(2)):
-            return self._run_insert(m)
-        if (
-            m
-            and m.group(2).split(".")[-1].lower() not in self.views
-            and self._is_catalog_table(m.group(2))
-        ):
-            # PARTITION specs (static/dynamic/mixed) are handled with
-            # Hive's positional casts + partition-overwrite semantics
-            return self._run_insert_catalog(m)
-        if re.match(r"^\s*WITH\b", query, re.IGNORECASE):
-            # Hive allows the CTE BEFORE the INSERT (WITH c AS (...)
-            # INSERT INTO t SELECT ... FROM c). Split at the top-level
-            # INSERT keyword and fold the CTE prefix into the insert
-            # body, which the SELECT|VALUES|WITH body grammar accepts.
-            ins_pos = next(
-                (
-                    s
-                    for s, _e, w in _scan_top_keywords(query)
-                    if w == "INSERT"
-                ),
-                None,
-            )
-            if ins_pos is not None:
-                cte, rest = query[:ins_pos].rstrip(), query[ins_pos:]
-                im = _INSERT_STMT.match(rest)
-                if im and self._dml_registered(im.group(2)):
-                    folded = (
-                        rest[: im.start(5)] + cte + " " + rest[im.start(5):]
-                    )
-                    return self._run_insert(_INSERT_STMT.match(folded))
-        m = _MULTI_INSERT_STMT.match(query)
-        if m:
-            # DIRECTORY branches are always engine-handled sinks
-            # (ppd_multi_insert.q mixes table + directory sinks), so
-            # they don't participate in the table-sink routing check
-            targets = [
-                t
-                for t in re.findall(
-                    r"INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?"
-                    r"(?:LOCAL\s+)?([\w.]+)",
-                    m.group(2),
-                    re.IGNORECASE,
-                )
-                if t.upper() != "DIRECTORY"
-            ]
-
-            def _local_sink(t: str) -> bool:
-                # Same sink rules as the single-INSERT dispatch above:
-                # Engine-registered tables, or session-catalog tables
-                # (which need the Hive positional-cast mapping — Spark's
-                # native FROM-first INSERT enforces ANSI store
-                # assignment and rejects e.g. string→int, join8.q).
-                return self._dml_registered(t) or (
-                    t.split(".")[-1].lower() not in self.views
-                    and self._is_catalog_table(t)
-                )
-
-            if targets and all(_local_sink(t) for t in targets):
-                return self._run_multi_insert(m.group(1), m.group(2))
-        m = _LOAD_DATA_STMT.match(query)
-        if m and self._dml_registered(m.group(3)):
-            return self._run_load_data(m)
-        m = _MERGE_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_merge(m)
-        m = _TRUNCATE_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_truncate(m)
-        m = _SHOW_PARTITIONS_STMT.match(query)
-        if m and m.group(1).split(".")[-1].lower() in self.view_partitions:
-            return self._run_show_view_partitions(
-                m.group(1).split(".")[-1].lower()
-            )
-        if m and self._dml_registered(m.group(1)):
-            return self._run_show_partitions(m.group(1), m.group(2))
-        m = _ALTER_PARTITION_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_alter_partition(m)
-        m = _CONCATENATE_STMT.match(query)
-        if m:
-            return self._run_concatenate(m)
-        m = _MSCK_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_msck(m.group(1))
-        m = _REFRESH_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_refresh(m.group(1))
-        m = _ANALYZE_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_analyze(m.group(1), m.group(3), m.group(2))
-        m = _RENAME_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_rename(m.group(1), m.group(2))
-        m = _EXCHANGE_PARTITION_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_exchange_partition(m)
-        m = _RENAME_PARTITION_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_rename_partition(m)
-        m = _SET_LOCATION_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_set_location(m.group(1), m.group(2))
-        m = _ALTER_ADD_COLS_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_add_columns(m.group(1), m.group(2))
-        m = _ALTER_REPLACE_COLS_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_replace_columns(m.group(1), m.group(2))
-        m = _ALTER_PART_COLTYPE_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_partition_coltype(
-                m.group(1), m.group(2), m.group(3)
-            )
-        m = _ALTER_CHANGE_COL_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_change_column(m)
-        m = _ALTER_TBLPROPS_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_tblproperties(m)
-        m = _ALTER_FILEFORMAT_STMT.match(query)
-        if m:
-            return self._run_set_fileformat(
-                m.group(1), m.group(2), m.group(3)
-            )
-        m = _ALTER_SET_SERDE_STMT.match(query)
-        if m and (
-            self._dml_registered(m.group(1))
-            or self._is_catalog_table(m.group(1))
-        ):
-            return self._run_set_serde(
-                m.group(1), m.group(2), m.group(3), m.group(4)
-            )
-        m = _ALTER_SET_SERDEPROPS_STMT.match(query)
-        if m and (
-            self._dml_registered(m.group(1))
-            or self._is_catalog_table(m.group(1))
-        ):
-            return self._run_set_serde(
-                m.group(1), m.group(2), None, m.group(3)
-            )
-        m = _ALTER_TOUCH_STMT.match(query)
-        if m and (
-            self._dml_registered(m.group(1))
-            or self._is_catalog_table(m.group(1))
-        ):
-            # ALTER TABLE ... TOUCH [PARTITION] (touch.q; DDLTask
-            # touch): fires hooks and bumps timestamps in Hive — a
-            # validated no-op here (the named partition must exist)
-            if m.group(2) and self._dml_registered(m.group(1)):
-                tkey = self._resolve_dml_table(m.group(1))
-                rel = self._static_partition_reldir(tkey, m.group(2))
-                if not os.path.isdir(
-                    os.path.join(self.table_paths[tkey], rel)
-                ):
-                    raise HiveQLUnsupportedError(
-                        f"TOUCH: no such partition {rel!r}"
-                    )
-            return self._rows_affected(0)
-        m = _ALTER_ADD_CONSTRAINT_STMT.match(query)
-        if m:
-            return self._run_add_constraint(m)
-        m = _ALTER_DROP_CONSTRAINT_STMT.match(query)
-        if m:
-            return self._run_drop_constraint(m)
-        m = _SHOW_TABLE_EXTENDED_STMT.match(query)
-        if m and (
-            self._dml_registered(m.group(1))
-            or self._is_catalog_table(m.group(1))
-        ):
-            return self._run_show_table_extended(m.group(1), m.group(2))
-        m = _SHOW_TBLPROPS_STMT.match(query)
-        if m and (
-            self._dml_registered(m.group(1))
-            # catalog tables with engine-side props (SET SERDE /
-            # SERDEPROPERTIES route through the engine because Spark
-            # refuses ALTER SERDE on datasource tables) — serve the
-            # MERGED view so the recorded metadata is observable
-            or m.group(1).split(".")[-1].lower() in self.table_props
-        ):
-            return self._run_show_tblproperties(m.group(1), m.group(2))
-        m = _SHOW_COLUMNS_STMT.match(query)
-        if m and self._dml_registered(m.group(1)):
-            return self._run_show_columns(m.group(1))
-        m = _CREATE_VIEW_STMT.match(query)
-        if m:
-            return self._run_create_view(m)
-        m = _ALTER_VIEW_PART_STMT.match(query)
-        if m:
-            return self._run_alter_view_partition(m)
-        m = _ALTER_VIEW_RENAME_STMT.match(query)
-        if m:
-            return self._run_alter_view_rename(m.group(1), m.group(2))
-        m = _ALTER_VIEW_STMT.match(query)
-        if m:
-            return self._run_alter_view(m.group(1), m.group(2))
-        m = _DROP_VIEW_STMT.match(query)
-        if m:
-            handled = self._run_drop_view(bool(m.group(1)), m.group(2))
-            if handled is not None:
-                return handled
-        m = _DROP_TABLE_STMT.match(query)
-        if m:
-            handled = self._run_drop_table(bool(m.group(1)), m.group(2))
-            if handled is not None:
-                return handled
-        m = _EXPORT_STMT.match(query)
-        if m:
-            return self._run_export(m.group(1), m.group(3), m.group(2))
-        m = _IMPORT_STMT.match(query)
-        if m:
-            return self._run_import(m.group(1), m.group(2), m.group(3))
-        # Hive-form INSERT OVERWRITE DIRECTORY (plain / ROW FORMAT
-        # DELIMITED / STORED AS). The Spark-native `USING fmt` form does
-        # not match this regex (the body must start at SELECT/WITH/FROM)
-        # and passes through to spark.sql below.
-        m = _INSERT_DIRECTORY_STMT.match(query)
-        if m:
-            return self._run_insert_directory(m)
-        # Hive-form session temp table; the Spark-native `USING fmt`
-        # variant passes through untouched.
-        m = _CREATE_TEMP_TABLE_STMT.match(query)
-        if m and m.group(3):
-            # A datasource clause (`USING fmt`) can only appear BEFORE
-            # the CTAS `AS` keyword — `... AS SELECT a JOIN b USING (k)`
-            # is a valid Hive CTAS whose USING must not disqualify it.
-            pre_as = re.split(
-                r"\bAS\b", m.group(3), maxsplit=1, flags=re.IGNORECASE
-            )[0]
-            if not re.search(r"\bUSING\b", pre_as, re.IGNORECASE):
-                return self._run_create_temp_table(m)
-        if "avro" in query.lower() and not self._avro_native:
-            m = _CREATE_AVRO_STMT.match(query)
-            if m:
-                return self._run_create_avro_fallback(m)
+    def _run_statement(self, query: str) -> DataFrame:
+        """``query`` through ``_STATEMENTS``; a statement no entry
+        handles falls through to the stats/metadata-only answers, the
+        partial-TRANSFORM operator, ``rewrite_hiveql`` and the
+        error-keyed retry loop into ``spark.sql``."""
+        out = self._dispatch(self._STATEMENTS, query)
+        if out is not None:
+            return out
         ans = self._try_stats_answer(query)
         if ans is not None:
             return ans
@@ -2392,6 +2108,197 @@ class Engine:
                     raise
                 rewritten = nxt
         return self.spark.sql(rewritten)
+
+    def _run_shell(self, m: re.Match[str]) -> DataFrame:
+        raise HiveQLUnsupportedError(
+            "'!' shell escape is not supported — no shell execution "
+            "from SQL in this engine (CliDriver.processCmd shell path)"
+        )
+
+    def _run_dfs(self, m: re.Match[str]) -> DataFrame:
+        raise HiveQLUnsupportedError(
+            "'dfs' commands are not supported — there is no HDFS "
+            "shell here; use LOAD DATA / EXPORT / IMPORT instead"
+        )
+
+    def _run_reset(self, m: re.Match[str]) -> DataFrame:
+        self.hiveconf.clear()
+        return self._conf_frame([])
+
+    def _run_drop_macro(self, m: re.Match[str]) -> DataFrame:
+        self.macros.pop(m.group(1).lower(), None)
+        return self._conf_frame([])
+
+    def _run_show_locks(self, m: re.Match[str]) -> DataFrame:
+        """DDLTask.showLocks — this engine is single-session with no
+        lock manager (like Hive under the no-op DummyTxnManager): the
+        lock list is ALWAYS empty; the typed columns mirror
+        ShowLocksResponseElement so tooling can still bind."""
+        return local_frame(
+            self.spark,
+            [],
+            "lockid string, database string, tab_name string, "
+            "partition string, lock_state string, lock_type string, "
+            "transaction_id string",
+        )
+
+    def _run_show_txn_compact(self, m: re.Match[str]) -> DataFrame:
+        """ACID manager surfaces (DDLTask.showTxns/showCompactions):
+        non-transactional engine -> structurally-correct empty result,
+        matching Hive without ACID enabled."""
+        if m.group(1).upper() == "TRANSACTIONS":
+            return local_frame(
+                self.spark,
+                [],
+                "txnid bigint, state string, startedtime bigint, "
+                "lastheartbeattime bigint, user string, host string",
+            )
+        return local_frame(
+            self.spark,
+            [],
+            "compactionid bigint, dbname string, tabname string, "
+            "partname string, type string, state string, "
+            "workerid string, starttime bigint, duration bigint",
+        )
+
+    def _run_drop_database(self, m: re.Match[str]) -> DataFrame:
+        self.db_props.pop(m.group(2).lower(), None)
+        return self.spark.sql(m.string.rstrip().rstrip(";"))
+
+    def _run_alter_clustered(self, m: re.Match[str]) -> DataFrame:
+        raise HiveQLUnsupportedError(
+            f"ALTER TABLE {m.group(1)} CLUSTERED BY / NOT "
+            "CLUSTERED: Hive changes bucket metadata for FUTURE "
+            "writes while existing files keep their layout — "
+            "Spark's planner trusts the (immutable) bucket spec "
+            "for shuffle elision, so a drifted spec would return "
+            "wrong joins. CREATE a new table with the target "
+            "CLUSTERED BY and INSERT ... SELECT to migrate"
+        )
+
+    def _run_explain(self, m: re.Match[str]) -> DataFrame | None:
+        """EXPLAIN DEPENDENCY, or EXPLAIN over an intercepted DML
+        statement; None lets EXPLAIN SELECT fall through to Spark."""
+        if (m.group(1) or "").upper() == "DEPENDENCY":
+            return self._run_explain_dependency(m.group(2))
+        return self._explain_dml(m.group(1), m.group(2))
+
+    def _run_describe_table(self, m: re.Match[str]) -> DataFrame:
+        modifier, table, spec, column = m.groups()
+        if column:
+            if spec:
+                raise HiveQLUnsupportedError(
+                    "DESCRIBE <table> PARTITION (...) <column> is "
+                    "not supported — DESCRIBE the partition or the "
+                    "column, not both"
+                )
+            return self._run_describe_column(table, column)
+        if spec:
+            return self._run_describe_partition(table, spec, modifier)
+        return self._run_describe(table, modifier)
+
+    def _run_delete(self, m: re.Match[str]) -> DataFrame:
+        from pyspark.sql import functions as F
+
+        from hive_2_3_2_spark.sources.writers import delete_where
+
+        key = self._resolve_dml_table(m["table"], mutating=True)
+        self._assert_not_mixed(key, "DELETE")
+        cond = F.expr(m.group(2)) if m.group(2) else F.lit(True)
+        path = self.table_paths[key]
+        parts = self.table_partitions.get(key)
+        affected = delete_where(self._target_frame(key), path, cond, parts)
+        self.register_table(key, path, parts)
+        return self._rows_affected(affected)
+
+    def _run_update(self, m: re.Match[str]) -> DataFrame:
+        from pyspark.sql import functions as F
+
+        from hive_2_3_2_spark.sources.writers import update_where
+
+        key = self._resolve_dml_table(m["table"], mutating=True)
+        self._assert_not_mixed(key, "UPDATE")
+        sets = {
+            col: F.expr(expr) for col, expr in _split_assignments(m.group(2))
+        }
+        cond = F.expr(m.group(3)) if m.group(3) else F.lit(True)
+        path = self.table_paths[key]
+        parts = self.table_partitions.get(key)
+        affected = update_where(
+            self._target_frame(key), path, sets, cond, parts
+        )
+        self.register_table(key, path, parts)
+        return self._rows_affected(affected)
+
+    def _run_nonacid_dml(self, m: re.Match[str]) -> DataFrame:
+        """UPDATE/DELETE on a session-catalog table (CREATE TABLE ...
+        STORED AS PARQUET), which is not transactional: Hive refuses it
+        at compile time (ErrorMsg 10297, ACID_OP_ON_NONACID_TABLE).
+        Spark would raise a raw UNSUPPORTED_FEATURE.TABLE_OPERATION, and
+        for UPDATE only at the first action."""
+        raise HiveQLUnsupportedError(
+            f"Attempt to do update or delete on table {m['table']} "
+            "that does not use an AcidOutputFormat or is not bucketed"
+        )
+
+    def _run_insert_if_not_exists(self, m: re.Match[str]) -> DataFrame:
+        """Hive's IF NOT EXISTS overwrite guard: when the STATIC target
+        partition already exists, the insert is a no-op — the select
+        never runs (insert1_overwrite_partitions.q). Otherwise the
+        statement, minus the clause, runs through the statement table."""
+        if self._static_partition_exists(m["table"], m.group(3)):
+            return self._rows_affected(0)
+        return self._run_statement(m.string[: m.end(1)] + m.string[m.end():])
+
+    def _is_catalog_sink(self, name: str) -> bool:
+        """A session-catalog table an INSERT writes with Hive's
+        positional-cast mapping — Spark's native INSERT enforces ANSI
+        store assignment and rejects e.g. string→int (join8.q)."""
+        return (
+            name.split(".")[-1].lower() not in self.views
+            and self._is_catalog_table(name)
+        )
+
+    def _run_insert_catalog_table(
+        self, m: re.Match[str]
+    ) -> DataFrame | None:
+        # PARTITION specs (static/dynamic/mixed) are handled with Hive's
+        # positional casts + partition-overwrite semantics
+        if not self._is_catalog_sink(m["table"]):
+            return None
+        return self._run_insert_catalog(m)
+
+    def _run_with_insert(self, m: re.Match[str]) -> DataFrame | None:
+        """Hive allows the CTE BEFORE the INSERT (WITH c AS (...) INSERT
+        INTO t SELECT ... FROM c). Split at the top-level INSERT keyword
+        and fold the CTE prefix into the insert body, which the
+        SELECT|VALUES|WITH body grammar accepts."""
+        query = m.string
+        ins_pos = next(
+            (s for s, _e, w in _scan_top_keywords(query) if w == "INSERT"),
+            None,
+        )
+        if ins_pos is None:
+            return None
+        cte, rest = query[:ins_pos].rstrip(), query[ins_pos:]
+        im = _INSERT_STMT.match(rest)
+        if not (im and self._dml_registered(im["table"])):
+            return None
+        folded = rest[: im.start(5)] + cte + " " + rest[im.start(5):]
+        return self._run_insert(_INSERT_STMT.match(folded))
+
+    def _run_touch(self, m: re.Match[str]) -> DataFrame:
+        """ALTER TABLE ... TOUCH [PARTITION] (touch.q; DDLTask touch):
+        fires hooks and bumps timestamps in Hive — a validated no-op
+        here (the named partition must exist)."""
+        if m.group(2) and self._dml_registered(m["table"]):
+            tkey = self._resolve_dml_table(m["table"])
+            rel = self._static_partition_reldir(tkey, m.group(2))
+            if not os.path.isdir(os.path.join(self.table_paths[tkey], rel)):
+                raise HiveQLUnsupportedError(
+                    f"TOUCH: no such partition {rel!r}"
+                )
+        return self._rows_affected(0)
 
     def _strip_temp_db_quals(self, query: str) -> str:
         """Rewrite ``<declared_db>.<temp_table>`` to the bare temp-view
@@ -2573,7 +2480,7 @@ class Engine:
     def _conf_frame(self, rows: list[tuple[str, str | None]]) -> DataFrame:
         return local_frame(self.spark, rows, "name string, value string")
 
-    def _run_set(self, arg: str | None) -> DataFrame:
+    def _run_set(self, m: re.Match[str]) -> DataFrame | None:
         """SET / SET -v / SET name / SET name=value — SetProcessor parity
         (reference: processors/SetProcessor.java:91 ``run``). Assignments
         land in the session hiveconf overlay (visible to ${...}
@@ -2581,6 +2488,9 @@ class Engine:
         the live SparkSession conf so they take real effect; the one
         cross-dialect mapping is hive.auto.convert.join →
         spark.sql.autoBroadcastJoinThreshold (map-join toggle)."""
+        if re.match(r"^\s*SET\s*\(", m.string):
+            return None
+        arg = m.group(1)
         arg = (arg or "").strip()
         if arg in ("", "-v"):
             rows = sorted(self.hiveconf.items())
@@ -2642,12 +2552,13 @@ class Engine:
             )
         return self._conf_frame([(name, value)])
 
-    def _run_resource(self, verb: str, kind: str, arg: str) -> DataFrame:
+    def _run_resource(self, m: re.Match[str]) -> DataFrame:
         """ADD/LIST/DELETE FILE|JAR|ARCHIVE — the Add/List/Delete
         ResourceProcessor trio over SessionState's resource lists
         (reference: session/SessionState.java ResourceType). ADD FILE
         also ships the file to executors via SparkContext.addFile —
         the mechanism TRANSFORM scripts rely on."""
+        verb, kind, arg = m.groups()
         verb = verb.upper()
         kind = kind.upper().rstrip("S")
         paths = arg.split()
@@ -2764,10 +2675,11 @@ class Engine:
             return self._expand_macros(out, depth + 1)
         return out
 
-    def _run_source(self, path: str) -> DataFrame:
+    def _run_source(self, m: re.Match[str]) -> DataFrame:
         """SOURCE file.sql — inline script execution
         (CliDriver.processFile, cli/.../CliDriver.java:436). Returns the
         last statement's result."""
+        path = m.group(1)
         path = path.strip().strip("'\"")
         if not os.path.exists(path):
             raise HiveQLUnsupportedError(f"SOURCE: file not found: {path}")
@@ -2777,126 +2689,126 @@ class Engine:
             return results[-1]
         return self._conf_frame([])
 
+    #: EXPLAIN text of the statements that run as file operations
+    _FILE_OP_EXPLAIN = {
+        "_run_truncate": "TRUNCATE: partition/table directory clear "
+                         "(file operation, no job)",
+        "_run_load_data": "LOAD DATA: file move into the table "
+                          "(MoveTask parity, no job)",
+        "_run_concatenate": "CONCATENATE: compaction rewrite toward "
+                            "128MB files (one repartition job)",
+    }
+
     def _explain_dml(self, mode: str | None, inner: str) -> DataFrame | None:
         """EXPLAIN over an intercepted DML statement: Hive's EXPLAIN
         renders the compiled Task/Stage DAG without running it
         (exec/ExplainTask.java:117 on the QueryPlan) — here that is the
         staged-rewrite pipeline (discovery → rewrite → swap) plus the
-        Spark plan of the statement's read side. Returns None when the
-        inner statement is not one this Engine intercepts, so plain
-        EXPLAIN SELECT falls through to Spark."""
+        Spark plan of the statement's read side. The inner statement
+        resolves through the ``_STATEMENTS`` entries of the DML
+        handlers, with their patterns and guards. Returns None when no
+        such entry takes it, so plain EXPLAIN SELECT falls through to
+        Spark."""
         from pyspark.sql import functions as F
 
         from hive_2_3_2_spark.plans.explain import explain_str
 
-        spark_mode = {
-            "extended": "extended", "cost": "cost", "codegen": "codegen",
-        }.get((mode or "").lower(), "formatted")
-
-        def frame(lines: list[str]) -> DataFrame:
-            return local_frame(
-                self.spark,
-                [(ln,) for ln in lines], "plan string"
-            )
-
-        def target_lines(name: str, verb: str) -> list[str]:
-            key = self._resolve_dml_table(name)
-            parts = self.table_partitions.get(key)
-            rewrite = (
-                "  Stage-2 rewrite (touched partitions only — "
-                "OR-of-ANDs PartitionFilters literal)"
-                if parts
-                else "  Stage-2 rewrite (full table)"
-            )
-            return [
-                "STAGE DEPENDENCIES:",
-                "  Stage-1 discovery (matched rows + touched partitions,"
-                " one scan)",
-                rewrite,
-                "  Stage-3 swap (staged directory replaces target)",
-                "",
-                f"{verb} TARGET: {key}",
-                f"  path: {self.table_paths[key]}",
-                f"  partition columns: {parts or '(none)'}",
-                "",
-            ]
-
-        m = _DELETE_STMT.match(inner)
-        if m and self._dml_registered(m.group(1)):
-            key = self._resolve_dml_table(m.group(1))
-            cond = (m.group(2) or "TRUE").strip()
-            lines = target_lines(m.group(1), "DELETE FROM")
-            lines += [f"  delete condition: {cond}", "",
-                      "MATCHED-ROWS SCAN PLAN:"]
-            df = self.spark.read.parquet(self.table_paths[key]).filter(
-                F.expr(cond)
-            )
-            return frame(lines + explain_str(df, mode=spark_mode).splitlines())
-        m = _UPDATE_STMT.match(inner)
-        if m and self._dml_registered(m.group(1)):
-            key = self._resolve_dml_table(m.group(1))
-            cond = (m.group(3) or "TRUE").strip()
-            lines = target_lines(m.group(1), "UPDATE")
-            lines += [
-                f"  set: {m.group(2).strip()}",
-                f"  update condition: {cond}",
-                "",
-                "MATCHED-ROWS SCAN PLAN:",
-            ]
-            df = self.spark.read.parquet(self.table_paths[key]).filter(
-                F.expr(cond)
-            )
-            return frame(lines + explain_str(df, mode=spark_mode).splitlines())
-        m = _INSERT_STMT.match(inner)
-        if m and self._dml_registered(m.group(2)):
-            verb = "INSERT " + m.group(1).upper()
+        explained = {
+            "_run_delete", "_run_update", "_run_insert", "_run_merge",
+            *self._FILE_OP_EXPLAIN,
+        }
+        hit = next(
+            self._table_hits(
+                [e for e in self._STATEMENTS if e[2] in explained], inner
+            ),
+            None,
+        )
+        if hit is None:
+            return None
+        handler, m = hit
+        if handler in self._FILE_OP_EXPLAIN:
+            # CONCATENATE's entry has no guard: it refuses catalog
+            # tables itself
+            if not self._dml_registered(m["table"]):
+                return None
             lines = [
-                "STAGE DEPENDENCIES:",
+                self._FILE_OP_EXPLAIN[handler],
+                f"  target: {self._resolve_dml_table(m['table'])}",
+            ]
+            return local_frame(
+                self.spark, [(ln,) for ln in lines], "plan string"
+            )
+        key = self._resolve_dml_table(m["table"])
+        parts = self.table_partitions.get(key)
+        if handler == "_run_insert":
+            verb = "INSERT " + m.group(1).upper()
+            stages = [
                 "  Stage-1 select (source query → staging directory)",
                 "  Stage-2 move (staged files land in the target"
                 + (", dynamic partition dirs swapped)"
-                   if m.group(1).upper() == "OVERWRITE" else ")"),
-                "",
-            ] + target_lines(m.group(2), verb)[5:]
-            if m.group(3):
-                lines += [f"  partition spec: {m.group(3).strip()}"]
-            lines += ["", "SOURCE QUERY PLAN:"]
-            src = self.spark.sql(
-                rewrite_hiveql(m.group(5), spark=self.spark)
-            )
-            return frame(lines + explain_str(src, mode=spark_mode).splitlines())
-        m = _MERGE_STMT.match(inner)
-        if m and self._dml_registered(m.group(1)):
-            src_spec = m.group(3)
-            lines = target_lines(m.group(1), "MERGE INTO")
-            lines += [
+                   if verb == "INSERT OVERWRITE" else ")"),
+            ]
+            detail = (
+                [f"  partition spec: {m.group(3).strip()}"] if m.group(3)
+                else []
+            ) + ["", "SOURCE QUERY PLAN:"]
+            plan = self.spark.sql(rewrite_hiveql(m.group(5), spark=self.spark))
+        else:
+            # the staged-rewrite core (sources/writers._rewrite)
+            stages = [
+                "  Stage-1 discovery (one scan: affected count + touched "
+                "partitions)",
+                "  Stage-2 rewrite (touched partitions only — OR-of-ANDs "
+                "PartitionFilters literal)",
+            ] if parts else [
+                "  Stage-1 discovery: none (unpartitioned — the affected "
+                "count is an observed metric on the Stage-2 write)",
+                "  Stage-2 rewrite (full table)",
+            ]
+            stages.append("  Stage-3 swap (staged directory replaces target)")
+        if handler == "_run_merge":
+            verb, src_spec = "MERGE INTO", m.group(3)
+            detail = [
                 f"  on: {m.group(5).strip()}",
                 f"  when clauses: {' '.join(m.group(6).split())}",
                 "",
                 "SOURCE PLAN:",
             ]
-            if src_spec.startswith("("):
-                src = self.spark.sql(
+            plan = (
+                self.spark.sql(
                     rewrite_hiveql(src_spec[1:-1], spark=self.spark)
                 )
+                if src_spec.startswith("(")
+                else self.spark.table(src_spec)
+            )
+        elif handler in ("_run_delete", "_run_update"):
+            if handler == "_run_delete":
+                verb, cond = "DELETE FROM", (m.group(2) or "TRUE").strip()
+                detail = [f"  delete condition: {cond}"]
             else:
-                src = self.spark.table(src_spec)
-            return frame(lines + explain_str(src, mode=spark_mode).splitlines())
-        for pat, desc in (
-            (_TRUNCATE_STMT, "TRUNCATE: partition/table directory clear "
-                             "(file operation, no job)"),
-            (_LOAD_DATA_STMT, "LOAD DATA: file move into the table "
-                              "(MoveTask parity, no job)"),
-            (_CONCATENATE_STMT, "CONCATENATE: compaction rewrite toward "
-                                "128MB files (one repartition job)"),
-        ):
-            mm = pat.match(inner)
-            if mm:
-                name = mm.group(1) if pat is not _LOAD_DATA_STMT else mm.group(3)
-                if self._dml_registered(name):
-                    return frame([desc,
-                                  f"  target: {self._resolve_dml_table(name)}"])
-        return None
+                verb, cond = "UPDATE", (m.group(3) or "TRUE").strip()
+                detail = [
+                    f"  set: {m.group(2).strip()}",
+                    f"  update condition: {cond}",
+                ]
+            detail += ["", "MATCHED-ROWS SCAN PLAN:"]
+            # the same declared-schema read the statement rewrites
+            plan = self._target_frame(key).filter(F.expr(cond))
+        spark_mode = {
+            "extended": "extended", "cost": "cost", "codegen": "codegen",
+        }.get((mode or "").lower(), "formatted")
+        lines = [
+            "STAGE DEPENDENCIES:",
+            *stages,
+            "",
+            f"{verb} TARGET: {key}",
+            f"  path: {self.table_paths[key]}",
+            f"  partition columns: {parts or '(none)'}",
+            "",
+            *detail,
+            *explain_str(plan, mode=spark_mode).splitlines(),
+        ]
+        return local_frame(self.spark, [(ln,) for ln in lines], "plan string")
 
     def _run_create_function(self, m: re.Match[str]) -> DataFrame:
         """CREATE TEMPORARY FUNCTION name AS 'module.attr' — FunctionTask
@@ -3082,11 +2994,12 @@ class Engine:
         self.functions.pop(name.lower(), None)
         return self._conf_frame([])
 
-    def _run_show_functions(self, pattern: str | None) -> DataFrame:
+    def _run_show_functions(self, m: re.Match[str]) -> DataFrame:
         """SHOW FUNCTIONS ['pattern'] — Spark's listing (which already
         includes session-registered temporary functions) unioned with
         the session's macros: Hive registers macros in the same
         FunctionRegistry, so SHOW FUNCTIONS lists them too."""
+        pattern = m.group(1)
         sql = "SHOW FUNCTIONS"
         if pattern is not None:
             sql += f" LIKE '{pattern}'"
@@ -3123,7 +3036,7 @@ class Engine:
         {"std", "stddev", "stddev_pop"}, {"variance", "var_pop"},
     ]
 
-    def _run_describe_function(self, extended: bool, name: str) -> DataFrame:
+    def _run_describe_function(self, m: re.Match[str]) -> DataFrame:
         """DESCRIBE FUNCTION [EXTENDED] — DDLTask.describeFunction
         parity (reference: exec/DDLTask.java:3040): one text line per
         row. A known name emits its synopsis (Spark's builtin usage doc
@@ -3133,6 +3046,7 @@ class Engine:
         Hive returns rc 0 there, and most udf_*.q goldens open with
         exactly that statement shape. EXTENDED appends Synonyms,
         Function class and Function type lines like the reference."""
+        extended, name = bool(m.group(1)), m.group(2).strip("`")
         from hive_2_3_2_spark.functions.registry import hive_function_map
 
         key = name.lower()
@@ -3247,12 +3161,13 @@ class Engine:
         ),
     }
 
-    def _run_show_conf(self, key: str) -> DataFrame:
+    def _run_show_conf(self, m: re.Match[str]) -> DataFrame:
         """SHOW CONF 'name' — DDLTask.showConf parity: one row of
         (default, type, description) for a known property; a typed
         error for unknown names. The session's CURRENT value (after any
         SET overrides) is readable via ``SET name`` — Hive's SHOW CONF
         deliberately reports the DEFAULT, and so does this."""
+        key = m.group(1)
         info = self._SHOWABLE_CONF.get(key.lower())
         if info is None:
             raise HiveQLUnsupportedError(
@@ -3265,7 +3180,7 @@ class Engine:
             [info], "default string, type string, description string"
         )
 
-    def _run_explain_analyze(self, body: str) -> DataFrame:
+    def _run_explain_analyze(self, m: re.Match[str]) -> DataFrame:
         """EXPLAIN ANALYZE q — Hive 2.3's runtime-annotated explain
         (HIVE-14362, ExplainTask with the analyze config: the query RUNS
         and the operator tree is re-printed with actual row counts).
@@ -3275,6 +3190,7 @@ class Engine:
         every operator carrying a numOutputRows metric is annotated
         ``(rows: N)``. Execution drives the plan's own RDD (no driver
         materialization of the result set)."""
+        body = m.group(1)
         df = self.sql(body)
         qe = df._jdf.queryExecution()
         qe.toRdd().count()  # execute THIS plan so its metrics populate
@@ -3409,11 +3325,12 @@ class Engine:
             params,
         )
 
-    def _run_describe_database(self, extended: bool, name: str) -> DataFrame:
+    def _run_describe_database(self, m: re.Match[str]) -> DataFrame:
         """DESCRIBE DATABASE [EXTENDED] name — Hive's one-row metastore
         form (DDLTask.describeDatabase writes db_name, comment,
         location, owner_name, owner_type, parameters; parameters only
         under EXTENDED)."""
+        extended, name = bool(m.group(1)), m.group(2)
         comment, location, owner, params = self._db_info(name)
         pstr = ""
         if extended and params:
@@ -3427,9 +3344,10 @@ class Engine:
             "owner_name string, owner_type string, parameters string",
         )
 
-    def _run_show_create_database(self, name: str) -> DataFrame:
+    def _run_show_create_database(self, m: re.Match[str]) -> DataFrame:
         """SHOW CREATE DATABASE name (DDLTask.showCreateDatabase) —
         reconstructed DDL, one line per row like Hive's text output."""
+        name = m.group(1)
         comment, location, owner, params = self._db_info(name)
         lines = [f"CREATE DATABASE `{name.lower()}`"]
         if comment:
@@ -3449,12 +3367,7 @@ class Engine:
             [(ln,) for ln in lines], "createdb_stmt string"
         )
 
-    def _run_export(
-        self,
-        table: str,
-        out_dir: str,
-        part_spec: str | None = None,
-    ) -> DataFrame:
+    def _run_export(self, m: re.Match[str]) -> DataFrame:
         """EXPORT TABLE t [PARTITION (spec)] TO 'path' — copy the data
         files plus a _metadata.json descriptor (schema + partition
         columns), the reference's export layout (ExportSemanticAnalyzer
@@ -3462,6 +3375,7 @@ class Engine:
         file copy — no scan; row count from parquet footers. A
         (possibly partial) PARTITION spec exports only the matching
         partition subtrees (exim_09_part_spec_nonoverlap.q)."""
+        table, part_spec, out_dir = m.groups()
         import json
         import shutil
 
@@ -3511,9 +3425,7 @@ class Engine:
         # spec-matched partitions)
         return self._rows_affected(parquet_row_count(data_dir, self.spark))
 
-    def _run_import(
-        self, table: str | None, export_dir: str, location: str | None
-    ) -> DataFrame:
+    def _run_import(self, m: re.Match[str]) -> DataFrame:
         """IMPORT [TABLE t] FROM 'path' [LOCATION 'loc'] — register
         (and, with LOCATION, copy) an exported table
         (ImportSemanticAnalyzer + MoveTask). Without a table name the
@@ -3527,6 +3439,7 @@ class Engine:
         typed 'Partition already exists'
         (exim_03_nonpart_over_compat.q, exim_09_part_spec_nonoverlap.q
         semantics)."""
+        table, export_dir, location = m.groups()
         import json
         import shutil
 
@@ -3991,12 +3904,7 @@ class Engine:
             _staged_partition_rels(self.table_paths[key], len(parts))
         )
 
-    def _run_analyze(
-        self,
-        table: str,
-        for_columns: str | None = None,
-        part_spec: str | None = None,
-    ) -> DataFrame:
+    def _run_analyze(self, m: re.Match[str]) -> DataFrame:
         """ANALYZE TABLE t COMPUTE STATISTICS [FOR COLUMNS [c, ...]] on
         a path-backed table. Basic stats (numRows/totalSize) come from
         parquet FOOTERS — metadata only, no scan (what Hive's StatsTask
@@ -4006,6 +3914,7 @@ class Engine:
         FM sketch, here HLL++ — min/max for orderables, avg/max length
         for strings), stores them on the engine (the metastore's
         TAB_COL_STATS role), and DESCRIBE t col serves them back."""
+        table, part_spec, for_columns = m.groups()
         from hive_2_3_2_spark.sources.writers import parquet_row_count
 
         key = self._resolve_dml_table(table)
@@ -4870,13 +4779,14 @@ class Engine:
             rows, "info_name string, info_value string"
         )
 
-    def _run_msck(self, table: str) -> DataFrame:
+    def _run_msck(self, m: re.Match[str]) -> DataFrame:
         """MSCK [REPAIR] TABLE — re-discover partitions from the
         directory layout and refresh the registered view (reference:
         DDLSemanticAnalyzer/HiveMetaStoreChecker msck path). Path-backed
         tables discover partitions on every read, so repair here means
         re-registering (picks up directories dropped in out-of-band)
         and reporting the current partition count."""
+        table = m["table"]
         from hive_2_3_2_spark.sources.writers import _staged_partition_rels
 
         key = self._resolve_dml_table(table)
@@ -4959,19 +4869,20 @@ class Engine:
             "__ctas_autoname"
         )
 
-    def _run_refresh(self, table: str) -> DataFrame:
+    def _run_refresh(self, m: re.Match[str]) -> DataFrame:
         """REFRESH TABLE t — the out-of-band-write escape hatch (same
         contract as Spark's own REFRESH: cached file listings are
         rebuilt). Drops the session fingerprint memo so the next
         stats-answered query re-verifies the files on disk; gathered
         stats themselves survive and serve again if the files turn out
         unchanged."""
+        table = m["table"]
         key = self._resolve_dml_table(table)
         self.spark.catalog.refreshTable(key)
         self._fp_memo.pop(key, None)
         return self._rows_affected(0)
 
-    def _run_rename(self, old_name: str, new_name: str) -> DataFrame:
+    def _run_rename(self, m: re.Match[str]) -> DataFrame:
         """ALTER TABLE old RENAME TO new — external-table semantics
         (the reference leaves external data in place on rename,
         DDLTask alterTable): the path is unchanged, the registration
@@ -4983,6 +4894,7 @@ class Engine:
         table and poison any future table registered under that name.
         Dependent views are refreshed last: a view over the old name no
         longer resolves and is dropped (late-binding semantics)."""
+        old_name, new_name = m.groups()
         key = self._resolve_dml_table(old_name)
         new_key = new_name.split(".")[-1].lower()
         if new_key in self.table_paths or new_key in self.views:
@@ -5102,10 +5014,11 @@ class Engine:
         )
         return self._rows_affected(n)
 
-    def _run_set_location(self, table: str, location: str) -> DataFrame:
+    def _run_set_location(self, m: re.Match[str]) -> DataFrame:
         """ALTER TABLE t SET LOCATION 'path' — re-point the external
         table at a new directory (DDLTask alterTable location path; no
         file movement — Hive leaves old data where it was)."""
+        table, location = m.groups()
         key = self._resolve_dml_table(table)
         if not os.path.exists(location):
             raise HiveQLUnsupportedError(
@@ -6003,12 +5916,13 @@ class Engine:
         )
         return self._rows_affected(0)
 
-    def _run_add_columns(self, table: str, coldefs: str) -> DataFrame:
+    def _run_add_columns(self, m: re.Match[str]) -> DataFrame:
         """ALTER TABLE t ADD COLUMNS (...) — append to the declared
         schema BEFORE the partition columns (Hive's column order). Old
         files lack the columns and read NULL; subsequent INSERTs write
         them (reference: DDLSemanticAnalyzer analyzeAlterTableModifyCols,
         clientnegative: duplicate column → typed error)."""
+        table, coldefs = m.groups()
         from pyspark.sql.types import StructField, StructType
 
         key = self._resolve_dml_table(table)
@@ -6214,12 +6128,13 @@ class Engine:
 
         return sorted(_staged_partition_rels(path, depth))
 
-    def _run_replace_columns(self, table: str, coldefs: str) -> DataFrame:
+    def _run_replace_columns(self, m: re.Match[str]) -> DataFrame:
         """ALTER TABLE t REPLACE COLUMNS (...) — the declared DATA
         columns become exactly this list (partition columns are kept —
         Hive forbids touching them). A column dropped from the list
         disappears from reads; its bytes stay in the files (metadata-only
         operation, like Hive on a by-name format)."""
+        table, coldefs = m.groups()
         from pyspark.sql.types import StructField, StructType
 
         key = self._resolve_dml_table(table)
@@ -6283,14 +6198,13 @@ class Engine:
                     stats[kept[0]] = stats.pop(cname)
         return self._set_declared_schema(key, StructType(data + part))
 
-    def _run_partition_coltype(
-        self, table: str, col: str, typ: str
-    ) -> DataFrame:
+    def _run_partition_coltype(self, m: re.Match[str]) -> DataFrame:
         """ALTER TABLE t PARTITION COLUMN (col type) — retype one
         PARTITION column (alter_partition_coltype.q). Metadata-only:
         partition directory VALUES reparse under the new declared type
         on the next read (a value that does not parse reads NULL, the
         schema-on-read rule)."""
+        table, col, typ = m.groups()
         from pyspark.sql.types import StructField, StructType
 
         key = self._resolve_dml_table(table)
@@ -6433,9 +6347,7 @@ class Engine:
         "SEQUENCEFILE": "sequencefile",
     }
 
-    def _run_set_fileformat(
-        self, table: str, part_spec: str | None, fmt: str
-    ) -> DataFrame:
+    def _run_set_fileformat(self, m: re.Match[str]) -> DataFrame:
         """ALTER TABLE [PARTITION] SET FILEFORMAT
         (partition_wise_fileformat.q; DDLTask alterTable
         AlterTableTypes.SETFILEFORMAT). Hive's per-partition storage
@@ -6451,6 +6363,7 @@ class Engine:
         Table-level changes on UNPARTITIONED tables with data are
         refused: both formats would share one directory, which no
         reader (Hive included) can serve correctly."""
+        table, part_spec, fmt = m.groups()
         new = self._FILEFORMAT_PROVIDERS.get(fmt.upper())
         if new is None or new not in self._MIXED_FORMAT_SOURCES:
             raise HiveQLUnsupportedError(
@@ -6543,13 +6456,7 @@ class Engine:
         "org.apache.hadoop.hive.serde2.JsonSerDe": "json",
     }
 
-    def _run_set_serde(
-        self,
-        table: str,
-        part_spec: str | None,
-        serde: str | None,
-        props_txt: str | None,
-    ) -> DataFrame:
+    def _run_set_serde(self, m: re.Match[str]) -> DataFrame:
         """ALTER TABLE [PARTITION] SET SERDE 'class' [WITH
         SERDEPROPERTIES (...)] / SET SERDEPROPERTIES (...) on a
         path-backed table (DDLTask alterTable ADDSERDE/ADDPROPS).
@@ -6559,6 +6466,8 @@ class Engine:
         would change how existing bytes parse, which nothing here can
         honor, so it's a typed error (partition_wise_fileformat17.q's
         CustomSerDe jars are out of scope per SURVEY §2.2)."""
+        table, part_spec = m.group(1, 2)
+        serde, props_txt = m.groupdict().get("serde"), m["props"]
         if self._dml_registered(table):
             key = self._resolve_dml_table(table)
             if part_spec:
@@ -6874,8 +6783,23 @@ class Engine:
         return rows
 
     def _describe_catalog_with_constraints(
-        self, table: str, key: str, modifier: str
-    ) -> DataFrame:
+        self, m: re.Match[str]
+    ) -> DataFrame | None:
+        """DESCRIBE EXTENDED|FORMATTED over a catalog table with
+        recorded informational constraints — Spark's DESCRIBE plus the
+        Constraints section; None for every other DESCRIBE."""
+        modifier, table, spec, column = m.groups()
+        key = table.split(".")[-1].lower()
+        if (
+            not modifier
+            or spec
+            or column
+            or key not in self.table_constraints
+            or not (
+                self._is_catalog_table(table) or self._is_catalog_table(key)
+            )
+        ):
+            return None
         base = self.spark.sql(
             f"DESCRIBE {modifier.strip()} {table}"
         ).collect()
@@ -6910,11 +6834,7 @@ class Engine:
                 f"cannot adopt catalog table {name!r}: provider "
                 f"{provider!r} is not scannable per-partition"
             )
-        part_cols = [
-            c.name
-            for c in self.spark.catalog.listColumns(name)
-            if c.isPartition
-        ]
+        part_cols = self._catalog_partition_cols(name)
         if provider != "parquet" and not part_cols:
             raise HiveQLUnsupportedError(
                 f"cannot adopt catalog table {name!r}: unpartitioned "
@@ -6965,9 +6885,7 @@ class Engine:
             "tinyint": "byte", "boolean": "bool",
         }.get(s, s)
 
-    def _run_show_table_extended(
-        self, table: str, part_spec: str | None
-    ) -> DataFrame:
+    def _run_show_table_extended(self, m: re.Match[str]) -> DataFrame:
         """SHOW TABLE EXTENDED LIKE t [PARTITION (spec)] — Hive's
         ShowTableStatus output (DDLTask showTableStatus,
         partition_wise_fileformat*.q goldens): table name, location,
@@ -6976,6 +6894,7 @@ class Engine:
         partition columns, and file-level stats (count/total/max/min
         bytes) from a directory listing (metadata-only, never a
         scan)."""
+        table, part_spec = m.groups()
         if self._dml_registered(table):
             key = self._resolve_dml_table(table)
             path = self.table_paths[key]
@@ -6992,14 +6911,10 @@ class Engine:
             fmt = (info.get("Provider") or "parquet").lower()
             path = re.sub(r"^file:(//)?", "", info.get("Location") or "")
             schema = self.spark.table(table).schema
-        parts = self.table_partitions.get(key) or [
-            c.name
-            for c in (
-                self.spark.catalog.listColumns(table)
-                if self._is_catalog_table(table) else []
-            )
-            if c.isPartition
-        ]
+        parts = self.table_partitions.get(key) or (
+            self._catalog_partition_cols(table)
+            if self._is_catalog_table(table) else []
+        )
         parts_l = {p.lower() for p in parts}
         target_dir = path
         if part_spec:
@@ -7054,16 +6969,24 @@ class Engine:
         )
 
     def _run_show_tblproperties(
-        self, table: str, prop: str | None
-    ) -> DataFrame:
+        self, m: re.Match[str]
+    ) -> DataFrame | None:
+        """SHOW TBLPROPERTIES of a path-backed table, or of a catalog
+        table with engine-side props (SET SERDE / SERDEPROPERTIES route
+        through the engine because Spark refuses ALTER SERDE on
+        datasource tables) — the MERGED view, so the recorded metadata
+        is observable. None for every other table."""
+        table, prop = m.groups()
         if self._dml_registered(table):
             key = self._resolve_dml_table(table)
             props = dict(self.table_props.get(key, {}))
         else:
+            key = table.split(".")[-1].lower()
+            if key not in self.table_props:
+                return None
             # catalog table with engine-side props: merge Spark's own
             # TBLPROPERTIES under the engine's recorded ones (the
             # engine-side serde/props are the newer writes)
-            key = table.split(".")[-1].lower()
             props = {
                 r.key: r.value
                 for r in self.spark.sql(
@@ -7086,9 +7009,10 @@ class Engine:
             sorted(props.items()), "key string, value string"
         )
 
-    def _run_show_columns(self, table: str) -> DataFrame:
+    def _run_show_columns(self, m: re.Match[str]) -> DataFrame:
         """SHOW COLUMNS FROM t — column names only, declared order
         (Hive's output shape: one ``field`` column)."""
+        table = m["table"]
         key = self._resolve_dml_table(table)
         return local_frame(
             self.spark,
@@ -7207,9 +7131,12 @@ class Engine:
             specs.discard(spec)
         return self._rows_affected(0)
 
-    def _run_show_view_partitions(self, key: str) -> DataFrame:
+    def _run_show_view_partitions(self, m: re.Match[str]) -> DataFrame | None:
         """SHOW PARTITIONS over a PARTITIONED ON view: the explicitly
         ADDed spec list in Hive's col=val/... line format."""
+        key = m["table"].split(".")[-1].lower()
+        if key not in self.view_partitions:
+            return None
         cols, specs = self.view_partitions[key]
         order = {c.lower(): i for i, c in enumerate(cols)}
         lines = sorted(
@@ -7224,7 +7151,7 @@ class Engine:
             [(ln,) for ln in lines], "partition string"
         )
 
-    def _run_alter_view_rename(self, old: str, new: str) -> DataFrame:
+    def _run_alter_view_rename(self, m: re.Match[str]) -> DataFrame:
         """ALTER VIEW old RENAME TO new (DDLTask renameTable on a VIEW;
         alter_view_rename.q moves tv1.view1 to tv2.view2 — Hive allows
         a database change). Engine views move their body plus alias/
@@ -7232,6 +7159,7 @@ class Engine:
         catalog view falls back to Spark's native rename, recreating
         from the stored view text when the rename crosses databases
         (which Spark's RENAME refuses)."""
+        old, new = m.groups()
         okey = old.split(".")[-1].lower()
         nkey = new.split(".")[-1].lower()
         if okey in self.views:
@@ -7270,7 +7198,8 @@ class Engine:
             self.spark.sql(f"DROP VIEW {old}")
             return self._rows_affected(0)
 
-    def _run_alter_view(self, view: str, body: str) -> DataFrame:
+    def _run_alter_view(self, m: re.Match[str]) -> DataFrame:
+        view, body = m.groups()
         key = view.split(".")[-1].lower()
         if key in self.table_paths:
             raise HiveQLUnsupportedError(
@@ -7325,12 +7254,11 @@ class Engine:
                     pass
             self._refresh_dependent_views(vname, done)
 
-    def _run_drop_view(
-        self, if_exists: bool, name: str
-    ) -> DataFrame | None:
+    def _run_drop_view(self, m: re.Match[str]) -> DataFrame | None:
         """DROP VIEW — typed error on a base table (Hive: "Cannot drop a
         base table with DROP VIEW"); None → fall through to spark.sql
         for catalog views this Engine doesn't manage."""
+        name = m.group(2)
         key = name.split(".")[-1].lower()
         if key in self.table_paths:
             raise HiveQLUnsupportedError(
@@ -7349,13 +7277,12 @@ class Engine:
         self._refresh_dependent_views(key)
         return self._rows_affected(0)
 
-    def _run_drop_table(
-        self, if_exists: bool, name: str
-    ) -> DataFrame | None:
+    def _run_drop_table(self, m: re.Match[str]) -> DataFrame | None:
         """DROP TABLE on a registered path-backed table — EXTERNAL
         semantics: deregister, keep the files (DDLTask dropTable leaves
         external data in place). Typed error on a view (Hive: "Cannot
         drop a view with DROP TABLE"); None → passthrough."""
+        name = m.group(2)
         key = name.split(".")[-1].lower()
         if key in self.views:
             raise HiveQLUnsupportedError(
@@ -7415,12 +7342,16 @@ class Engine:
         part = [f for f in fields if f.name.lower() in parts]
         return data, part
 
-    def _run_show_create(self, table: str) -> DataFrame:
+    def _run_show_create(self, m: re.Match[str]) -> DataFrame | None:
         """SHOW CREATE TABLE — Hive-style external-table DDL
         (reference: exec/DDLTask.java showCreateTable). One row,
         column ``createtab_stmt``, like Hive/Spark. Views render their
-        stored definition (showCreateTable's CREATE VIEW branch)."""
+        stored definition (showCreateTable's CREATE VIEW branch). None
+        for a table this Engine does not manage."""
+        table = m["table"]
         vkey = table.split(".")[-1].lower()
+        if not (self._dml_registered(table) or vkey in self.views):
+            return None
         if vkey in self.views:
             # A view created with an explicit column list must replay
             # with the same list, or the emitted DDL yields different
@@ -7583,15 +7514,14 @@ class Engine:
             rows, "col_name string, data_type string, comment string"
         )
 
-    def _run_show_partitions(
-        self, table: str, spec: str | None = None
-    ) -> DataFrame:
+    def _run_show_partitions(self, m: re.Match[str]) -> DataFrame:
         """SHOW PARTITIONS t [PARTITION (p='v', ...)] — Hive prints one
         ``col=val/...`` line per partition directory, optionally
         filtered by a PARTIAL partition spec (DDLSemanticAnalyzer
         analyzeShowPartitions: any subset of partition columns); here a
         directory listing (metadata-only). A spec column that isn't a
         partition column is a typed error (Hive's validation)."""
+        table, spec = m.groups()
         from hive_2_3_2_spark.sources.writers import _staged_partition_rels
 
         key = self._resolve_dml_table(table)
@@ -7747,12 +7677,16 @@ class Engine:
         self.register_table(key, path, self.table_partitions.get(key))
         return self._rows_affected(before)
 
-    def _run_multi_insert(self, from_clause: str, inserts: str) -> DataFrame:
+    def _run_multi_insert(self, m: re.Match[str]) -> DataFrame | None:
         """Hive multi-insert: ``FROM src INSERT ... SELECT cols [WHERE]
         INSERT ... SELECT cols [WHERE] ...`` — each branch's select list
         is re-attached to the shared FROM clause and routed through the
         single-INSERT path. Returns one (target_table, rows_affected)
-        row per sink.
+        row per sink, or None (→ spark.sql) unless every table sink is
+        one the single INSERT writes itself: a registered table or a
+        session-catalog table. DIRECTORY branches are always
+        engine-handled sinks (ppd_multi_insert.q mixes table +
+        directory sinks), so they take no part in that check.
 
         One-scan rule (Hive's MapOperator fans ONE mapper out to all
         sinks — parse/SemanticAnalyzer.java multi-QB): each branch is a
@@ -7763,6 +7697,22 @@ class Engine:
         one pass over the remote data instead of N. A complex FROM
         (joins/subqueries) falls back to per-branch plans, where
         Spark's scan/exchange reuse applies within each job."""
+        from_clause, inserts = m.groups()
+        targets = [
+            t
+            for t in re.findall(
+                r"INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?"
+                r"(?:LOCAL\s+)?([\w.]+)",
+                inserts,
+                re.IGNORECASE,
+            )
+            if t.upper() != "DIRECTORY"
+        ]
+        if not targets or not all(
+            self._dml_registered(t) or self._is_catalog_sink(t)
+            for t in targets
+        ):
+            return None
         segments = [
             s.strip() for s in _MULTI_INSERT_SPLIT.split(inserts) if s.strip()
         ]
@@ -8237,6 +8187,26 @@ class Engine:
         except Exception:
             return False
 
+    def _catalog_partition_cols(self, name: str) -> list[str]:
+        """Partition columns of a session-catalog table, from the
+        ``# Partition Information`` rows of DESCRIBE TABLE: a command
+        answered on the driver, so it launches no Spark job
+        (``spark.catalog.listColumns`` launches several)."""
+        rows = [
+            r.col_name
+            for r in self.spark.sql(f"DESCRIBE TABLE {name}").collect()
+        ]
+        if "# Partition Information" not in rows:
+            return []
+        cols = []
+        for col in rows[rows.index("# Partition Information") + 1:]:
+            if col == "# col_name":
+                continue
+            if not col or col.startswith("#"):
+                break
+            cols.append(col)
+        return cols
+
     def _run_insert_catalog(self, m: re.Match[str]) -> DataFrame:
         """INSERT INTO|OVERWRITE a session-catalog table (e.g. one this
         Engine created via the STORED AS rewrite) with HIVE column
@@ -8322,11 +8292,7 @@ class Engine:
         from pyspark.sql import functions as F
 
         static, dynamic = _parse_partition_spec(part_txt)
-        part_cols = [
-            c.name
-            for c in self.spark.catalog.listColumns(name)
-            if c.isPartition
-        ]
+        part_cols = self._catalog_partition_cols(name)
         part_lower = {c.lower(): c for c in part_cols}
         spec_named = [k for k in static] + dynamic
         if sorted(k.lower() for k in spec_named) != sorted(
@@ -9005,18 +8971,23 @@ class Engine:
             )
         return df
 
-    def _run_create_avro_fallback(self, m: re.Match[str]) -> DataFrame:
+    def _run_create_avro_fallback(
+        self, m: re.Match[str]
+    ) -> DataFrame | None:
         """CREATE TABLE ... STORED AS AVRO without the spark-avro
         datasource (avrocountemptytbl.q): the engine materializes a
         path-backed table whose reads/writes go through the pure-python
         Avro container codec (sources/avro_py.py) — the same files a
         native AvroSerDe table would hold. Reference:
         ql/src/test/queries/clientpositive/avrocountemptytbl.q;
-        serde2/avro/AvroSerDe.java (schema-from-columns path)."""
+        serde2/avro/AvroSerDe.java (schema-from-columns path). None
+        when the datasource is present: Spark creates the table."""
         import tempfile
 
         from pyspark.sql.types import StructField, StructType
 
+        if self._avro_native:
+            return None
         if_not_exists, name, mid, tail = m.groups()
         key = name.split(".")[-1].lower()
         if re.search(r"\bpartitioned\s+by\b", mid, re.IGNORECASE):
@@ -9087,7 +9058,9 @@ class Engine:
         self.register_table(key, path)
         return self._rows_affected(0)
 
-    def _run_create_temp_table(self, m: re.Match[str]) -> DataFrame:
+    def _run_create_temp_table(
+        self, m: re.Match[str]
+    ) -> DataFrame | None:
         """Hive's session-scoped ``CREATE TEMPORARY TABLE`` (Hive 0.14+,
         SemanticAnalyzer's isTemporary branch — backed by the session
         scratch dir and WRITABLE, unlike a view). Spark has no
@@ -9096,10 +9069,17 @@ class Engine:
         per-table scratch dir and registers as a path-backed table —
         INSERT/UPDATE/DELETE/MERGE then work through the normal DML
         path. Lifetime matches Hive's: the registration dies with the
-        session; the scratch files die with the tmpdir."""
+        session; the scratch files die with the tmpdir. None for the
+        Spark-native ``USING fmt`` variant, which passes through."""
         import tempfile
 
         if_not_exists, name, rest = m.groups()
+        # A datasource clause (`USING fmt`) can only appear BEFORE the
+        # CTAS `AS` keyword — `... AS SELECT a JOIN b USING (k)` is a
+        # valid Hive CTAS whose USING must not disqualify it.
+        pre_as = re.split(r"\bAS\b", rest, maxsplit=1, flags=re.IGNORECASE)[0]
+        if not rest or re.search(r"\bUSING\b", pre_as, re.IGNORECASE):
+            return None
         rest = rest.strip()
         coldefs = body = like_src = None
         if rest.startswith("("):

@@ -178,3 +178,26 @@ def test_partitioned_merge_upsert_job_budget(spark, dml_eng):
     got = spark.read.parquet(path)
     assert got.count() == 13
     assert got.filter(F.col("k") == 1).collect()[0].v == 5
+
+
+def test_catalog_partitioned_insert_job_budget(spark):
+    """A static-partition INSERT ... VALUES into a session-catalog table
+    runs its write and nothing else: the partition columns come from
+    DESCRIBE TABLE, answered on the driver."""
+    name = f"ct_{uuid.uuid4().hex[:8]}"
+    eng = Engine(spark=spark)
+    eng.sql(
+        f"CREATE TABLE {name} (a INT, b STRING) "
+        "PARTITIONED BY (p STRING) STORED AS PARQUET"
+    )
+    try:
+        out = []
+        n = _jobs(spark, lambda: out.extend(eng.sql(
+            f"INSERT INTO {name} PARTITION (p='x') VALUES (1, 'a'), (2, 'b')"
+        ).collect()))
+        assert out[0].rows_affected == 2
+        assert n <= 1, f"{n} jobs > budget 1"
+        rows = sorted(tuple(r) for r in spark.table(name).collect())
+        assert rows == [(1, "a", "x"), (2, "b", "x")]
+    finally:
+        eng.sql(f"DROP TABLE {name}")

@@ -903,6 +903,46 @@ def test_explain_dml_stages_without_executing(eng_with_copy):
     assert rows and rows[0].plan
 
 
+def test_explain_dml_reads_target_like_the_statement(spark, tmp_path):
+    """EXPLAIN DELETE/UPDATE plan the same declared-schema read the
+    statements rewrite: a column added by ADD COLUMNS, and present only
+    in files written after it, resolves. The stage text says what the
+    rewrite core runs: no discovery job for an unpartitioned target."""
+    path = str(tmp_path / "evo")
+    spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "k int, v string"
+    ).write.parquet(path)
+    eng = Engine(spark=spark)
+    eng.register_table("evo", path)
+    eng.sql("ALTER TABLE evo ADD COLUMNS (w INT)")
+    eng.sql("INSERT INTO evo VALUES (4, 'd', 7)")
+
+    def explain(stmt: str) -> str:
+        return "\n".join(r.plan for r in eng.sql(f"EXPLAIN {stmt}").collect())
+
+    text = explain("DELETE FROM evo WHERE w = 7")
+    assert "delete condition: w = 7" in text
+    assert "Physical Plan" in text
+    assert "Stage-1 discovery: none" in text
+    assert "Stage-3 swap" in text
+    text = explain("UPDATE evo SET v = 'x' WHERE w = 7")
+    assert "update condition: w = 7" in text
+    assert "Physical Plan" in text
+    # the statements themselves agree, and EXPLAIN ran none of them
+    assert eng.sql("SELECT count(*) FROM evo").collect()[0][0] == 4
+    res = eng.sql("DELETE FROM evo WHERE w = 7").collect()
+    assert res[0].rows_affected == 1
+
+    ppath = str(tmp_path / "evo_p")
+    spark.createDataFrame(
+        [(1, "a"), (2, "b")], "k int, p string"
+    ).write.partitionBy("p").parquet(ppath)
+    eng.register_table("evo_p", ppath, ["p"])
+    text = explain("DELETE FROM evo_p WHERE k = 1")
+    assert "Stage-1 discovery (one scan" in text
+    assert "touched partitions only" in text
+
+
 def test_create_table_like_path_backed(eng_with_copy, tmp_path):
     """CREATE TABLE LIKE over a registered path table: empty
     schema-carrying parquet, immediately DML-able (DDLTask

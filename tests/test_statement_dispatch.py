@@ -1,0 +1,129 @@
+"""Engine.sql routes every statement through two ordered tables of
+(pattern, guard, handler) entries — ``Engine._CLI_COMMANDS`` and
+``Engine._STATEMENTS`` — run by one loop (``Engine._dispatch``).
+
+These checks read ``engine.py``'s syntax tree only; no Spark session:
+
+- ``Engine.sql`` and ``Engine._explain_dml`` match no ``_*_STMT``
+  pattern themselves: the table loop is the one place that does.
+- Every ``_*_STMT`` pattern defined in ``engine.py`` is a table entry
+  or is used by a named helper (``_multi_insert_branches`` re-parses
+  branch heads with ``_INSERT_STMT``).
+- Every entry names an Engine method taking ``(self, m)``, and every
+  guarded entry's pattern has the ``table`` group its guard reads.
+- No ``spark.catalog.list*`` call remains in the package (each launches
+  Spark jobs; DESCRIBE answers the same questions on the driver).
+"""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+import re
+
+PKG = pathlib.Path(__file__).resolve().parents[1] / "hive_2_3_2_spark"
+TREE = ast.parse((PKG / "engine.py").read_text(encoding="utf-8"))
+ENGINE = next(
+    n for n in TREE.body if isinstance(n, ast.ClassDef) and n.name == "Engine"
+)
+METHODS = {
+    n.name: n for n in ENGINE.body if isinstance(n, ast.FunctionDef)
+}
+STMT_NAME = re.compile(r"^_\w+_STMT$")
+GUARDS = {"_PATH_TABLE", "_ANY_TABLE"}
+
+
+def _module_patterns() -> dict[str, str]:
+    """Module-level ``NAME = re.compile("literal", ...)`` → literal."""
+    out = {}
+    for node in TREE.body:
+        if (
+            isinstance(node, ast.Assign)
+            and len(node.targets) == 1
+            and isinstance(node.targets[0], ast.Name)
+            and isinstance(node.value, ast.Call)
+            and isinstance(node.value.func, ast.Attribute)
+            and node.value.func.attr == "compile"
+            and isinstance(node.value.args[0], ast.Constant)
+        ):
+            out[node.targets[0].id] = node.value.args[0].value
+    return out
+
+
+def _table(name: str) -> list[tuple[str, str | None, str]]:
+    for node in ENGINE.body:
+        target = (
+            node.target if isinstance(node, ast.AnnAssign)
+            else node.targets[0] if isinstance(node, ast.Assign)
+            else None
+        )
+        if isinstance(target, ast.Name) and target.id == name:
+            entries = []
+            for elt in node.value.elts:
+                pattern, guard, handler = elt.elts
+                entries.append((
+                    pattern.id,
+                    None if isinstance(guard, ast.Constant) else guard.id,
+                    handler.value,
+                ))
+            return entries
+    raise AssertionError(f"Engine.{name} not found")
+
+
+def _tables() -> list[list[tuple[str, str | None, str]]]:
+    return [_table("_CLI_COMMANDS"), _table("_STATEMENTS")]
+
+
+def test_sql_and_explain_match_no_statement_pattern():
+    for name in ("sql", "_explain_dml"):
+        calls = [
+            node.func.value.id
+            for node in ast.walk(METHODS[name])
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("match", "search", "fullmatch")
+            and isinstance(node.func.value, ast.Name)
+            and STMT_NAME.match(node.func.value.id)
+        ]
+        assert calls == [], f"Engine.{name} matches {calls} itself"
+
+
+def test_every_statement_pattern_is_an_entry_or_a_helper():
+    defined = {n for n in _module_patterns() if STMT_NAME.match(n)}
+    in_tables = {p for table in _tables() for p, _g, _h in table}
+    in_helpers = {
+        node.id
+        for name, fn in METHODS.items()
+        if name not in ("sql", "_explain_dml")
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Name)
+    }
+    assert sorted(defined - in_tables - in_helpers) == []
+
+
+def test_entries_name_match_handlers_and_guarded_patterns_have_a_table():
+    patterns = _module_patterns()
+    for table in _tables():
+        for pattern, guard, handler in table:
+            assert handler in METHODS, f"no Engine.{handler}"
+            args = [a.arg for a in METHODS[handler].args.args]
+            assert args == ["self", "m"], (handler, args)
+            assert guard is None or guard in GUARDS, (pattern, guard)
+            if guard is not None:
+                groups = re.compile(patterns[pattern]).groupindex
+                assert "table" in groups, f"{pattern} has no table group"
+
+
+def test_no_catalog_list_calls_in_package():
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr.startswith("list")
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "catalog"
+            ):
+                found.append(f"{path.relative_to(PKG)}:{node.lineno}")
+    assert found == []
