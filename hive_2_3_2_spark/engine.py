@@ -438,36 +438,19 @@ def _rewrite_uniontype(query: str) -> str:
     §1.3 — the same encoding Spark's own Hive compat layer uses, and
     what functions.gaps.create_union/extract_union construct/read)."""
     while True:
-        m = _UNIONTYPE.search(query)
+        m = _search_code(_UNIONTYPE, query)
         if not m:
             return query
-        i, depth = m.end(), 1
-        while i < len(query) and depth:
-            if query[i] == "<":
-                depth += 1
-            elif query[i] == ">":
-                depth -= 1
-            i += 1
-        if depth:
+        close = _scan_balanced(query, m.end() - 1, angle=True)
+        if close >= len(query):
             return query  # malformed — let Spark raise the parse error
-        inner = _rewrite_uniontype(query[m.end(): i - 1])
-        branches, cur, d = [], [], 0
-        for ch in inner:
-            if ch in "<(":
-                d += 1
-            elif ch in ">)":
-                d -= 1
-            if ch == "," and d == 0:
-                branches.append("".join(cur))
-                cur = []
-            else:
-                cur.append(ch)
-        branches.append("".join(cur))
+        inner = _rewrite_uniontype(query[m.end():close])
         fields = ",".join(
-            f"field{j}:{b.strip()}" for j, b in enumerate(branches)
+            f"field{j}:{b.strip()}"
+            for j, b in enumerate(_split_top_commas(inner, angle=True))
         )
         repl = f"struct<tag:tinyint,{fields}>"
-        query = query[: m.start()] + repl + query[i:]
+        query = query[: m.start()] + repl + query[close + 1:]
 
 
 _CT_HEAD = re.compile(
@@ -517,15 +500,8 @@ def _restructure_create_table(query: str) -> str:
     insert_at = mh.end()
     cols_end = None
     if body[insert_at:].lstrip().startswith("("):
-        i = body.index("(", insert_at)
-        depth, j = 1, i + 1
-        while j < len(body) and depth:
-            if body[j] == "(":
-                depth += 1
-            elif body[j] == ")":
-                depth -= 1
-            j += 1
-        if depth:
+        j = _scan_balanced(body, body.index("(", insert_at)) + 1
+        if j > len(body):
             return query  # unbalanced — let Spark produce the parse error
         cols_end = j
         insert_at = j
@@ -1131,52 +1107,23 @@ def _resolve_python_callable(qual: str):
     )
 
 
+_WORD = re.compile(r"[^\W\d]\w*")
+
+
 def _scan_top_keywords(text: str):
-    """Yield ``(start, end, WORD)`` for bare keywords at top level —
-    outside single-quoted strings, parentheses, and CASE...END blocks.
-    The quote handling mirrors ``_split_statements`` (backslash and
-    doubled-quote escapes)."""
-    in_str = False
-    depth = 0
+    """Yield ``(start, end, WORD)`` for bare words in code at depth 0,
+    outside CASE...END blocks."""
     case_depth = 0
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if in_str:
-            if ch == "\\" and i + 1 < n:
-                i += 2
-                continue
-            if ch == "'":
-                in_str = False
-            i += 1
+    for m, d in _code_matches(_WORD, text):
+        if d != 0:
             continue
-        if ch == "'":
-            in_str = True
-            i += 1
-            continue
-        if ch == "(":
-            depth += 1
-            i += 1
-            continue
-        if ch == ")":
-            depth -= 1
-            i += 1
-            continue
-        if ch.isalpha() or ch == "_":
-            j = i
-            while j < n and (text[j].isalnum() or text[j] == "_"):
-                j += 1
-            word = text[i:j].upper()
-            if depth == 0:
-                if word == "CASE":
-                    case_depth += 1
-                elif word == "END" and case_depth > 0:
-                    case_depth -= 1
-                elif case_depth == 0:
-                    yield i, j, word
-            i = j
-            continue
-        i += 1
+        word = m.group().upper()
+        if word == "CASE":
+            case_depth += 1
+        elif word == "END" and case_depth > 0:
+            case_depth -= 1
+        elif case_depth == 0:
+            yield m.start(), m.end(), word
 
 
 def _split_when_clauses(text: str) -> list[tuple[bool, str, str]]:
@@ -1245,44 +1192,30 @@ _MERGE_INSERT = re.compile(
 
 
 
+_STMT_BREAK = re.compile(r";|--")
+
+
 def _split_statements(text: str) -> list[str]:
-    """Split a SQL script into statements on top-level semicolons, with
-    quote-aware ``--`` line-comment stripping — CliDriver.processLine
-    parity (reference: cli/.../CliDriver.java:342)."""
+    """Split a SQL script into statements on semicolons in code, with
+    ``--`` line comments stripped — CliDriver.processLine parity
+    (reference: cli/.../CliDriver.java:342). Hive strings use either
+    quote char (cmdwithcomments.q: a double-quoted literal containing
+    ``--`` and ``;`` survives both the comment stripper and the
+    splitter)."""
     out: list[str] = []
     cur: list[str] = []
-    in_str = ""  # the open quote char ('' = not in a string)
-    i = 0
-    while i < len(text):
-        ch = text[i]
-        if in_str:
-            cur.append(ch)
-            if ch == "\\" and i + 1 < len(text):
-                cur.append(text[i + 1])
-                i += 2
-                continue
-            if ch == in_str:
-                in_str = ""
-            i += 1
-            continue
-        if ch in "'\"":
-            # Hive strings use either quote char (cmdwithcomments.q:
-            # a double-quoted literal containing `--` and `;` must
-            # survive both the comment stripper and the splitter)
-            in_str = ch
-            cur.append(ch)
-        elif ch == "-" and text[i : i + 2] == "--":
-            while i < len(text) and text[i] != "\n":
-                i += 1
-            continue
-        elif ch == ";":
+    last = 0
+    for m, _d in _code_matches(_STMT_BREAK, text):
+        cur.append(text[last:m.start()])
+        if m.group() == ";":
             stmt = "".join(cur).strip()
             if stmt:
                 out.append(stmt)
             cur = []
+            last = m.end()
         else:
-            cur.append(ch)
-        i += 1
+            last = _span_end(text, m.start())
+    cur.append(text[last:])
     stmt = "".join(cur).strip()
     if stmt:
         out.append(stmt)
@@ -1333,9 +1266,11 @@ from hive_2_3_2_spark.hiveql_rewrites import (  # noqa: F401
     _rewrite_map_reduce_transform,
     _rewrite_printf_double_literals,
     _rewrite_replicate_rows,
+    _code_matches,
+    _open_parens,
     _scan_balanced,
     _search_code,
-    _split_top_args,
+    _span_end,
     _split_top_commas,
 )
 from hive_2_3_2_spark.sources.writers import (  # noqa: E402
@@ -2011,7 +1946,7 @@ class Engine:
         # Noop pass-through PTFs reduce to subqueries before ANY
         # dispatch (they appear in FROM-first multi-insert too).
         if _search_code(_NOOP_PTF_HEAD, query) is not None:
-            query = self._rewrite_noop_ptf_calls(query)
+            query = _rewrite_noop_ptf(query)
         if _CTAS_SPLIT.match(query):
             query = self._ctas_hive_autonames(query)
         out = self._dispatch(self._CLI_COMMANDS, query)
@@ -2315,16 +2250,7 @@ class Engine:
             )
             out: list[str] = []
             last = 0
-            for m in pat.finditer(query):
-                in_q = None
-                for ch in query[: m.start()]:
-                    if in_q:
-                        if ch == in_q:
-                            in_q = None
-                    elif ch in "'\"":
-                        in_q = ch
-                if in_q is not None:
-                    continue
+            for m, _d in _code_matches(pat, query):
                 out.append(query[last: m.start()])
                 out.append(key)
                 last = m.end()
@@ -2343,21 +2269,12 @@ class Engine:
         string literals are left alone."""
         out: list[str] = []
         last = 0
-        for m in _DEFAULT_QUAL.finditer(query):
+        for m, _d in _code_matches(_DEFAULT_QUAL, query):
             name = m.group(1)
             if (
                 name.lower() not in self.table_paths
                 and name.lower() not in self.views
             ):
-                continue
-            in_q = None
-            for ch in query[: m.start()]:
-                if in_q:
-                    if ch == in_q:
-                        in_q = None
-                elif ch in "'\"":
-                    in_q = ch
-            if in_q is not None:
                 continue
             out.append(query[last: m.start()])
             out.append(name)
@@ -2627,31 +2544,17 @@ class Engine:
         out = query
         for name, (formals, body) in self.macros.items():
             pat = re.compile(rf"\b{re.escape(name)}\s*\(", re.IGNORECASE)
-            pos = 0
-            while True:
-                mm = pat.search(out, pos)
-                if not mm:
-                    break
-                # balanced scan from the opening paren
-                i = mm.end()
-                d, in_str = 1, False
-                while i < len(out) and d:
-                    ch = out[i]
-                    if in_str:
-                        if ch == "'":
-                            in_str = False
-                    elif ch == "'":
-                        in_str = True
-                    elif ch == "(":
-                        d += 1
-                    elif ch == ")":
-                        d -= 1
-                    i += 1
-                if d:
+            parts: list[str] = []
+            last = 0
+            for mm, _d in _code_matches(pat, out):
+                if mm.start() < last:
+                    continue  # inside a call already expanded
+                close = _scan_balanced(out, mm.end() - 1)
+                if close >= len(out):
                     raise HiveQLUnsupportedError(
                         f"unbalanced parentheses in macro call {name}(...)"
                     )
-                arg_text = out[mm.end(): i - 1]
+                arg_text = out[mm.end(): close]
                 actuals = (
                     _split_top_commas(arg_text) if arg_text.strip() else []
                 )
@@ -2668,9 +2571,9 @@ class Engine:
                         expansion,
                         flags=re.IGNORECASE,
                     )
-                expansion = f"({expansion})"
-                out = out[: mm.start()] + expansion + out[i:]
-                pos = mm.start() + len(expansion)
+                parts.append(out[last: mm.start()] + f"({expansion})")
+                last = close + 1
+            out = "".join(parts) + out[last:]
         if out != query:
             return self._expand_macros(out, depth + 1)
         return out
@@ -4539,7 +4442,7 @@ class Engine:
             return None
         needed: set[str] = set(gby)
         n_aggs = 0
-        for item in _split_top_args(m.group(1)):
+        for item in _split_top_commas(m.group(1)):
             im = _META_AGG_ITEM.match(item.strip())
             if im is None:
                 return None
@@ -4636,7 +4539,7 @@ class Engine:
         out_fields: list[StructField] = []
         out_vals: list[object] = []
         n_aggs = 0
-        for item in _split_top_args(m.group(1)):
+        for item in _split_top_commas(m.group(1)):
             item = item.strip()
             im = _STATS_AGG_ITEM.match(item)
             if im:
@@ -5045,31 +4948,8 @@ class Engine:
         encoding first)."""
         from pyspark.sql.types import StructType
 
-        parts: list[str] = []
-        depth = 0
-        cur: list[str] = []
-        in_str = False
-        for ch in text:
-            if in_str:
-                cur.append(ch)
-                if ch == "'":
-                    in_str = False
-                continue
-            if ch == "'":
-                in_str = True
-            elif ch in "(<":
-                depth += 1
-            elif ch in ")>":
-                depth -= 1
-            if ch == "," and depth == 0:
-                parts.append("".join(cur))
-                cur = []
-            else:
-                cur.append(ch)
-        parts.append("".join(cur))
-
         out: list[tuple[str, object]] = []
-        for raw in parts:
+        for raw in _split_top_commas(text, angle=True):
             spec = re.sub(
                 r"\s+COMMENT\s+'[^']*'", "", raw, flags=re.IGNORECASE
             ).strip()
@@ -5355,28 +5235,13 @@ class Engine:
             "timestamp": T.TimestampType(),
         }
 
-        def _depth0(pos: int) -> bool:
-            depth = 0
-            in_q = None
-            for ch in query[:pos]:
-                if in_q:
-                    if ch == in_q:
-                        in_q = None
-                elif ch in "'\"":
-                    in_q = ch
-                elif ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-            return depth == 0
-
         def _plain_from_cols() -> list[str] | None:
             if re.search(r"\bjoin\b", query, re.IGNORECASE):
                 return None
-            for fm in re.finditer(
-                r"(?is)\bfrom\s+([\w.]+)", query
+            for fm, d in _code_matches(
+                re.compile(r"(?is)\bfrom\s+([\w.]+)"), query
             ):
-                if not _depth0(fm.start()):
+                if d != 0:
                     continue
                 t = fm.group(1).split(".")[-1].lower()
                 schema = mentioned.get(t)
@@ -5389,8 +5254,10 @@ class Engine:
             fsm = next(
                 (
                     mm
-                    for mm in re.finditer(r"(?is)\bfrom\s*\(", query)
-                    if _depth0(mm.start())
+                    for mm, d in _code_matches(
+                        re.compile(r"(?is)\bfrom\s*\("), query
+                    )
+                    if d == 0
                 ),
                 None,
             )
@@ -5406,36 +5273,18 @@ class Engine:
                 return None
             body = sm.group(1)
             # top-level select list: scan to the depth-0 FROM
-            items: list[str] = []
-            depth = 0
-            quote = None
-            i = start = 0
-            end = len(body)
-            while i < len(body):
-                ch = body[i]
-                if quote:
-                    if ch == quote:
-                        quote = None
-                elif ch in "'\"":
-                    quote = ch
-                elif ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                elif depth == 0 and ch == ",":
-                    items.append(body[start:i])
-                    start = i + 1
-                elif depth == 0 and ch in "fF" and re.match(
-                    r"(?i)from\b", body[i:]
-                ) and (i == 0 or not (
-                    body[i - 1].isalnum() or body[i - 1] == "_"
-                )):
-                    end = i
-                    break
-                i += 1
-            items.append(body[start:end])
+            end = next(
+                (
+                    mm.start()
+                    for mm, d in _code_matches(
+                        re.compile(r"(?i)\bfrom\b"), body
+                    )
+                    if d == 0
+                ),
+                len(body),
+            )
             names: list[str] = []
-            for it in items:
+            for it in _split_top_commas(body[:end]):
                 it = it.strip().rstrip()
                 if it == "*":
                     # (select * from <one table> ...) — recurse once
@@ -5875,16 +5724,7 @@ class Engine:
 
         out: list[str] = []
         last = 0
-        for m in self._COL_CMP.finditer(query):
-            in_q = None
-            for ch in query[: m.start()]:
-                if in_q:
-                    if ch == in_q:
-                        in_q = None
-                elif ch in "'\"":
-                    in_q = ch
-            if in_q is not None:
-                continue
+        for m, _d in _code_matches(self._COL_CMP, query):
             a, op, b = m.group(1), m.group(2), m.group(3)
             ca, cb = resolve(a), resolve(b)
             if {ca, cb} != {"decimal", "float"}:
@@ -6592,31 +6432,7 @@ class Engine:
         key = m.group(1).split(".")[-1].lower()
         open_idx = m.end() - 1
         close = _scan_balanced(query, open_idx)
-        inner = query[open_idx + 1: close]
-        # split at top-level commas
-        items: list[str] = []
-        buf: list[str] = []
-        depth, q = 0, None
-        for ch in inner:
-            if q:
-                if ch == q:
-                    q = None
-                buf.append(ch)
-            elif ch in "'\"":
-                q = ch
-                buf.append(ch)
-            elif ch == "(":
-                depth += 1
-                buf.append(ch)
-            elif ch == ")":
-                depth -= 1
-                buf.append(ch)
-            elif ch == "," and depth == 0:
-                items.append("".join(buf))
-                buf = []
-            else:
-                buf.append(ch)
-        items.append("".join(buf))
+        items = _split_top_commas(query[open_idx + 1: close])
         cols_out: list[str] = []
         pk = None
         fks: list[dict] = []
@@ -7758,22 +7574,19 @@ class Engine:
         shared FROM (multi_insert_lateral_view.q — SELECT k, C LATERAL
         VIEW explode(...) A AS C expands to SELECT k, C FROM src
         LATERAL VIEW ...)."""
-        depth, cut = 0, len(select_part)
         kw = re.compile(
-            r"\b(WHERE|GROUP|ORDER|HAVING|LIMIT|DISTRIBUTE|SORT|"
+            r"(?<=\s)(WHERE|GROUP|ORDER|HAVING|LIMIT|DISTRIBUTE|SORT|"
             r"CLUSTER|LATERAL|WINDOW)\b",
             re.IGNORECASE,
         )
-        for i, ch in enumerate(select_part):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0:
-                km = kw.match(select_part, i)
-                if km and i > 0 and select_part[i - 1].isspace():
-                    cut = i
-                    break
+        cut = next(
+            (
+                km.start()
+                for km, d in _code_matches(kw, select_part)
+                if d == 0
+            ),
+            len(select_part),
+        )
         return (
             f"{select_part[:cut].rstrip()} FROM {from_clause} "
             f"{select_part[cut:]}"
@@ -8687,78 +8500,6 @@ class Engine:
             rest_of_line=rest_of_line,
         )
 
-    def _rewrite_noop_ptf_calls(self, query: str) -> str:
-        """Hive's Noop family of PTFs (reference: udf/ptf/Noop.java,
-        NoopWithMap.java, NoopStreaming.java — ptf.q, ptf_streaming.q):
-        pass-through table functions whose partition/order (or
-        distribute/sort) clause establishes the PTF input ordering.
-        Row content is unchanged, and every windowing expression in the
-        golden corpus carries its OWN explicit OVER spec, so the
-        Spark-first translation is a plain subquery over the source —
-        Catalyst then plans the real partitioning from the window specs
-        (one Exchange per distinct spec, not one per noop level, which
-        also drops the redundant per-chain-link shuffles Hive's PTF
-        operator chain would execute at 100 TB).
-
-        Rewrites RIGHTMOST-first so chained calls (test 12/18-23:
-        ``noop(on noopwithmap(on noop(on part ...)))``) reduce from the
-        innermost out. A call in FROM position with no explicit alias
-        gets a generated one (the FROM-first multi-insert branch and
-        older SQL dialects require aliased subqueries)."""
-        n = 0
-        while True:
-            m = None
-            for cand in _NOOP_PTF_HEAD.finditer(query):
-                in_q = None
-                for ch in query[:cand.start()]:
-                    if in_q:
-                        if ch == in_q:
-                            in_q = None
-                    elif ch in "'\"":
-                        in_q = ch
-                if in_q is None:
-                    m = cand  # keep the RIGHTMOST code match
-            if m is None:
-                return query
-            open_idx = query.index("(", m.start())
-            close = _scan_balanced(query, open_idx)
-            if close >= len(query):
-                return query
-            body = re.sub(
-                r"^\s*on\b", "", query[open_idx + 1:close],
-                flags=re.IGNORECASE,
-            )
-            # src = body up to the first TOP-LEVEL ptf clause keyword
-            cut = len(body)
-            for cm in _PTF_SPEC_CLAUSE.finditer(body):
-                depth = 0
-                for ch in body[:cm.start()]:
-                    if ch == "(":
-                        depth += 1
-                    elif ch == ")":
-                        depth -= 1
-                if depth == 0:
-                    cut = cm.start()
-                    break
-            src = body[:cut].strip().rstrip(",").strip()
-            if not src:
-                raise HiveQLUnsupportedError(
-                    "noop PTF: missing input relation after ON"
-                )
-            # explicit alias right after the call? (``) abc join ...``)
-            tail = query[close + 1:]
-            am = re.match(r"\s*(?:as\s+)?([A-Za-z_]\w*)", tail)
-            has_alias = bool(
-                am and am.group(1).lower() not in _FROM_TAIL_KEYWORDS
-            )
-            alias = "" if has_alias else f" __ptf_{n}"
-            n += 1
-            query = (
-                query[:m.start()]
-                + f"(SELECT * FROM {src}){alias}"
-                + query[close + 1:]
-            )
-
     def _rewrite_matchpath_calls(self, query: str) -> str:
         """Hive's MatchPath PTF SQL invocation (reference:
         udf/ptf/MatchPath.java; ptf_matchpath.q):
@@ -8798,17 +8539,11 @@ class Engine:
                 flags=re.IGNORECASE,
             )
             # top-level clause boundaries
-            marks: list[tuple[str, int, int]] = []
-            for cm in clause.finditer(body):
-                depth = 0
-                for ch in body[:cm.start()]:
-                    if ch == "(":
-                        depth += 1
-                    elif ch == ")":
-                        depth -= 1
-                if depth == 0:
-                    kw = cm.group(1) or "arg"
-                    marks.append((kw.lower(), cm.start(), cm.end()))
+            marks = [
+                ((cm.group(1) or "arg").lower(), cm.start(), cm.end())
+                for cm, d in _code_matches(clause, body)
+                if d == 0
+            ]
             if not marks:
                 raise HiveQLUnsupportedError(
                     "matchpath: missing distribute/sort/arg clauses"
@@ -8884,7 +8619,7 @@ class Engine:
             rx = rx.replace(".", "")  # Hive '.' = symbol concatenation
             out_specs: list[tuple[str, str]] = []  # (source col, alias)
             need_cols: list[str] = []
-            for item in _split_top_args(result_text):
+            for item in (i.strip() for i in _split_top_commas(result_text)):
                 im = re.match(
                     r"^size\s*\(\s*tpath\s*\)\s+as\s+(\w+)$",
                     item, re.IGNORECASE,
@@ -8909,7 +8644,7 @@ class Engine:
                     f"matchpath result expression {item!r} not supported "
                     "(plain columns, size(tpath), tpath[0].col)"
                 )
-            sort_cols = [s.strip() for s in _split_top_args(sort)]
+            sort_cols = [s.strip() for s in _split_top_commas(sort)]
             result_cols = list(dict.fromkeys(need_cols))
             out = match_path(
                 df, dist.strip(), sort_cols, symbols, rx, result_cols,
@@ -9278,7 +9013,7 @@ class Engine:
             if fm and last_key is not None:
                 conds = [
                     re.sub(r"#\d+L?", "", c.strip())
-                    for c in _split_top_args(fm.group(1))
+                    for c in _split_top_commas(fm.group(1))
                     if c.strip() and "dynamicpruning" not in c
                 ]
                 if conds:
@@ -9350,87 +9085,66 @@ class Engine:
         return explain_str(self.sql(query))
 
 
-# _NOOP_PTF_HEAD (the single module-level definition lives further
-# down, next to the FROM-item machinery) matches the whole noop PTF
-# family: noop/noopwithmap/noopstreaming/noopwithmapstreaming.
-_PTF_CLAUSE_SPLIT = re.compile(
-    r"\b(partition\s+by|distribute\s+by|sort\s+by|order\s+by)\b",
-    re.IGNORECASE,
-)
-
-
 def _rewrite_noop_ptf(query: str) -> str:
-    """Hive's table-function invocation syntax for the passthrough PTFs
-    (reference: ql/src/test/queries/clientpositive/ptf.q;
-    udf/ptf/Noop.java, NoopWithMap.java — identity PTFs that exist to
-    exercise the PTF partitioning machinery):
+    """Hive's Noop family of PTFs (reference: udf/ptf/Noop.java,
+    NoopWithMap.java, NoopStreaming.java — ptf.q, ptf_streaming.q):
+    pass-through table functions whose partition/order (or
+    distribute/sort) clause establishes the PTF input ordering.
+    Row content is unchanged, and every windowing expression in the
+    golden corpus carries its OWN explicit OVER spec, so the
+    Spark-first translation is a plain subquery over the source —
+    Catalyst then plans the real partitioning from the window specs
+    (one Exchange per distinct spec, not one per noop level, which
+    also drops the redundant per-chain-link shuffles Hive's PTF
+    operator chain would execute at 100 TB).
 
-        FROM noop(on <src> partition by A order by B)
-
-    becomes a derived table that reproduces the PTF's partitioned sort:
-
-        FROM (SELECT * FROM <src> DISTRIBUTE BY A SORT BY B) __ptf
-
-    (partition by → distribute by, order/sort by → sort by — the PTF's
-    ordering is per-partition, exactly SORT BY's contract). Window
-    functions above re-declare their own partition/order, so results
-    are identical; the rewrite preserves the clustering for them."""
+    Rewrites RIGHTMOST-first so chained calls (test 12/18-23:
+    ``noop(on noopwithmap(on noop(on part ...)))``) reduce from the
+    innermost out. A call in FROM position with no explicit alias
+    gets a generated one (the FROM-first multi-insert branch and
+    older SQL dialects require aliased subqueries)."""
+    n = 0
     while True:
-        m = _search_code(_NOOP_PTF_HEAD, query)
-        if not m:
+        m = None
+        for cand, _d in _code_matches(_NOOP_PTF_HEAD, query):
+            m = cand  # keep the RIGHTMOST code match
+        if m is None:
             return query
-        # find the matching close paren of noop( ... )
-        j = query.index("(", m.start())
-        depth = 0
-        n = len(query)
-        while j < n:
-            c = query[j]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            elif c in "'\"":
-                quote = c
-                j += 1
-                while j < n and query[j] != quote:
-                    j += 1
-            j += 1
-        if j >= n:
+        open_idx = query.index("(", m.start())
+        close = _scan_balanced(query, open_idx)
+        if close >= len(query):
             return query
-        inner = query[query.index("(", m.start()) + 1:j]
-        body = re.sub(r"^\s*on\b", "", inner, flags=re.IGNORECASE).strip()
-        # split the trailing partition/sort clauses at TOP level (not
-        # inside a nested subquery's parens)
-        parts: list[tuple[str, int]] = []
-        depth = 0
-        for cm in _PTF_CLAUSE_SPLIT.finditer(body):
-            d = 0
-            for ch in body[:cm.start()]:
-                if ch == "(":
-                    d += 1
-                elif ch == ")":
-                    d -= 1
-            if d == 0:
-                parts.append((cm.group(1).lower(), cm.start()))
-        src = body[:parts[0][1]].strip() if parts else body
-        dist = sort = None
-        for idx, (kw, pos) in enumerate(parts):
-            end = parts[idx + 1][1] if idx + 1 < len(parts) else len(body)
-            text = body[pos:end]
-            expr = _PTF_CLAUSE_SPLIT.sub("", text, count=1).strip()
-            if kw.startswith(("partition", "distribute")):
-                dist = expr
-            else:
-                sort = expr
-        derived = f"(SELECT * FROM {src}"
-        if dist:
-            derived += f" DISTRIBUTE BY {dist}"
-        if sort:
-            derived += f" SORT BY {sort}"
-        derived += ") __ptf_noop"
-        query = query[:m.start()] + derived + query[j + 1:]
+        body = re.sub(
+            r"^\s*on\b", "", query[open_idx + 1:close],
+            flags=re.IGNORECASE,
+        )
+        # src = body up to the first TOP-LEVEL ptf clause keyword
+        cut = next(
+            (
+                cm.start()
+                for cm, d in _code_matches(_PTF_SPEC_CLAUSE, body)
+                if d == 0
+            ),
+            len(body),
+        )
+        src = body[:cut].strip().rstrip(",").strip()
+        if not src:
+            raise HiveQLUnsupportedError(
+                "noop PTF: missing input relation after ON"
+            )
+        # explicit alias right after the call? (``) abc join ...``)
+        tail = query[close + 1:]
+        am = re.match(r"\s*(?:as\s+)?([A-Za-z_]\w*)", tail)
+        has_alias = bool(
+            am and am.group(1).lower() not in _FROM_TAIL_KEYWORDS
+        )
+        alias = "" if has_alias else f" __ptf_{n}"
+        n += 1
+        query = (
+            query[:m.start()]
+            + f"(SELECT * FROM {src}){alias}"
+            + query[close + 1:]
+        )
 
 
 _TRUNC_CALL = re.compile(r"\btrunc\s*\(", re.IGNORECASE)
@@ -9641,12 +9355,7 @@ def _rewrite_json_path_dot_bracket(query: str) -> str:
     def fix(args):
         if len(args) == 2:
             p = args[1].strip()
-            if (
-                len(p) >= 2
-                and p[0] == p[-1]
-                and p[0] in "'\""
-                and ".[" in p
-            ):
+            if re.fullmatch(r"(['\"]).*\1", p, re.DOTALL) and ".[" in p:
                 return [args[0], p[0] + p[1:-1].replace(".[", "[") + p[0]]
         return None
 
@@ -9672,25 +9381,15 @@ def _rewrite_tuple_in(query: str) -> str:
         m = _search_code(_TUPLE_IN, query)
         if m is None:
             break
-        # left tuple: scan backwards from the ')' at m.start() to its '('
+        # left tuple: the '(' still open at the ')' at m.start()
         close_l = m.start()
-        depth = 0
-        open_l = -1
-        for j in range(close_l, -1, -1):
-            c = query[j]
-            if c == ")":
-                depth += 1
-            elif c == "(":
-                depth -= 1
-                if depth == 0:
-                    open_l = j
-                    break
+        open_l = (_open_parens(query, close_l) or [-1])[-1]
         open_r = query.index("(", m.end() - 1)
         close_r = _scan_balanced(query, open_r)
         if open_l < 0 or close_r >= len(query):
             break
-        lhs = _split_top_args(query[open_l + 1:close_l])
-        items = _split_top_args(query[open_r + 1:close_r])
+        lhs = _split_top_commas(query[open_l + 1:close_l])
+        items = _split_top_commas(query[open_r + 1:close_r])
         prev = query[open_l - 1] if open_l > 0 else ""
         ok = (
             len(lhs) >= 2
@@ -9706,7 +9405,7 @@ def _rewrite_tuple_in(query: str) -> str:
         tuples = []
         if ok:
             for it in items:
-                vals = _split_top_args(it.strip()[1:-1])
+                vals = _split_top_commas(it.strip()[1:-1])
                 if len(vals) != len(lhs):
                     ok = False
                     break
@@ -9759,7 +9458,7 @@ def _rewrite_interval_ctors(query: str) -> str:
         close = _scan_balanced(query, open_idx)
         if close >= len(query):
             break
-        args = _split_top_args(query[open_idx + 1:close])
+        args = _split_top_commas(query[open_idx + 1:close])
         fix = fix_ym if m.group(1).lower() == "interval_year_month" else fix_dt
         repl = fix(args)
         if repl is None:
@@ -9906,7 +9605,7 @@ def _rewrite_mask_family(query: str) -> str:
         close = _scan_balanced(query, open_idx)
         if close >= len(query):
             break
-        args = _split_top_args(query[open_idx + 1:close])
+        args = _split_top_commas(query[open_idx + 1:close])
         repl = fix_factory(m.group(1).lower())(args)
         if repl is None:
             out.append(query[:close + 1])

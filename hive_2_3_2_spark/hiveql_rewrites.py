@@ -3,8 +3,20 @@ behind ``engine.rewrite_hiveql`` and ``Engine.sql``'s dispatch/retry
 pipeline (split out of engine.py in round 10 — pure move, no behavior
 change; the reference for each rewrite is cited in its docstring).
 
-Everything here is string → string: quote-aware scanning helpers
-(_search_code/_scan_balanced/_split_top_args/_split_top_commas), the
+Every scan that must tell code from text goes through one lexer,
+``_code_matches``, with Hive's lexical rules (parse/HiveLexer.g
+StringLiteral, Identifier, COMMENT; Spark's lexer shares them): '…' and
+"…" string literals with backslash escapes, `…` backquoted identifiers
+and ``--`` line comments are not code, and every code position has a
+bracket depth. It yields each match of a regex that starts in code,
+with its depth; the regex runs first and the lexer walks only as far
+as each candidate. The substitution loops and the top-level keyword
+finders iterate it directly. Helpers over it: ``_search_code`` (the
+first match), ``_scan_balanced`` (the matching close),
+``_split_top_commas`` (depth-0 commas; ``angle`` also counts ``<>`` in
+type lists) and ``_open_parens`` (the parens still open at a position).
+
+Everything here is string → string: those helpers, the
 HiveQL-divergence rewrites (decimal/float comparison precedence,
 int-to-timestamp millis, distinct windows, greatest/least null
 propagation, PTF/window clause spellings, MAP/REDUCE transform
@@ -17,47 +29,120 @@ from __future__ import annotations
 
 import re
 
-def _split_top_commas(s: str) -> list[str]:
-    """Split on top-level commas only: commas inside parens belong to the
-    nested expression, and commas/parens inside single-quoted string
-    literals (with backslash or doubled-quote escapes, both accepted by
-    Spark SQL) are literal text — found by the hypothesis roundtrip
-    property, e.g. ``SET c = 'a,b'``."""
-    parts: list[str] = []
-    depth = 0
-    cur: list[str] = []
-    in_str = False
-    i = 0
-    while i < len(s):
-        ch = s[i]
-        if in_str:
-            cur.append(ch)
-            if ch == "\\" and i + 1 < len(s):
-                cur.append(s[i + 1])
-                i += 2
-                continue
-            if ch == "'":
-                if i + 1 < len(s) and s[i + 1] == "'":  # doubled-quote escape
-                    cur.append("'")
-                    i += 2
-                    continue
-                in_str = False
-            i += 1
+#: Where each non-code span ends, matched from just past the character
+#: that opens it: '…' and "…" string literals with backslash escapes (a
+#: doubled quote closes one literal and opens the next; an unterminated
+#: literal runs to the end), `…` backquoted identifiers, and ``--`` line
+#: comments (opened by "--", so the match starts at the second dash).
+_SPAN_END = {
+    "'": re.compile(r"(?:[^'\\]|\\.)*(?:'|\\)?", re.DOTALL),
+    '"': re.compile(r'(?:[^"\\]|\\.)*(?:"|\\)?', re.DOTALL),
+    "`": re.compile(r"[^`]*`?"),
+    "-": re.compile(r"-[^\n]*"),
+}
+#: what the lexer acts on in code: a bracket moves the depth, anything
+#: else opens a non-code span; type lists also count ``<>``
+_EVENTS = re.compile(r"[()'\"`]|--")
+_TYPE_EVENTS = re.compile(r"[()<>'\"`]|--")
+
+
+def _span_end(text: str, start: int) -> int:
+    """End of the literal, backquoted identifier or comment whose opening
+    character is at ``start``."""
+    return _SPAN_END[text[start]].match(text, start + 1).end()
+
+
+def _code_matches(
+    pattern: re.Pattern, text: str, pos: int = 0, angle: bool = False
+):
+    """The lexer: yield ``(match, depth)`` for each match of ``pattern``
+    from ``pos`` that starts in code, with the bracket depth at its start
+    (``pos`` must be a code position; it is depth 0). The character that
+    opens a span is code. The regex runs first and the lexer walks only
+    as far as each candidate, once: text without a candidate is never
+    lexed. A candidate inside a span resumes the search at its end."""
+    m = pattern.search(text, pos)
+    if m is None:
+        return
+    events = _TYPE_EVENTS if angle else _EVENTS
+    ev = events.search(text, pos)
+    lexed, depth = pos, 0
+    while m is not None:
+        while ev is not None and ev.start() < m.start():
+            s = ev.start()
+            if text[s] in "(<":
+                depth += 1
+                lexed = s + 1
+            elif text[s] in ")>":
+                depth -= 1
+                lexed = s + 1
+            else:
+                lexed = _span_end(text, s)
+            ev = events.search(text, lexed)
+        if lexed > m.start():  # inside a literal, identifier or comment
+            m = pattern.search(text, lexed)
             continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    parts.append("".join(cur))
+        yield m, depth
+        m = pattern.search(text, max(m.end(), m.start() + 1))
+
+
+def _search_code(pattern: re.Pattern, text: str):
+    """``pattern.search`` skipping matches inside literals, backquoted
+    identifiers and comments — a rewrite must never fire on 'use
+    greatest(x) wisely' appearing in a string constant."""
+    return next((m for m, _d in _code_matches(pattern, text)), None)
+
+
+_CLOSE = re.compile(r"\)")
+_TYPE_CLOSE = re.compile(r"[)>]")
+
+
+def _scan_balanced(text: str, open_idx: int, angle: bool = False) -> int:
+    """Index of the bracket closing the one at ``open_idx``;
+    ``len(text)`` if unbalanced. ``angle`` counts ``<>`` too."""
+    close = _TYPE_CLOSE if angle else _CLOSE
+    return next(
+        (
+            m.start()
+            for m, d in _code_matches(close, text, open_idx, angle)
+            if d == 1
+        ),
+        len(text),
+    )
+
+
+_COMMA = re.compile(",")
+
+
+def _split_top_commas(s: str, angle: bool = False) -> list[str]:
+    """Split on depth-0 commas in code: commas inside brackets belong to
+    the nested expression, and commas inside literals are text — found
+    by the hypothesis roundtrip property, e.g. ``SET c = 'a,b'``.
+    ``angle`` (type lists) counts ``<>`` as brackets."""
+    parts: list[str] = []
+    last = 0
+    for m, d in _code_matches(_COMMA, s, angle=angle):
+        if d == 0:
+            parts.append(s[last:m.start()])
+            last = m.end()
+    parts.append(s[last:])
     return parts
+
+
+_PARENS = re.compile(r"[()]")
+
+
+def _open_parens(text: str, end: int) -> list[int]:
+    """Positions of the '(' still open at ``end``, innermost last."""
+    stack: list[int] = []
+    for m, _d in _code_matches(_PARENS, text):
+        if m.start() >= end:
+            break
+        if m.group() == "(":
+            stack.append(m.start())
+        elif stack:
+            stack.pop()
+    return stack
 
 
 _FIELD_CALL = re.compile(r"\bfield\s*\(", re.IGNORECASE)
@@ -96,7 +181,9 @@ def _rewrite_call_args(
         close = _scan_balanced(query, open_idx)
         if close >= len(query):
             break
-        args = _split_top_args(query[open_idx + 1:close])
+        args = [
+            a.strip() for a in _split_top_commas(query[open_idx + 1:close])
+        ]
         new_args = fn(args)
         if new_args is None:
             out.append(query[:close + 1])
@@ -298,7 +385,7 @@ def _rewrite_distinct_window(query: str) -> str:
                 break
             over = wm.group(0)
             consumed = oend + wm.end()
-        args = _split_top_args(inner)
+        args = [a.strip() for a in _split_top_commas(inner)]
         if fn == "count" and len(args) > 1:
             guard = " OR ".join(f"({a.strip()}) IS NULL" for a in args)
             tup = ", ".join(a.strip() for a in args)
@@ -371,72 +458,6 @@ def _rewrite_printf_double_literals(query: str) -> str:
         return new if changed else None
 
     return _rewrite_call_args(query, _PRINTF_CALL, fix)
-
-
-def _scan_balanced(text: str, open_idx: int) -> int:
-    """Index of the ')' matching the '(' at open_idx (string-aware);
-    len(text) if unbalanced."""
-    depth = 0
-    j = open_idx
-    n = len(text)
-    while j < n:
-        c = text[j]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return j
-        elif c in "'\"":
-            quote = c
-            j += 1
-            while j < n and text[j] != quote:
-                j += 1
-        j += 1
-    return n
-
-
-def _split_top_args(argtext: str) -> list[str]:
-    """Split a call's argument text at top-level commas."""
-    out = []
-    depth = 0
-    start = 0
-    i = 0
-    n = len(argtext)
-    while i < n:
-        c = argtext[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c in "'\"":
-            quote = c
-            i += 1
-            while i < n and argtext[i] != quote:
-                i += 1
-        elif c == "," and depth == 0:
-            out.append(argtext[start:i].strip())
-            start = i + 1
-        i += 1
-    out.append(argtext[start:].strip())
-    return out
-
-
-def _search_code(pattern: re.Pattern, text: str):
-    """``pattern.search`` skipping matches inside quoted SQL literals —
-    a rewrite must never fire on 'use greatest(x) wisely' appearing in
-    a string constant."""
-    for m in pattern.finditer(text):
-        in_q = None
-        for ch in text[:m.start()]:
-            if in_q:
-                if ch == in_q:
-                    in_q = None
-            elif ch in "'\"":
-                in_q = ch
-        if in_q is None:
-            return m
-    return None
 
 
 #: The reference's TEST-JAR function classes → Python equivalents
@@ -512,32 +533,16 @@ _FROM_TAIL_KEYWORDS = frozenset(
 _CAST_OPEN = re.compile(r"\bcast\s*\(", re.IGNORECASE)
 
 
+_AS_KW = re.compile(r"\bas\b", re.IGNORECASE)
+
+
 def _last_toplevel_as(text: str) -> int | None:
-    """Start index of the last depth-0 ``AS`` keyword in a cast body
-    (string-aware), or None."""
-    depth = 0
-    j = 0
-    n = len(text)
+    """Start index of the last depth-0 ``AS`` keyword in a cast body,
+    or None."""
     last = None
-    while j < n:
-        c = text[j]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c in "'\"":
-            quote = c
-            j += 1
-            while j < n and text[j] != quote:
-                j += 1
-        elif depth == 0 and c in "aA" and text[j: j + 2].lower() == "as":
-            before_ok = j == 0 or not (text[j - 1].isalnum()
-                                       or text[j - 1] in "_`")
-            after = text[j + 2: j + 3]
-            after_ok = after == "" or not (after.isalnum() or after in "_`")
-            if before_ok and after_ok:
-                last = j
-        j += 1
+    for m, d in _code_matches(_AS_KW, text):
+        if d == 0:
+            last = m.start()
     return last
 
 
@@ -698,22 +703,10 @@ def _rewrite_int_ts_casts(query: str) -> str:
     (timestamp_ints_casts.q exercises both settings)."""
     out: list[str] = []
     i = 0
-    while True:
-        m = _CAST_OPEN.search(query, i)
-        if m is None:
-            break
-        in_q = None
-        for ch in query[: m.start()]:
-            if in_q:
-                if ch == in_q:
-                    in_q = None
-            elif ch in "'\"":
-                in_q = ch
+    for m, _d in _code_matches(_CAST_OPEN, query):
+        if m.start() < i:
+            continue  # inside a cast already rewritten
         open_idx = query.index("(", m.start())
-        if in_q is not None:
-            out.append(query[i: open_idx + 1])
-            i = open_idx + 1
-            continue
         close = _scan_balanced(query, open_idx)
         if close >= len(query):
             break
@@ -796,7 +789,9 @@ def _rewrite_greatest_least(query: str) -> str:
             close = _scan_balanced(text, open_idx)
             if close >= len(text):
                 return text
-            args = _split_top_args(text[open_idx + 1:close])
+            args = [
+                a.strip() for a in _split_top_commas(text[open_idx + 1:close])
+            ]
             if len(args) < 2:
                 return text
             # inner calls in the args must be rewritten first — recurse
@@ -828,7 +823,9 @@ def _rewrite_field_calls(query: str) -> str:
         close = _scan_balanced(query, open_idx)
         if close >= len(query):
             return query
-        args = _split_top_args(query[open_idx + 1:close])
+        args = [
+            a.strip() for a in _split_top_commas(query[open_idx + 1:close])
+        ]
         if len(args) < 2:
             return query
         needle, hay = args[0], ", ".join(args[1:])
@@ -863,22 +860,7 @@ def _reorder_forward_ctes(query: str) -> str:
         if not m2:
             return query
         name = m2.group(1).strip("`")
-        j = m2.end() - 1  # at the opening '('
-        depth = 0
-        while j < n:
-            c = query[j]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            elif c in "'\"":
-                quote = c
-                j += 1
-                while j < n and query[j] != quote:
-                    j += 1
-            j += 1
+        j = _scan_balanced(query, m2.end() - 1)
         if j >= n:
             return query
         ctes.append((name, query[i:j + 1].strip()))
@@ -949,29 +931,12 @@ _TOP_KW = re.compile(
 
 
 def _top_level_spans(text: str) -> list[tuple[str, int]]:
-    """(keyword, offset) for every depth-0, unquoted top keyword."""
-    out = []
-    depth, in_q = 0, None
-    i = 0
-    while i < len(text):
-        ch = text[i]
-        if in_q:
-            if ch == in_q:
-                in_q = None
-        elif ch in "'\"":
-            in_q = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            m = _TOP_KW.match(text, i)
-            if m and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_")):
-                out.append((m.group(1).upper(), i))
-                i = m.end()
-                continue
-        i += 1
-    return out
+    """(keyword, offset) for every depth-0 top keyword in code."""
+    return [
+        (m.group(1).upper(), m.start())
+        for m, d in _code_matches(_TOP_KW, text)
+        if d == 0
+    ]
 
 
 def _rewrite_alias_in_window(query: str) -> str | None:
@@ -989,7 +954,7 @@ def _rewrite_alias_in_window(query: str) -> str | None:
     )
     if from_off is None:
         return None
-    items = _split_top_args(query[head.end():from_off])
+    items = _split_top_commas(query[head.end():from_off])
     aliases: dict[str, str] = {}
     for it in items:
         m = re.match(
@@ -1009,9 +974,8 @@ def _rewrite_alias_in_window(query: str) -> str | None:
     changed = False
     out = []
     rest = query
-    over_pat = re.compile(r"\bOVER\s*\(", re.IGNORECASE)
     while True:
-        m = over_pat.search(rest)
+        m = _search_code(_OVER_OPEN, rest)
         if not m:
             break
         open_idx = rest.index("(", m.start())
@@ -1129,6 +1093,8 @@ _TRANSFORM_STOP = re.compile(
     re.IGNORECASE,
 )
 _USING_SCRIPT = re.compile(r"\bUSING\s*'", re.IGNORECASE)
+#: what a clause scan looks at: a comma, a word, ';' or a ')'
+_CLAUSE_TOKEN = re.compile(r"[,;)]|[^\W\d]\w*")
 
 
 def _rewrite_map_reduce_transform(query: str) -> str:
@@ -1146,35 +1112,16 @@ def _rewrite_map_reduce_transform(query: str) -> str:
         if m is None:
             break
         # scan forward at top level for USING '<script>' before any
-        # clause keyword
-        i = m.end()
-        n = len(query)
-        depth = 0
+        # clause keyword or an unbalanced ')'
         using_at = -1
-        while i < n:
-            c = query[i]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif c in "'\"":
-                q = c
-                i += 1
-                while i < n and query[i] != q:
-                    i += 1
-            elif depth == 0 and (c.isalpha() or c == ";"):
-                um = _USING_SCRIPT.match(query, i)
-                if um:
-                    using_at = i
-                    break
-                sm = _TRANSFORM_STOP.match(query, i)
-                if sm:
-                    break
-                wm = re.match(r"\w+", query[i:])
-                i += len(wm.group(0)) - 1 if wm else 0
-            i += 1
+        for tm, d in _code_matches(_CLAUSE_TOKEN, query, m.end()):
+            if d != 0:
+                continue
+            if _USING_SCRIPT.match(query, tm.start()):
+                using_at = tm.start()
+                break
+            if tm.group() == ")" or _TRANSFORM_STOP.match(query, tm.start()):
+                break
         if using_at < 0:
             out.append(query[:m.end()])
             query = query[m.end():]
@@ -1200,9 +1147,8 @@ _FRAME_KW = re.compile(r"\b(ROWS|RANGE)\b", re.IGNORECASE)
 def _split_frame(spec_body: str) -> tuple[str, str]:
     """Split a window-spec body into (partition/order part, frame part)
     at the top-level ROWS/RANGE keyword; frame part is '' if absent."""
-    for wm in _FRAME_KW.finditer(spec_body):
-        seg = spec_body[:wm.start()]
-        if seg.count("(") == seg.count(")"):
+    for wm, d in _code_matches(_FRAME_KW, spec_body):
+        if d == 0:
             return spec_body[:wm.start()].rstrip(), spec_body[wm.start():].strip()
     return spec_body.strip(), ""
 
@@ -1305,21 +1251,7 @@ def _rewrite_named_windows(query: str) -> str | None:
         # scope: the innermost unmatched '(' before the clause opens the
         # subquery that owns it; uses may appear before the clause and
         # (for ORDER BY) after it, bounded by the scope's closing paren
-        stack: list[int] = []
-        i = 0
-        while i < m.start():
-            c = query[i]
-            if c == "(":
-                stack.append(i)
-            elif c == ")":
-                if stack:
-                    stack.pop()
-            elif c in "'\"":
-                q = c
-                i += 1
-                while i < m.start() and query[i] != q:
-                    i += 1
-            i += 1
+        stack = _open_parens(query, m.start())
         scope_start = stack[-1] + 1 if stack else 0
         scope_end = (
             _scan_balanced(query, stack[-1]) if stack else len(query)
@@ -1653,6 +1585,7 @@ _POSITIONAL_LIST_TERMINATORS = frozenset({
     "WINDOW", "UNION", "INTERSECT", "EXCEPT", "MINUS", "GROUPING",
     "GROUP", "INSERT", "SELECT", "FROM", "WHERE", "OFFSET",
 })
+_OVER_OPEN = re.compile(r"\bover\s*\(", re.IGNORECASE)
 _POSITIONAL_HEAD = re.compile(
     r"\b(GROUP|ORDER|SORT)\s+BY\s+", re.IGNORECASE
 )
@@ -1691,10 +1624,10 @@ def _rewrite_positional_constants(
     expression arguments, and ORDER BY inside an OVER(...) window
     spec keeps Spark semantics (the conf governs statement-level
     clauses only). Returns None when nothing changed."""
-    over_spans: list[tuple[int, int]] = []
-    for om in re.finditer(r"\bover\s*\(", query, re.IGNORECASE):
-        open_idx = query.index("(", om.start())
-        over_spans.append((om.start(), _scan_balanced(query, open_idx)))
+    over_spans = [
+        (om.start(), _scan_balanced(query, om.end() - 1))
+        for om, _d in _code_matches(_OVER_OPEN, query)
+    ]
 
     def in_over(abs_pos: int) -> bool:
         return any(s < abs_pos <= e for s, e in over_spans)
@@ -1722,40 +1655,18 @@ def _rewrite_positional_constants(
         # top-level item spans: depth-0 commas split; a depth-0 clause
         # keyword, ';', unbalanced ')', or end-of-string terminates
         items: list[tuple[int, int]] = []
-        i = item_start = list_start
-        depth = 0
-        quote: str | None = None
+        item_start = list_start
         end = len(rest)
-        while i < len(rest):
-            ch = rest[i]
-            if quote is not None:
-                if ch == quote:
-                    quote = None
-            elif ch in "'\"":
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    end = i
-                    break
-                depth -= 1
-            elif depth == 0 and ch == ";":
-                end = i
-                break
-            elif depth == 0 and ch == ",":
-                items.append((item_start, i))
-                item_start = i + 1
-            elif depth == 0 and (ch.isalpha() or ch == "_"):
-                wm = re.match(r"\w+", rest[i:])
-                if wm.group(0).upper() in _POSITIONAL_LIST_TERMINATORS:
-                    end = i
-                    break
-                i += len(wm.group(0))
+        for tm, d in _code_matches(_CLAUSE_TOKEN, rest, list_start):
+            tok = tm.group()
+            if d != 0:
                 continue
-            i += 1
-        else:
-            end = len(rest)
+            if tok == ",":
+                items.append((item_start, tm.start()))
+                item_start = tm.end()
+            elif tok in ");" or tok.upper() in _POSITIONAL_LIST_TERMINATORS:
+                end = tm.start()
+                break
         items.append((item_start, end))
         buf = [rest[:list_start]]
         prev = list_start
@@ -2012,23 +1923,11 @@ def _qualify_ambiguous_reference(query: str, err: str) -> str | None:
     )
     out: list[str] = []
     last = 0
-    for bm in bare.finditer(query):
-        # only the OUTER query scope (depth 0, outside string literals)
-        # — a bare `name` inside a parenthesized subquery resolves in
-        # its own scope and must stay untouched
-        in_q = None
-        depth = 0
-        for ch in query[: bm.start()]:
-            if in_q:
-                if ch == in_q:
-                    in_q = None
-            elif ch in "'\"":
-                in_q = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-        if in_q is not None or depth != 0:
+    for bm, d in _code_matches(bare, query):
+        # only the OUTER query scope (depth 0, in code) — a bare `name`
+        # inside a parenthesized subquery resolves in its own scope and
+        # must stay untouched
+        if d != 0:
             continue
         out.append(query[last: bm.start()])
         out.append(f"{qual}.{name}")
@@ -2063,7 +1962,7 @@ def _dedup_grouping_sets(query: str) -> str:
         if close >= len(query):
             out.append(query[pos:])
             return "".join(out)
-        items = _split_top_args(query[open_idx + 1:close])
+        items = _split_top_commas(query[open_idx + 1:close])
         seen: set[frozenset[str]] = set()
         kept: list[str] = []
         for item in items:
@@ -2072,7 +1971,7 @@ def _dedup_grouping_sets(query: str) -> str:
                 inner.startswith("(") and _scan_balanced(inner, 0) == len(inner) - 1
             ) else inner
             key = frozenset(
-                "".join(e.split()).lower() for e in _split_top_args(body)
+                "".join(e.split()).lower() for e in _split_top_commas(body)
             )
             if key not in seen:
                 seen.add(key)

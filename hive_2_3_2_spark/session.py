@@ -179,7 +179,16 @@ def local_frame(
     for row in rows:
         verify(row)
         internal.append(struct.toInternal(convert(row)))
-    columns = list(zip(*internal)) or [()] * len(struct.fields)
+    if not internal:
+        # No rows: the schema alone makes the LocalRelation. Arrow has
+        # no type for every Spark type (year-month intervals), so an
+        # empty frame never goes through it.
+        jss = spark._jsparkSession
+        jdf = jss.createDataFrame(
+            spark._jvm.java.util.ArrayList(), jss.parseDataType(struct.json())
+        )
+        return DataFrame(jdf, spark)
+    columns = list(zip(*internal))
     arrow_schema = to_arrow_schema(struct)
     arrays = []
     for values, field, arrow_field in zip(columns, struct, arrow_schema):

@@ -167,6 +167,41 @@ def test_statement_result_collect_launches_no_job(spark, part_eng, stmt):
     assert res.collect()
 
 
+def test_empty_frames_of_interval_schemas(spark):
+    """Arrow has no year-month interval type: a frame with no rows is
+    built from the schema alone, still a LocalRelation with no job."""
+    df = local_frame(spark, [], "i interval year to month")
+    assert df.schema.simpleString() == "struct<i:interval year to month>"
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan
+    assert _collect_jobs(spark, df) == []
+    assert df.collect() == []
+
+
+@pytest.fixture()
+def interval_view(spark):
+    spark.sql(
+        "SELECT interval '1-2' year to month AS i"
+    ).createOrReplaceTempView("lf_iv")
+    return "lf_iv"
+
+
+def test_create_temporary_table_like_an_interval_view(spark, interval_view):
+    res = Engine(spark=spark).sql(
+        f"CREATE TEMPORARY TABLE lf_tl LIKE {interval_view}"
+    )
+    assert _collect_jobs(spark, res) == []
+    assert spark.table("lf_tl").dtypes == spark.table(interval_view).dtypes
+
+
+def test_run_script_of_an_empty_interval_select(spark, interval_view):
+    (out,) = Engine(spark=spark).run_script(
+        f"SELECT i FROM {interval_view} WHERE false;"
+    )
+    assert out.dtypes == spark.table(interval_view).dtypes
+    assert _collect_jobs(spark, out) == []
+
+
 # -- choke point -------------------------------------------------------------
 
 

@@ -13,6 +13,10 @@ These checks read ``engine.py``'s syntax tree only; no Spark session:
   guarded entry's pattern has the ``table`` group its guard reads.
 - No ``spark.catalog.list*`` call remains in the package (each launches
   Spark jobs; DESCRIBE answers the same questions on the driver).
+- Only the lexer in ``hiveql_rewrites.py`` knows literal syntax: no
+  other function in ``engine.py`` or ``hiveql_rewrites.py`` compares a
+  character with a quote char. ``_invalid_sdf_pattern`` parses
+  SimpleDateFormat's own quoting, a different grammar.
 """
 
 from __future__ import annotations
@@ -127,3 +131,54 @@ def test_no_catalog_list_calls_in_package():
             ):
                 found.append(f"{path.relative_to(PKG)}:{node.lineno}")
     assert found == []
+
+
+#: the lexer, and SimpleDateFormat's quoting
+QUOTE_AWARE = {"_code_matches", "_span_end", "_invalid_sdf_pattern"}
+
+
+def _is_quote_char(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and 0 < len(node.value) <= 3
+        and bool(set(node.value) & set("'\"`"))
+    )
+
+
+def _quote_compares(tree: ast.AST, scope: str = "") -> list[str]:
+    """``scope:line`` of every comparison of a value with a quote char
+    (``ch == "'"``, ``ch in "'\""``) in a function outside the lexer. A
+    quote char on the left of ``in`` searches a whole text and is not a
+    character comparison."""
+    found = []
+    for node in ast.iter_child_nodes(tree):
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            inner = f"{scope}.{node.name}" if scope else node.name
+            if inner not in QUOTE_AWARE:
+                found += _quote_compares(node, inner)
+            continue
+        if isinstance(node, ast.Compare):
+            sides = list(node.comparators)
+            if not isinstance(node.ops[0], (ast.In, ast.NotIn)):
+                sides.append(node.left)
+            if any(_is_quote_char(side) for side in sides):
+                found.append(f"{scope}:{node.lineno}")
+        found += _quote_compares(node, scope)
+    return found
+
+
+def test_only_the_lexer_knows_literal_syntax():
+    rewrites = ast.parse(
+        (PKG / "hiveql_rewrites.py").read_text(encoding="utf-8")
+    )
+    assert _quote_compares(TREE) == []
+    assert _quote_compares(rewrites) == []
+    defined = {
+        node.name
+        for tree in (TREE, rewrites)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.FunctionDef)
+    }
+    assert "_split_top_args" not in defined
+    assert "_rewrite_noop_ptf_calls" not in defined
