@@ -19,6 +19,7 @@ from __future__ import annotations
 import os
 import re
 
+from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_2_3_2_spark.catalog import (
@@ -8402,7 +8403,26 @@ class Engine:
         escape hatch for genuinely large results is ``eager=False``
         (keep the distributed frame and write it out, don't fetch it)."""
         cap = int(self.hiveconf.get("hive.materialize.max.rows", "1000000"))
-        rows = df.limit(cap + 1).collect()
+        try:
+            rows = df.limit(cap + 1).collect()
+        except PySparkNotImplementedError as exc:
+            # pyspark has no Python value for a year-month interval; an
+            # empty result never converts one, so only rows raise here.
+            if "YearMonthIntervalType" not in str(exc):
+                raise
+            cols = [
+                f.name
+                for f in df.schema.fields
+                if re.search(r"interval (year|month)", f.dataType.simpleString())
+            ]
+            raise HiveQLUnsupportedError(
+                "cannot buffer INTERVAL YEAR TO MONTH values in the "
+                f"result (column(s) {', '.join(cols)}): "
+                "run_script/sql_async fetch each statement's rows to the "
+                "driver, which has no value type for them; CAST the "
+                "column to STRING, or pass eager=False and keep the "
+                "result distributed"
+            ) from exc
         if len(rows) > cap:
             raise HiveQLUnsupportedError(
                 f"result exceeds hive.materialize.max.rows={cap}: "

@@ -1,9 +1,9 @@
 """Document chunking + sequence packing — training-data pipeline staples.
 
 - ``chunk_documents``: split long documents into overlapping token
-  windows (context-window preparation). Pure JVM: tokenize once, emit
-  windows via posexplode over a window-start sequence — map-side only,
-  no shuffle, linear in corpus size.
+  windows (context-window preparation). Pure JVM: tokenize once per
+  document, emit windows via posexplode over a window-start sequence —
+  map-side only, no shuffle, linear in corpus size.
 - ``pack_sequences``: greedily pack documents into fixed-token-budget
   groups (training batch packing). Greedy packing is inherently
   sequential per partition — implemented as applyInPandas over a
@@ -37,22 +37,32 @@ def chunk_documents(
 
     Stride = chunk_tokens - overlap; windows start at 0, stride, 2*stride,
     ... while start < n_tokens (every token appears in ≥1 chunk; the final
-    window may be short)."""
+    window may be short).
+
+    Plan: scan → tokenize (one regex split per document) → posexplode
+    → filter → project, in one stage: no exchange, and a write or
+    collect of the result runs one Spark job."""
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be < chunk_tokens")
     stride = chunk_tokens - overlap
     # Expression TEXT (selectExpr): same Catalyst tree as the former F.*
     # chain, ~25 fewer py4j round trips per construction (r12).
-    toks = r"split(trim(" + text_col + r"), '\\s+')"
+    # ``__toks`` gets its own projection BELOW the posexplode. A Project
+    # alias is inlined into every consumer once the n_tokens filter is
+    # pushed under the output projection, which would run the regex
+    # split in the Generate argument, the Filter and the Project, once
+    # per output row each; a Generate does not inline its child's
+    # aliases.
     starts = (
-        f"sequence(0, greatest(cast(floor((size({toks}) - 1) / {stride}) "
-        f"as int) * {stride}, 0), {stride})"
+        "sequence(0, greatest(cast(floor((size(__toks) - 1) / "
+        f"{stride}) as int) * {stride}, 0), {stride})"
     )
     return (
         df.selectExpr(
-            f"{id_col} AS doc_id",
-            f"{toks} AS __toks",
-            f"posexplode({starts}) AS (chunk_id, start)",
+            f"{id_col} AS doc_id", rf"split(trim({text_col}), '\\s+') AS __toks"
+        )
+        .selectExpr(
+            "doc_id", "__toks", f"posexplode({starts}) AS (chunk_id, start)"
         )
         .selectExpr(
             "doc_id",

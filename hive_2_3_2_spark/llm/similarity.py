@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from hive_2_3_2_spark.llm.dedup import _spread
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -90,8 +92,11 @@ def brute_force_topk(
 
     Returns (query_id, neighbor_id, cosine, rank), rank 1..k, excluding
     self-matches. ``queries`` is broadcast — it must be the small side.
+    The corpus is spread over the cores first (``_spread``): scoring is
+    per-row CPU work, and a corpus of one parquet split otherwise
+    scores in one task.
     """
-    c = corpus.selectExpr(
+    c = _spread(corpus).selectExpr(
         f"{id_col} AS neighbor_id",
         f"cast({vec_col} as array<double>) AS cv",
     ).selectExpr("neighbor_id", "cv", _norm_sql("cv") + " AS cnorm")
@@ -238,13 +243,6 @@ def lsh_topk(
         .dropDuplicates(["query_id", "neighbor_id"])
     )
     return scored.selectExpr("*", _TOPK_RANK_SQL).filter(f"rank <= {k}")
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition before CPU-heavy per-row vector math: a small corpus is
-    one parquet split = one core otherwise (same guard as llm/dedup.py)."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(target) if df.rdd.getNumPartitions() < target else df
 
 
 def _cell_ranks_udf(centroids: list[list[float]], nprobe: int):
@@ -441,6 +439,12 @@ def _score_probed_cells(
     cand = c.filter(cell_filter)
     if "cnorm" not in cand.columns:
         cand = cand.selectExpr("*", _norm_sql("cv") + " AS cnorm")
+    # One exchange by query_id serves the dedup (keyed on (query_id,
+    # neighbor_id)), the per-query rank window and any per-query
+    # aggregate a caller puts on top; left to the planner, the dedup
+    # and the window would each shuffle. Every corpus row sits in one cell
+    # and a query probes distinct cells, so the dedup is a guard and
+    # the map-side combine this gives up removed nothing.
     scored = (
         cand.join(F.broadcast(q_probed), "cell")
         .filter(F.expr("query_id != neighbor_id"))
@@ -450,6 +454,7 @@ def _score_probed_cells(
             f"round({_dot_over_norms_sql('qv', 'cv', 'qnorm', 'cnorm')}, 6)"
             " AS cosine",
         )
+        .repartition("query_id")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
     return scored.selectExpr("*", _TOPK_RANK_SQL).filter(f"rank <= {k}")

@@ -256,26 +256,47 @@ def tfidf_top_terms(df, k: int = 3, id_col: str = "doc_id", text_col: str = "tex
     """Per-document top-k keywords by smoothed tf-idf:
     score = tf * ln((N+1)/(df+1)).
 
-    Ranking is on the *integer* pair (tf DESC, df ASC, term ASC) — the
+    Ranking is on the *integer* triple (tf DESC, df ASC, term ASC) — the
     same order tf-idf induces for a fixed corpus, but free of
     cross-engine floating-point tie ambiguity; the float score is
-    emitted for consumers.
+    emitted for consumers, computed only for the k ranked rows of each
+    document.
 
-    Scale: three shuffles, all skew-safe (tf aggregate keyed on
-    (doc, tok); term-level df aggregate over tf partials; per-doc
-    window). The corpus size N is a 1-row broadcast. df table is
-    term-keyed — heavy-hitter terms are fine because df is a
-    pre-aggregated count, not a row explosion.
+    Exchanges: the token rows are hash-partitioned by document ONCE;
+    the tf aggregate and the per-document window both run on that
+    partitioning. The term-level df aggregate reads the same exchange
+    (a ReusedExchange, so the corpus is tokenized once) and adds a
+    term-keyed exchange of partial counts. The corpus size N is a
+    count with a single-partition exchange. Jobs (AQE, at sf0.1): one
+    per exchange (tokens, df, N), one per broadcast (df table, N) and
+    the result job — 6 for a write of the result; a global sort of the
+    result adds its sampling job and exchange. df is term-keyed —
+    heavy-hitter terms are fine because df is a pre-aggregated count,
+    not a row explosion.
     """
-    from pyspark.sql import DataFrame, Window  # local: avoid cycle at import
+    from pyspark.sql import DataFrame  # local: avoid cycle at import
 
     spark_df: DataFrame = df
     # Expression TEXT throughout (selectExpr/F.expr): same Catalyst tree
     # as the former F.* chain, ~25 fewer py4j round trips per
     # construction (r12; each round trip ~2-8 ms on slow localhost).
-    toks = spark_df.selectExpr(
-        id_col, f"explode(split({text_col}, ' ')) AS tok"
-    ).filter("tok != ''")
+    #
+    # One exchange by document serves both per-document operators: the
+    # (doc, tok) tf aggregate is satisfied by a doc-only partitioning,
+    # and a broadcast df join keeps it, so the rank window needs no
+    # exchange of its own. It carries raw token rows, without the
+    # map-side combine a (doc, tok)-keyed exchange gets, but it stands
+    # in for two exchanges of (doc, tok) rows — the tf aggregate's and
+    # the window's. Its partition count is theirs,
+    # spark.sql.shuffle.partitions, given explicitly: AQE must not
+    # coalesce it, or a small corpus runs the tf aggregate and the
+    # window in one task.
+    n_parts = int(spark_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    toks = (
+        spark_df.selectExpr(id_col, f"explode(split({text_col}, ' ')) AS tok")
+        .filter("tok != ''")
+        .repartition(n_parts, id_col)
+    )
     tf = toks.groupBy(id_col, "tok").agg(F.expr("count(1) AS tf"))
     n_docs = spark_df.select(F.expr("count(1) AS n_docs"))
     # df (document frequency) = one count per tok over the tf rows,
@@ -288,8 +309,8 @@ def tfidf_top_terms(df, k: int = 3, id_col: str = "doc_id", text_col: str = "tex
     # map-side combine (each task emits ≤1 row per tok, so the tok
     # exchange carries ≤ vocab × partitions partial rows, skew-free).
     # Tokenization still happens ONCE: dfreq is derived from tf itself,
-    # so both join sides contain the tf aggregate's exchange and
-    # ReuseExchange/AQE-stage-reuse dedups the scan→explode→tf subtree —
+    # so both join sides contain the token exchange and
+    # ReuseExchange/AQE-stage-reuse dedups the scan→explode subtree —
     # but ONLY if the two exchange subtrees stay canonically identical.
     # A plain count(1) df lets column pruning strip the count buffer
     # from this side's partial aggregate (functions=[] vs
@@ -297,20 +318,29 @@ def tfidf_top_terms(df, k: int = 3, id_col: str = "doc_id", text_col: str = "tex
     # count(tf) is rewritten back to count(1) because tf is provably
     # non-null; sum(IF(tf > 0, 1, 0)) — the same integer, tf ≥ 1 by
     # construction — is opaque enough to keep the buffer, and the
-    # coalesce restores count's non-nullable schema. Measured: the plan
-    # drops to ONE Generate/scan with a ReusedExchange (the pre-r12
-    # groupBy+join aggregated df from the RAW toks — different subtree,
-    # no reuse possible, corpus tokenized twice; that is what the window
-    # fixed and this form keeps fixed). The join is left to the planner:
-    # AQE's runtime stats broadcast the vocab-sized dfreq side locally,
-    # and past the broadcast threshold it falls back to a shuffle join
-    # whose skewed tok partitions AQE's skew-join handling can split —
-    # a pinned broadcast would instead OOM on an unbounded vocabulary.
+    # coalesce restores count's non-nullable schema. The executed plan
+    # keeps ONE Generate/scan and a ReusedExchange (pinned in
+    # tests/test_llm_job_budget.py). The join is left to the planner: the vocab-sized dfreq side is broadcast while it
+    # fits the threshold, and past it the planner falls back to a
+    # shuffle join whose skewed tok partitions AQE's skew-join handling
+    # can split — a pinned broadcast would instead OOM on an unbounded
+    # vocabulary.
     dfreq = tf.groupBy("tok").agg(
         F.expr("coalesce(sum(IF(tf > 0, 1, 0)), 0L) AS df")
     )
+    # Rank on the integers first; join N and compute the float score
+    # only for the k surviving rows per document.
     return (
         tf.join(dfreq, "tok")
+        .selectExpr(
+            id_col,
+            "tok",
+            "tf",
+            "df",
+            f"row_number() OVER (PARTITION BY {id_col} "
+            "ORDER BY tf DESC, df ASC, tok ASC) AS rn",
+        )
+        .filter(f"rn <= {k}")
         .crossJoin(F.broadcast(n_docs))
         .selectExpr(
             id_col,
@@ -318,9 +348,5 @@ def tfidf_top_terms(df, k: int = 3, id_col: str = "doc_id", text_col: str = "tex
             "tf",
             "df",
             "round(tf * ln((n_docs + 1.0) / (df + 1.0)), 6) AS score",
-            f"row_number() OVER (PARTITION BY {id_col} "
-            "ORDER BY tf DESC, df ASC, tok ASC) AS rn",
         )
-        .filter(f"rn <= {k}")
-        .select(id_col, "tok", "tf", "df", "score")
     )

@@ -235,9 +235,12 @@ def probe_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filter's reference to the probe-derived `n` stops the optimizer
     # from eliminating the unique-keyed left join (and the entire IVF
     # probe under it) when the bench times this entry with count().
+    # `agg` holds one row per query, and the batch is bounded by
+    # MAX_QUERY_BATCH: broadcast it, so `queries` is not shuffled for
+    # a sort-merge join the adaptive plan would drop anyway.
     return (
         queries.selectExpr("vec_id AS query_id")
-        .join(agg, "query_id", "left")
+        .join(F.broadcast(agg), "query_id", "left")
         .filter("coalesce(n, 0) >= 0")
         .selectExpr(
             "query_id",

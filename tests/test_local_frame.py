@@ -23,7 +23,7 @@ from decimal import Decimal
 
 import pytest
 
-from hive_2_3_2_spark.engine import Engine
+from hive_2_3_2_spark.engine import Engine, HiveQLUnsupportedError
 from hive_2_3_2_spark.session import local_frame
 
 _PKG = pathlib.Path(__file__).resolve().parent.parent / "hive_2_3_2_spark"
@@ -227,3 +227,14 @@ def test_engine_and_sources_build_frames_only_through_local_frame():
                 continue
             offenders.append(f"{path.name}:{node.lineno}")
     assert offenders == []
+
+
+def test_run_script_of_an_interval_row_raises_a_typed_error(spark, interval_view):
+    with pytest.raises(HiveQLUnsupportedError, match=r"INTERVAL YEAR TO MONTH.*\bi\b"):
+        Engine(spark=spark).run_script(f"SELECT i FROM {interval_view};")
+
+
+def test_sql_async_of_an_interval_row_raises_a_typed_error(spark, interval_view):
+    fut = Engine(spark=spark).sql_async(f"SELECT i FROM {interval_view}")
+    with pytest.raises(HiveQLUnsupportedError, match="CAST the column to STRING"):
+        fut.result(timeout=120)

@@ -387,39 +387,54 @@ def test_parse_col_defs_rejects_garbage(spark):
 # --- ngram_windows ≡ the transform(sequence, slice) formulation -----------
 
 
-@given(
+_NGRAM_CASE = st.tuples(
     st.lists(
         st.from_regex(r"[a-z]{0,3}", fullmatch=True), min_size=0, max_size=12
     ),
     st.integers(min_value=1, max_value=5),
     st.booleans(),
 )
-@settings(max_examples=80, deadline=None)
-def test_ngram_windows_matches_reference_formulation(spark, toks, n, partial):
+
+
+@given(st.lists(_NGRAM_CASE, min_size=20, max_size=30))
+@settings(max_examples=5, deadline=None)
+def test_ngram_windows_matches_reference_formulation(spark, cases):
     """The linearized zip_with construction must produce EXACTLY the
     strings of the quadratic transform(sequence, slice) formulation it
     replaced — full-window mode (guarded sequence) and partial-tail
     shingle mode (indexes 0..max(size-n,0), truncated last windows) —
-    including empty tokens, docs shorter than n, and n=1."""
+    including empty tokens, docs shorter than n, and n=1.
+
+    Each example is a batch of (tokens, n, partial) cases checked in one
+    frame and one collect (at least 100 cases per run): the reference
+    reads n per row, and ngram_windows, whose n is static, is selected
+    per row from its ten (n, partial) variants."""
     from pyspark.sql import functions as F
 
     from hive_2_3_2_spark.functions.gaps import ngram_windows
 
-    df = spark.createDataFrame([(toks,)], "t array<string>")
-    if partial:
-        idx = F.sequence(F.lit(0), F.greatest(F.size("t") - n, F.lit(0)))
-    else:
-        idx = F.when(
-            F.size("t") >= n, F.sequence(F.lit(0), F.size("t") - n)
-        ).otherwise(F.array().cast("array<int>"))
-    reference = F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(F.col("t"), i + 1, n))
+    df = spark.createDataFrame(
+        [(i, toks, n, partial) for i, (toks, n, partial) in enumerate(cases)],
+        "case int, t array<string>, n int, partial boolean",
     )
-    row = df.select(
-        reference.alias("ref"),
-        ngram_windows(F.col("t"), n, partial_tail=partial).alias("got"),
-    ).collect()[0]
-    assert list(row.got) == list(row.ref)
+    t, n, partial = F.col("t"), F.col("n"), F.col("partial")
+    idx = F.when(
+        partial, F.sequence(F.lit(0), F.greatest(F.size(t) - n, F.lit(0)))
+    ).when(F.size(t) >= n, F.sequence(F.lit(0), F.size(t) - n)).otherwise(
+        F.array().cast("array<int>")
+    )
+    reference = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(t, i + 1, n)))
+    got = None
+    for width in range(1, 6):
+        for mode in (False, True):
+            hit = (n == width) & (partial == F.lit(mode))
+            windows = ngram_windows(t, width, partial_tail=mode)
+            got = F.when(hit, windows) if got is None else got.when(hit, windows)
+    rows = df.select("case", reference.alias("ref"), got.alias("got")).collect()
+    assert len(rows) == len(cases)
+    for row in rows:
+        assert row.got is not None, cases[row.case]
+        assert list(row.got) == list(row.ref), cases[row.case]
 
 
 # --- r5: rewriter properties --------------------------------------------
