@@ -19,7 +19,7 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.errors import PySparkNotImplementedError
+from pyspark.errors import AnalysisException, PySparkNotImplementedError
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_2_3_2_spark.catalog import (
@@ -1275,9 +1275,9 @@ from hive_2_3_2_spark.hiveql_rewrites import (  # noqa: F401
     _split_top_commas,
 )
 from hive_2_3_2_spark.sources.writers import (  # noqa: E402
-    _escape_path_name,
     _obs_count as _obs_count_w,
-    _unescape_path_name,
+    _partition_rel_dir,
+    partition_values,
 )
 
 
@@ -3289,11 +3289,11 @@ class Engine:
         self._assert_not_mixed(key, "EXPORT")
         path = self.table_paths[key]
         parts = self.table_partitions.get(key) or []
-        spec = self._parse_partition_spec(part_spec, parts)
-        if spec and not parts:
+        if part_spec and not parts:
             raise HiveQLUnsupportedError(
                 f"EXPORT PARTITION on unpartitioned table {key!r}"
             )
+        spec = self._partial_partition_spec(key, part_spec, "EXPORT")
         if os.path.exists(out_dir) and os.listdir(out_dir):
             raise HiveQLUnsupportedError(
                 f"EXPORT target {out_dir!r} exists and is not empty "
@@ -3460,27 +3460,92 @@ class Engine:
         self.register_table(key, path, self.table_partitions.get(key))
         return self._rows_affected(n)
 
+    def _resolve_partition_spec(
+        self,
+        spec: str | None,
+        parts: list[str],
+        schema,
+        what: str,
+        full: bool = False,
+    ) -> tuple[dict[str, str | None], list[str]]:
+        """The one reading of a ``PARTITION (...)`` clause (Hive's
+        BaseSemanticAnalyzer.validatePartSpec). Each name resolves
+        case-insensitively to its declared partition column; a name
+        that is not one is a typed error. Each static value becomes
+        the string its partition directory stores,
+        ``CAST(CAST(<lit> AS <column type>) AS STRING)``: ``'it\\'s'``
+        and ``"x"`` decode, ``p=01`` on an int column names ``p=1``,
+        NULL is None, and a non-NULL literal the cast turns into NULL
+        (``p='abc'`` on an int column) is a typed error, as in Hive's
+        partition-spec type check. All literals evaluate in one
+        ``SELECT ... FROM VALUES (1)``, which Catalyst folds to a local
+        relation: no Spark job. ``schema`` holds the columns' declared
+        types.
+
+        Returns ({column: value}, [dynamic columns]). ``full``
+        requires static values for exactly ``parts``."""
+        static, dynamic = _parse_partition_spec(spec or "")
+        lits = {name.strip("`"): lit for name, lit in static.items()}
+        dynamic = [name.strip("`") for name in dynamic]
+        by_lower = {p.lower(): p for p in parts}
+        extra = [n for n in [*lits, *dynamic] if n not in by_lower]
+        if full and (dynamic or set(lits) != set(by_lower)):
+            missing = [p for p in parts if p.lower() not in lits]
+            raise HiveQLUnsupportedError(
+                f"{what}: PARTITION spec must give static values for "
+                f"exactly {parts} (missing partition column(s) "
+                f"{missing}, other column(s) {extra}, dynamic {dynamic})"
+            )
+        if extra:
+            raise HiveQLUnsupportedError(
+                f"{what}: PARTITION spec names non-partition column(s) "
+                f"{extra}: not a partition column of a table partitioned "
+                f"by {parts or 'nothing'}"
+            )
+        values: dict[str, str | None] = {}
+        if lits:
+            declared = {f.name.lower(): f.dataType for f in schema}
+            types = {
+                n: declared[n].simpleString() if n in declared else "string"
+                for n in lits
+            }
+            exprs = ", ".join(
+                f"CAST(CAST({lit} AS {types[n]}) AS STRING), "
+                f"({lit}) IS NULL"
+                for n, lit in lits.items()
+            )
+            try:
+                row = self.spark.sql(
+                    f"SELECT {exprs} FROM VALUES (1)"
+                ).collect()[0]
+            except AnalysisException as exc:
+                raise HiveQLUnsupportedError(
+                    f"{what}: invalid PARTITION spec value in ({spec}): "
+                    f"{exc}"
+                ) from exc
+            for (n, lit), v, is_null in zip(lits.items(), row[::2], row[1::2]):
+                if v is None and not is_null:
+                    raise HiveQLUnsupportedError(
+                        f"{what}: PARTITION value {lit} cannot be converted "
+                        f"to the type {types[n]} of partition column "
+                        f"{by_lower[n]!r}"
+                    )
+                values[by_lower[n]] = v
+        return values, [by_lower[n] for n in dynamic]
+
     def _static_partition_reldir(self, key: str, spec: str) -> str:
         """``p='v', q=1`` → ``p=v/q=1`` for a registered table, validating
-        the spec covers exactly the partition columns, in order."""
+        the spec covers exactly the partition columns."""
         parts = self.table_partitions.get(key)
         if not parts:
             raise HiveQLUnsupportedError(
                 f"table {key!r} is not partitioned (register_table with "
                 "partition_cols to declare partitions)"
             )
-        static, dynamic = _parse_partition_spec(spec)
-        if dynamic or set(static) != set(parts):
-            raise HiveQLUnsupportedError(
-                f"PARTITION spec must give static values for exactly "
-                f"{parts} (got static={sorted(static)} dynamic={dynamic})"
-            )
-        return os.path.join(
-            *[
-                f"{p}={_escape_path_name(static[p].strip(chr(39)))}"
-                for p in parts
-            ]
+        static, _ = self._resolve_partition_spec(
+            spec, parts, self._declared_schema(key), "PARTITION", full=True
         )
+        return _partition_rel_dir(parts, [static[p] for p in parts])
 
     def _run_truncate(self, m: re.Match[str]) -> DataFrame:
         """TRUNCATE TABLE t [PARTITION (...)] — drop the data, keep the
@@ -3772,31 +3837,20 @@ class Engine:
             h.update(e.encode())
         return h.hexdigest(), size, len(entries)
 
-    @staticmethod
-    def _parse_partition_spec(
-        spec: str | None, part_cols: list[str]
-    ) -> dict[str, str] | None:
-        """PARTITION (dt='2010', pri=1) → {'dt': '2010', 'pri': '1'};
-        PARTITION (dt) (Hive's all-partitions form) and no spec → None.
-        Values keep their directory-encoding (stringified, unquoted)."""
-        if not spec or not spec.strip():
-            return None
-        out: dict[str, str] = {}
-        by_lower = {c.lower(): c for c in part_cols}
-        for item in spec.split(","):
-            item = item.strip()
-            if not item:
-                continue
-            if "=" not in item:  # PARTITION (dt) — dynamic/all form
-                return None
-            col, _, val = item.partition("=")
-            col = col.strip().strip("`")
-            if col.lower() not in by_lower:
-                raise HiveQLUnsupportedError(
-                    f"ANALYZE: {col!r} is not a partition column"
-                )
-            out[by_lower[col.lower()]] = val.strip().strip("'\"")
-        return out or None
+    def _partial_partition_spec(
+        self, key: str, spec: str | None, what: str
+    ) -> dict[str, str | None] | None:
+        """A (possibly partial) PARTITION spec of a path-backed table as
+        {column: value}, the filter ``_match_partition_rels`` applies;
+        no spec, or Hive's all-partitions form ``PARTITION (dt)``, is
+        None."""
+        static, _ = self._resolve_partition_spec(
+            spec,
+            self.table_partitions.get(key) or [],
+            self._declared_schema(key),
+            what,
+        )
+        return static or None
 
     def _partition_rels(self, key: str) -> list[str]:
         """Existing ``col=value/...`` partition dirs of a path-backed
@@ -3823,7 +3877,7 @@ class Engine:
 
         key = self._resolve_dml_table(table)
         part_cols = self.table_partitions.get(key) or []
-        spec = self._parse_partition_spec(part_spec, part_cols)
+        spec = self._partial_partition_spec(key, part_spec, "ANALYZE")
         noscan = False
         if for_columns is not None:
             if for_columns.strip().upper() == "NOSCAN":
@@ -3910,18 +3964,10 @@ class Engine:
         (stats_noscan_1.q's analyze_srcpart_partial)."""
         if spec is None:
             return all_rels
-        want = {c.lower(): v for c, v in spec.items()}
-        out = []
-        for rel in all_rels:
-            vals = {}
-            for seg in rel.split("/"):
-                c, _, v = seg.partition("=")
-                # dirs are stored ESCAPED (FileUtils.escapePathName);
-                # specs carry raw values
-                vals[c.lower()] = _unescape_path_name(v)
-            if all(vals.get(c) == v for c, v in want.items()):
-                out.append(rel)
-        return out
+        want = {c.lower(): v for c, v in spec.items()}.items()
+        return [
+            rel for rel in all_rels if want <= partition_values(rel).items()
+        ]
 
     def _run_analyze_partitions(
         self, key: str, spec: dict[str, str] | None
@@ -4124,13 +4170,7 @@ class Engine:
         out_rows = []
         for grow in grouped:
             row = grow.asDict()
-            rel = "/".join(
-                f"{c}=" + (
-                    "__HIVE_DEFAULT_PARTITION__"
-                    if row[c] is None else str(row[c])
-                )
-                for c in part_cols
-            )
+            rel = _partition_rel_dir(part_cols, [row[c] for c in part_cols])
             pstats = store["parts"].setdefault(rel, {})
             pstats["__num_rows"] = int(row["__cnt"])
             for c in cols:
@@ -4215,7 +4255,7 @@ class Engine:
         part_cols = self.table_partitions[key]
         if not where or not where.strip():
             return lambda rel: True
-        by_lower = {c.lower(): c for c in part_cols}
+        part_lower = {c.lower() for c in part_cols}
         types = {
             f.name.lower(): f.dataType
             for f in self._declared_schema(key).fields
@@ -4237,7 +4277,7 @@ class Engine:
             if not pm:
                 return None
             col, op, lit = pm.groups()
-            if col.lower() not in by_lower:
+            if col.lower() not in part_lower:
                 return None
             litv = lit[1:-1] if lit.startswith("'") else lit
             # Integral partition columns compare via int() — float()
@@ -4254,20 +4294,13 @@ class Engine:
                     litv = coerce(litv)
                 except ValueError:
                     return None
-            preds.append((by_lower[col.lower()], ops[op], litv, coerce))
+            preds.append((col.lower(), ops[op], litv, coerce))
 
         def fn(rel: str) -> bool:
-            # Dir values are stored ESCAPED (ExternalCatalogUtils
-            # charset: '/', ':', '%', '=' ...); WHERE literals are the
-            # logical values — unescape before comparing, exactly like
-            # _find_matching_partitions / _partition_tuples_df.
-            vals: dict[str, str] = {}
-            for seg in rel.split("/"):
-                c, _, v = seg.partition("=")
-                vals[c] = _unescape_path_name(v)
+            vals = partition_values(rel)
             for col, op, litv, coerce in preds:
                 raw = vals.get(col)
-                if raw is None or raw == "__HIVE_DEFAULT_PARTITION__":
+                if raw is None:
                     return False
                 if coerce is not None:
                     try:
@@ -4375,18 +4408,11 @@ class Engine:
         difference."""
         parts = self.table_partitions.get(key) or []
         by_lower = {c.lower(): c for c in parts}
-        seen: set[tuple] = set()
-        for rel in self._partition_rels(key):
-            if not pred(rel):
-                continue
-            vals = {}
-            for seg in rel.split("/"):
-                c, _, v = seg.partition("=")
-                v = _unescape_path_name(v)
-                vals[c.lower()] = (
-                    None if v == "__HIVE_DEFAULT_PARTITION__" else v
-                )
-            seen.add(tuple(vals.get(c) for c in cols))
+        seen = {
+            tuple(partition_values(rel).get(c) for c in cols)
+            for rel in self._partition_rels(key)
+            if pred(rel)
+        }
         from pyspark.sql.types import StringType, StructField, StructType
 
         schema = StructType(
@@ -4708,36 +4734,27 @@ class Engine:
         ... IF NOT EXISTS spec already exist? Dynamic/partial specs
         return False (Hive only allows the guard on full static
         specs — the insert then proceeds and errors naturally if the
-        spec is bad)."""
+        spec is bad); a name that is not a partition column raises."""
         key = table.split(".")[-1].lower()
-        pairs: dict[str, str] = {}
-        for item in spec_txt.split(","):
-            col, eq, val = item.partition("=")
-            if not eq:
-                return False  # dynamic column → not a static spec
-            pairs[col.strip().strip("`").lower()] = (
-                val.strip().strip("'\"")
-            )
-        if key in self.table_paths:
-            part_cols = self.table_partitions.get(key) or []
-            if set(pairs) != {c.lower() for c in part_cols}:
-                return False
-            spec = {
-                c: pairs[c.lower()] for c in part_cols
-            }
-            return bool(
-                self._match_partition_rels(self._partition_rels(key), spec)
-            )
         try:
-            rows = self.spark.sql(f"SHOW PARTITIONS {table}").collect()
-        except Exception:
+            if key in self.table_paths:
+                parts = self.table_partitions.get(key) or []
+                schema = self._declared_schema(key)
+            else:
+                parts = self._catalog_partition_cols(table)
+                schema = self.spark.table(table).schema
+        except AnalysisException:
             return False
-        want = {f"{c}={v}" for c, v in pairs.items()}
-        for r in rows:
-            segs = set(r[0].split("/"))
-            if want <= segs:
-                return True
-        return False
+        static, dynamic = self._resolve_partition_spec(
+            spec_txt, parts, schema, "INSERT"
+        )
+        if dynamic or set(static) != set(parts):
+            return False
+        rel = _partition_rel_dir(parts, [static[p] for p in parts])
+        if key in self.table_paths:
+            return os.path.isdir(os.path.join(self.table_paths[key], rel))
+        listed = self.spark.sql(f"SHOW PARTITIONS {table}").collect()
+        return rel in {r[0] for r in listed}
 
     def _ctas_hive_autonames(self, query: str) -> str:
         """Hive names unaliased CTAS expression columns ``_c<ordinal>``
@@ -6921,17 +6938,10 @@ class Engine:
                 "PARTITIONED ON view"
             )
         cols, specs = self.view_partitions[key]
-        low = [c.lower() for c in cols]
-        want: list[tuple[str, str]] = []
-        for name, val in _split_assignments(m.group(4)):
-            col = name.strip().strip("`").lower()
-            if col not in low:
-                raise HiveQLUnsupportedError(
-                    f"ALTER VIEW PARTITION: {col!r} is not a partition "
-                    f"column of {key!r} (declared: {cols})"
-                )
-            want.append((col, val.strip().strip("'\"")))
-        spec = tuple(sorted(want))
+        static, _ = self._resolve_partition_spec(
+            m.group(4), cols, self.spark.table(key).schema, "ALTER VIEW"
+        )
+        spec = tuple(sorted((c.lower(), v) for c, v in static.items()))
         if action == "ADD":
             if spec in specs and not if_clause:
                 raise HiveQLUnsupportedError(
@@ -7339,34 +7349,13 @@ class Engine:
         directory listing (metadata-only). A spec column that isn't a
         partition column is a typed error (Hive's validation)."""
         table, spec = m.groups()
-        from hive_2_3_2_spark.sources.writers import _staged_partition_rels
-
         key = self._resolve_dml_table(table)
-        parts = self.table_partitions.get(key)
-        if not parts:
+        if not self.table_partitions.get(key):
             raise HiveQLUnsupportedError(f"table {key!r} is not partitioned")
-        rels = sorted(
-            _staged_partition_rels(self.table_paths[key], len(parts))
+        rels = self._match_partition_rels(
+            self._partition_rels(key),
+            self._partial_partition_spec(key, spec, "SHOW PARTITIONS"),
         )
-        if spec:
-            low = [p.lower() for p in parts]
-            want: dict[str, str] = {}
-            for name, val in _split_assignments(spec):
-                col = name.strip().strip("`").lower()
-                if col not in low:
-                    raise HiveQLUnsupportedError(
-                        f"SHOW PARTITIONS: {col!r} is not a partition "
-                        f"column of {key!r} (has {parts})"
-                    )
-                want[col] = val.strip().strip("'\"")
-            rels = [
-                r
-                for r in rels
-                if all(
-                    f"{c}={v}" in r.split("/")
-                    for c, v in want.items()
-                )
-            ]
         return local_frame(
             self.spark,
             [(r,) for r in rels], "partition string"
@@ -7698,24 +7687,13 @@ class Engine:
                 "table root would produce a mixed-depth layout that "
                 "breaks partition discovery)"
             )
-        static, dynamic = _parse_partition_spec(partspec or "")
-        if dynamic or (partspec and not parts):
-            raise HiveQLUnsupportedError(
-                "LOAD DATA PARTITION requires static values for a "
-                "partitioned table (files are moved, not read — dynamic "
-                "partition values would need a scan; use INSERT instead)"
-            )
-        dest = path
-        for p in parts or []:
-            if static and p not in static:
-                raise HiveQLUnsupportedError(
-                    f"LOAD DATA PARTITION spec missing partition column {p!r}"
-                )
-        if static:
-            rels = [
-                f"{p}={static[p].strip(chr(39))}" for p in (parts or [])
-            ]
-            dest = os.path.join(path, *rels)
+        # files are moved, not read: dynamic partition values would
+        # need a scan (use INSERT instead)
+        dest = (
+            os.path.join(path, self._static_partition_reldir(key, partspec))
+            if partspec
+            else path
+        )
         if not os.path.exists(src):
             # load_nonexistent path (Hive: "No files matching path")
             raise HiveQLUnsupportedError(
@@ -7776,7 +7754,6 @@ class Engine:
 
         overwrite = m.group(1).upper() == "OVERWRITE"
         key = self._resolve_dml_table(m.group(2), mutating=True)
-        static, dynamic = _parse_partition_spec(m.group(3) or "")
         col_list = (
             [c.strip() for c in m.group(4).split(",")] if m.group(4) else None
         )
@@ -7786,21 +7763,11 @@ class Engine:
         target = self._target_frame(key)
         fields = {f.name: f.dataType for f in target.schema.fields}
         sfields = {f.name: f for f in target.schema.fields}
-
-        # HiveQL partition spec NAMES resolve case-insensitively
-        # (loadpart1.q inserts with pCol1= into a pcol1 partition);
-        # normalize to the declared casing before validating
-        parts_by_lower = {p.lower(): p for p in parts}
-        static = {
-            parts_by_lower.get(c.lower(), c): v for c, v in static.items()
-        }
-        dynamic = [parts_by_lower.get(c.lower(), c) for c in dynamic]
-        bad = [p for p in list(static) + dynamic if p not in parts]
-        if bad:
-            raise HiveQLUnsupportedError(
-                f"PARTITION spec names non-partition column(s) {bad} "
-                f"(table {key!r} is partitioned by {parts or 'nothing'})"
-            )
+        # spec names resolve case-insensitively (loadpart1.q inserts
+        # with pCol1= into a pcol1 partition)
+        static, dynamic = self._resolve_partition_spec(
+            m.group(3), parts, self._declared_schema(key), "INSERT"
+        )
         src = self.spark.sql(rewrite_hiveql(body, spark=self.spark))
         # Positional mapping references source columns by name — rename
         # them first so auto-generated names with dots (a literal 1.5
@@ -7846,9 +7813,9 @@ class Engine:
                     for c in target.columns
                 ]
             )
-            for name, lit_sql in static.items():
+            for name, value in static.items():
                 aligned = aligned.withColumn(
-                    name, F.expr(lit_sql).cast(fields[name])
+                    name, F.lit(value).cast(fields[name])
                 )
             aligned = aligned.select(*target.columns)
         else:
@@ -7867,9 +7834,9 @@ class Engine:
                     for i, name in enumerate(expected)
                 ]
             )
-            for name, lit_sql in static.items():
+            for name, value in static.items():
                 aligned = aligned.withColumn(
-                    name, F.expr(lit_sql).cast(fields[name])
+                    name, F.lit(value).cast(fields[name])
                 )
             aligned = aligned.select(*target.columns)
         static_values = None
@@ -7878,22 +7845,14 @@ class Engine:
         )
         static_rel = None
         if fully_static:
-            # Fully static spec: pre-resolve the literal partition tuple
-            # so the named partition is swapped (= cleared) even when
-            # the SELECT returns zero rows (Hive semantics) — and so the
-            # autogather hook knows WHICH partition dir it just wrote.
-            row = self.spark.sql(
-                "SELECT "
-                + ", ".join(
-                    f"CAST({static[p]} AS {fields[p].simpleString()})"
-                    for p in parts
-                )
-            ).first()
+            # Fully static spec: the named partition is swapped (=
+            # cleared) even when the SELECT returns zero rows (Hive
+            # semantics), and the autogather hook knows WHICH partition
+            # dir it just wrote.
+            row = tuple(static[p] for p in parts)
             if overwrite:
-                static_values = [tuple(row)]
-            from hive_2_3_2_spark.sources.writers import _partition_rel_dir
-
-            static_rel = _partition_rel_dir(parts, tuple(row))
+                static_values = [row]
+            static_rel = _partition_rel_dir(parts, row)
         # Per-partition storage descriptors (partition_wise_fileformat*
         # .q): new partitions and OVERWRITEs adopt the TABLE's current
         # format; an append into an existing partition keeps the
@@ -8105,19 +8064,15 @@ class Engine:
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
-        static, dynamic = _parse_partition_spec(part_txt)
         part_cols = self._catalog_partition_cols(name)
-        part_lower = {c.lower(): c for c in part_cols}
-        spec_named = [k for k in static] + dynamic
-        if sorted(k.lower() for k in spec_named) != sorted(
-            c.lower() for c in part_cols
-        ):
+        static, dynamic = self._resolve_partition_spec(
+            part_txt, part_cols, sfields.values(), "INSERT"
+        )
+        if sorted([*static, *dynamic]) != sorted(part_cols):
             raise HiveQLUnsupportedError(
                 f"PARTITION spec ({part_txt}) does not name exactly the "
                 f"partition columns of {name} ({', '.join(part_cols)})"
             )
-        static = {part_lower[k.lower()]: v for k, v in static.items()}
-        dynamic = [part_lower[d.lower()] for d in dynamic]
         part_set = {c.lower() for c in part_cols}
         data_cols = [
             c for c in target.columns if c.lower() not in part_set
@@ -8162,8 +8117,8 @@ class Engine:
                 exprs[c] = _store_cast(
                     F.col(src.columns[len(data_cols) + j]), sfields[c]
                 )
-        for c, lit in static.items():
-            exprs[c] = _store_cast(F.expr(lit), sfields[c])
+        for c, value in static.items():
+            exprs[c] = _store_cast(F.lit(value), sfields[c])
         aligned = src.select(
             *[exprs[c].alias(c) for c in target.columns]
         )

@@ -295,6 +295,25 @@ def _unescape_path_name(v: str) -> str:
     )
 
 
+#: the directory name of a NULL (or empty) partition value
+#: (hive.exec.default.partition.name)
+DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def partition_values(rel: str) -> dict[str, str | None]:
+    """``col=value/...`` partition directory → {column: value}, the
+    inverse of ``_partition_rel_dir``: each value unescaped, the
+    default partition → None. Column names are lowercased (Hive's
+    column names are case-insensitive)."""
+    out: dict[str, str | None] = {}
+    for seg in rel.split("/"):
+        col, _, v = seg.partition("=")
+        out[col.lower()] = (
+            None if v == DEFAULT_PARTITION else _unescape_path_name(v)
+        )
+    return out
+
+
 def _partition_rel_dir(partition_cols: list[str], values) -> str:
     """Relative partition directory for one partition-value tuple, using
     Hive's layout (col=value/...; NULL → __HIVE_DEFAULT_PARTITION__).
@@ -308,7 +327,7 @@ def _partition_rel_dir(partition_cols: list[str], values) -> str:
         # (ExternalCatalogUtils.getPartitionPathString, matching Hive's
         # hive.exec.default.partition.name behavior).
         sv = (
-            "__HIVE_DEFAULT_PARTITION__"
+            DEFAULT_PARTITION
             if v is None or str(v) == ""
             else _escape_path_name(str(v))
         )

@@ -200,6 +200,16 @@ def _shard_files(paths: list[str], n: int) -> list[list[str]]:
     return [s[1] for s in shards if s[1]]
 
 
+def _shard_exit_code(rcs: dict[int, int]) -> int:
+    """Exit code of the sharded run: 0 only when every shard exited 0;
+    else the largest positive shard code, or 1 when every failing shard
+    was killed by a signal (a negative code) or no shard ran."""
+    if not rcs:
+        return 1
+    bad = [rc for rc in rcs.values() if rc != 0]
+    return max(max(bad), 1) if bad else 0
+
+
 def pytest_cmdline_main(config):
     import subprocess
     import sys
@@ -299,4 +309,4 @@ def pytest_cmdline_main(config):
         f"{skipped} skipped across {len(shards)} shards in {wall:.1f}s"
         + (f" — FAILING shards: {bad}" if bad else " — all shards green")
     )
-    return max(rcs.values()) if rcs else 1
+    return _shard_exit_code(rcs)

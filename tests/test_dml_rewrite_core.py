@@ -10,8 +10,10 @@
   re-registration of the table); partitioned targets add one discovery
   job; an UPDATE with an IN (SELECT ...) condition may add one count; a
   partitioned ``merge_upsert`` adds one collect of the updates'
-  partition values instead of the discovery job. The ceilings are upper
-  bounds: the rewrite path may lower a count, never add a scan.
+  partition values instead of the discovery job. A static-partition
+  INSERT OVERWRITE evaluates its spec literal without a job. The
+  ceilings are upper bounds: the rewrite path may lower a count, never
+  add a scan.
 """
 
 from __future__ import annotations
@@ -152,11 +154,18 @@ _MERGE = (
         (_MERGE.format(t="tp", ins="s.k, s.v, s.p"), 2, 10),
         ("UPDATE t SET v = 0 WHERE k IN (SELECT k FROM src)", 1, 6),
         ("DELETE FROM t WHERE k IN (SELECT k FROM src)", 1, 3),
+        (
+            "INSERT OVERWRITE TABLE tp PARTITION (p='x') "
+            "SELECT k, v FROM t WHERE k = 1",
+            1,
+            3,
+        ),
     ],
     ids=[
         "update", "delete", "merge",
         "update_partitioned", "delete_partitioned", "merge_partitioned",
         "update_in_subquery", "delete_in_subquery",
+        "insert_overwrite_static_partition",
     ],
 )
 def test_dml_job_budget(spark, dml_eng, stmt, affected, budget):

@@ -17,6 +17,10 @@ These checks read ``engine.py``'s syntax tree only; no Spark session:
   other function in ``engine.py`` or ``hiveql_rewrites.py`` compares a
   character with a quote char. ``_invalid_sdf_pattern`` parses
   SimpleDateFormat's own quoting, a different grammar.
+- Only ``sources/writers.py`` knows the partition-directory encoding:
+  no other module of the package names ``_escape_path_name`` or
+  ``_unescape_path_name``. The rest goes through ``_partition_rel_dir``
+  and ``partition_values``.
 """
 
 from __future__ import annotations
@@ -182,3 +186,24 @@ def test_only_the_lexer_knows_literal_syntax():
     }
     assert "_split_top_args" not in defined
     assert "_rewrite_noop_ptf_calls" not in defined
+
+
+PATH_CODEC = {"_escape_path_name", "_unescape_path_name"}
+
+
+def test_only_the_writers_know_partition_directory_encoding():
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path == PKG / "sources" / "writers.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            names = (
+                [a.name for a in node.names]
+                if isinstance(node, ast.ImportFrom)
+                else [node.id] if isinstance(node, ast.Name)
+                else [node.attr] if isinstance(node, ast.Attribute)
+                else []
+            )
+            if PATH_CODEC & set(names):
+                found.append(f"{path.relative_to(PKG)}:{node.lineno}")
+    assert found == []
