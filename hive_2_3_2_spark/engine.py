@@ -1781,7 +1781,7 @@ class Engine:
         (_UPDATE_STMT, _ANY_TABLE, "_run_nonacid_dml"),
         (_INSERT_IF_NOT_EXISTS, _ANY_TABLE, "_run_insert_if_not_exists"),
         (_INSERT_STMT, _PATH_TABLE, "_run_insert"),
-        (_INSERT_STMT, None, "_run_insert_catalog_table"),
+        (_INSERT_STMT, None, "_run_insert_catalog"),
         (_WITH_INSERT_STMT, None, "_run_with_insert"),
         (_MULTI_INSERT_STMT, None, "_run_multi_insert"),
         (_LOAD_DATA_STMT, _PATH_TABLE, "_run_load_data"),
@@ -2195,20 +2195,14 @@ class Engine:
             and self._is_catalog_table(name)
         )
 
-    def _run_insert_catalog_table(
-        self, m: re.Match[str]
-    ) -> DataFrame | None:
-        # PARTITION specs (static/dynamic/mixed) are handled with Hive's
-        # positional casts + partition-overwrite semantics
-        if not self._is_catalog_sink(m["table"]):
-            return None
-        return self._run_insert_catalog(m)
-
     def _run_with_insert(self, m: re.Match[str]) -> DataFrame | None:
         """Hive allows the CTE BEFORE the INSERT (WITH c AS (...) INSERT
-        INTO t SELECT ... FROM c). Split at the top-level INSERT keyword
-        and fold the CTE prefix into the insert body, which the
-        SELECT|VALUES|WITH body grammar accepts."""
+        INTO t SELECT ... FROM c). Split at the top-level INSERT keyword,
+        fold the CTE prefix into the insert body, which the
+        SELECT|VALUES|WITH body grammar accepts, and run the folded
+        INSERT through the statement table, so it reaches the handler
+        the INSERT without the CTE reaches. None when no entry takes
+        it: Spark runs the original text."""
         query = m.string
         ins_pos = next(
             (s for s, _e, w in _scan_top_keywords(query) if w == "INSERT"),
@@ -2218,10 +2212,10 @@ class Engine:
             return None
         cte, rest = query[:ins_pos].rstrip(), query[ins_pos:]
         im = _INSERT_STMT.match(rest)
-        if not (im and self._dml_registered(im["table"])):
+        if im is None:
             return None
         folded = rest[: im.start(5)] + cte + " " + rest[im.start(5):]
-        return self._run_insert(_INSERT_STMT.match(folded))
+        return self._dispatch(self._STATEMENTS, folded)
 
     def _run_touch(self, m: re.Match[str]) -> DataFrame:
         """ALTER TABLE ... TOUCH [PARTITION] (touch.q; DDLTask touch):
@@ -7647,16 +7641,14 @@ class Engine:
                     )
                 seen_overwrite.add(sink)
             tgt = im.group(2)
-            if self._dml_registered(tgt):
-                n = self._run_insert(im).collect()[0].rows_affected
-            elif self._is_catalog_table(tgt):
-                n = self._run_insert_catalog(im).collect()[0].rows_affected
-            else:
+            out = self._dispatch(self._STATEMENTS, im.string)
+            if out is None:
                 raise HiveQLUnsupportedError(
                     f"multi-insert branch target {tgt!r} is not writable "
                     "here (unknown table) — register the table with the "
                     "Engine or use a standalone INSERT statement"
                 )
+            n = out.collect()[0].rows_affected
             results.append((tgt.split(".")[-1].lower(), n))
 
     def _run_load_data(self, m: re.Match[str]) -> DataFrame:
@@ -7742,14 +7734,9 @@ class Engine:
         """INSERT INTO|OVERWRITE [TABLE] t [PARTITION(...)] [(cols)] body.
 
         Reference: parse/SemanticAnalyzer.java INSERT analysis +
-        exec/MoveTask.java finalization. Hive column mapping is
-        POSITIONAL: the select supplies the data columns in table order,
-        then any dynamic partition columns (static PARTITION values are
-        constants added here); an explicit column list maps by name with
-        unnamed columns NULL. Everything is cast to the target column
-        types (Hive-permissive implicit casts)."""
-        from pyspark.sql import functions as F
-
+        exec/MoveTask.java finalization. ``_align_insert`` maps the
+        select onto the table; ``insert_rows`` stages and moves the
+        files."""
         from hive_2_3_2_spark.sources.writers import insert_rows
 
         overwrite = m.group(1).upper() == "OVERWRITE"
@@ -7768,81 +7755,12 @@ class Engine:
         static, dynamic = self._resolve_partition_spec(
             m.group(3), parts, self._declared_schema(key), "INSERT"
         )
-        src = self.spark.sql(rewrite_hiveql(body, spark=self.spark))
-        # Positional mapping references source columns by name — rename
-        # them first so auto-generated names with dots (a literal 1.5
-        # yields a column literally named "1.5", which F.col would parse
-        # as `1`.`5`) can't break resolution.
-        src = src.toDF(*[f"__src_c{i}" for i in range(len(src.columns))])
-        if col_list:
-            # A FULLY-STATIC partition spec composes with a column
-            # list (insert_into_with_schema.q: PARTITION (ds='..', i=1)
-            # (userid, link) — HIVE-9481's schema-insert grammar); the
-            # list names DATA columns, the spec supplies the partition
-            # values. Dynamic/partial specs with a column list stay
-            # refused.
-            if dynamic or (static and set(static) != set(parts)):
-                raise HiveQLUnsupportedError(
-                    "INSERT with a DYNAMIC/partial PARTITION spec and "
-                    "an explicit column list is not supported — use a "
-                    "fully-static spec or positional columns"
-                )
-            in_parts = [c for c in col_list if c in parts]
-            if static and in_parts:
-                raise HiveQLUnsupportedError(
-                    f"INSERT column list names partition column(s) "
-                    f"{in_parts} already bound by the PARTITION spec"
-                )
-            unknown = [c for c in col_list if c not in fields]
-            if unknown:
-                raise HiveQLUnsupportedError(
-                    f"INSERT column list names unknown column(s) {unknown}"
-                )
-            if len(src.columns) != len(col_list):
-                raise HiveQLUnsupportedError(
-                    f"INSERT column list has {len(col_list)} columns but "
-                    f"the query supplies {len(src.columns)}"
-                )
-            by_name = {
-                name: _store_cast(F.col(src.columns[i]), sfields[name])
-                for i, name in enumerate(col_list)
-            }
-            aligned = src.select(
-                *[
-                    by_name.get(c, F.lit(None).cast(fields[c])).alias(c)
-                    for c in target.columns
-                ]
-            )
-            for name, value in static.items():
-                aligned = aligned.withColumn(
-                    name, F.lit(value).cast(fields[name])
-                )
-            aligned = aligned.select(*target.columns)
-        else:
-            dyn = dynamic or [p for p in parts if p not in static]
-            expected = [c for c in target.columns if c not in parts] + dyn
-            if len(src.columns) != len(expected):
-                raise HiveQLUnsupportedError(
-                    f"INSERT expects {len(expected)} columns "
-                    f"({', '.join(expected)}) but the query supplies "
-                    f"{len(src.columns)}"
-                )
-            aligned = src.select(
-                *[
-                    _store_cast(F.col(src.columns[i]), sfields[name])
-                    .alias(name)
-                    for i, name in enumerate(expected)
-                ]
-            )
-            for name, value in static.items():
-                aligned = aligned.withColumn(
-                    name, F.lit(value).cast(fields[name])
-                )
-            aligned = aligned.select(*target.columns)
-        static_values = None
-        fully_static = bool(
-            parts and not dynamic and set(static) == set(parts)
+        aligned = _align_insert(
+            self.spark.sql(rewrite_hiveql(body, spark=self.spark)),
+            target.schema.fields, parts, static, dynamic, col_list, key,
         )
+        static_values = None
+        fully_static = bool(static) and not dynamic
         static_rel = None
         if fully_static:
             # Fully static spec: the named partition is swapped (=
@@ -7980,195 +7898,62 @@ class Engine:
             cols.append(col)
         return cols
 
-    def _run_insert_catalog(self, m: re.Match[str]) -> DataFrame:
+    def _run_insert_catalog(self, m: re.Match[str]) -> DataFrame | None:
         """INSERT INTO|OVERWRITE a session-catalog table (e.g. one this
-        Engine created via the STORED AS rewrite) with HIVE column
-        mapping: positional, cast to the target column types
-        (FunctionRegistry implicit conversions — string→int inserts work
-        like Hive instead of failing Spark's safe-cast store-assignment
-        check). Explicit column lists map by name with unnamed columns
-        NULL. The row count rides the write as an observed metric."""
+        Engine created via the STORED AS rewrite) with Hive's column
+        mapping, ``_align_insert``: its casts let string→int inserts
+        work like Hive instead of failing Spark's safe-cast
+        store-assignment check (join8.q). The row count rides the write
+        as an observed metric.
+
+        OVERWRITE follows Hive's partition semantics under
+        partitionOverwriteMode=dynamic: only the partitions the output
+        touches are replaced, after the job commits (Hive stages the
+        output and MoveTask swaps the directory only on success, so
+        dropping a partition before the query runs could lose data).
+        Static values are literal columns, so a fully static spec
+        replaces exactly its partition. A cleanly evaluated EMPTY
+        source touches none, so that spec's partition is then added
+        and truncated: MoveTask keeps the partition registered with
+        no contents, and SHOW PARTITIONS still lists it."""
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
+        name, part_txt = m["table"], m.group(3)
+        if not self._is_catalog_sink(name):
+            return None
         overwrite = m.group(1).upper() == "OVERWRITE"
-        name = m.group(2)
-        part_txt = m.group(3)
         col_list = (
             [c.strip() for c in m.group(4).split(",")] if m.group(4) else None
         )
         body = m.group(5).rstrip().rstrip(";")
-        target = self.spark.table(name)
-        fields = {f.name: f.dataType for f in target.schema.fields}
-        sfields = {f.name: f for f in target.schema.fields}
-        by_lower = {n.lower(): n for n in fields}
-        src = self.spark.sql(rewrite_hiveql(body, spark=self.spark))
-        src = src.toDF(*[f"__src_c{i}" for i in range(len(src.columns))])
-        if part_txt:
-            return self._insert_catalog_partitioned(
-                name, target, sfields, part_txt, src, overwrite, col_list
-            )
-        if col_list:
-            unknown = [c for c in col_list if c.lower() not in by_lower]
-            if unknown:
-                raise HiveQLUnsupportedError(
-                    f"INSERT column list names unknown column(s) {unknown}"
-                )
-            col_list = [by_lower[c.lower()] for c in col_list]
-            if len(src.columns) != len(col_list):
-                raise HiveQLUnsupportedError(
-                    f"INSERT column list has {len(col_list)} columns but "
-                    f"the query supplies {len(src.columns)}"
-                )
-            by_name = {
-                name_: _store_cast(F.col(src.columns[i]), sfields[name_])
-                for i, name_ in enumerate(col_list)
-            }
-            aligned = src.select(
-                *[
-                    by_name.get(c, F.lit(None).cast(fields[c])).alias(c)
-                    for c in target.columns
-                ]
-            )
-        else:
-            if len(src.columns) != len(target.columns):
-                raise HiveQLUnsupportedError(
-                    f"INSERT expects {len(target.columns)} columns "
-                    f"({', '.join(target.columns)}) but the query supplies "
-                    f"{len(src.columns)}"
-                )
-            aligned = src.select(
-                *[
-                    _store_cast(F.col(src.columns[i]), sfields[c]).alias(c)
-                    for i, c in enumerate(target.columns)
-                ]
-            )
-        obs = Observation()
-        aligned = aligned.observe(obs, F.count(F.lit(1)).alias("__n"))
-        aligned.write.insertInto(name, overwrite=overwrite)
-        return self._rows_affected(_obs_count_w(obs))
-
-    def _insert_catalog_partitioned(
-        self, name, target, sfields, part_txt, src, overwrite, col_list
-    ) -> DataFrame:
-        """INSERT [OVERWRITE] INTO a partitioned catalog table with a
-        PARTITION spec — static, dynamic, or Hive's mixed form
-        (load_dyn_part1.q: ``partition (ds='2008-12-31', hr)``). The
-        SELECT supplies the data columns then the DYNAMIC partition
-        values, positionally with Hive's implicit casts; static values
-        come from the spec. OVERWRITE follows Hive's partition
-        semantics: a static-only spec clears exactly that partition
-        (even when the select is empty — MoveTask replaces the
-        directory), a dynamic spec replaces only the partitions the
-        output touches (partitionOverwriteMode=dynamic)."""
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        part_cols = self._catalog_partition_cols(name)
+        fields = self.spark.table(name).schema.fields
+        parts = self._catalog_partition_cols(name)
         static, dynamic = self._resolve_partition_spec(
-            part_txt, part_cols, sfields.values(), "INSERT"
+            part_txt, parts, fields, "INSERT"
         )
-        if sorted([*static, *dynamic]) != sorted(part_cols):
-            raise HiveQLUnsupportedError(
-                f"PARTITION spec ({part_txt}) does not name exactly the "
-                f"partition columns of {name} ({', '.join(part_cols)})"
-            )
-        part_set = {c.lower() for c in part_cols}
-        data_cols = [
-            c for c in target.columns if c.lower() not in part_set
-        ]
-        expected = (len(col_list) if col_list
-                    else len(data_cols) + len(dynamic))
-        if len(src.columns) != expected:
-            raise HiveQLUnsupportedError(
-                f"INSERT into {name} PARTITION ({part_txt}) expects "
-                f"{expected} columns but the query supplies "
-                f"{len(src.columns)}"
-            )
-        exprs: dict[str, object] = {}
-        if col_list:
-            # PARTITION spec + column list (HIVE-9481,
-            # insert_into_with_schema.q): the list names DATA columns
-            # and DYNAMIC partition columns by name, in any order;
-            # unnamed columns are NULL (a NULL dynamic value lands in
-            # __HIVE_DEFAULT_PARTITION__, same as Hive); static
-            # partition values come from the spec only.
-            addressable = {c.lower(): c for c in data_cols}
-            addressable.update({c.lower(): c for c in dynamic})
-            for i, c in enumerate(col_list):
-                tc = addressable.get(c.lower())
-                if tc is None:
-                    raise HiveQLUnsupportedError(
-                        f"INSERT column list names {c!r}, which is "
-                        f"neither a data column nor a dynamic "
-                        f"partition column of {name} (static-bound "
-                        "partition columns can't be listed)"
-                    )
-                exprs[tc] = _store_cast(
-                    F.col(src.columns[i]), sfields[tc]
-                )
-            for c in list(data_cols) + list(dynamic):
-                if c not in exprs:
-                    exprs[c] = F.lit(None).cast(sfields[c].dataType)
-        else:
-            for i, c in enumerate(data_cols):
-                exprs[c] = _store_cast(F.col(src.columns[i]), sfields[c])
-            for j, c in enumerate(dynamic):
-                exprs[c] = _store_cast(
-                    F.col(src.columns[len(data_cols) + j]), sfields[c]
-                )
-        for c, value in static.items():
-            exprs[c] = _store_cast(F.lit(value), sfields[c])
-        aligned = src.select(
-            *[exprs[c].alias(c) for c in target.columns]
+        aligned = _align_insert(
+            self.spark.sql(rewrite_hiveql(body, spark=self.spark)),
+            fields, parts, static, dynamic, col_list, name,
         )
         obs = Observation()
         aligned = aligned.observe(obs, F.count(F.lit(1)).alias("__n"))
-        if overwrite and not dynamic:
-            # static-only OVERWRITE: Hive stages the query output to
-            # scratch and MoveTask swaps the partition directory only on
-            # success — dropping the partition BEFORE the query runs
-            # would lose the existing data if the query fails mid-way.
-            # Dynamic-partition-overwrite gives the same staged-commit
-            # contract here (the static values are literal columns, so
-            # exactly the one target partition is replaced, and only
-            # after the job commits). A cleanly-evaluated EMPTY source
-            # touches no partition under dynamic mode, so the replace-
-            # with-empty semantics is applied as a post-success
-            # TRUNCATE PARTITION — Hive's MoveTask replaces the
-            # directory CONTENTS and keeps the partition registered, so
-            # SHOW PARTITIONS must still list it (r7 ADVICE; a DROP
-            # here lost the metadata too).
-            conf = "spark.sql.sources.partitionOverwriteMode"
-            prev = self.spark.conf.get(conf, "static")
-            self.spark.conf.set(conf, "dynamic")
-            try:
-                aligned.write.insertInto(name, overwrite=True)
-            finally:
-                self.spark.conf.set(conf, prev)
-            if _obs_count_w(obs) == 0:
-                # Hive registers the static target partition even for a
-                # zero-row insert — ADD covers the never-existed case,
-                # TRUNCATE empties a pre-existing one.
-                self.spark.sql(
-                    f"ALTER TABLE {name} ADD IF NOT EXISTS "
-                    f"PARTITION ({part_txt})"
-                )
-                self.spark.sql(
-                    f"TRUNCATE TABLE {name} PARTITION ({part_txt})"
-                )
-            return self._rows_affected(_obs_count_w(obs))
-        elif overwrite:
-            conf = "spark.sql.sources.partitionOverwriteMode"
-            prev = self.spark.conf.get(conf, "static")
-            self.spark.conf.set(conf, "dynamic")
-            try:
-                aligned.write.insertInto(name, overwrite=True)
-            finally:
-                self.spark.conf.set(conf, prev)
-        else:
-            aligned.write.insertInto(name, overwrite=False)
-        return self._rows_affected(_obs_count_w(obs))
+        conf = "spark.sql.sources.partitionOverwriteMode"
+        prev = self.spark.conf.get(conf, "static")
+        self.spark.conf.set(conf, "dynamic")
+        try:
+            aligned.write.insertInto(name, overwrite=overwrite)
+        finally:
+            self.spark.conf.set(conf, prev)
+        n = _obs_count_w(obs)
+        if overwrite and static and not dynamic and n == 0:
+            # ADD covers the never-existed partition, TRUNCATE empties
+            # a pre-existing one
+            self.spark.sql(
+                f"ALTER TABLE {name} ADD IF NOT EXISTS PARTITION ({part_txt})"
+            )
+            self.spark.sql(f"TRUNCATE TABLE {name} PARTITION ({part_txt})")
+        return self._rows_affected(n)
 
     def _run_merge(self, m: re.Match[str]) -> DataFrame:
         """MERGE statement with Hive's full clause surface (reference:
@@ -9612,6 +9397,69 @@ def _store_cast(col, field):
                 c = F.rpad(c, n, " ")
             return c
     return col.cast(field.dataType)
+
+
+def _align_insert(src, schema, parts, static, dynamic, col_list, table):
+    """``src`` projected onto an INSERT target's columns, in the
+    target's order: Hive's one mapping rule for every sink
+    (SemanticAnalyzer's INSERT analysis; HIVE-9481's insert-schema
+    check). Names match case-insensitively. ``static``/``dynamic``
+    come from ``Engine._resolve_partition_spec``: a spec names every
+    one of ``parts``, and with no spec all of them are dynamic. A
+    ``col_list`` names data and dynamic partition columns, each at
+    most once, and the columns it leaves out are NULL; without one,
+    ``src`` supplies the data columns in table order, then the
+    dynamic partition columns in spec order. Every value, static
+    partition literals included, goes through ``_store_cast``."""
+    from pyspark.sql import functions as F
+
+    if not static and not dynamic:  # no PARTITION spec
+        dynamic = parts
+    part_set = {p.lower() for p in parts}
+    static = {c.lower(): v for c, v in static.items()}
+    dynamic = [c.lower() for c in dynamic]
+    bound = {*static, *dynamic}
+    missing = [p for p in parts if p.lower() not in bound]
+    if missing:
+        raise HiveQLUnsupportedError(
+            f"INSERT into {table}: PARTITION spec gives no value for "
+            f"partition column(s) {missing} (Value for key {missing[0]} "
+            "is null or empty)"
+        )
+    data = [f.name.lower() for f in schema if f.name.lower() not in part_set]
+    names = data + dynamic
+    if col_list is not None:
+        listed = [c.lower() for c in col_list]
+        if len(set(listed)) != len(listed):
+            raise HiveQLUnsupportedError(
+                f"Duplicate column name detected in {table} table schema "
+                f"specification ({', '.join(col_list)})"
+            )
+        unknown = [c for c in col_list if c.lower() not in names]
+        if unknown:
+            raise HiveQLUnsupportedError(
+                f"INSERT column list names unknown column(s) {unknown}: "
+                f"neither a data column of {table} nor one of its dynamic "
+                "partition columns"
+            )
+        names = listed
+    if len(src.columns) != len(names):
+        raise HiveQLUnsupportedError(
+            f"INSERT into {table} expects {len(names)} columns "
+            f"({', '.join(names)}) but the query supplies {len(src.columns)}"
+        )
+    # rename first: an auto-generated name such as "1.5" would parse as
+    # a nested field reference in F.col
+    src = src.toDF(*[f"__src_c{i}" for i in range(len(names))])
+    given = dict(zip(names, src.columns))
+    return src.select(*[
+        _store_cast(
+            F.col(given[f.name.lower()]) if f.name.lower() in given
+            else F.lit(static.get(f.name.lower())),
+            f,
+        ).alias(f.name)
+        for f in schema
+    ])
 
 
 def rewrite_hiveql(query: str, spark: SparkSession | None = None) -> str:

@@ -11,7 +11,9 @@
   job; an UPDATE with an IN (SELECT ...) condition may add one count; a
   partitioned ``merge_upsert`` adds one collect of the updates'
   partition values instead of the discovery job. A static-partition
-  INSERT OVERWRITE evaluates its spec literal without a job. The
+  INSERT OVERWRITE evaluates its spec literal without a job, and an
+  unpartitioned INSERT … VALUES (the benchmark's ``insert_values``
+  family) keeps its 2 jobs. The
   ceilings are upper bounds: the rewrite path may lower a count, never
   add a scan.
 """
@@ -160,12 +162,13 @@ _MERGE = (
             1,
             3,
         ),
+        ("INSERT INTO t VALUES (100, 1), (101, 2)", 2, 2),
     ],
     ids=[
         "update", "delete", "merge",
         "update_partitioned", "delete_partitioned", "merge_partitioned",
         "update_in_subquery", "delete_in_subquery",
-        "insert_overwrite_static_partition",
+        "insert_overwrite_static_partition", "insert_values",
     ],
 )
 def test_dml_job_budget(spark, dml_eng, stmt, affected, budget):

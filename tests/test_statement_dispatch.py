@@ -21,6 +21,8 @@ These checks read ``engine.py``'s syntax tree only; no Spark session:
   no other module of the package names ``_escape_path_name`` or
   ``_unescape_path_name``. The rest goes through ``_partition_rel_dir``
   and ``partition_values``.
+- Only ``_align_insert`` knows Hive's store-assignment rule: no other
+  function of the package calls ``_store_cast``.
 """
 
 from __future__ import annotations
@@ -207,3 +209,21 @@ def test_only_the_writers_know_partition_directory_encoding():
             if PATH_CODEC & set(names):
                 found.append(f"{path.relative_to(PKG)}:{node.lineno}")
     assert found == []
+
+
+def test_only_the_insert_aligner_calls_store_cast():
+    aligner = next(
+        n for n in TREE.body
+        if isinstance(n, ast.FunctionDef) and n.name == "_align_insert"
+    )
+    inside = range(aligner.lineno, aligner.end_lineno + 1)
+    calls = []
+    for path in sorted(PKG.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.Call) and "_store_cast" in (
+                getattr(node.func, "id", None), getattr(node.func, "attr", None)
+            ):
+                calls.append((path.name, node.lineno))
+    assert calls
+    outside = [c for c in calls if c[0] != "engine.py" or c[1] not in inside]
+    assert outside == []
