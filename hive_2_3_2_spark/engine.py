@@ -1398,33 +1398,27 @@ class Engine:
         ] = {}
         # view name → explicit column aliases (CREATE VIEW v (a, b) AS)
         self.view_aliases: dict[str, list[str]] = {}
-        # table → column → stats dict (ANALYZE ... FOR COLUMNS; the
-        # metastore TAB_COL_STATS role)
-        self.column_stats: dict[str, dict[str, dict]] = {}
-        # table → basic stats {num_rows, total_size, fp} from ANALYZE
-        # COMPUTE STATISTICS; fp is a data-file fingerprint standing in
-        # for Hive's COLUMN_STATS_ACCURATE flag — ANY write (engine DML
-        # or external) changes it, so the stats-answer path falls back
-        # instead of serving stale numbers
-        self.basic_stats: dict[str, dict] = {}
-        # table → fingerprint at ANALYZE ... FOR COLUMNS time
-        self.column_stats_fp: dict[str, str] = {}
-        # PARTITIONED tables gather per-partition (Hive stores partition
-        # stats in PARTITION_PARAMS / PART_COL_STATS and StatsOptimizer
-        # aggregates them over the pruned partition list):
-        #   part_basic_stats[t] = {fp, all_parts: [rel...],
-        #                          parts: {rel: {num_rows}}}
-        #   part_column_stats[t] = {fp, parts: {rel: {col: stats,
-        #                          __num_rows}}}
-        self.part_basic_stats: dict[str, dict] = {}
-        self.part_column_stats: dict[str, dict] = {}
+        # table → its ONE stats record (Hive's TABLE_PARAMS /
+        # PARTITION_PARAMS plus TAB_COL_STATS / PART_COL_STATS). An
+        # unpartitioned table is one partition keyed "":
+        #   {"fp": data-file fingerprint the numbers were gathered
+        #          under — the engine's COLUMN_STATS_ACCURATE flag,
+        #    "rels": [partition rel...] at gather time,
+        #    "parts": {rel: {num_rows, total_size, cols: {col: stats}}},
+        #    "table_cols": {col: stats}}
+        # ``table_cols`` is what DESCRIBE t col shows; it outlives
+        # invalidation (Hive keeps TAB_COL_STATS rows), which strips the
+        # record to that key alone. Only ``_fresh_stats`` decides whether
+        # the rest may be served; only ``_store_stats`` writes it.
+        self.table_stats: dict[str, dict] = {}
         # table → data-file fingerprint verified against disk THIS
         # session. Staleness is tracked by EVENT, not by re-listing:
-        # every engine write invalidates (register_table), ANALYZE and
-        # REFRESH TABLE re-fingerprint, and the first stats-answered
-        # query per table pays one listing — never one per query (Hive
-        # reads COLUMN_STATS_ACCURATE, an O(1) metastore flag; a
-        # per-query file walk on a 10^6-file table would be a
+        # every engine write invalidates (register_table), ANALYZE,
+        # REFRESH TABLE and any reader that lists the table anyway
+        # (DESCRIBE FORMATTED) re-fingerprint, and the first
+        # stats-answered query per table pays one listing — never one
+        # per query (Hive reads COLUMN_STATS_ACCURATE, an O(1) metastore
+        # flag; a per-query file walk on a 10^6-file table would be a
         # driver-side bottleneck the StatsOptimizer exists to avoid).
         self._fp_memo: dict[str, str] = {}
         # catalog-table schema memo for the decimal-vs-float rewrite —
@@ -3555,7 +3549,7 @@ class Engine:
         path = self.table_paths[key]
         parts = self.table_partitions.get(key)
         auto = self._stats_autogather_on()
-        snap = self._prewrite_stats_snapshot(key) if auto else {}
+        prev = self._fresh_stats(key) if auto else None
         trunc_rel = None
         if m.group(2):
             trunc_rel = self._static_partition_reldir(key, m.group(2))
@@ -3587,43 +3581,23 @@ class Engine:
             # simply every other partition's fresh stats.
             if trunc_rel is None:
                 fp, size, _nf = self._fingerprint_and_size(path)
-                self.basic_stats[key] = {
-                    "num_rows": 0, "total_size": size, "fp": fp,
-                }
-                self._fp_memo[key] = fp
-            else:
-                carried = dict(
-                    snap.get("parts", {}).get("parts", {}) if snap else {}
+                self._store_stats(
+                    key, prev, {"": {"num_rows": 0, "total_size": size}},
+                    ("",), fp,
                 )
-                carried.pop(trunc_rel, None)
-                pcol = dict(snap.get("pcol") or {})
-                pcol.pop(trunc_rel, None)
-                if carried or pcol:
-                    fp, _size, _nf = self._fingerprint_and_size(path)
-                    if carried:
-                        self.part_basic_stats[key] = {
-                            "fp": fp,
-                            "all_parts": self._partition_rels(key),
-                            "parts": carried,
-                        }
-                    if pcol:
-                        self.part_column_stats[key] = {
-                            "fp": fp, "parts": pcol,
-                        }
-                    self._fp_memo[key] = fp
+            else:
+                self._store_stats(key, prev, {}, (trunc_rel,))
         return self._rows_affected(n)
 
     def _invalidate_stats(self, key: str) -> None:
-        """Drop the serve-from-stats gates for a table: basic stats,
-        the column-stats fingerprint, and the session fingerprint memo.
-        Called on every (re-)registration — i.e. after every engine
-        write — and on DROP TABLE. ``column_stats`` values are kept for
-        DESCRIBE parity; without a fresh fingerprint they can no longer
-        answer queries."""
-        self.basic_stats.pop(key, None)
-        self.column_stats_fp.pop(key, None)
-        self.part_basic_stats.pop(key, None)
-        self.part_column_stats.pop(key, None)
+        """Strip a table's stats record to the DESCRIBE column values
+        and drop the session fingerprint memo, so nothing is served
+        from stats until a writer records fresh numbers. Called on every
+        (re-)registration — i.e. after every engine write — and on DROP
+        TABLE."""
+        rec = self.table_stats.pop(key, None)
+        if rec and rec.get("table_cols"):
+            self.table_stats[key] = {"table_cols": rec["table_cols"]}
         self._fp_memo.pop(key, None)
 
     def _mixed_format(self, key: str) -> bool:
@@ -3659,42 +3633,86 @@ class Engine:
         v = self.hiveconf.get("hive.stats.column.autogather", "false")
         return str(v).strip().lower() in ("true", "1", "yes")
 
-    def _prewrite_stats_snapshot(self, key: str) -> dict:
-        """Fingerprint-validated copy of the stats an in-engine write
-        can CARRY FORWARD, taken before the write mutates the files.
-        Hive keeps per-partition COLUMN_STATS_ACCURATE flags, so a
-        write to partition A leaves partition B's stats serveable
-        (StatsTask.java:245ff aggregates per-partition parameters);
-        this engine's fingerprint is table-wide, so carrying forward
-        means re-recording the untouched partitions' numbers under the
-        post-write fingerprint. Stale (fingerprint-mismatched) stats
-        are never carried."""
-        import copy
-
-        snap: dict = {}
-        path = self.table_paths.get(key)
-        if path is None:
-            return snap
-        prev_b = self.basic_stats.get(key)
-        prev_p = self.part_basic_stats.get(key)
-        prev_pc = self.part_column_stats.get(key)
-        if not (prev_b or prev_p or prev_pc):
-            return snap
-        fp = self._fp_memo.get(key)
+    def _fresh_stats(self, key: str, fp: str | None = None) -> dict | None:
+        """A table's stats record while it may be served, else None —
+        the engine's COLUMN_STATS_ACCURATE check and the only code that
+        compares a stats fingerprint. The record is fresh when its
+        fingerprint matches the session-verified one: ``fp`` when the
+        caller has already listed the table (it then becomes the
+        session's verified fingerprint, so a later stats-answered query
+        sees what this listing saw), else ``_fp_memo``, else one listing
+        now. Callers read ``rels`` and ``parts`` and never mutate it."""
+        if fp is not None:
+            if self._fp_memo.get(key, fp) != fp:
+                # the files changed behind the session's back: drop
+                # Spark's cached listing as well, as REFRESH TABLE does
+                self.spark.catalog.refreshTable(key)
+            self._fp_memo[key] = fp
+        rec = self.table_stats.get(key)
+        if not rec or rec.get("fp") is None:
+            return None
         if fp is None:
-            fp = self._table_fingerprint(path)
-        if prev_b and prev_b.get("fp") == fp:
-            snap["basic"] = dict(prev_b)
-        if prev_p and prev_p.get("fp") == fp:
-            snap["parts"] = {
-                "all_parts": list(prev_p["all_parts"]),
-                "parts": {
-                    r: dict(v) for r, v in prev_p["parts"].items()
-                },
-            }
-        if prev_pc and prev_pc.get("fp") == fp:
-            snap["pcol"] = copy.deepcopy(prev_pc["parts"])
-        return snap
+            fp = self._fp_memo.get(key)
+        if fp is None:
+            fp = self._fingerprint_and_size(self.table_paths[key])[0]
+            self._fp_memo[key] = fp
+        return rec if rec["fp"] == fp else None
+
+    def _store_stats(
+        self,
+        key: str,
+        prev: dict | None,
+        written: dict[str, dict],
+        replaced: tuple[str, ...] = (),
+        fp: str | None = None,
+    ) -> None:
+        """The one stats writer (Hive's StatsTask). ``prev`` is what
+        ``_fresh_stats`` served before the statement; ``written`` maps a
+        partition rel ("" for an unpartitioned table) to the numbers the
+        statement produced — num_rows, total_size, cols — merged over
+        that partition's entry; partitions in ``replaced`` were
+        rewritten or removed, so their old entry goes first. Hive keeps
+        one accuracy flag per partition, so a write to partition A
+        leaves partition B servable (StatsTask.java:245ff); this
+        engine's fingerprint is table-wide, so every entry still on disk
+        is re-recorded under the post-statement fingerprint: ``fp`` from
+        the caller's listing, or one listing here. With nothing to
+        record no listing is paid and the record stays as invalidation
+        left it. DESCRIBE's table-level values of each column gathered
+        here roll up from the partitions."""
+        merged = {
+            rel: entry
+            for rel, entry in (prev["parts"] if prev else {}).items()
+            if rel not in replaced
+        }
+        for rel, new in written.items():
+            old = merged.get(rel, {"cols": {}})
+            cols = {**old["cols"], **new.get("cols", {})}
+            merged[rel] = {**old, **new, "cols": cols}
+        rels = (
+            self._partition_rels(key)
+            if self.table_partitions.get(key) else [""]
+        )
+        parts = {rel: merged[rel] for rel in rels if rel in merged}
+        if not parts and fp is None:
+            return
+        if fp is None:
+            fp = self._fingerprint_and_size(self.table_paths[key])[0]
+        table_cols = dict(
+            self.table_stats.get(key, {}).get("table_cols", {})
+        )
+        # DESCRIBE rolls up every gathered partition, also one whose
+        # value spells its directory differently (p=1 read from p=01)
+        for c in {c for new in written.values() for c in new.get("cols", {})}:
+            gathered = [
+                e["cols"][c] for e in merged.values() if c in e["cols"]
+            ]
+            if gathered:
+                table_cols[c] = self._rollup_col_stats(gathered)
+        self.table_stats[key] = {
+            "fp": fp, "rels": rels, "parts": parts, "table_cols": table_cols,
+        }
+        self._fp_memo[key] = fp
 
     def _autogather_insert_stats(
         self,
@@ -3703,7 +3721,8 @@ class Engine:
         overwrite: bool,
         part_counts: dict[str, int] | None,
         pre_rels: set[str] | None,
-        snap: dict,
+        prev: dict | None,
+        cols: dict[str, dict] | None = None,
     ) -> None:
         """Record basic stats after an engine INSERT — Hive's
         hive.stats.autogather StatsTask (exec/StatsTask.java:170-220):
@@ -3714,99 +3733,55 @@ class Engine:
         ``part_counts`` — per-written-partition row counts read from
         the staged parquet footers (the engine's FileSink counters;
         StatsTask.java:245ff aggregates one counter row per written
-        partition) — so STATIC and DYNAMIC specs gather alike. Column
-        stats remain ANALYZE-only (Hive gates those behind the separate
-        hive.stats.column.autogather, default FALSE in 2.3), but
-        untouched partitions' ANALYZEd column stats are carried forward
-        like Hive's per-partition accuracy flags. Costs one listing
-        walk (the same walk ANALYZE pays) per stats-gathering write —
-        never per query."""
+        partition) — so STATIC and DYNAMIC specs gather alike. ``cols``
+        are the column stats an unpartitioned OVERWRITE observed under
+        hive.stats.column.autogather; untouched partitions' ANALYZEd
+        column stats are carried forward like Hive's per-partition
+        accuracy flags. Costs one listing walk (the same walk ANALYZE
+        pays) per stats-gathering write — never per query."""
         path = self.table_paths[key]
-        parts = self.table_partitions.get(key)
-        if not parts:
+        prev_parts = prev["parts"] if prev else {}
+        if not self.table_partitions.get(key):
             if overwrite:
                 num = n
-            elif "basic" in snap:
-                num = snap["basic"]["num_rows"] + n
+            elif "num_rows" in prev_parts.get("", {}):
+                num = prev_parts[""]["num_rows"] + n
             else:
                 return
             fp, size, _nf = self._fingerprint_and_size(path)
-            self.basic_stats[key] = {
-                "num_rows": num, "total_size": size, "fp": fp,
-            }
-            self._fp_memo[key] = fp
+            new = {"num_rows": num, "total_size": size, "cols": cols or {}}
+            self._store_stats(key, prev, {"": new}, ("",), fp)
             return
-        carried: dict = dict(
-            snap.get("parts", {}).get("parts", {}) if snap else {}
-        )
-        written: list[str] = []
+        written: dict[str, dict] = {}
         for rel, cnt in (part_counts or {}).items():
+            old = prev_parts.get(rel, {})
             if overwrite:
-                carried[rel] = {"num_rows": cnt}
-            elif rel in carried:
-                carried[rel] = {
-                    "num_rows": carried[rel]["num_rows"] + cnt
-                }
+                num = cnt
+            elif "num_rows" in old:
+                num = old["num_rows"] + cnt
             elif pre_rels is not None and rel not in pre_rels:
-                # brand-new partition: its rows ARE this insert's
-                carried[rel] = {"num_rows": cnt}
+                num = cnt  # brand-new partition: its rows ARE this insert's
             else:
                 # append to an existing partition with no prior stats —
                 # that partition stays un-gathered; others may carry
-                carried.pop(rel, None)
-                continue
-            written.append(rel)
-        pcol = dict(snap.get("pcol") or {})
-        for rel in part_counts or {}:
-            pcol.pop(rel, None)  # written partitions' column values moved
-        all_rels = self._partition_rels(key)
-        existing = set(all_rels)
-        # a fully-static OVERWRITE of zero rows REMOVES the partition —
-        # prune anything no longer on disk
-        carried = {r: v for r, v in carried.items() if r in existing}
-        pcol = {r: v for r, v in pcol.items() if r in existing}
-        if not carried and not pcol:
-            return  # nothing worth recording under a new fingerprint
-        fp, _size, _nf = self._fingerprint_and_size(path)
-        for rel in written:
-            if rel not in carried:
                 continue
             pdir = os.path.join(path, rel)
-            psize = 0
-            for root, _dirs, files in os.walk(pdir):
-                psize += sum(
-                    os.path.getsize(os.path.join(root, f))
-                    for f in files
-                    if not f.startswith(("_", "."))
-                )
-            carried[rel]["total_size"] = psize
-        if carried:
-            self.part_basic_stats[key] = {
-                "fp": fp,
-                "all_parts": all_rels,
-                "parts": carried,
-            }
-        if pcol:
-            self.part_column_stats[key] = {"fp": fp, "parts": pcol}
-        self._fp_memo[key] = fp
-
-    @staticmethod
-    def _table_fingerprint(path: str) -> str:
-        """Metadata-only digest of a table's data files (relpath, size,
-        mtime) — the engine's stand-in for Hive's COLUMN_STATS_ACCURATE
-        flag (StatsSetupConst): stats recorded under one fingerprint
-        are served only while the files are bit-for-bit the same set.
-        Listing only — no data read — so it costs what a metastore
-        lookup costs."""
-        return Engine._fingerprint_and_size(path)[0]
+            if os.path.isdir(pdir):  # a zero-row OVERWRITE removes it
+                written[rel] = {
+                    "num_rows": num,
+                    "total_size": self._fingerprint_and_size(pdir)[1],
+                }
+        self._store_stats(key, prev, written, tuple(part_counts or ()))
 
     @staticmethod
     def _fingerprint_and_size(path: str) -> tuple[str, int, int]:
         """(fingerprint, total data-file bytes, data-file count) in ONE
-        listing walk — the autogather path and DESCRIBE's quick stats
-        need all three (StatsTask's updateQuickStats records
+        listing walk — the only walk the stats code takes sizes and
+        counts from (StatsTask's updateQuickStats records
         numFiles/totalSize from the same FileStatus listing that
-        validates the write)."""
+        validates the write). The fingerprint is a metadata-only digest
+        of the data files (relpath, size, mtime): stats recorded under
+        one are served only while the files are the same set."""
         import hashlib
 
         h = hashlib.md5()
@@ -3883,47 +3858,32 @@ class Engine:
                 return self._run_analyze_columns(key, for_columns, spec)
         if part_cols and not noscan:
             return self._run_analyze_partitions(key, spec)
-        if part_cols and noscan:
+        path = self.table_paths[key]
+        fp, size, n_files = self._fingerprint_and_size(path)
+        prev = self._fresh_stats(key, fp)
+        if part_cols:
             # per-partition file-level stats, honoring a (possibly
             # partial) spec — stats_noscan_1.q's surface
-            base = self.table_paths[key]
-            rels = self._match_partition_rels(
-                self._partition_rels(key), spec
-            )
             rows = []
-            for rel in rels:
-                nf, sz = 0, 0
-                for root, _dirs, files in os.walk(
-                    os.path.join(base, rel)
-                ):
-                    data = [
-                        f for f in files if not f.startswith(("_", "."))
-                    ]
-                    nf += len(data)
-                    sz += sum(
-                        os.path.getsize(os.path.join(root, f))
-                        for f in data
-                    )
+            for rel in self._match_partition_rels(
+                self._partition_rels(key), spec
+            ):
+                _pfp, sz, nf = self._fingerprint_and_size(
+                    os.path.join(path, rel)
+                )
                 rows.append((rel, nf, sz))
+            self._store_stats(
+                key, prev, {rel: {"total_size": sz} for rel, _, sz in rows},
+                fp=fp,
+            )
             return local_frame(
                 self.spark,
                 rows,
                 "partition string, num_files bigint, "
                 "total_size_bytes bigint",
             )
-        path = self.table_paths[key]
-        size = 0
-        n_files = 0
-        if os.path.isfile(path):
-            size, n_files = os.path.getsize(path), 1
-        else:
-            for root, _dirs, files in os.walk(path):
-                data = [f for f in files if not f.startswith(("_", "."))]
-                n_files += len(data)
-                size += sum(
-                    os.path.getsize(os.path.join(root, f)) for f in data
-                )
         if noscan:
+            self._store_stats(key, prev, {"": {"total_size": size}}, fp=fp)
             return local_frame(
                 self.spark,
                 [(n_files, size)],
@@ -3936,13 +3896,9 @@ class Engine:
             n = self._target_frame(key).count()
         else:
             n = parquet_row_count(path, self.spark)
-        fp = self._table_fingerprint(path)
-        self.basic_stats[key] = {
-            "num_rows": n,
-            "total_size": size,
-            "fp": fp,
-        }
-        self._fp_memo[key] = fp  # ANALYZE is a re-fingerprint event
+        self._store_stats(
+            key, prev, {"": {"num_rows": n, "total_size": size}}, fp=fp
+        )
         return local_frame(
             self.spark,
             [(n, size)], "num_rows bigint, total_size_bytes bigint"
@@ -3980,12 +3936,8 @@ class Engine:
             raise HiveQLUnsupportedError(
                 f"ANALYZE: no partition matches ({spec}) in {key}"
             )
-        fp = self._table_fingerprint(path)
-        store = self.part_basic_stats.get(key)
-        if not store or store.get("fp") != fp:
-            store = {"fp": fp, "all_parts": all_rels, "parts": {}}
-        else:
-            store["all_parts"] = all_rels
+        fp = self._fingerprint_and_size(path)[0]
+        prev = self._fresh_stats(key, fp)
         pmap = self.partition_formats.get(key, {})
         rows = []
         for rel in targets:
@@ -4012,17 +3964,13 @@ class Engine:
                 n = rdr.format(src).load(pdir).count()
             else:
                 n = parquet_row_count(pdir, self.spark)
-            size = 0
-            for root, _dirs, files in os.walk(pdir):
-                size += sum(
-                    os.path.getsize(os.path.join(root, f))
-                    for f in files
-                    if not f.startswith(("_", "."))
-                )
-            store["parts"][rel] = {"num_rows": n, "total_size": size}
-            rows.append((rel, n, size))
-        self.part_basic_stats[key] = store
-        self._fp_memo[key] = fp  # ANALYZE is a re-fingerprint event
+            rows.append((rel, n, self._fingerprint_and_size(pdir)[1]))
+        self._store_stats(
+            key,
+            prev,
+            {rel: {"num_rows": n, "total_size": sz} for rel, n, sz in rows},
+            fp=fp,
+        )
         return local_frame(
             self.spark,
             rows,
@@ -4062,6 +4010,57 @@ class Engine:
                 ]
         return aggs
 
+    @staticmethod
+    def _col_stats_from_row(
+        fields: dict, cols: list[str], row: dict
+    ) -> dict[str, dict]:
+        """Each column's stats from one ``_col_stats_aggs`` result row
+        (an ANALYZE aggregate or an INSERT's observed metrics)."""
+        return {
+            c: {
+                "data_type": fields[c].dataType.simpleString(),
+                "num_nulls": int(row.get(f"{c}__nulls") or 0),
+                "distinct_count": int(row.get(f"{c}__ndv") or 0),
+                "min": row.get(f"{c}__min"),
+                "max": row.get(f"{c}__max"),
+                "avg_col_len": row.get(f"{c}__avglen"),
+                "max_col_len": row.get(f"{c}__maxlen"),
+            }
+            for c in cols
+        }
+
+    @staticmethod
+    def _col_stats_shown(s: dict) -> tuple:
+        """The ANALYZE ... FOR COLUMNS output fields of one column."""
+        return (
+            s["data_type"],
+            s["num_nulls"],
+            s["distinct_count"],
+            None if s["min"] is None else str(s["min"]),
+            None if s["max"] is None else str(s["max"]),
+        )
+
+    @staticmethod
+    def _rollup_col_stats(gathered: list[dict]) -> dict:
+        """One column's stats over several partitions: nulls add,
+        extrema merge, NDV and lengths take the max (NDVs don't add, so
+        the NDV is a lower bound). Serves both DESCRIBE t col's
+        table-level values and a stats answer over pruned partitions."""
+
+        def top(k: str, pick):
+            vals = [s[k] for s in gathered if s.get(k) is not None]
+            return pick(vals) if vals else None
+
+        return {
+            "data_type": top("data_type", lambda v: v[0]),
+            "num_nulls": sum(s["num_nulls"] for s in gathered),
+            "distinct_count": top("distinct_count", max),
+            "min": top("min", min),
+            "max": top("max", max),
+            "avg_col_len": top("avg_col_len", max),
+            "max_col_len": top("max_col_len", max),
+        }
+
     def _run_analyze_columns(
         self,
         key: str,
@@ -4075,9 +4074,6 @@ class Engine:
         columns — every partition's stats in a single pass (Hive runs
         ColumnStatsTask per partition; grouping gets the same result in
         one shuffle, which is the right shape at 10^4 partitions)."""
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import NumericType, StringType, TimestampType
-
         target = self._target_frame(key)
         fields = {f.name: f for f in target.schema.fields}
         spec = re.sub(r"^\s*FOR\s+COLUMNS\s*", "", for_columns,
@@ -4097,41 +4093,19 @@ class Engine:
         cols = [by_lower[c.lower()] for c in requested]
         aggs = self._col_stats_aggs(fields, cols)
         tpart_cols = self.table_partitions.get(key) or []
-        if tpart_cols and key in self.table_paths:
+        if tpart_cols:
             return self._analyze_columns_partitioned(
                 key, target, fields, cols, aggs, tpart_cols, part_spec
             )
         row = target.agg(*aggs).collect()[0].asDict()
-        if key in self.table_paths:
-            fp = self._table_fingerprint(self.table_paths[key])
-            self.column_stats_fp[key] = fp
-            self._fp_memo[key] = fp  # ANALYZE is a re-fingerprint event
-        stats = self.column_stats.setdefault(key, {})
-        out_rows = []
-        for c in cols:
-            s = {
-                "data_type": fields[c].dataType.simpleString(),
-                "num_nulls": int(row[f"{c}__nulls"] or 0),
-                "distinct_count": int(row[f"{c}__ndv"] or 0),
-                "min": row.get(f"{c}__min"),
-                "max": row.get(f"{c}__max"),
-                "avg_col_len": row.get(f"{c}__avglen"),
-                "max_col_len": row.get(f"{c}__maxlen"),
-            }
-            stats[c] = s
-            out_rows.append(
-                (
-                    c,
-                    s["data_type"],
-                    s["num_nulls"],
-                    s["distinct_count"],
-                    str(s["min"]) if s["min"] is not None else None,
-                    str(s["max"]) if s["max"] is not None else None,
-                )
-            )
+        stats = self._col_stats_from_row(fields, cols, row)
+        fp = self._fingerprint_and_size(self.table_paths[key])[0]
+        self._store_stats(
+            key, self._fresh_stats(key, fp), {"": {"cols": stats}}, fp=fp
+        )
         return local_frame(
             self.spark,
-            out_rows,
+            [(c, *self._col_stats_shown(s)) for c, s in stats.items()],
             "col_name string, data_type string, num_nulls bigint, "
             "distinct_count bigint, min string, max string",
         )
@@ -4148,85 +4122,28 @@ class Engine:
             for c, v in part_spec.items():
                 target = target.filter(F.col(c).cast("string") == v)
         grouped = (
-            target.groupBy(*[F.col(c) for c in part_cols])
-            .agg(F.count(F.lit(1)).alias("__cnt"), *aggs)
-            .collect()
+            target.groupBy(*[F.col(c) for c in part_cols]).agg(*aggs).collect()
         )
         if part_spec and not grouped:
             raise HiveQLUnsupportedError(
                 f"ANALYZE: partition ({part_spec}) has no rows/does not "
                 f"exist in {key}"
             )
-        fp = self._table_fingerprint(self.table_paths[key])
-        store = self.part_column_stats.get(key)
-        if not store or store.get("fp") != fp:
-            store = {"fp": fp, "parts": {}}
-        out_rows = []
-        for grow in grouped:
-            row = grow.asDict()
-            rel = _partition_rel_dir(part_cols, [row[c] for c in part_cols])
-            pstats = store["parts"].setdefault(rel, {})
-            pstats["__num_rows"] = int(row["__cnt"])
-            for c in cols:
-                s = {
-                    "data_type": fields[c].dataType.simpleString(),
-                    "num_nulls": int(row[f"{c}__nulls"] or 0),
-                    "distinct_count": int(row[f"{c}__ndv"] or 0),
-                    "min": row.get(f"{c}__min"),
-                    "max": row.get(f"{c}__max"),
-                    "avg_col_len": row.get(f"{c}__avglen"),
-                    "max_col_len": row.get(f"{c}__maxlen"),
-                }
-                pstats[c] = s
-                out_rows.append(
-                    (
-                        rel,
-                        c,
-                        s["data_type"],
-                        s["num_nulls"],
-                        s["distinct_count"],
-                        str(s["min"]) if s["min"] is not None else None,
-                        str(s["max"]) if s["max"] is not None else None,
-                    )
-                )
-        self.part_column_stats[key] = store
-        # table-level rollup for DESCRIBE t col (the TAB_COL_STATS
-        # serving role): nulls sum, extrema merge, NDV = max over
-        # partitions (a lower bound — NDVs don't add). The serve-from-
-        # stats path never reads this for partitioned tables; it walks
-        # the fingerprint-gated per-partition store above.
-        tstats = self.column_stats.setdefault(key, {})
-        for c in cols:
-            parts_s = [
-                ps[c] for ps in store["parts"].values() if c in ps
-            ]
-            if not parts_s:
-                continue
-            mins = [s["min"] for s in parts_s if s["min"] is not None]
-            maxs = [s["max"] for s in parts_s if s["max"] is not None]
-            lens = [
-                s["max_col_len"] for s in parts_s
-                if s.get("max_col_len") is not None
-            ]
-            avgs = [
-                s["avg_col_len"] for s in parts_s
-                if s.get("avg_col_len") is not None
-            ]
-            tstats[c] = {
-                "data_type": parts_s[0]["data_type"],
-                "num_nulls": sum(s["num_nulls"] for s in parts_s),
-                "distinct_count": max(
-                    s["distinct_count"] for s in parts_s
-                ),
-                "min": min(mins) if mins else None,
-                "max": max(maxs) if maxs else None,
-                "avg_col_len": max(avgs) if avgs else None,
-                "max_col_len": max(lens) if lens else None,
+        written = {
+            _partition_rel_dir(part_cols, [row[c] for c in part_cols]): {
+                "cols": self._col_stats_from_row(fields, cols, row.asDict())
             }
-        self._fp_memo[key] = fp  # ANALYZE is a re-fingerprint event
+            for row in grouped
+        }
+        fp = self._fingerprint_and_size(self.table_paths[key])[0]
+        self._store_stats(key, self._fresh_stats(key, fp), written, fp=fp)
         return local_frame(
             self.spark,
-            out_rows,
+            [
+                (rel, c, *self._col_stats_shown(s))
+                for rel, new in written.items()
+                for c, s in new["cols"].items()
+            ],
             "partition string, col_name string, data_type string, "
             "num_nulls bigint, distinct_count bigint, min string, "
             "max string",
@@ -4246,9 +4163,11 @@ class Engine:
             ShortType,
         )
 
-        part_cols = self.table_partitions[key]
+        part_cols = self.table_partitions.get(key) or []
         if not where or not where.strip():
             return lambda rel: True
+        if not part_cols:
+            return None
         part_lower = {c.lower() for c in part_cols}
         types = {
             f.name.lower(): f.dataType
@@ -4308,52 +4227,6 @@ class Engine:
             return True
 
         return fn
-
-    def _partitioned_stats_sources(
-        self, key: str, fp: str, where: str | None
-    ):
-        """(num_rows, col_lookup) over the PRUNED partition list, or
-        None → fall back. Requires basic stats for every candidate
-        partition under the current fingerprint (a partition added or
-        rewritten since ANALYZE changes the table fingerprint, so stale
-        per-partition numbers can never be served)."""
-        pred = self._stats_part_predicate(key, where)
-        if pred is None:
-            return None
-        pb = self.part_basic_stats.get(key)
-        if not pb or pb["fp"] != fp:
-            return None
-        cand = [rel for rel in pb["all_parts"] if pred(rel)]
-        parts = pb["parts"]
-        if any(rel not in parts for rel in cand):
-            return None
-        num_rows = sum(parts[rel]["num_rows"] for rel in cand)
-        pc = self.part_column_stats.get(key)
-        pc_ok = bool(pc) and pc.get("fp") == fp
-
-        def col_lookup(fname: str) -> dict | None:
-            if not pc_ok:
-                return None
-            tot_nulls = 0
-            mins: list = []
-            maxs: list = []
-            for rel in cand:
-                ps = pc["parts"].get(rel)
-                s = ps.get(fname) if ps else None
-                if s is None:
-                    return None
-                tot_nulls += s["num_nulls"]
-                if s.get("min") is not None:
-                    mins.append(s["min"])
-                if s.get("max") is not None:
-                    maxs.append(s["max"])
-            return {
-                "num_nulls": tot_nulls,
-                "min": min(mins) if mins else None,
-                "max": max(maxs) if maxs else None,
-            }
-
-        return num_rows, col_lookup
 
     def _try_metadata_only(self, query: str) -> DataFrame | None:
         """Hive's MetadataOnlyOptimizer
@@ -4524,35 +4397,26 @@ class Engine:
             key = self._resolve_dml_table(m.group(2))
         except Exception:
             return None
-        path = self.table_paths.get(key)
-        if path is None:
-            return None
-        where = m.group(3)
         # One listing per (table, session): engine writes invalidate
         # via register_table, so only out-of-band file changes need a
-        # disk check — paid once here, refreshed by ANALYZE / REFRESH
-        # TABLE (the same contract as Spark's own file-listing cache).
-        fp = self._fp_memo.get(key)
-        if fp is None:
-            fp = self._table_fingerprint(path)
-            self._fp_memo[key] = fp
-        if self.table_partitions.get(key):
-            src = self._partitioned_stats_sources(key, fp, where)
-            if src is None:
-                return None
-            num_rows, col_lookup = src
-        else:
-            if where and where.strip():
-                return None  # data-column predicate → real execution
-            basic = self.basic_stats.get(key)
-            if not basic or basic["fp"] != fp:
-                return None
-            num_rows = basic["num_rows"]
-            colstats = self.column_stats.get(key, {})
-            cols_fresh = self.column_stats_fp.get(key) == fp
+        # disk check — paid once, refreshed by ANALYZE / REFRESH TABLE /
+        # DESCRIBE FORMATTED (the same contract as Spark's own
+        # file-listing cache).
+        pred = self._stats_part_predicate(key, m.group(3))
+        rec = self._fresh_stats(key) if pred is not None else None
+        if rec is None:
+            return None
+        # every candidate partition needs basic stats (an unpartitioned
+        # table is the one partition "")
+        cand = [rec["parts"].get(rel) for rel in rec["rels"] if pred(rel)]
+        if any(e is None or "num_rows" not in e for e in cand):
+            return None
+        num_rows = sum(e["num_rows"] for e in cand)
 
-            def col_lookup(fname: str) -> dict | None:
-                return colstats.get(fname) if cols_fresh else None
+        def col_lookup(fname: str) -> dict | None:
+            if any(fname not in e["cols"] for e in cand):
+                return None
+            return self._rollup_col_stats([e["cols"][fname] for e in cand])
 
         fields_by_lower = {
             f.name.lower(): f for f in self._declared_schema(key).fields
@@ -4683,7 +4547,7 @@ class Engine:
                 f"DESCRIBE: no column {column!r} in table {key!r}"
             )
         f = fields[column.lower()]
-        s = self.column_stats.get(key, {}).get(f.name, {})
+        s = self.table_stats.get(key, {}).get("table_cols", {}).get(f.name, {})
 
         def fmt(v):
             return "" if v is None else str(v)
@@ -4820,21 +4684,21 @@ class Engine:
         parts = self.table_partitions.pop(key, None)
         self.tables.pop(key, None)
         for store in (self.table_schemas, self.table_props,
-                      self.column_stats, self.schema_epochs):
+                      self.schema_epochs):
             if key in store:
                 store[new_key] = store.pop(key)
         # gathered stats travel too (rename moves no data files, so the
-        # recorded fingerprints stay valid) — migrate AFTER
+        # recorded fingerprint stays valid) — migrate AFTER
         # register_table, whose invalidation hook would clear them
-        stats_stores = (self.basic_stats, self.column_stats_fp,
-                        self.part_basic_stats, self.part_column_stats,
-                        self._fp_memo)
-        carried = [(s, s.pop(key)) for s in stats_stores if key in s]
+        rec = self.table_stats.pop(key, None)
+        fp = self._fp_memo.pop(key, None)
         note_view_override(self.spark, key)
         self.spark.catalog.dropTempView(key)
         self.register_table(new_key, path, parts)
-        for store, val in carried:
-            store[new_key] = val
+        if rec is not None:
+            self.table_stats[new_key] = rec
+        if fp is not None:
+            self._fp_memo[new_key] = fp
         self._refresh_dependent_views(key)
         return self._rows_affected(0)
 
@@ -6036,7 +5900,7 @@ class Engine:
         # an int→bigint widening must not keep the pre-alter min/max).
         # Partition-column stats are untouched (Hive forbids touching
         # partition columns here, enforced above).
-        stats = self.column_stats.get(key)
+        stats = self.table_stats.get(key, {}).get("table_cols")
         if stats is not None:
             new_by_lower = {n.lower(): (n, t) for n, t in new_cols}
             for cname in list(stats):
@@ -6160,7 +6024,7 @@ class Engine:
         # retype must not keep serving the pre-alter min/max/NDV via
         # DESCRIBE t col; a pure rename re-keys the stats so they follow
         # the column instead of being orphaned under the dead name.
-        stats = self.column_stats.get(key)
+        stats = self.table_stats.get(key, {}).get("table_cols")
         if stats is not None and old_field is not None:
             entry = stats.pop(old_field.name, None)
             if entry is not None and new_type == old_field.dataType:
@@ -7118,7 +6982,7 @@ class Engine:
         self.table_props.pop(key, None)
         self.table_format.pop(key, None)
         self.partition_formats.pop(key, None)
-        self.column_stats.pop(key, None)
+        self.table_stats.pop(key, None)
         # Epochs die with the table (a temp table's own ALTER-created
         # epochs are discarded here BEFORE the shadow restore below).
         self.schema_epochs.pop(key, None)
@@ -7246,19 +7110,7 @@ class Engine:
                 ("totalSize", str(total), None),
                 ("InputFormat", "parquet", None),
             ]
-            # Hive's DESC FORMATTED surfaces the StatsTask parameters
-            # (numRows, COLUMN_STATS_ACCURATE) when the stats are
-            # accurate — the observable stats0.q/stats1.q's goldens pin
-            basic = self.basic_stats.get(key)
-            if basic and basic.get("fp") == fp:
-                rows += [
-                    ("numRows", str(basic["num_rows"]), None),
-                    (
-                        "COLUMN_STATS_ACCURATE",
-                        '{"BASIC_STATS":"true"}',
-                        None,
-                    ),
-                ]
+            rows += self._accurate_stats_rows(key, "", fp)
             props = self.table_props.get(key)
             if props:
                 rows += [("", "", None), ("# Table Parameters", "", None)]
@@ -7268,6 +7120,22 @@ class Engine:
             self.spark,
             rows, "col_name string, data_type string, comment string"
         )
+
+    def _accurate_stats_rows(
+        self, key: str, rel: str, fp: str | None = None
+    ) -> list[tuple]:
+        """The StatsTask parameters DESCRIBE FORMATTED surfaces for a
+        table ("") or partition when its basic stats are accurate —
+        numRows and COLUMN_STATS_ACCURATE, what stats0.q/stats1.q/
+        stats4.q's goldens pin. ``fp`` is the caller's fresh listing."""
+        rec = self._fresh_stats(key, fp)
+        entry = rec["parts"].get(rel, {}) if rec else {}
+        if "num_rows" not in entry:
+            return []
+        return [
+            ("numRows", str(entry["num_rows"]), None),
+            ("COLUMN_STATS_ACCURATE", '{"BASIC_STATS":"true"}', None),
+        ]
 
     def _run_describe_partition(
         self, table: str, spec: str, modifier: str | None
@@ -7308,28 +7176,7 @@ class Engine:
                 ("numFiles", str(n_files), None),
                 ("totalSize", str(total), None),
             ]
-            fp = self._fp_memo.get(key)
-            if fp is None:
-                fp = self._table_fingerprint(path)
-                self._fp_memo[key] = fp
-            pb = self.part_basic_stats.get(key)
-            if (
-                pb
-                and pb.get("fp") == fp
-                and rel in pb.get("parts", {})
-            ):
-                rows += [
-                    (
-                        "numRows",
-                        str(pb["parts"][rel]["num_rows"]),
-                        None,
-                    ),
-                    (
-                        "COLUMN_STATS_ACCURATE",
-                        '{"BASIC_STATS":"true"}',
-                        None,
-                    ),
-                ]
+            rows += self._accurate_stats_rows(key, rel)
         return local_frame(
             self.spark,
             rows, "col_name string, data_type string, comment string"
@@ -7804,7 +7651,7 @@ class Engine:
             # mixed/non-parquet writes don't stage parquet footers —
             # stats would be partial; leave autogather to ANALYZE
             auto = False
-        snap = self._prewrite_stats_snapshot(key) if auto else {}
+        prev = self._fresh_stats(key) if auto else None
         part_counts: dict[str, int] | None = (
             {} if auto and parts else None
         )
@@ -7848,23 +7695,14 @@ class Engine:
                 self.partition_formats.pop(key, None)
         self.register_table(key, path, parts or None)
         if auto:
+            cols = None
+            if colobs is not None:
+                cols = self._col_stats_from_row(
+                    sfields, list(fields), colobs.get
+                )
             self._autogather_insert_stats(
-                key, n, overwrite, part_counts, pre_rels, snap
+                key, n, overwrite, part_counts, pre_rels, prev, cols
             )
-        if colobs is not None and key in self.basic_stats:
-            row = colobs.get
-            stats = self.column_stats.setdefault(key, {})
-            for c in fields:
-                stats[c] = {
-                    "data_type": sfields[c].dataType.simpleString(),
-                    "num_nulls": int(row.get(f"{c}__nulls") or 0),
-                    "distinct_count": int(row.get(f"{c}__ndv") or 0),
-                    "min": row.get(f"{c}__min"),
-                    "max": row.get(f"{c}__max"),
-                    "avg_col_len": row.get(f"{c}__avglen"),
-                    "max_col_len": row.get(f"{c}__maxlen"),
-                }
-            self.column_stats_fp[key] = self.basic_stats[key]["fp"]
         return self._rows_affected(n)
 
     def _is_catalog_table(self, name: str) -> bool:

@@ -118,7 +118,11 @@ ENGINE_CONFS: dict[str, str] = {
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Local cores: ``$SPARK_GRAFT_CPUS`` when set, else the cores this
+    process may run on."""
+    return int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
 
 
 def get_spark(
@@ -128,8 +132,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` for tests; on a real
-    cluster the caller passes the cluster master / relies on spark-submit.
+    ``master`` defaults to ``local[default_parallelism()]`` for tests; on a
+    real cluster the caller passes the cluster master / relies on
+    spark-submit.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None:

@@ -32,7 +32,7 @@ from hive_2_3_2_spark.suite import query
 def stats_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """count/min/max over a PARTITIONED table with a partition-column
     WHERE, answered purely from per-partition stats aggregated over
-    the pruned list (engine.py _partitioned_stats_sources; Hive's
+    the pruned list (engine.py _try_stats_answer; Hive's
     StatsOptimizer + partition pruner). The orders fixture is
     repartitioned by o_orderpriority into a scratch dir; ANALYZE
     PARTITION (col) gathers every partition in one footer pass and

@@ -48,7 +48,7 @@ if _OWNS_SCRATCH:
 import duckdb
 import pytest
 
-from hive_2_3_2_spark.session import get_spark
+from hive_2_3_2_spark.session import default_parallelism, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 TABLES = (
@@ -245,7 +245,7 @@ def pytest_cmdline_main(config):
             prefix=f"hive232_test_shard{i + 1}_"
         )
         # Split the cores the invoker intended across the workers.
-        total_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        total_cpus = default_parallelism()
         env["SPARK_GRAFT_CPUS"] = str(max(2, total_cpus // len(shards)))
         out = tempfile.NamedTemporaryFile(
             mode="w+", prefix=f"shard{i + 1}_", suffix=".log", delete=False

@@ -30,6 +30,19 @@ def eng(spark, tmp_path):
     return e, path
 
 
+def _described(e, table, col) -> dict:
+    """DESCRIBE t col as {info_name: info_value}."""
+    return {r[0]: r[1] for r in e.sql(f"DESCRIBE {table} {col}").collect()}
+
+
+def _stats_values(desc: dict) -> list:
+    """The six column-statistics values of a DESCRIBE t col result."""
+    return [
+        desc[k] for k in ("min", "max", "num_nulls", "distinct_count",
+                          "avg_col_len", "max_col_len")
+    ]
+
+
 def test_add_columns_reads_null_then_insert_fills(spark, eng):
     e, path = eng
     e.sql("ALTER TABLE evo ADD COLUMNS (tag STRING COMMENT 'c', score DOUBLE)")
@@ -424,11 +437,12 @@ def test_rename_migrates_overlay_props_and_stats(spark, eng, tmp_path):
     assert e.sql("SELECT tag FROM evo2").collect()[0].tag is None
     # TBLPROPERTIES and column stats travel with the table
     assert e.table_props["evo2"]["owner"] == "etl"
-    assert "v" in e.column_stats["evo2"]
+    assert _described(e, "evo2", "v")["max"] == "6"
     # nothing orphaned under the old key
     assert "evo" not in e.table_schemas
     assert "evo" not in e.table_props
-    assert "evo" not in e.column_stats
+    e.register_table("evo", path)  # the same files under the old name
+    assert _stats_values(_described(e, "evo", "v")) == [""] * 6
     # a future table registered under the old name must NOT inherit
     # the renamed table's overlay
     p2 = str(tmp_path / "fresh_evo")
@@ -475,25 +489,25 @@ def test_show_create_view_roundtrips_column_list(spark, eng):
 def test_change_column_stats_follow_rename_then_retype(eng):
     e, _ = eng
     e.sql("ANALYZE TABLE evo COMPUTE STATISTICS FOR COLUMNS v")
-    assert e.column_stats["evo"]["v"]["max"] == 6
+    assert _described(e, "evo", "v")["max"] == "6"
     # pure rename (same type): stats follow the column
     e.sql("ALTER TABLE evo CHANGE v v2 INT")
-    assert "v" not in e.column_stats["evo"]
-    assert e.column_stats["evo"]["v2"]["max"] == 6
+    assert _described(e, "evo", "v2")["max"] == "6"
+    # ... and nothing stays under the old name for a re-added column
+    e.sql("ALTER TABLE evo ADD COLUMNS (v INT)")
+    assert _stats_values(_described(e, "evo", "v")) == [""] * 6
     # retype (int -> bigint widening): stats invalidated, not served stale
     e.sql("ALTER TABLE evo CHANGE v2 v2 BIGINT")
-    assert "v2" not in e.column_stats["evo"]
-    out = {r[0]: r[1] for r in e.sql("DESCRIBE evo v2").collect()}
-    assert out["max"] == ""
+    assert _stats_values(_described(e, "evo", "v2")) == [""] * 6
 
 
 def test_replace_columns_invalidates_retyped_stats(eng):
     e, _ = eng
     e.sql("ANALYZE TABLE evo COMPUTE STATISTICS FOR COLUMNS k, v")
     e.sql("ALTER TABLE evo REPLACE COLUMNS (k BIGINT, v BIGINT)")
-    stats = e.column_stats["evo"]
     # k kept with identical type -> stats survive; v widened -> dropped
-    assert "k" in stats and "v" not in stats
+    assert _described(e, "evo", "k")["max"] == "3"
+    assert _stats_values(_described(e, "evo", "v")) == [""] * 6
 
 
 def test_show_create_table_roundtrips_evolved_partitioned(spark, tmp_path):

@@ -251,7 +251,11 @@ def test_script_transcript_round4_surface(spark, tmp_path):
     assert not os.path.exists(os.path.join(other, "p=p2"))
     # tblproperties + column stats persisted on the engine
     assert eng.table_props["r4a"]["owner"] == "cli"
-    assert eng.column_stats["r4a"]["k"]["num_nulls"] == 0
+    k_stats = {
+        r.info_name: r.info_value
+        for r in eng.sql("DESCRIBE r4a k").collect()
+    }
+    assert k_stats["num_nulls"] == "0"
     stats = {
         r.info_name: r.info_value
         for r in eng.sql("DESCRIBE r4a tag").collect()

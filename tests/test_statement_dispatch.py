@@ -23,6 +23,10 @@ These checks read ``engine.py``'s syntax tree only; no Spark session:
   and ``partition_values``.
 - Only ``_align_insert`` knows Hive's store-assignment rule: no other
   function of the package calls ``_store_cast``.
+- Only ``_fresh_stats`` decides whether gathered stats may be served:
+  no other function reads a stats record's ``"fp"`` or the session's
+  verified fingerprint in ``_fp_memo``, and the five per-kind stats
+  stores it replaced are gone.
 """
 
 from __future__ import annotations
@@ -227,3 +231,59 @@ def test_only_the_insert_aligner_calls_store_cast():
     assert calls
     outside = [c for c in calls if c[0] != "engine.py" or c[1] not in inside]
     assert outside == []
+
+
+REMOVED_STATS_STORES = {
+    "basic_stats", "column_stats", "column_stats_fp", "part_basic_stats",
+    "part_column_stats", "_prewrite_stats_snapshot",
+    "_partitioned_stats_sources", "_table_fingerprint",
+}
+
+
+def _fingerprint_reads(fn: ast.FunctionDef) -> list[int]:
+    """Lines of ``fn`` that read a stats record's ``"fp"`` key
+    (``rec["fp"]``, ``rec.get("fp")``, ``"fp" in rec``) or the session
+    memo (``self._fp_memo[k]``, ``self._fp_memo.get(k)``)."""
+
+    def is_fp(node: ast.AST) -> bool:
+        return isinstance(node, ast.Constant) and node.value == "fp"
+
+    def is_memo(node: ast.AST) -> bool:
+        return isinstance(node, ast.Attribute) and node.attr == "_fp_memo"
+
+    lines = []
+    for node in ast.walk(fn):
+        if isinstance(node, ast.Subscript) and isinstance(node.ctx, ast.Load):
+            hit = is_fp(node.slice) or is_memo(node.value)
+        elif isinstance(node, ast.Call) and isinstance(
+            node.func, ast.Attribute
+        ):
+            hit = (
+                node.func.attr in ("get", "pop", "setdefault")
+                and bool(node.args) and is_fp(node.args[0])
+            ) or (node.func.attr == "get" and is_memo(node.func.value))
+        elif isinstance(node, ast.Compare):
+            hit = is_fp(node.left) and isinstance(
+                node.ops[0], (ast.In, ast.NotIn)
+            )
+        else:
+            hit = False
+        if hit:
+            lines.append(node.lineno)
+    return lines
+
+
+def test_only_fresh_stats_reads_a_stats_fingerprint():
+    assert _fingerprint_reads(METHODS["_fresh_stats"])
+    outside = [
+        f"{fn.name}:{line}"
+        for fn in ast.walk(TREE)
+        if isinstance(fn, ast.FunctionDef) and fn.name != "_fresh_stats"
+        for line in _fingerprint_reads(fn)
+    ]
+    assert outside == []
+    names = {
+        getattr(node, "attr", None) or getattr(node, "name", None)
+        for node in ast.walk(TREE)
+    }
+    assert names & REMOVED_STATS_STORES == set()

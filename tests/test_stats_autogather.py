@@ -329,3 +329,42 @@ def test_column_autogather_rides_overwrite(eng, spark, tmp_path):
     df = eng.sql("SELECT min(k) AS mn FROM tca")
     assert not _answered(df)
     assert df.collect()[0].mn == 0
+
+
+def test_gathering_writes_add_no_listing_walk(
+    eng, spark, tmp_path, monkeypatch
+):
+    """The stats path of a gathering INSERT lists the table once and
+    each written partition once: an unpartitioned INSERT INTO walks its
+    staging dir and the table; a static INSERT OVERWRITE partition
+    walks the staged partition, the written partition and the table."""
+    import os
+
+    p = str(tmp_path / "wk")
+    _seed(spark, p, [(1,)], "k int")
+    eng.register_table("wk", p)
+    eng.sql("INSERT OVERWRITE TABLE wk SELECT 1")
+    q = str(tmp_path / "wkp")
+    spark.createDataFrame([(1, "x"), (2, "y")], "k int, p string") \
+        .write.partitionBy("p").parquet(q)
+    eng.register_table("wkp", q, ["p"])
+    eng.sql("ANALYZE TABLE wkp COMPUTE STATISTICS")
+    walked = []
+    real = os.walk
+
+    def counting(top, *args, **kwargs):
+        walked.append(os.path.relpath(top, tmp_path))
+        return real(top, *args, **kwargs)
+
+    monkeypatch.setattr(os, "walk", counting)
+    eng.sql("INSERT INTO wk VALUES (2)")
+    assert len(walked) == 2 and walked[-1] == "wk", walked
+    walked.clear()
+    eng.sql("INSERT OVERWRITE TABLE wkp PARTITION (p='y') SELECT 7")
+    assert len(walked) == 3, walked
+    assert sorted(walked[1:]) == ["wkp", os.path.join("wkp", "p=y")], walked
+    monkeypatch.undo()
+    df = eng.sql("SELECT count(*) AS c FROM wk")
+    assert _answered(df) and df.collect()[0].c == 2
+    df = eng.sql("SELECT count(*) AS c FROM wkp")
+    assert _answered(df) and df.collect()[0].c == 2

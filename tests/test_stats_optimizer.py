@@ -11,6 +11,7 @@ engine's version of Hive dropping COLUMN_STATS_ACCURATE."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -38,6 +39,26 @@ def _is_stats_answered(df) -> bool:
         and "Scan parquet" not in plan
         and "Aggregate" not in plan
     )
+
+
+def _described(eng, table, col) -> dict:
+    """DESCRIBE t col as {info_name: info_value}."""
+    return {r[0]: r[1] for r in eng.sql(f"DESCRIBE {table} {col}").collect()}
+
+
+@contextlib.contextmanager
+def _counting_listings(eng):
+    """Record every data-file listing walk the engine takes."""
+    calls = []
+    real = Engine._fingerprint_and_size
+
+    def counting(path):
+        calls.append(path)
+        return real(path)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(Engine, "_fingerprint_and_size", staticmethod(counting))
+        yield calls
 
 
 def test_answers_from_stats_after_analyze(senv):
@@ -125,13 +146,14 @@ def test_engine_dml_invalidates(senv):
     eng, _ = senv
     eng.sql("ANALYZE TABLE stats_t COMPUTE STATISTICS")
     eng.sql("DELETE FROM stats_t WHERE id = 4")
-    assert "stats_t" not in eng.basic_stats
-    df = eng.sql("SELECT count(*) AS c FROM stats_t")
+    with _counting_listings(eng) as calls:
+        df = eng.sql("SELECT count(*) AS c FROM stats_t")
+    assert calls == []  # the stats were dropped, not found stale
     assert not _is_stats_answered(df)
     assert df.collect()[0].c == 3
 
 
-def test_one_listing_per_table_per_session(senv, monkeypatch):
+def test_one_listing_per_table_per_session(senv):
     """The scale contract (r7 verdict): stats-answered queries pay AT
     MOST ONE file listing per (table, session) — on a 10^6-file table
     a per-query walk would be the bottleneck the optimizer exists to
@@ -140,24 +162,17 @@ def test_one_listing_per_table_per_session(senv, monkeypatch):
     eng, _ = senv
     eng.sql("ANALYZE TABLE stats_t COMPUTE STATISTICS")
     eng.sql("ANALYZE TABLE stats_t COMPUTE STATISTICS FOR COLUMNS n")
-    calls = []
-    real = Engine._table_fingerprint
-
-    def counting(path):
-        calls.append(path)
-        return real(path)
-
-    monkeypatch.setattr(Engine, "_table_fingerprint", staticmethod(counting))
-    for _ in range(5):
-        df = eng.sql("SELECT count(*) AS c, min(n) AS mn FROM stats_t")
-        assert _is_stats_answered(df)
-    assert len(calls) == 0, calls  # memoized at ANALYZE time
-    # a fresh engine (new session) with carried-over state would pay 1
-    eng._fp_memo.clear()
-    for _ in range(5):
-        df = eng.sql("SELECT count(*) AS c FROM stats_t")
-        assert _is_stats_answered(df)
-    assert len(calls) == 1, calls
+    with _counting_listings(eng) as calls:
+        for _ in range(5):
+            df = eng.sql("SELECT count(*) AS c, min(n) AS mn FROM stats_t")
+            assert _is_stats_answered(df)
+        assert len(calls) == 0, calls  # memoized at ANALYZE time
+        # a fresh engine (new session) with carried-over state would pay 1
+        eng._fp_memo.clear()
+        for _ in range(5):
+            df = eng.sql("SELECT count(*) AS c FROM stats_t")
+            assert _is_stats_answered(df)
+        assert len(calls) == 1, calls
 
 
 def test_conf_toggle_preserves_schema(senv):
@@ -179,20 +194,87 @@ def test_conf_toggle_preserves_schema(senv):
 
 def test_rename_carries_stats_drop_clears_them(senv):
     """ALTER TABLE RENAME moves no data files, so gathered stats (and
-    their fingerprints) travel to the new name and keep serving; DROP
-    TABLE clears every stats store so a future table registered under
+    their fingerprint) travel to the new name and keep serving; DROP
+    TABLE clears the stats record so a future table registered under
     the name can't inherit them (r7 ADVICE)."""
-    eng, _ = senv
+    eng, p = senv
     eng.sql("ANALYZE TABLE stats_t COMPUTE STATISTICS")
     eng.sql("ANALYZE TABLE stats_t COMPUTE STATISTICS FOR COLUMNS n")
     eng.sql("ALTER TABLE stats_t RENAME TO stats_r")
-    assert "stats_t" not in eng.basic_stats
-    assert "stats_t" not in eng.column_stats_fp
     df = eng.sql("SELECT count(*) AS c, max(n) AS mx FROM stats_r")
     assert _is_stats_answered(df)
     assert df.collect()[0].c == 4
+    assert _described(eng, "stats_r", "n")["max"] == "40"
+    # nothing stayed under the old name: a table registered there over
+    # the very same files (same fingerprint) starts with no stats
+    eng.register_table("stats_t", p)
+    df = eng.sql("SELECT count(*) AS c, max(n) AS mx FROM stats_t")
+    assert not _is_stats_answered(df)
+    assert _described(eng, "stats_t", "n")["max"] == ""
+    eng.sql("DROP TABLE stats_t")
     eng.sql("DROP TABLE stats_r")
-    assert "stats_r" not in eng.basic_stats
-    assert "stats_r" not in eng.column_stats_fp
     assert "stats_r" not in eng._fp_memo
-    assert "stats_r" not in eng.column_stats
+    eng.register_table("stats_r", p)
+    df = eng.sql("SELECT count(*) AS c, max(n) AS mx FROM stats_r")
+    assert not _is_stats_answered(df)
+    assert df.collect()[0].c == 4
+    assert _described(eng, "stats_r", "n")["max"] == ""
+
+
+def test_describe_formatted_and_count_agree_on_freshness(senv, spark):
+    """A reader that lists the table anyway (DESCRIBE FORMATTED) makes
+    what it saw the session's verified fingerprint: once it has found
+    an out-of-band file and dropped numRows, count(*) must not serve
+    the old numRows either — it runs for real and sees the new file."""
+    eng, p = senv
+    eng.sql("ANALYZE TABLE stats_t COMPUTE STATISTICS")
+    rows = eng.sql("DESCRIBE FORMATTED stats_t").collect()
+    desc = {r[0]: r[1] for r in rows}
+    assert desc["numRows"] == "4"
+    spark.createDataFrame([(9, 90, "z")], "id int, n int, s string") \
+        .coalesce(1).write.mode("append").parquet(p)
+    rows = eng.sql("DESCRIBE FORMATTED stats_t").collect()
+    desc = {r[0]: r[1] for r in rows}
+    assert "numRows" not in desc
+    df = eng.sql("SELECT count(*) AS c FROM stats_t")
+    assert not _is_stats_answered(df)
+    assert df.collect()[0].c == 5
+
+
+def test_analyze_walks_the_table_at_most_twice(senv, monkeypatch):
+    """ANALYZE ... COMPUTE STATISTICS takes its fingerprint, size and
+    file count from one listing walk; the footer read is the only
+    other walk."""
+    eng, p = senv
+    walked = []
+    real = os.walk
+
+    def counting(top, *args, **kwargs):
+        walked.append(top)
+        return real(top, *args, **kwargs)
+
+    monkeypatch.setattr(os, "walk", counting)
+    row = eng.sql("ANALYZE TABLE stats_t COMPUTE STATISTICS").collect()[0]
+    assert row.num_rows == 4
+    assert walked == [p, p], walked
+    walked.clear()
+    eng.sql("ANALYZE TABLE stats_t COMPUTE STATISTICS NOSCAN").collect()
+    assert walked == [p], walked
+    monkeypatch.undo()
+    assert _is_stats_answered(eng.sql("SELECT count(*) AS c FROM stats_t"))
+
+
+def test_reanalyzing_one_column_revives_no_other(senv):
+    """Column stats are fresh as one record: after a write, ANALYZE
+    FOR COLUMNS n must not make id's pre-write min servable again."""
+    eng, _ = senv
+    eng.sql("ANALYZE TABLE stats_t COMPUTE STATISTICS FOR COLUMNS id")
+    eng.sql("INSERT INTO stats_t VALUES (0, 5, 'e')")
+    eng.sql("ANALYZE TABLE stats_t COMPUTE STATISTICS")
+    eng.sql("ANALYZE TABLE stats_t COMPUTE STATISTICS FOR COLUMNS n")
+    df = eng.sql("SELECT min(n) AS mn FROM stats_t")
+    assert _is_stats_answered(df)
+    assert df.collect()[0].mn == 5
+    df = eng.sql("SELECT min(id) AS mi FROM stats_t")
+    assert not _is_stats_answered(df)
+    assert df.collect()[0].mi == 0
