@@ -18,9 +18,11 @@ from __future__ import annotations
 
 import os
 import re
+from dataclasses import dataclass, field, replace
 
 from pyspark.errors import AnalysisException, PySparkNotImplementedError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from hive_2_3_2_spark.catalog import (
     ensure_engine_confs,
@@ -1302,6 +1304,65 @@ def _parse_partition_spec(spec: str) -> tuple[dict[str, str], list[str]]:
     return static, dynamic
 
 
+@dataclass
+class TableDesc:
+    """One table's metadata — Hive's metastore ``Table`` struct: a
+    StorageDescriptor plus parameters, one descriptor per partition
+    (hive_metastore.thrift Table/StorageDescriptor/Partition).
+
+    - ``frame``: the registered read, served as the table's temp view.
+    - ``path``: data directory; None for a catalog table's props only.
+    - ``partition_cols``: declared partition columns (PARTITION_KEYS).
+    - ``schema``: declared schema (ALTER ... COLUMNS), else the files'.
+    - ``epochs``: [(files, schema)] written before a converting alter.
+    - ``format``: the table SD's format for future writes (FILEFORMAT).
+    - ``part_formats``: partition rel → its SD's format if not parquet.
+    - ``props``: TBLPROPERTIES and serde properties (TABLE_PARAMS).
+    - ``constraints``: ``{"pk", "fks"}``, never enforced (KEY_CONSTRAINTS).
+    - ``stats``: ``{fp, rels, parts, table_cols}`` (*_PARAMS, *_COL_STATS).
+    - ``fp``: the data-file fingerprint verified this session.
+    - ``temp_db``: a TEMPORARY table's declared db (session metastore).
+    - ``shadowed``: the record a TEMPORARY table hides until its DROP.
+
+    Epoch files are read under their schema and CAST to ``schema``
+    (schema_evol_*.q, hive.metastore.disallow.incompatible.col.type.
+    changes=false); a table with ``part_formats`` reads one scan per
+    format (partition_wise_fileformat*.q, ``_mixed_format_frame``).
+    Only ``_fresh_stats`` serves ``stats`` — while its fingerprint
+    matches ``fp``, the engine's COLUMN_STATS_ACCURATE — and only
+    ``_store_stats`` writes it; re-registration strips it to
+    ``table_cols`` (Hive keeps TAB_COL_STATS rows). ``fp`` is renewed by
+    event (writes, ANALYZE, REFRESH, DESCRIBE FORMATTED), never by a
+    per-query listing (Hive reads an O(1) metastore flag).
+    """
+
+    frame: DataFrame | None = None
+    path: str | None = None
+    partition_cols: list[str] = field(default_factory=list)
+    schema: StructType | None = None
+    epochs: list[tuple[frozenset, StructType]] = field(default_factory=list)
+    format: str = "parquet"
+    part_formats: dict[str, str] = field(default_factory=dict)
+    props: dict[str, str] = field(default_factory=dict)
+    constraints: dict | None = None
+    stats: dict | None = None
+    fp: str | None = None
+    temp_db: str | None = None
+    shadowed: TableDesc | None = None
+
+
+@dataclass
+class ViewDesc:
+    """One engine view: the original (pre-rewrite) body SQL, the
+    explicit column aliases of ``CREATE VIEW v (a, b) AS``, and for a
+    PARTITIONED ON view its partition columns and the ADDed specs."""
+
+    body: str
+    aliases: list[str] | None = None
+    partition_cols: list[str] | None = None
+    part_specs: set[tuple[tuple[str, str], ...]] = field(default_factory=set)
+
+
 class Engine:
     """A session + catalog bound to a data directory."""
 
@@ -1318,9 +1379,12 @@ class Engine:
         # embedding app may have flipped a conf since the last Engine;
         # construction is the contract point that re-asserts them.
         ensure_engine_confs(self.spark, force=True)
-        self.tables: dict[str, DataFrame] = {}
-        self.table_paths: dict[str, str] = {}
-        self.table_partitions: dict[str, list[str]] = {}
+        # table name → its ONE descriptor (TableDesc: Hive's metastore
+        # Table struct). RENAME moves an entry, DROP pops one, a
+        # TEMPORARY table keeps the entry it hides in ``shadowed``.
+        self.metastore: dict[str, TableDesc] = {}
+        # view name → its ONE descriptor (ViewDesc) — CREATE VIEW
+        self.views: dict[str, ViewDesc] = {}
         # Session state the CLI processors maintain (SetProcessor's
         # hiveconf/hivevar overlay + the session resource lists of
         # SessionState.ResourceType — reference session/SessionState.java).
@@ -1342,95 +1406,20 @@ class Engine:
         # Python UDTF classes registered via CREATE TEMPORARY FUNCTION
         # — their Hive SELECT-head invocations rewrite to TABLE args
         self.python_udtfs: set[str] = set()
-        # table → [(frozenset of data-file relpaths, read StructType)]:
-        # files written BEFORE a type-CONVERTING column alter, with the
-        # schema they must be read under (then CAST to the declared
-        # schema). Hive's schema-evolution converters
-        # (schema_evol_*.q; enabled when hive.metastore.disallow.
-        # incompatible.col.type.changes=false) re-expressed as
-        # per-epoch scans unioned after casting.
-        self.schema_epochs: dict[str, list[tuple[frozenset, object]]] = {}
-        # Per-partition STORAGE DESCRIPTORS (partition_wise_fileformat*
-        # .q; the metastore's SDS role — each partition remembers the
-        # format it was written with, metastore/api/StorageDescriptor).
-        # table_format[t] is the TABLE-level format ALTER TABLE SET
-        # FILEFORMAT changes for FUTURE writes (absent = parquet);
-        # partition_formats[t][rel_dir] records partitions whose files
-        # are NOT parquet. Reads of a table with any non-parquet
-        # partition union one format-grouped scan per format
-        # (_mixed_format_frame).
-        self.table_format: dict[str, str] = {}
-        self.partition_formats: dict[str, dict[str, str]] = {}
         # spark-avro datasource availability — probed lazily, once
         self._avro_native_memo: bool | None = None
         self._system_props: dict[str, str] | None = None
-        # Session-scoped TEMPORARY TABLES (temp_table*.q;
-        # SessionHiveMetaStoreClient keeps them in a session map that
-        # SHADOWS same-named metastore tables until dropped): key →
-        # declared db (for qualified-reference rewriting).
-        # temp_shadowed remembers what the temp table hid so DROP
-        # restores it (getTempTable wins over the metastore lookup).
-        self.temp_tables: dict[str, str] = {}
-        self.temp_shadowed: dict[str, dict] = {}
-        # Informational constraints (create_with_constraints.q; Hive
-        # 2.1+ metastore KEY_CONSTRAINTS — PRIMARY KEY / FOREIGN KEY
-        # ... DISABLE NOVALIDATE [RELY]): never enforced (Hive doesn't
-        # either), recorded for DESCRIBE EXTENDED/FORMATTED and the
-        # ADD/DROP CONSTRAINT DDL. key → {"pk": {...}|None,
-        # "fks": [...]}.
-        self.table_constraints: dict[str, dict] = {}
-        # Declared-schema overlay (ALTER TABLE ADD/CHANGE/REPLACE
-        # COLUMNS): Hive stores the declared schema in the metastore and
-        # parquet binds BY NAME at read time; tables with no overlay
-        # read with the file-discovered schema exactly as before.
-        self.table_schemas: dict[str, object] = {}
-        # name → TBLPROPERTIES dict (ALTER TABLE SET/UNSET TBLPROPERTIES)
-        self.table_props: dict[str, dict[str, str]] = {}
         # db name → DBPROPERTIES whose keys Spark reserves
         # (comment/location/owner) — merged back in DESCRIBE DATABASE
         # EXTENDED / SHOW CREATE DATABASE for Hive parameter parity
         self.db_props: dict[str, dict[str, str]] = {}
-        # view name → original (pre-rewrite) body SQL — CREATE VIEW
-        self.views: dict[str, str] = {}
-        # PARTITIONED ON views: name → (partition cols, ADDed specs)
-        self.view_partitions: dict[
-            str, tuple[list[str], set[tuple[tuple[str, str], ...]]]
-        ] = {}
-        # view name → explicit column aliases (CREATE VIEW v (a, b) AS)
-        self.view_aliases: dict[str, list[str]] = {}
-        # table → its ONE stats record (Hive's TABLE_PARAMS /
-        # PARTITION_PARAMS plus TAB_COL_STATS / PART_COL_STATS). An
-        # unpartitioned table is one partition keyed "":
-        #   {"fp": data-file fingerprint the numbers were gathered
-        #          under — the engine's COLUMN_STATS_ACCURATE flag,
-        #    "rels": [partition rel...] at gather time,
-        #    "parts": {rel: {num_rows, total_size, cols: {col: stats}}},
-        #    "table_cols": {col: stats}}
-        # ``table_cols`` is what DESCRIBE t col shows; it outlives
-        # invalidation (Hive keeps TAB_COL_STATS rows), which strips the
-        # record to that key alone. Only ``_fresh_stats`` decides whether
-        # the rest may be served; only ``_store_stats`` writes it.
-        self.table_stats: dict[str, dict] = {}
-        # table → data-file fingerprint verified against disk THIS
-        # session. Staleness is tracked by EVENT, not by re-listing:
-        # every engine write invalidates (register_table), ANALYZE,
-        # REFRESH TABLE and any reader that lists the table anyway
-        # (DESCRIBE FORMATTED) re-fingerprint, and the first
-        # stats-answered query per table pays one listing — never one
-        # per query (Hive reads COLUMN_STATS_ACCURATE, an O(1) metastore
-        # flag; a per-query file walk on a 10^6-file table would be a
-        # driver-side bottleneck the StatsOptimizer exists to avoid).
-        self._fp_memo: dict[str, str] = {}
         # catalog-table schema memo for the decimal-vs-float rewrite —
         # cleared on any DDL statement (Engine.sql)
         self._catalog_schema_memo: dict[str, object] = {}
         if sf_dir is not None:
-            self.tables = register_star_schema(self.spark, sf_dir)
-            import os
-
-            for name in self.tables:
-                self.table_paths[name] = os.path.join(
-                    sf_dir, f"{name}.parquet"
+            for name, df in register_star_schema(self.spark, sf_dir).items():
+                self.metastore[name] = TableDesc(
+                    frame=df, path=os.path.join(sf_dir, f"{name}.parquet")
                 )
 
     def register_table(
@@ -1450,94 +1439,84 @@ class Engine:
             # same mangled identifier Engine.sql rewrites backticked
             # references to
             name = _mangle_special_name(name)
+        old = self.metastore.get(name) or TableDesc()
         # Every mutating statement re-registers its target, so this is
         # the single chokepoint where gathered stats go stale — the
         # engine's version of Hive clearing COLUMN_STATS_ACCURATE on a
         # non-stats-aware write (StatsSetupConst.clearColumnStatsState).
         # Column VALUES survive for DESCRIBE (Hive keeps TAB_COL_STATS
         # rows too); only the serve-from-stats gates drop.
-        self._invalidate_stats(name)
-        # The reads below may fail (bad path, unreadable files): set the
-        # new path/partition metadata provisionally and ROLL BACK on
-        # exception, so a failed registration doesn't leave metadata
-        # pointing at the new path while tables/views still serve the
-        # old frame.
-        prev_path = self.table_paths.get(name)
-        prev_parts = self.table_partitions.get(name)
-        try:
-            if partition_cols:
-                # _mixed_format_frame needs the partition depth before
-                # the read below resolves
-                self.table_partitions[name] = list(partition_cols)
-            self.table_paths[name] = path
-            return self._register_table_read(name, path, partition_cols)
-        except Exception:
-            if prev_path is None:
-                self.table_paths.pop(name, None)
-            else:
-                self.table_paths[name] = prev_path
-            if prev_parts is None:
-                self.table_partitions.pop(name, None)
-            else:
-                self.table_partitions[name] = prev_parts
-            raise
+        old.stats = (
+            {"table_cols": old.stats["table_cols"]}
+            if old.stats and old.stats.get("table_cols") else None
+        )
+        old.fp = None
+        desc = replace(
+            old, path=path,
+            partition_cols=list(partition_cols or old.partition_cols),
+        )
+        # The read may fail (bad path, unreadable files): the new record
+        # is swapped in only once it succeeded, so a failed registration
+        # leaves the old path and frame serving.
+        df = self._overlay_frame(name, desc)
+        if df is None:
+            reader = self.spark.read
+            if desc.schema is not None:
+                reader = reader.schema(desc.schema)
+            try:
+                df = reader.parquet(path)
+            except Exception as exc:
+                # A table whose LAST partition was dropped/exchanged
+                # away is an empty directory tree — unreadable without a
+                # schema, but Hive keeps it queryable (the metastore
+                # carries the schema). Serve the remembered schema as an
+                # empty relation; the next INSERT re-materializes files.
+                remembered = desc.schema or (
+                    desc.frame.schema if desc.frame is not None else None
+                )
+                if (
+                    remembered is None
+                    or "UNABLE_TO_INFER_SCHEMA" not in str(exc)
+                ):
+                    raise
+                df = local_frame(self.spark, [], remembered)
+            if desc.schema is not None:
+                df = self._apply_char_read_semantics(df, desc.schema)
+        desc.frame = df
+        return self._publish(name, desc)
 
-    def _register_table_read(
-        self,
-        name: str,
-        path: str,
-        partition_cols: list[str] | None,
-    ) -> DataFrame:
+    def _publish(self, name: str, desc: TableDesc) -> DataFrame:
+        """Make ``desc`` the record of ``name`` and serve its frame as
+        the temp view ``name``."""
+        self.metastore[name] = desc
         note_view_override(self.spark, name)
-        overlay_df = self._overlay_frame(name, path)
-        if overlay_df is not None:
-            overlay_df.createOrReplaceTempView(name)
-            self.tables[name] = overlay_df
-            if self.views:
-                self._refresh_dependent_views(name)
-            return overlay_df
-        reader = self.spark.read
-        if name in self.table_schemas:
-            reader = reader.schema(self.table_schemas[name])
-        try:
-            df = reader.parquet(path)
-        except Exception as exc:
-            # A table whose LAST partition was dropped/exchanged away is
-            # an empty directory tree — unreadable without a schema, but
-            # Hive keeps it queryable (the metastore carries the
-            # schema). Serve the remembered schema as an empty relation;
-            # the next INSERT re-materializes files.
-            remembered = self.table_schemas.get(name) or (
-                self.tables[name].schema if name in self.tables else None
-            )
-            if remembered is None or "UNABLE_TO_INFER_SCHEMA" not in str(exc):
-                raise
-            df = local_frame(self.spark, [], remembered)
-        if name in self.table_schemas:
-            df = self._apply_char_read_semantics(
-                df, self.table_schemas[name]
-            )
-        df.createOrReplaceTempView(name)
-        self.tables[name] = df
-        self.table_paths[name] = path
-        if partition_cols:
-            self.table_partitions[name] = list(partition_cols)
+        desc.frame.createOrReplaceTempView(name)
         if self.views:
             # late-binding parity: views over this table must see its
             # new registration (schema evolution, rename, truncate)
             self._refresh_dependent_views(name)
-        return df
+        return desc.frame
 
-    def _overlay_frame(self, key: str, path: str) -> DataFrame | None:
+    def _desc(self, key: str) -> TableDesc:
+        """``key``'s record for reading; an empty one when none exists.
+        Writers go through ``_entry`` or ``metastore`` instead."""
+        return self.metastore.get(key) or TableDesc()
+
+    def _entry(self, key: str) -> TableDesc:
+        """``key``'s record, created empty for a table the engine has
+        not registered (a session-catalog table's props/constraints)."""
+        return self.metastore.setdefault(key, TableDesc())
+
+    def _overlay_frame(self, key: str, desc: TableDesc) -> DataFrame | None:
         """The read of a table that is not plain parquet under one
         schema — an engine-managed avro table, a table with schema
         epochs (type-changing ALTERs), or one with mixed per-partition
         formats — or None for a plain parquet table."""
-        if self.table_format.get(key) == "avro":
-            return self._avro_py_frame(key, path)
-        df = self._epoch_union_frame(key, path)
+        if desc.format == "avro":
+            return self._avro_py_frame(key, desc)
+        df = self._epoch_union_frame(desc)
         if df is None:
-            df = self._mixed_format_frame(key, path)
+            df = self._mixed_format_frame(key, desc)
         return df
 
     def _target_frame(self, key: str) -> DataFrame:
@@ -1548,14 +1527,15 @@ class Engine:
         schema, so it launches no schema-inference job and serves an
         empty directory tree (last partition dropped/exchanged) as an
         empty relation."""
-        overlay_df = self._overlay_frame(key, self.table_paths[key])
+        desc = self.metastore[key]
+        overlay_df = self._overlay_frame(key, desc)
         if overlay_df is not None:
             return overlay_df
         df = self.spark.read.schema(self._declared_schema(key)).parquet(
-            self.table_paths[key]
+            desc.path
         )
-        if key in self.table_schemas:
-            df = self._apply_char_read_semantics(df, self.table_schemas[key])
+        if desc.schema is not None:
+            df = self._apply_char_read_semantics(df, desc.schema)
         return df
 
     #: Roots no mutating statement may write under. The shared test
@@ -1573,7 +1553,7 @@ class Engine:
     def _assert_mutable(self, key: str) -> None:
         """Typed error when a mutating statement targets a table whose
         files live under a protected root (read-only fixtures)."""
-        path = os.path.abspath(self.table_paths[key])
+        path = os.path.abspath(self.metastore[key].path)
         for root in self.PROTECTED_ROOTS:
             r = os.path.abspath(root)
             if path == r or path.startswith(r + os.sep):
@@ -1586,7 +1566,7 @@ class Engine:
 
     def _resolve_dml_table(self, name: str, mutating: bool = False) -> str:
         key = name.split(".")[-1].lower()
-        if key not in self.table_paths:
+        if not self._desc(key).path:
             raise HiveQLUnsupportedError(
                 f"DML target {name!r} is not a path-backed table this "
                 "Engine registered (register_table(name, path) first)"
@@ -1609,7 +1589,7 @@ class Engine:
         instead of getting a typed rejection. Statements Spark cannot
         parse at all (EXPORT/IMPORT/CONCATENATE) have unguarded entries
         and keep the typed error."""
-        return name.split(".")[-1].lower() in self.table_paths
+        return self._desc(name.split(".")[-1].lower()).path is not None
 
     def _rows_affected(self, n: int) -> DataFrame:
         return local_frame(self.spark, [(n,)], "rows_affected bigint")
@@ -1788,7 +1768,7 @@ class Engine:
         (_MSCK_STMT, _PATH_TABLE, "_run_msck"),
         (_REFRESH_STMT, _PATH_TABLE, "_run_refresh"),
         (_ANALYZE_STMT, _PATH_TABLE, "_run_analyze"),
-        (_RENAME_STMT, _PATH_TABLE, "_run_rename"),
+        (_RENAME_STMT, None, "_run_rename"),
         (_EXCHANGE_PARTITION_STMT, _PATH_TABLE, "_run_exchange_partition"),
         (_RENAME_PARTITION_STMT, _PATH_TABLE, "_run_rename_partition"),
         (_SET_LOCATION_STMT, _PATH_TABLE, "_run_set_location"),
@@ -1873,7 +1853,7 @@ class Engine:
             )
         if "default" in query.lower():
             query = self._strip_default_db(query)
-        if self.temp_tables and "." in query:
+        if "." in query and any(d.temp_db for d in self.metastore.values()):
             # temp tables SHADOW same-named permanent tables even under
             # their declared-db qualifier (SessionHiveMetaStoreClient
             # getTempTable resolves before the metastore;
@@ -2135,8 +2115,8 @@ class Engine:
         key = self._resolve_dml_table(m["table"], mutating=True)
         self._assert_not_mixed(key, "DELETE")
         cond = F.expr(m.group(2)) if m.group(2) else F.lit(True)
-        path = self.table_paths[key]
-        parts = self.table_partitions.get(key)
+        path = self.metastore[key].path
+        parts = self._desc(key).partition_cols
         affected = delete_where(self._target_frame(key), path, cond, parts)
         self.register_table(key, path, parts)
         return self._rows_affected(affected)
@@ -2152,8 +2132,8 @@ class Engine:
             col: F.expr(expr) for col, expr in _split_assignments(m.group(2))
         }
         cond = F.expr(m.group(3)) if m.group(3) else F.lit(True)
-        path = self.table_paths[key]
-        parts = self.table_partitions.get(key)
+        path = self.metastore[key].path
+        parts = self._desc(key).partition_cols
         affected = update_where(
             self._target_frame(key), path, sets, cond, parts
         )
@@ -2218,7 +2198,8 @@ class Engine:
         if m.group(2) and self._dml_registered(m["table"]):
             tkey = self._resolve_dml_table(m["table"])
             rel = self._static_partition_reldir(tkey, m.group(2))
-            if not os.path.isdir(os.path.join(self.table_paths[tkey], rel)):
+            pdir = os.path.join(self.metastore[tkey].path, rel)
+            if not os.path.isdir(pdir):
                 raise HiveQLUnsupportedError(
                     f"TOUCH: no such partition {rel!r}"
                 )
@@ -2228,7 +2209,10 @@ class Engine:
         """Rewrite ``<declared_db>.<temp_table>`` to the bare temp-view
         name (string literals left alone) — Hive resolves temp tables
         before the metastore under their declared database."""
-        for key, db in self.temp_tables.items():
+        for key, desc in self.metastore.items():
+            db = desc.temp_db
+            if db is None:
+                continue
             # (?<![\w.]) — the db qualifier must START the dotted chain:
             # \b holds after a dot, so spark_catalog.default.t would
             # otherwise match its 'default.t' tail and rewrite to the
@@ -2261,7 +2245,7 @@ class Engine:
         for m, _d in _code_matches(_DEFAULT_QUAL, query):
             name = m.group(1)
             if (
-                name.lower() not in self.table_paths
+                not self._desc(name.lower()).path
                 and name.lower() not in self.views
             ):
                 continue
@@ -2631,7 +2615,7 @@ class Engine:
                 self.spark, [(ln,) for ln in lines], "plan string"
             )
         key = self._resolve_dml_table(m["table"])
-        parts = self.table_partitions.get(key)
+        parts = self._desc(key).partition_cols
         if handler == "_run_insert":
             verb = "INSERT " + m.group(1).upper()
             stages = [
@@ -2694,7 +2678,7 @@ class Engine:
             *stages,
             "",
             f"{verb} TARGET: {key}",
-            f"  path: {self.table_paths[key]}",
+            f"  path: {self.metastore[key].path}",
             f"  partition columns: {parts or '(none)'}",
             "",
             *detail,
@@ -2837,7 +2821,7 @@ class Engine:
         if_not_exists, target, source, fmt, location = m.groups()
         skey = self._resolve_dml_table(source)
         tkey = target.split(".")[-1].lower()
-        if tkey in self.table_paths:
+        if self._desc(tkey).path:
             if if_not_exists:
                 return self._rows_affected(0)
             raise HiveQLUnsupportedError(
@@ -2849,7 +2833,7 @@ class Engine:
                 f"CREATE TABLE LIKE ... STORED AS {fmt}: path-backed "
                 "tables here are parquet — omit STORED AS or use PARQUET"
             )
-        if self.table_partitions.get(skey):
+        if self._desc(skey).partition_cols:
             raise HiveQLUnsupportedError(
                 "CREATE TABLE LIKE a partitioned path-backed table: an "
                 "empty partitioned directory cannot carry the schema "
@@ -2858,7 +2842,7 @@ class Engine:
             )
         from hive_2_3_2_spark.suite._scratch import scratch_root
 
-        schema = self.spark.read.parquet(self.table_paths[skey]).schema
+        schema = self.spark.read.parquet(self.metastore[skey].path).schema
         path = location or os.path.join(
             scratch_root("ddl"), f"like_{tkey}"
         )
@@ -3275,8 +3259,8 @@ class Engine:
 
         key = self._resolve_dml_table(table)
         self._assert_not_mixed(key, "EXPORT")
-        path = self.table_paths[key]
-        parts = self.table_partitions.get(key) or []
+        path = self.metastore[key].path
+        parts = self._desc(key).partition_cols
         if part_spec and not parts:
             raise HiveQLUnsupportedError(
                 f"EXPORT PARTITION on unpartitioned table {key!r}"
@@ -3352,7 +3336,7 @@ class Engine:
                 "IMPORT: no table name given and the export metadata "
                 "carries none"
             )
-        if key in self.table_paths:
+        if self._desc(key).path:
             return self._import_into_existing(key, meta, data_dir)
         if location:
             if os.path.exists(location) and os.listdir(location):
@@ -3388,7 +3372,7 @@ class Engine:
             p.lower() for p in (meta.get("partition_cols") or [])
         ]
         tgt_parts = [
-            p.lower() for p in (self.table_partitions.get(key) or [])
+            p.lower() for p in self._desc(key).partition_cols
         ]
         if exp_parts != tgt_parts:
             raise HiveQLUnsupportedError(
@@ -3411,7 +3395,7 @@ class Engine:
                 f"IMPORT into {key!r}: table exists and schema does "
                 f"not match (export {exp_sig}, table {tgt_sig})"
             )
-        path = self.table_paths[key]
+        path = self.metastore[key].path
         n = parquet_row_count(data_dir, self.spark)
         if tgt_parts:
             rels = _staged_partition_rels(data_dir, len(tgt_parts))
@@ -3445,7 +3429,7 @@ class Engine:
                     src,
                     os.path.join(path, f"import_{tag}_{i:05d}.parquet"),
                 )
-        self.register_table(key, path, self.table_partitions.get(key))
+        self.register_table(key, path, self._desc(key).partition_cols)
         return self._rows_affected(n)
 
     def _resolve_partition_spec(
@@ -3524,7 +3508,7 @@ class Engine:
     def _static_partition_reldir(self, key: str, spec: str) -> str:
         """``p='v', q=1`` → ``p=v/q=1`` for a registered table, validating
         the spec covers exactly the partition columns."""
-        parts = self.table_partitions.get(key)
+        parts = self._desc(key).partition_cols
         if not parts:
             raise HiveQLUnsupportedError(
                 f"table {key!r} is not partitioned (register_table with "
@@ -3546,8 +3530,8 @@ class Engine:
         from hive_2_3_2_spark.sources.writers import parquet_row_count
 
         key = self._resolve_dml_table(m.group(1), mutating=True)
-        path = self.table_paths[key]
-        parts = self.table_partitions.get(key)
+        path = self.metastore[key].path
+        parts = self._desc(key).partition_cols
         auto = self._stats_autogather_on()
         prev = self._fresh_stats(key) if auto else None
         trunc_rel = None
@@ -3580,7 +3564,7 @@ class Engine:
             # from this engine's listing, so the carry-forward set is
             # simply every other partition's fresh stats.
             if trunc_rel is None:
-                fp, size, _nf = self._fingerprint_and_size(path)
+                fp, size, _nf, _ = self._fingerprint_and_size(path)
                 self._store_stats(
                     key, prev, {"": {"num_rows": 0, "total_size": size}},
                     ("",), fp,
@@ -3589,23 +3573,12 @@ class Engine:
                 self._store_stats(key, prev, {}, (trunc_rel,))
         return self._rows_affected(n)
 
-    def _invalidate_stats(self, key: str) -> None:
-        """Strip a table's stats record to the DESCRIBE column values
-        and drop the session fingerprint memo, so nothing is served
-        from stats until a writer records fresh numbers. Called on every
-        (re-)registration — i.e. after every engine write — and on DROP
-        TABLE."""
-        rec = self.table_stats.pop(key, None)
-        if rec and rec.get("table_cols"):
-            self.table_stats[key] = {"table_cols": rec["table_cols"]}
-        self._fp_memo.pop(key, None)
-
     def _mixed_format(self, key: str) -> bool:
         """True when the table carries per-partition storage
         descriptors other than parquet (partition_wise_fileformat*.q)
         or its table-level write format was altered."""
-        return bool(self.partition_formats.get(key)) or (
-            self.table_format.get(key, "parquet") != "parquet"
+        return bool(self._desc(key).part_formats) or (
+            self._desc(key).format != "parquet"
         )
 
     def _assert_not_mixed(self, key: str, op: str) -> None:
@@ -3640,23 +3613,22 @@ class Engine:
         fingerprint matches the session-verified one: ``fp`` when the
         caller has already listed the table (it then becomes the
         session's verified fingerprint, so a later stats-answered query
-        sees what this listing saw), else ``_fp_memo``, else one listing
-        now. Callers read ``rels`` and ``parts`` and never mutate it."""
+        sees what this listing saw), else the record's ``fp``, else one
+        listing now. Callers read ``rels`` and ``parts`` and never
+        mutate it."""
+        desc = self.metastore[key]
         if fp is not None:
-            if self._fp_memo.get(key, fp) != fp:
+            if desc.fp not in (None, fp):
                 # the files changed behind the session's back: drop
                 # Spark's cached listing as well, as REFRESH TABLE does
                 self.spark.catalog.refreshTable(key)
-            self._fp_memo[key] = fp
-        rec = self.table_stats.get(key)
+            desc.fp = fp
+        rec = desc.stats
         if not rec or rec.get("fp") is None:
             return None
-        if fp is None:
-            fp = self._fp_memo.get(key)
-        if fp is None:
-            fp = self._fingerprint_and_size(self.table_paths[key])[0]
-            self._fp_memo[key] = fp
-        return rec if rec["fp"] == fp else None
+        if desc.fp is None:
+            desc.fp = self._fingerprint_and_size(desc.path)[0]
+        return rec if rec["fp"] == desc.fp else None
 
     def _store_stats(
         self,
@@ -3689,18 +3661,14 @@ class Engine:
             old = merged.get(rel, {"cols": {}})
             cols = {**old["cols"], **new.get("cols", {})}
             merged[rel] = {**old, **new, "cols": cols}
-        rels = (
-            self._partition_rels(key)
-            if self.table_partitions.get(key) else [""]
-        )
+        desc = self.metastore[key]
+        rels = self._partition_rels(key) if desc.partition_cols else [""]
         parts = {rel: merged[rel] for rel in rels if rel in merged}
         if not parts and fp is None:
             return
         if fp is None:
-            fp = self._fingerprint_and_size(self.table_paths[key])[0]
-        table_cols = dict(
-            self.table_stats.get(key, {}).get("table_cols", {})
-        )
+            fp = self._fingerprint_and_size(desc.path)[0]
+        table_cols = dict((desc.stats or {}).get("table_cols", {}))
         # DESCRIBE rolls up every gathered partition, also one whose
         # value spells its directory differently (p=1 read from p=01)
         for c in {c for new in written.values() for c in new.get("cols", {})}:
@@ -3709,10 +3677,10 @@ class Engine:
             ]
             if gathered:
                 table_cols[c] = self._rollup_col_stats(gathered)
-        self.table_stats[key] = {
+        desc.stats = {
             "fp": fp, "rels": rels, "parts": parts, "table_cols": table_cols,
         }
-        self._fp_memo[key] = fp
+        desc.fp = fp
 
     def _autogather_insert_stats(
         self,
@@ -3737,22 +3705,24 @@ class Engine:
         are the column stats an unpartitioned OVERWRITE observed under
         hive.stats.column.autogather; untouched partitions' ANALYZEd
         column stats are carried forward like Hive's per-partition
-        accuracy flags. Costs one listing walk (the same walk ANALYZE
-        pays) per stats-gathering write — never per query."""
-        path = self.table_paths[key]
-        prev_parts = prev["parts"] if prev else {}
-        if not self.table_partitions.get(key):
+        accuracy flags. Costs one listing walk of the table (the same
+        walk ANALYZE pays) per stats-gathering write — never per query;
+        the written partitions' sizes come from that walk."""
+        desc = self.metastore[key]
+        path, prev_parts = desc.path, prev["parts"] if prev else {}
+        if not desc.partition_cols:
             if overwrite:
                 num = n
             elif "num_rows" in prev_parts.get("", {}):
                 num = prev_parts[""]["num_rows"] + n
             else:
                 return
-            fp, size, _nf = self._fingerprint_and_size(path)
+            fp, size, _nf, _ = self._fingerprint_and_size(path)
             new = {"num_rows": num, "total_size": size, "cols": cols or {}}
             self._store_stats(key, prev, {"": new}, ("",), fp)
             return
         written: dict[str, dict] = {}
+        fp = None
         for rel, cnt in (part_counts or {}).items():
             old = prev_parts.get(rel, {})
             if overwrite:
@@ -3765,33 +3735,45 @@ class Engine:
                 # append to an existing partition with no prior stats —
                 # that partition stays un-gathered; others may carry
                 continue
-            pdir = os.path.join(path, rel)
-            if os.path.isdir(pdir):  # a zero-row OVERWRITE removes it
+            if fp is None:
+                fp, _s, _n, sizes = self._fingerprint_and_size(
+                    path, len(desc.partition_cols)
+                )
+            if os.path.isdir(os.path.join(path, rel)):
+                # (a zero-row OVERWRITE removes the partition)
                 written[rel] = {
-                    "num_rows": num,
-                    "total_size": self._fingerprint_and_size(pdir)[1],
+                    "num_rows": num, "total_size": sizes.get(rel, (0, 0))[0],
                 }
-        self._store_stats(key, prev, written, tuple(part_counts or ()))
+        self._store_stats(key, prev, written, tuple(part_counts or ()), fp)
 
     @staticmethod
-    def _fingerprint_and_size(path: str) -> tuple[str, int, int]:
-        """(fingerprint, total data-file bytes, data-file count) in ONE
-        listing walk — the only walk the stats code takes sizes and
-        counts from (StatsTask's updateQuickStats records
-        numFiles/totalSize from the same FileStatus listing that
-        validates the write). The fingerprint is a metadata-only digest
-        of the data files (relpath, size, mtime): stats recorded under
-        one are served only while the files are the same set."""
+    def _fingerprint_and_size(
+        path: str, depth: int = 0
+    ) -> tuple[str, int, int, dict[str, tuple[int, int]]]:
+        """(fingerprint, total data-file bytes, data-file count,
+        {partition rel: (bytes, count)}) in ONE listing walk — the only
+        walk the stats code takes sizes and counts from (StatsTask's
+        updateQuickStats records numFiles/totalSize from the same
+        FileStatus listing that validates the write). ``depth`` is the
+        number of partition columns: a file counts toward the partition
+        directory that many levels under ``path`` ("" when 0). The
+        fingerprint is a metadata-only digest of the data files
+        (relpath, size, mtime): stats recorded under one are served
+        only while the files are the same set."""
         import hashlib
 
         h = hashlib.md5()
         if os.path.isfile(path):
             st = os.stat(path)
             h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
-            return h.hexdigest(), st.st_size, 1
+            return h.hexdigest(), st.st_size, 1, {"": (st.st_size, 1)}
         entries = []
         size = 0
+        by_rel: dict[str, tuple[int, int]] = {}
         for root, _dirs, files in os.walk(path):
+            dirs = os.path.relpath(root, path).split(os.sep)
+            dirs = [] if dirs == ["."] else dirs
+            rel = "/".join(dirs[:depth]) if len(dirs) >= depth else None
             for f in files:
                 if f.startswith(("_", ".")):
                     continue
@@ -3802,9 +3784,12 @@ class Engine:
                     f"{os.path.relpath(full, path)}:{st.st_size}:"
                     f"{st.st_mtime_ns}"
                 )
+                if rel is not None:
+                    rel_size, rel_n = by_rel.get(rel, (0, 0))
+                    by_rel[rel] = (rel_size + st.st_size, rel_n + 1)
         for e in sorted(entries):
             h.update(e.encode())
-        return h.hexdigest(), size, len(entries)
+        return h.hexdigest(), size, len(entries), by_rel
 
     def _partial_partition_spec(
         self, key: str, spec: str | None, what: str
@@ -3815,7 +3800,7 @@ class Engine:
         None."""
         static, _ = self._resolve_partition_spec(
             spec,
-            self.table_partitions.get(key) or [],
+            self._desc(key).partition_cols,
             self._declared_schema(key),
             what,
         )
@@ -3826,9 +3811,9 @@ class Engine:
         partitioned table (directory listing, metadata-only)."""
         from hive_2_3_2_spark.sources.writers import _staged_partition_rels
 
-        parts = self.table_partitions.get(key) or []
+        parts = self._desc(key).partition_cols
         return sorted(
-            _staged_partition_rels(self.table_paths[key], len(parts))
+            _staged_partition_rels(self.metastore[key].path, len(parts))
         )
 
     def _run_analyze(self, m: re.Match[str]) -> DataFrame:
@@ -3845,7 +3830,7 @@ class Engine:
         from hive_2_3_2_spark.sources.writers import parquet_row_count
 
         key = self._resolve_dml_table(table)
-        part_cols = self.table_partitions.get(key) or []
+        part_cols = self._desc(key).partition_cols
         spec = self._partial_partition_spec(key, part_spec, "ANALYZE")
         noscan = False
         if for_columns is not None:
@@ -3858,8 +3843,10 @@ class Engine:
                 return self._run_analyze_columns(key, for_columns, spec)
         if part_cols and not noscan:
             return self._run_analyze_partitions(key, spec)
-        path = self.table_paths[key]
-        fp, size, n_files = self._fingerprint_and_size(path)
+        path = self.metastore[key].path
+        fp, size, n_files, sizes = self._fingerprint_and_size(
+            path, len(part_cols)
+        )
         prev = self._fresh_stats(key, fp)
         if part_cols:
             # per-partition file-level stats, honoring a (possibly
@@ -3868,9 +3855,7 @@ class Engine:
             for rel in self._match_partition_rels(
                 self._partition_rels(key), spec
             ):
-                _pfp, sz, nf = self._fingerprint_and_size(
-                    os.path.join(path, rel)
-                )
+                sz, nf = sizes.get(rel, (0, 0))
                 rows.append((rel, nf, sz))
             self._store_stats(
                 key, prev, {rel: {"total_size": sz} for rel, _, sz in rows},
@@ -3929,42 +3914,28 @@ class Engine:
         partition. Footer reads only — no data scan."""
         from hive_2_3_2_spark.sources.writers import parquet_row_count
 
-        path = self.table_paths[key]
+        desc = self.metastore[key]
+        path, pmap = desc.path, desc.part_formats
         all_rels = self._partition_rels(key)
         targets = self._match_partition_rels(all_rels, spec)
         if spec is not None and not targets:
             raise HiveQLUnsupportedError(
                 f"ANALYZE: no partition matches ({spec}) in {key}"
             )
-        fp = self._fingerprint_and_size(path)[0]
+        fp, _size, _n, sizes = self._fingerprint_and_size(
+            path, len(desc.partition_cols)
+        )
         prev = self._fresh_stats(key, fp)
-        pmap = self.partition_formats.get(key, {})
         rows = []
         for rel in targets:
             pdir = os.path.join(path, rel)
             if pmap.get(rel, "parquet") != "parquet":
                 # no parquet footers in this partition — one real
                 # per-partition count (its own format's scan)
-                src, opts = self._MIXED_FORMAT_SOURCES[pmap[rel]]
-                rdr = self.spark.read
-                declared = self.table_schemas.get(key)
-                if declared is not None:
-                    from pyspark.sql.types import StructType
-
-                    parts_l = {
-                        p.lower()
-                        for p in self.table_partitions.get(key, [])
-                    }
-                    rdr = rdr.schema(StructType([
-                        f for f in declared.fields
-                        if f.name.lower() not in parts_l
-                    ]))
-                for k, v in opts.items():
-                    rdr = rdr.option(k, v)
-                n = rdr.format(src).load(pdir).count()
+                n = self._partition_reader(desc, pmap[rel]).load(pdir).count()
             else:
                 n = parquet_row_count(pdir, self.spark)
-            rows.append((rel, n, self._fingerprint_and_size(pdir)[1]))
+            rows.append((rel, n, sizes.get(rel, (0, 0))[0]))
         self._store_stats(
             key,
             prev,
@@ -4092,14 +4063,14 @@ class Engine:
         # HiveQL identifiers are case-insensitive
         cols = [by_lower[c.lower()] for c in requested]
         aggs = self._col_stats_aggs(fields, cols)
-        tpart_cols = self.table_partitions.get(key) or []
+        tpart_cols = self._desc(key).partition_cols
         if tpart_cols:
             return self._analyze_columns_partitioned(
                 key, target, fields, cols, aggs, tpart_cols, part_spec
             )
         row = target.agg(*aggs).collect()[0].asDict()
         stats = self._col_stats_from_row(fields, cols, row)
-        fp = self._fingerprint_and_size(self.table_paths[key])[0]
+        fp = self._fingerprint_and_size(self.metastore[key].path)[0]
         self._store_stats(
             key, self._fresh_stats(key, fp), {"": {"cols": stats}}, fp=fp
         )
@@ -4135,7 +4106,7 @@ class Engine:
             }
             for row in grouped
         }
-        fp = self._fingerprint_and_size(self.table_paths[key])[0]
+        fp = self._fingerprint_and_size(self.metastore[key].path)[0]
         self._store_stats(key, self._fresh_stats(key, fp), written, fp=fp)
         return local_frame(
             self.spark,
@@ -4163,7 +4134,7 @@ class Engine:
             ShortType,
         )
 
-        part_cols = self.table_partitions.get(key) or []
+        part_cols = self._desc(key).partition_cols
         if not where or not where.strip():
             return lambda rel: True
         if not part_cols:
@@ -4250,7 +4221,7 @@ class Engine:
             key = self._resolve_dml_table(m.group(2))
         except Exception:
             return None
-        parts = self.table_partitions.get(key)
+        parts = self._desc(key).partition_cols
         if not parts:
             return None
         by_lower = {c.lower(): c for c in parts}
@@ -4273,7 +4244,7 @@ class Engine:
         count(DISTINCT ...)): Hive's metadata-only path reads one null
         row per partition, and these aggregates can't tell the
         difference."""
-        parts = self.table_partitions.get(key) or []
+        parts = self._desc(key).partition_cols
         by_lower = {c.lower(): c for c in parts}
         seen = {
             tuple(partition_values(rel).get(c) for c in cols)
@@ -4320,7 +4291,7 @@ class Engine:
             key = self._resolve_dml_table(m.group(2))
         except Exception:
             return None
-        parts = self.table_partitions.get(key)
+        parts = self._desc(key).partition_cols
         if not parts:
             return None
         by_lower = {c.lower(): c for c in parts}
@@ -4547,7 +4518,8 @@ class Engine:
                 f"DESCRIBE: no column {column!r} in table {key!r}"
             )
         f = fields[column.lower()]
-        s = self.table_stats.get(key, {}).get("table_cols", {}).get(f.name, {})
+        stats = self.metastore[key].stats or {}
+        s = stats.get("table_cols", {}).get(f.name, {})
 
         def fmt(v):
             return "" if v is None else str(v)
@@ -4578,10 +4550,10 @@ class Engine:
         from hive_2_3_2_spark.sources.writers import _staged_partition_rels
 
         key = self._resolve_dml_table(table)
-        parts = self.table_partitions.get(key)
-        self.register_table(key, self.table_paths[key], parts)
+        parts = self._desc(key).partition_cols
+        self.register_table(key, self.metastore[key].path, parts)
         n = (
-            len(_staged_partition_rels(self.table_paths[key], len(parts)))
+            len(_staged_partition_rels(self.metastore[key].path, len(parts)))
             if parts
             else 0
         )
@@ -4595,8 +4567,8 @@ class Engine:
         spec is bad); a name that is not a partition column raises."""
         key = table.split(".")[-1].lower()
         try:
-            if key in self.table_paths:
-                parts = self.table_partitions.get(key) or []
+            if self._desc(key).path:
+                parts = self._desc(key).partition_cols
                 schema = self._declared_schema(key)
             else:
                 parts = self._catalog_partition_cols(table)
@@ -4609,8 +4581,8 @@ class Engine:
         if dynamic or set(static) != set(parts):
             return False
         rel = _partition_rel_dir(parts, [static[p] for p in parts])
-        if key in self.table_paths:
-            return os.path.isdir(os.path.join(self.table_paths[key], rel))
+        if self._desc(key).path:
+            return os.path.isdir(os.path.join(self.metastore[key].path, rel))
         listed = self.spark.sql(f"SHOW PARTITIONS {table}").collect()
         return rel in {r[0] for r in listed}
 
@@ -4658,47 +4630,42 @@ class Engine:
         table = m["table"]
         key = self._resolve_dml_table(table)
         self.spark.catalog.refreshTable(key)
-        self._fp_memo.pop(key, None)
+        self.metastore[key].fp = None
         return self._rows_affected(0)
 
     def _run_rename(self, m: re.Match[str]) -> DataFrame:
         """ALTER TABLE old RENAME TO new — external-table semantics
         (the reference leaves external data in place on rename,
         DDLTask alterTable): the path is unchanged, the registration
-        moves to the new name and the old view is dropped. ALL metastore
-        state travels with the table — declared-schema overlay,
-        TBLPROPERTIES, and column stats (Hive's alterTable carries the
-        full StorageDescriptor + parameters to the new name); leaving
-        them under the old key would both lose them for the renamed
-        table and poison any future table registered under that name.
+        moves to the new name and the old view is dropped. The whole
+        record travels (Hive's alterTable carries the full
+        StorageDescriptor + parameters to the new name): formats,
+        declared schema, props, constraints and stats — rename moves no
+        data file, so the stats fingerprint stays valid. A TEMPORARY
+        table's hidden table resolves under the old name again.
         Dependent views are refreshed last: a view over the old name no
-        longer resolves and is dropped (late-binding semantics)."""
-        old_name, new_name = m.groups()
-        key = self._resolve_dml_table(old_name)
-        new_key = new_name.split(".")[-1].lower()
-        if new_key in self.table_paths or new_key in self.views:
+        longer resolves and is dropped (late-binding semantics). Spark
+        renames a session-catalog table; its engine-side record (props,
+        constraints) follows. None for a name with no record."""
+        key, new_key = (n.split(".")[-1].lower() for n in m.groups())
+        desc = self.metastore.get(key)
+        if desc is None:
+            return None
+        if desc.path is None:
+            out = self.spark.sql(rewrite_hiveql(m.string, spark=self.spark))
+            self.metastore[new_key] = self.metastore.pop(key)
+            return out
+        if new_key in self.metastore or new_key in self.views:
             raise HiveQLUnsupportedError(
                 f"RENAME target {new_key!r} already exists"
             )
-        path = self.table_paths.pop(key)
-        parts = self.table_partitions.pop(key, None)
-        self.tables.pop(key, None)
-        for store in (self.table_schemas, self.table_props,
-                      self.schema_epochs):
-            if key in store:
-                store[new_key] = store.pop(key)
-        # gathered stats travel too (rename moves no data files, so the
-        # recorded fingerprint stays valid) — migrate AFTER
-        # register_table, whose invalidation hook would clear them
-        rec = self.table_stats.pop(key, None)
-        fp = self._fp_memo.pop(key, None)
+        del self.metastore[key]
         note_view_override(self.spark, key)
         self.spark.catalog.dropTempView(key)
-        self.register_table(new_key, path, parts)
-        if rec is not None:
-            self.table_stats[new_key] = rec
-        if fp is not None:
-            self._fp_memo[new_key] = fp
+        self._publish(new_key, desc)
+        if desc.shadowed is not None:
+            self._unshadow(key, desc.shadowed)
+            desc.shadowed = None
         self._refresh_dependent_views(key)
         return self._rows_affected(0)
 
@@ -4719,8 +4686,8 @@ class Engine:
         self._assert_not_mixed(dest, "EXCHANGE PARTITION")
         self._assert_not_mixed(src, "EXCHANGE PARTITION")
         spec = m.group(2)
-        d_parts = self.table_partitions.get(dest)
-        s_parts = self.table_partitions.get(src)
+        d_parts = self._desc(dest).partition_cols
+        s_parts = self._desc(src).partition_cols
         if not d_parts or d_parts != s_parts:
             raise HiveQLUnsupportedError(
                 f"EXCHANGE PARTITION requires both tables partitioned by "
@@ -4740,8 +4707,8 @@ class Engine:
                 "(Hive: tables are not compatible)"
             )
         rel = self._static_partition_reldir(dest, spec)
-        src_dir = os.path.join(self.table_paths[src], rel)
-        dest_dir = os.path.join(self.table_paths[dest], rel)
+        src_dir = os.path.join(self.metastore[src].path, rel)
+        dest_dir = os.path.join(self.metastore[dest].path, rel)
         if not os.path.isdir(src_dir):
             raise HiveQLUnsupportedError(
                 f"EXCHANGE PARTITION: source has no partition {rel!r}"
@@ -4754,8 +4721,8 @@ class Engine:
         n = parquet_row_count(src_dir, self.spark)
         os.makedirs(os.path.dirname(dest_dir), exist_ok=True)
         shutil.move(src_dir, dest_dir)
-        self.register_table(dest, self.table_paths[dest], d_parts)
-        self.register_table(src, self.table_paths[src], s_parts)
+        self.register_table(dest, self.metastore[dest].path, d_parts)
+        self.register_table(src, self.metastore[src].path, s_parts)
         return self._rows_affected(n)
 
     def _run_rename_partition(self, m: re.Match[str]) -> DataFrame:
@@ -4769,8 +4736,8 @@ class Engine:
         key = self._resolve_dml_table(m.group(1), mutating=True)
         old_rel = self._static_partition_reldir(key, m.group(2))
         new_rel = self._static_partition_reldir(key, m.group(3))
-        old_dir = os.path.join(self.table_paths[key], old_rel)
-        new_dir = os.path.join(self.table_paths[key], new_rel)
+        old_dir = os.path.join(self.metastore[key].path, old_rel)
+        new_dir = os.path.join(self.metastore[key].path, new_rel)
         if not os.path.isdir(old_dir):
             raise HiveQLUnsupportedError(
                 f"RENAME PARTITION: no such partition {old_rel!r}"
@@ -4783,13 +4750,13 @@ class Engine:
         n = parquet_row_count(old_dir, self.spark)
         os.makedirs(os.path.dirname(new_dir), exist_ok=True)
         shutil.move(old_dir, new_dir)
-        pm = self.partition_formats.get(key)
+        pm = self._desc(key).part_formats
         if pm and old_rel in pm:
             # the partition keeps its storage descriptor under the
             # new spec (metastore SDS rides the rename)
             pm[new_rel] = pm.pop(old_rel)
         self.register_table(
-            key, self.table_paths[key], self.table_partitions.get(key)
+            key, self.metastore[key].path, self._desc(key).partition_cols
         )
         return self._rows_affected(n)
 
@@ -4804,8 +4771,7 @@ class Engine:
                 f"SET LOCATION: path does not exist: {location!r} "
                 "(a path-backed table needs readable parquet)"
             )
-        self.table_paths[key] = location
-        self.register_table(key, location, self.table_partitions.get(key))
+        self.register_table(key, location, self._desc(key).partition_cols)
         return self._rows_affected(0)
 
     # ------------------------------------------------------------------
@@ -4955,7 +4921,9 @@ class Engine:
         replaced via spark.sql without routing through Engine.sql)."""
         lowered = query.lower()
         mentioned: dict[str, object] = {}
-        for key in set(self.tables) | set(self.table_schemas):
+        for key, desc in self.metastore.items():
+            if desc.frame is None and desc.schema is None:
+                continue
             if re.search(rf"\b{re.escape(key)}\b", lowered):
                 try:
                     mentioned[key] = self._declared_schema(key)
@@ -5619,17 +5587,15 @@ class Engine:
     def _declared_schema(self, key: str):
         """Current declared schema: the overlay if one exists, else the
         file-discovered schema of the registered view."""
-        from pyspark.sql.types import StructType
-
-        if key in self.table_schemas:
-            return self.table_schemas[key]
-        return StructType(self.tables[key].schema.fields)
+        desc = self.metastore[key]
+        if desc.schema is not None:
+            return desc.schema
+        return StructType(desc.frame.schema.fields)
 
     def _set_declared_schema(self, key: str, schema) -> DataFrame:
-        self.table_schemas[key] = schema
-        self.register_table(
-            key, self.table_paths[key], self.table_partitions.get(key)
-        )
+        desc = self.metastore[key]
+        desc.schema = schema
+        self.register_table(key, desc.path, desc.partition_cols)
         return self._rows_affected(0)
 
     def _run_add_columns(self, m: re.Match[str]) -> DataFrame:
@@ -5650,7 +5616,7 @@ class Engine:
             raise HiveQLUnsupportedError(
                 f"ADD COLUMNS duplicates existing column(s) {dup}"
             )
-        parts = [p.lower() for p in self.table_partitions.get(key, [])]
+        parts = [p.lower() for p in self._desc(key).partition_cols]
         data = [f for f in schema.fields if f.name.lower() not in parts]
         part = [f for f in schema.fields if f.name.lower() in parts]
         added = [self._char_aware_field(n, t) for n, t in new_cols]
@@ -5690,7 +5656,7 @@ class Engine:
         cost as Hive rewriting the metastore SD. Files later rewritten
         by DML drop out of the epoch naturally (the fileset no longer
         matches disk)."""
-        path = self.table_paths.get(key)
+        path = self._desc(key).path
         if not path or not os.path.isdir(path):
             return
         rels = frozenset(
@@ -5702,9 +5668,9 @@ class Engine:
         if not rels:
             return
         schema = self._declared_schema(key)
-        self.schema_epochs.setdefault(key, []).append((rels, schema))
+        self.metastore[key].epochs.append((rels, schema))
 
-    def _epoch_union_frame(self, name: str, path: str):
+    def _epoch_union_frame(self, desc: TableDesc):
         """Conversion-aware read: files captured in a schema epoch scan
         under THEIR schema and CAST to the declared one; everything
         else scans declared directly. Returns None when no epoch file
@@ -5715,8 +5681,8 @@ class Engine:
         concat — no extra shuffle."""
         from pyspark.sql import functions as F
 
-        epochs = self.schema_epochs.get(name)
-        if not epochs or name not in self.table_schemas:
+        epochs, declared, path = desc.epochs, desc.schema, desc.path
+        if not epochs or declared is None:
             return None
         current = set(
             os.path.relpath(os.path.join(root, fn), path)
@@ -5724,7 +5690,6 @@ class Engine:
             for fn in files
             if fn.endswith(".parquet")
         )
-        declared = self.table_schemas[name]
 
         def conform(df):
             have = {f.name.lower(): f.name for f in df.schema.fields}
@@ -5750,7 +5715,7 @@ class Engine:
                                       for f in sorted(live)]))
             )
         if not frames:
-            self.schema_epochs.pop(name, None)
+            desc.epochs = []
             return None
         rest = current - claimed
         if rest:
@@ -5776,7 +5741,7 @@ class Engine:
 
         return FORMAT_SOURCES
 
-    def _mixed_format_frame(self, name: str, path: str):
+    def _mixed_format_frame(self, name: str, desc: TableDesc):
         """Per-partition storage-descriptor read
         (partition_wise_fileformat*.q): partitions whose recorded format
         differs from parquet scan with THEIR OWN DataSource, grouped by
@@ -5790,25 +5755,22 @@ class Engine:
         deserializer per partition SD, reference exec/MapOperator.java —
         here Catalyst gets one FileSourceScanExec per format instead of
         one serde per split)."""
-        pmap = self.partition_formats.get(name)
-        if not pmap:
-            return None
-        parts = self.table_partitions.get(name) or []
-        if not parts:
+        path, parts = desc.path, desc.partition_cols
+        if not desc.part_formats or not parts:
             return None
         live = set(self._partition_rels_at(path, len(parts)))
-        pmap = {r: f for r, f in pmap.items() if r in live and f != "parquet"}
+        pmap = {
+            r: f for r, f in desc.part_formats.items()
+            if r in live and f != "parquet"
+        }
+        desc.part_formats = pmap
         if not pmap:
-            self.partition_formats.pop(name, None)
             return None
-        self.partition_formats[name] = pmap
-        declared = self.table_schemas.get(name)
-        if declared is None:
+        declared = desc.schema
+        if declared is None and desc.frame is not None:
             # discover the data schema from the parquet partitions (or
             # the remembered frame) + partition column discovery
-            base = self.tables.get(name)
-            if base is not None:
-                declared = base.schema
+            declared = desc.frame.schema
         groups: dict[str, list[str]] = {}
         for rel in live:
             groups.setdefault(pmap.get(rel, "parquet"), []).append(rel)
@@ -5856,7 +5818,7 @@ class Engine:
         key = self._resolve_dml_table(table)
         new_cols = self._parse_col_defs(coldefs)
         schema = self._declared_schema(key)
-        parts = [p.lower() for p in self.table_partitions.get(key, [])]
+        parts = [p.lower() for p in self._desc(key).partition_cols]
         clash = [n for n, _t in new_cols if n.lower() in parts]
         if clash:
             raise HiveQLUnsupportedError(
@@ -5900,7 +5862,7 @@ class Engine:
         # an int→bigint widening must not keep the pre-alter min/max).
         # Partition-column stats are untouched (Hive forbids touching
         # partition columns here, enforced above).
-        stats = self.table_stats.get(key, {}).get("table_cols")
+        stats = (self._desc(key).stats or {}).get("table_cols")
         if stats is not None:
             new_by_lower = {n.lower(): (n, t) for n, t in new_cols}
             for cname in list(stats):
@@ -5924,7 +5886,7 @@ class Engine:
         from pyspark.sql.types import StructField, StructType
 
         key = self._resolve_dml_table(table)
-        parts = [p.lower() for p in self.table_partitions.get(key, [])]
+        parts = [p.lower() for p in self._desc(key).partition_cols]
         if col.lower() not in parts:
             raise HiveQLUnsupportedError(
                 f"ALTER PARTITION COLUMN: {col!r} is not a partition "
@@ -5955,7 +5917,7 @@ class Engine:
         new_cols = self._parse_col_defs(f"{new_name} {m.group(4)}")
         new_type = new_cols[0][1]
         schema = self._declared_schema(key)
-        parts = [p.lower() for p in self.table_partitions.get(key, [])]
+        parts = [p.lower() for p in self._desc(key).partition_cols]
         if old_name.lower() in parts:
             raise HiveQLUnsupportedError(
                 f"CHANGE COLUMN cannot alter partition column {old_name!r}"
@@ -6024,7 +5986,7 @@ class Engine:
         # retype must not keep serving the pre-alter min/max/NDV via
         # DESCRIBE t col; a pure rename re-keys the stats so they follow
         # the column instead of being orphaned under the dead name.
-        stats = self.table_stats.get(key, {}).get("table_cols")
+        stats = (self._desc(key).stats or {}).get("table_cols")
         if stats is not None and old_field is not None:
             entry = stats.pop(old_field.name, None)
             if entry is not None and new_type == old_field.dataType:
@@ -6039,7 +6001,7 @@ class Engine:
         key = self._resolve_dml_table(m.group(1))
         verb = m.group(2).upper()
         guarded = bool(m.group(3))
-        props = self.table_props.setdefault(key, {})
+        props = self.metastore[key].props
         if verb == "SET":
             for name, val in _split_assignments(m.group(4)):
                 props[name.strip().strip("'\"")] = val.strip().strip("'\"")
@@ -6098,19 +6060,20 @@ class Engine:
                 f"ALTER TABLE {table} SET FILEFORMAT: {table!r} is not "
                 "a table this Engine knows"
             )
-        if key in self.schema_epochs:
+        desc = self.metastore[key]
+        if desc.epochs:
             raise HiveQLUnsupportedError(
                 f"ALTER TABLE {table} SET FILEFORMAT: table has pending "
                 "schema-conversion epochs; rewrite it (INSERT OVERWRITE) "
                 "before changing its format"
             )
-        current_tbl = self.table_format.get(key, "parquet")
+        current_tbl = desc.format
         if part_spec:
             rel = self._static_partition_reldir(key, part_spec)
-            cur = self.partition_formats.get(key, {}).get(rel, "parquet")
+            cur = desc.part_formats.get(rel, "parquet")
             if new == cur:
                 return self._rows_affected(0)
-            pdir = os.path.join(self.table_paths[key], rel)
+            pdir = os.path.join(desc.path, rel)
             has_files = any(
                 files for _r, _d, files in os.walk(pdir)
             ) if os.path.isdir(pdir) else False
@@ -6123,13 +6086,13 @@ class Engine:
                     "partition instead (it adopts the table format)"
                 )
             if new == "parquet":
-                self.partition_formats.get(key, {}).pop(rel, None)
+                desc.part_formats.pop(rel, None)
             else:
-                self.partition_formats.setdefault(key, {})[rel] = new
+                desc.part_formats[rel] = new
             return self._rows_affected(0)
         if new == current_tbl:
             return self._rows_affected(0)
-        if not self.table_partitions.get(key):
+        if not desc.partition_cols:
             raise HiveQLUnsupportedError(
                 f"ALTER TABLE {table} SET FILEFORMAT {fmt}: the table "
                 f"is unpartitioned (currently {current_tbl}) — both "
@@ -6137,11 +6100,11 @@ class Engine:
                 "(Hive included) can serve; CREATE a new table STORED "
                 "AS the target format and INSERT ... SELECT to migrate"
             )
-        if self.table_schemas.get(key) is None and key in self.tables:
+        if desc.schema is None and desc.frame is not None:
             # remember the declared schema now — csv/json partition
             # scans need it even after every parquet partition is gone
-            self.table_schemas[key] = self.tables[key].schema
-        self.table_format[key] = new
+            desc.schema = desc.frame.schema
+        desc.format = new
         return self._rows_affected(0)
 
     #: Hive serde classes whose row layout the engine's physical
@@ -6192,12 +6155,12 @@ class Engine:
                 # uniform per partition already)
                 rel = self._static_partition_reldir(key, part_spec)
                 if not os.path.isdir(
-                    os.path.join(self.table_paths[key], rel)
+                    os.path.join(self.metastore[key].path, rel)
                 ):
                     raise HiveQLUnsupportedError(
                         f"SET SERDE: no such partition {rel!r}"
                     )
-            current_fmt = self.table_format.get(key, "parquet")
+            current_fmt = self._desc(key).format
         else:
             # catalog table (Spark itself refuses ALTER ... SERDE on
             # datasource tables) — record engine-side
@@ -6234,7 +6197,7 @@ class Engine:
                 "the metadata and fail every subsequent read; use SET "
                 "FILEFORMAT / INSERT OVERWRITE to migrate the data first"
             )
-        props = self.table_props.setdefault(key, {})
+        props = self._entry(key).props
         if serde is not None:
             props["serialization.lib"] = serde
         if props_txt:
@@ -6270,7 +6233,7 @@ class Engine:
         return "RELY" in tokens and "NORELY" not in tokens
 
     def _constraint_names(self, key: str) -> set[str]:
-        cons = self.table_constraints.get(key) or {}
+        cons = self._desc(key).constraints or {}
         names = set()
         if cons.get("pk"):
             names.add(cons["pk"]["name"].lower())
@@ -6280,7 +6243,7 @@ class Engine:
 
     def _assert_ref_table(self, ref: str, cols: list[str]) -> str:
         rkey = ref.split(".")[-1].lower()
-        if rkey not in self.table_paths and not (
+        if not self._desc(rkey).path and not (
             self._is_catalog_table(ref) or self._is_catalog_table(rkey)
         ):
             raise HiveQLUnsupportedError(
@@ -6361,7 +6324,7 @@ class Engine:
             raise HiveQLUnsupportedError(
                 f"CREATE TABLE {key}: constraints-only column list"
             )
-        self.table_constraints[key] = {"pk": pk, "fks": fks}
+        self._entry(key).constraints = {"pk": pk, "fks": fks}
         return (
             query[:open_idx + 1]
             + ", ".join(c.strip() for c in cols_out)
@@ -6373,7 +6336,7 @@ class Engine:
         (...) [REFERENCES r(...)] DISABLE NOVALIDATE [RELY]."""
         table, name, kind, cols_txt, ref, ref_cols_txt, tail = m.groups()
         key = table.split(".")[-1].lower()
-        if key not in self.table_paths and not (
+        if not self._desc(key).path and not (
             self._is_catalog_table(table) or self._is_catalog_table(key)
         ):
             raise HiveQLUnsupportedError(
@@ -6388,9 +6351,8 @@ class Engine:
                 f"constraint {name!r} already exists on {key!r}"
             )
         cols = [c.strip().lower() for c in cols_txt.split(",") if c.strip()]
-        cons = self.table_constraints.setdefault(
-            key, {"pk": None, "fks": []}
-        )
+        desc = self._entry(key)
+        cons = desc.constraints = desc.constraints or {"pk": None, "fks": []}
         if kind == "PRIMARY KEY":
             if ref:
                 raise HiveQLUnsupportedError(
@@ -6425,7 +6387,7 @@ class Engine:
     def _run_drop_constraint(self, m: re.Match[str]) -> DataFrame:
         table, name = m.group(1), m.group(2)
         key = table.split(".")[-1].lower()
-        cons = self.table_constraints.get(key)
+        cons = self._desc(key).constraints
         nl = name.lower()
         if cons:
             if cons.get("pk") and cons["pk"]["name"].lower() == nl:
@@ -6443,7 +6405,7 @@ class Engine:
     def _constraint_rows(self, key: str) -> list[tuple]:
         """DESCRIBE EXTENDED/FORMATTED's Constraints section
         (MetaDataFormatUtils.getConstraintsInformation)."""
-        cons = self.table_constraints.get(key)
+        cons = self._desc(key).constraints
         if not cons or not (cons.get("pk") or cons.get("fks")):
             return []
         rows: list[tuple] = [("", "", None)]
@@ -6486,7 +6448,7 @@ class Engine:
             not modifier
             or spec
             or column
-            or key not in self.table_constraints
+            or self._desc(key).constraints is None
             or not (
                 self._is_catalog_table(table) or self._is_catalog_table(key)
             )
@@ -6533,15 +6495,13 @@ class Engine:
                 f"{provider} tables have no per-partition descriptors "
                 "to manage"
             )
-        self.table_schemas[key] = self.spark.table(name).schema
+        desc = self._entry(key)
+        desc.schema = self.spark.table(name).schema
         if provider != "parquet":
             if part_cols:
                 rels = self._partition_rels_at(location, len(part_cols))
-                if rels:
-                    self.partition_formats[key] = {
-                        r: provider for r in rels
-                    }
-            self.table_format[key] = provider
+                desc.part_formats = {r: provider for r in rels}
+            desc.format = provider
         self.register_table(key, location, part_cols or None)
         return key
 
@@ -6589,8 +6549,8 @@ class Engine:
         table, part_spec = m.groups()
         if self._dml_registered(table):
             key = self._resolve_dml_table(table)
-            path = self.table_paths[key]
-            fmt = self.table_format.get(key, "parquet")
+            path = self.metastore[key].path
+            fmt = self._desc(key).format
             schema = self._declared_schema(key)
         else:
             key = table.split(".")[-1].lower()
@@ -6603,7 +6563,7 @@ class Engine:
             fmt = (info.get("Provider") or "parquet").lower()
             path = re.sub(r"^file:(//)?", "", info.get("Location") or "")
             schema = self.spark.table(table).schema
-        parts = self.table_partitions.get(key) or (
+        parts = self._desc(key).partition_cols or (
             self._catalog_partition_cols(table)
             if self._is_catalog_table(table) else []
         )
@@ -6620,7 +6580,7 @@ class Engine:
                 raise HiveQLUnsupportedError(
                     f"SHOW TABLE EXTENDED: no such partition {rel!r}"
                 )
-            fmt = self.partition_formats.get(key, {}).get(rel, "parquet")
+            fmt = self._desc(key).part_formats.get(rel, "parquet")
             target_dir = os.path.join(path, rel)
         sizes = [
             os.path.getsize(os.path.join(root, f))
@@ -6671,10 +6631,10 @@ class Engine:
         table, prop = m.groups()
         if self._dml_registered(table):
             key = self._resolve_dml_table(table)
-            props = dict(self.table_props.get(key, {}))
+            props = dict(self._desc(key).props)
         else:
             key = table.split(".")[-1].lower()
-            if key not in self.table_props:
+            if not self._desc(key).props:
                 return None
             # catalog table with engine-side props: merge Spark's own
             # TBLPROPERTIES under the engine's recorded ones (the
@@ -6685,7 +6645,7 @@ class Engine:
                     f"SHOW TBLPROPERTIES {table}"
                 ).collect()
             }
-            props.update(self.table_props.get(key, {}))
+            props.update(self._desc(key).props)
         if prop is not None:
             name = prop.strip().strip("'\"")
             if name not in props:
@@ -6727,7 +6687,7 @@ class Engine:
         )
         part_on = m.group(5)
         body = m.group(6).rstrip().rstrip(";")
-        if key in self.table_paths or (
+        if self._desc(key).path or (
             key not in self.views and self._is_catalog_table(key)
         ):
             raise HiveQLUnsupportedError(
@@ -6754,11 +6714,7 @@ class Engine:
         note_view_override(self.spark, key)
         df.createOrReplaceTempView(key)
         replaced = key in self.views
-        self.views[key] = body
-        if aliases:
-            self.view_aliases[key] = aliases
-        else:
-            self.view_aliases.pop(key, None)
+        view = self.views[key] = ViewDesc(body, aliases or None)
         if part_on is not None:
             # Hive's PARTITIONED ON views (SemanticAnalyzer
             # validateCreateView): pure METADATA — partitions are
@@ -6774,9 +6730,7 @@ class Engine:
                     "columns must be the LAST columns of the view "
                     f"(view outputs {df.columns})"
                 )
-            self.view_partitions[key] = (cols, set())
-        else:
-            self.view_partitions.pop(key, None)
+            view.partition_cols = cols
         if replaced:
             self._refresh_dependent_views(key)
         return self._rows_affected(0)
@@ -6790,12 +6744,13 @@ class Engine:
         key = m.group(1).split(".")[-1].lower()
         action = m.group(2).upper()
         if_clause = bool(m.group(3))
-        if key not in self.view_partitions:
+        view = self.views.get(key)
+        if view is None or view.partition_cols is None:
             raise HiveQLUnsupportedError(
                 f"ALTER VIEW ... PARTITION: {key!r} is not a "
                 "PARTITIONED ON view"
             )
-        cols, specs = self.view_partitions[key]
+        cols, specs = view.partition_cols, view.part_specs
         static, _ = self._resolve_partition_spec(
             m.group(4), cols, self.spark.table(key).schema, "ALTER VIEW"
         )
@@ -6819,10 +6774,10 @@ class Engine:
     def _run_show_view_partitions(self, m: re.Match[str]) -> DataFrame | None:
         """SHOW PARTITIONS over a PARTITIONED ON view: the explicitly
         ADDed spec list in Hive's col=val/... line format."""
-        key = m["table"].split(".")[-1].lower()
-        if key not in self.view_partitions:
+        view = self.views.get(m["table"].split(".")[-1].lower())
+        if view is None or view.partition_cols is None:
             return None
-        cols, specs = self.view_partitions[key]
+        cols, specs = view.partition_cols, view.part_specs
         order = {c.lower(): i for i, c in enumerate(cols)}
         lines = sorted(
             "/".join(
@@ -6848,20 +6803,18 @@ class Engine:
         okey = old.split(".")[-1].lower()
         nkey = new.split(".")[-1].lower()
         if okey in self.views:
-            if nkey in self.views or nkey in self.table_paths:
+            if nkey in self.views or nkey in self.metastore:
                 raise HiveQLUnsupportedError(
                     f"ALTER VIEW RENAME: target {nkey!r} already exists"
                 )
-            body = self.views.pop(okey)
-            self.views[nkey] = body
-            for store in (self.view_aliases, self.view_partitions):
-                if okey in store:
-                    store[nkey] = store.pop(okey)
+            view = self.views[nkey] = self.views.pop(okey)
             df = self.spark.sql(
-                rewrite_hiveql(self._expand_macros(body), spark=self.spark)
+                rewrite_hiveql(
+                    self._expand_macros(view.body), spark=self.spark
+                )
             )
-            if nkey in self.view_aliases:
-                df = df.toDF(*self.view_aliases[nkey])
+            if view.aliases:
+                df = df.toDF(*view.aliases)
             note_view_override(self.spark, nkey)
             note_view_override(self.spark, okey)
             df.createOrReplaceTempView(nkey)
@@ -6886,7 +6839,7 @@ class Engine:
     def _run_alter_view(self, m: re.Match[str]) -> DataFrame:
         view, body = m.groups()
         key = view.split(".")[-1].lower()
-        if key in self.table_paths:
+        if self._desc(key).path:
             raise HiveQLUnsupportedError(
                 f"ALTER VIEW: {key!r} is a base table, not a view"
             )
@@ -6897,8 +6850,8 @@ class Engine:
         self.spark.sql(
             rewrite_hiveql(self._expand_macros(body), spark=self.spark)
         ).createOrReplaceTempView(key)
-        self.views[key] = body
-        self.view_aliases.pop(key, None)
+        self.views[key].body = body
+        self.views[key].aliases = None
         self._refresh_dependent_views(key)
         return self._rows_affected(0)
 
@@ -6917,18 +6870,19 @@ class Engine:
         a stale pre-change plan would silently return wrong data."""
         done = _done if _done is not None else set()
         done.add(changed.lower())
-        for vname, body in list(self.views.items()):
+        for vname, view in list(self.views.items()):
             if vname in done or not re.search(
-                rf"\b{re.escape(changed)}\b", body, re.IGNORECASE
+                rf"\b{re.escape(changed)}\b", view.body, re.IGNORECASE
             ):
                 continue
             try:
                 df = self.spark.sql(
-                    rewrite_hiveql(self._expand_macros(body), spark=self.spark)
+                    rewrite_hiveql(
+                        self._expand_macros(view.body), spark=self.spark
+                    )
                 )
-                aliases = self.view_aliases.get(vname)
-                if aliases:
-                    df = df.toDF(*aliases)
+                if view.aliases:
+                    df = df.toDF(*view.aliases)
                 note_view_override(self.spark, vname)
                 df.createOrReplaceTempView(vname)
             except Exception:
@@ -6945,7 +6899,7 @@ class Engine:
         for catalog views this Engine doesn't manage."""
         name = m.group(2)
         key = name.split(".")[-1].lower()
-        if key in self.table_paths:
+        if self._desc(key).path:
             raise HiveQLUnsupportedError(
                 f"Cannot drop a base table {key!r} with DROP VIEW"
             )
@@ -6954,8 +6908,6 @@ class Engine:
         note_view_override(self.spark, key)
         self.spark.catalog.dropTempView(key)
         del self.views[key]
-        self.view_aliases.pop(key, None)
-        self.view_partitions.pop(key, None)
         # Views stacked on the dropped view must not keep serving their
         # stale pre-drop plan — resolve-or-drop each dependent (Hive's
         # late binding would error at query time, never return old data).
@@ -6973,56 +6925,39 @@ class Engine:
             raise HiveQLUnsupportedError(
                 f"Cannot drop a view {key!r} with DROP TABLE"
             )
-        self.table_constraints.pop(key, None)
-        if key not in self.table_paths:
+        desc = self.metastore.pop(key, None)
+        if desc is None or desc.path is None:
+            # a catalog table's engine-side props/constraints die with
+            # it; Spark drops the table itself
             return None
-        self.table_paths.pop(key)
-        self.table_partitions.pop(key, None)
-        self.table_schemas.pop(key, None)
-        self.table_props.pop(key, None)
-        self.table_format.pop(key, None)
-        self.partition_formats.pop(key, None)
-        self.table_stats.pop(key, None)
-        # Epochs die with the table (a temp table's own ALTER-created
-        # epochs are discarded here BEFORE the shadow restore below).
-        self.schema_epochs.pop(key, None)
-        self._invalidate_stats(key)
-        self.tables.pop(key, None)
         note_view_override(self.spark, key)
         self.spark.catalog.dropTempView(key)
-        if self.temp_tables.pop(key, None) is not None:
+        if desc.shadowed is not None:
             # dropping a TEMPORARY table un-shadows whatever it hid
-            # (SessionHiveMetaStoreClient.dropTempTable — the permanent
-            # table resolves again)
-            shadow = self.temp_shadowed.pop(key, None)
-            if shadow and shadow["kind"] == "path":
-                if shadow.get("schema") is not None:
-                    self.table_schemas[key] = shadow["schema"]
-                if shadow.get("props") is not None:
-                    self.table_props[key] = shadow["props"]
-                if shadow.get("format") is not None:
-                    self.table_format[key] = shadow["format"]
-                if shadow.get("pformats") is not None:
-                    self.partition_formats[key] = shadow["pformats"]
-                if shadow.get("epochs") is not None:
-                    self.schema_epochs[key] = shadow["epochs"]
-                self.register_table(
-                    key, shadow["path"], shadow.get("partitions")
-                )
-            self._refresh_dependent_views(key)
-            return self._rows_affected(0)
+            self._unshadow(key, desc.shadowed)
         # A view over the dropped table must not keep its bound plan and
         # silently return the dropped table's data — resolve-or-drop it
         # (Hive late binding errors when the view is queried).
         self._refresh_dependent_views(key)
         return self._rows_affected(0)
 
+    def _unshadow(self, key: str, desc: TableDesc) -> None:
+        """Give ``key`` back the record a TEMPORARY table hid, whole
+        (SessionHiveMetaStoreClient.dropTempTable — the permanent table
+        resolves again with its metadata intact). A catalog table's
+        record has no frame: once the temp view is gone, Spark's catalog
+        resolves the name."""
+        if desc.frame is None:
+            self.metastore[key] = desc
+        else:
+            self._publish(key, desc)
+
     def _schema_split(self, key: str):
         """(data_fields, partition_fields) for a registered table —
         partition columns come last in the parquet-discovered schema but
         are matched by name against the registered partition spec."""
-        parts = [p.lower() for p in self.table_partitions.get(key, [])]
-        fields = self.tables[key].schema.fields
+        parts = [p.lower() for p in self._desc(key).partition_cols]
+        fields = self.metastore[key].frame.schema.fields
         data = [f for f in fields if f.name.lower() not in parts]
         part = [f for f in fields if f.name.lower() in parts]
         return data, part
@@ -7042,7 +6977,8 @@ class Engine:
             # with the same list, or the emitted DDL yields different
             # column names than the original (Hive stores viewExpandedText
             # with the alias list intact).
-            aliases = self.view_aliases.get(vkey)
+            view = self.views[vkey]
+            aliases = view.aliases
             alias_sql = (
                 "(" + ", ".join(f"`{a}`" for a in aliases) + ") "
                 if aliases
@@ -7050,7 +6986,7 @@ class Engine:
             )
             return local_frame(
                 self.spark,
-                [(f"CREATE VIEW `{vkey}` {alias_sql}AS {self.views[vkey]}",)],
+                [(f"CREATE VIEW `{vkey}` {alias_sql}AS {view.body}",)],
                 "createtab_stmt string",
             )
         key = self._resolve_dml_table(table)
@@ -7072,7 +7008,7 @@ class Engine:
             )
         lines.append("STORED AS PARQUET")
         lines.append("LOCATION")
-        lines.append(f"  '{self.table_paths[key]}'")
+        lines.append(f"  '{self.metastore[key].path}'")
         return local_frame(
             self.spark,
             [("\n".join(lines),)], "createtab_stmt string"
@@ -7099,8 +7035,8 @@ class Engine:
                 rows += [
                     (f.name, f.dataType.simpleString(), None) for f in part
                 ]
-            path = self.table_paths[key]
-            fp, total, n_files = self._fingerprint_and_size(path)
+            path = self.metastore[key].path
+            fp, total, n_files, _ = self._fingerprint_and_size(path)
             rows += [
                 ("", "", None),
                 ("# Detailed Table Information", "", None),
@@ -7111,7 +7047,7 @@ class Engine:
                 ("InputFormat", "parquet", None),
             ]
             rows += self._accurate_stats_rows(key, "", fp)
-            props = self.table_props.get(key)
+            props = self._desc(key).props
             if props:
                 rows += [("", "", None), ("# Table Parameters", "", None)]
                 rows += [(k, v, None) for k, v in sorted(props.items())]
@@ -7149,7 +7085,7 @@ class Engine:
         clears them while numFiles/totalSize stay current)."""
         key = self._resolve_dml_table(table)
         rel = self._static_partition_reldir(key, spec)
-        path = self.table_paths[key]
+        path = self.metastore[key].path
         pdir = os.path.join(path, rel)
         if not os.path.isdir(pdir):
             raise HiveQLUnsupportedError(
@@ -7167,7 +7103,10 @@ class Engine:
             rows += [
                 (f.name, f.dataType.simpleString(), None) for f in part
             ]
-            _pfp, total, n_files = self._fingerprint_and_size(pdir)
+            fp, _s, _n, sizes = self._fingerprint_and_size(
+                path, len(self.metastore[key].partition_cols)
+            )
+            total, n_files = sizes.get(rel, (0, 0))
             rows += [
                 ("", "", None),
                 ("# Detailed Partition Information", "", None),
@@ -7176,7 +7115,7 @@ class Engine:
                 ("numFiles", str(n_files), None),
                 ("totalSize", str(total), None),
             ]
-            rows += self._accurate_stats_rows(key, rel)
+            rows += self._accurate_stats_rows(key, rel, fp)
         return local_frame(
             self.spark,
             rows, "col_name string, data_type string, comment string"
@@ -7191,7 +7130,7 @@ class Engine:
         partition column is a typed error (Hive's validation)."""
         table, spec = m.groups()
         key = self._resolve_dml_table(table)
-        if not self.table_partitions.get(key):
+        if not self._desc(key).partition_cols:
             raise HiveQLUnsupportedError(f"table {key!r} is not partitioned")
         rels = self._match_partition_rels(
             self._partition_rels(key),
@@ -7215,7 +7154,7 @@ class Engine:
         key = self._resolve_dml_table(m.group(1), mutating=True)
         action = m.group(2).upper()
         guarded = bool(m.group(3))
-        path = self.table_paths[key]
+        path = self.metastore[key].path
         # Hive's grammar accepts SEVERAL PARTITION (...) specs in one
         # ADD/DROP (add_part_exist.q: ADD IF NOT EXISTS PARTITION (a)
         # PARTITION (b) PARTITION (c))
@@ -7244,7 +7183,7 @@ class Engine:
                 if exists:
                     n += parquet_row_count(dest, self.spark)
                     shutil.rmtree(dest)
-        self.register_table(key, path, self.table_partitions.get(key))
+        self.register_table(key, path, self._desc(key).partition_cols)
         return self._rows_affected(n)
 
     def _run_concatenate(self, m: re.Match[str]) -> DataFrame:
@@ -7263,42 +7202,22 @@ class Engine:
         )
 
         key = self._resolve_dml_table(m.group(1), mutating=True)
+        desc = self.metastore[key]
         fmt = "parquet"
         if m.group(2):
             rel = self._static_partition_reldir(key, m.group(2))
             # a partition compacts under ITS OWN storage descriptor
             # (Hive's merge task binds the partition SD; orc_merge*.q)
-            fmt = self.partition_formats.get(key, {}).get(rel, "parquet")
-            dest = os.path.join(self.table_paths[key], rel)
+            fmt = desc.part_formats.get(rel, "parquet")
+            dest = os.path.join(desc.path, rel)
         else:
             self._assert_not_mixed(key, "CONCATENATE")
-            dest = self.table_paths[key]
-        path = self.table_paths[key]
-        src, opts = self._MIXED_FORMAT_SOURCES[fmt]
-
-        def _reader():
-            rdr = self.spark.read
-            if fmt != "parquet":
-                from pyspark.sql.types import StructType
-
-                declared = self.table_schemas.get(key)
-                if declared is not None:
-                    parts_l = {
-                        p.lower()
-                        for p in self.table_partitions.get(key, [])
-                    }
-                    rdr = rdr.schema(StructType([
-                        f for f in declared.fields
-                        if f.name.lower() not in parts_l
-                    ]))
-                for k, v in opts.items():
-                    rdr = rdr.option(k, v)
-            return rdr.format(src)
+            dest = desc.path
 
         def _count(d):
             if fmt == "parquet":
                 return parquet_row_count(d, self.spark)
-            return _reader().load(d).count()
+            return self._partition_reader(desc, fmt).load(d).count()
 
         before = _count(dest)
         size = sum(
@@ -7308,7 +7227,7 @@ class Engine:
             if not f.startswith(("_", "."))
         )
         n_files = max(1, math.ceil(size / (128 * 1024 * 1024)))
-        df = _reader().load(dest)
+        df = self._partition_reader(desc, fmt).load(dest)
         staging = f"{dest.rstrip('/')}__concat_staging"
         shutil.rmtree(staging, ignore_errors=True)
         w = df.coalesce(n_files).write
@@ -7321,8 +7240,26 @@ class Engine:
                 "CONCATENATE row-count mismatch — aborted before swap"
             )
         _swap_dirs(dest, staging)
-        self.register_table(key, path, self.table_partitions.get(key))
+        self.register_table(key, desc.path, desc.partition_cols)
         return self._rows_affected(before)
+
+    def _partition_reader(self, desc: TableDesc, fmt: str):
+        """A reader of one partition directory of ``desc`` stored as
+        ``fmt``: parquet as is; another format under the declared DATA
+        columns (partition values live in the directory name) with its
+        DataSource options."""
+        src, opts = self._MIXED_FORMAT_SOURCES[fmt]
+        rdr = self.spark.read
+        if fmt != "parquet":
+            if desc.schema is not None:
+                parts_l = {p.lower() for p in desc.partition_cols}
+                rdr = rdr.schema(StructType([
+                    f for f in desc.schema.fields
+                    if f.name.lower() not in parts_l
+                ]))
+            for k, v in opts.items():
+                rdr = rdr.option(k, v)
+        return rdr.format(src)
 
     def _run_multi_insert(self, m: re.Match[str]) -> DataFrame | None:
         """Hive multi-insert: ``FROM src INSERT ... SELECT cols [WHERE]
@@ -7517,8 +7454,8 @@ class Engine:
         )
         key = self._resolve_dml_table(table, mutating=True)
         self._assert_not_mixed(key, "LOAD DATA")
-        path = self.table_paths[key]
-        parts = self.table_partitions.get(key)
+        path = self.metastore[key].path
+        parts = self._desc(key).partition_cols
         if parts and not partspec:
             raise HiveQLUnsupportedError(
                 f"LOAD DATA into partitioned table {key!r} requires a "
@@ -7592,8 +7529,8 @@ class Engine:
             [c.strip() for c in m.group(4).split(",")] if m.group(4) else None
         )
         body = m.group(5).rstrip().rstrip(";")
-        path = self.table_paths[key]
-        parts = self.table_partitions.get(key, [])
+        path = self.metastore[key].path
+        parts = self._desc(key).partition_cols
         target = self._target_frame(key)
         fields = {f.name: f.dataType for f in target.schema.fields}
         sfields = {f.name: f for f in target.schema.fields}
@@ -7622,8 +7559,8 @@ class Engine:
         # .q): new partitions and OVERWRITEs adopt the TABLE's current
         # format; an append into an existing partition keeps the
         # PARTITION's own descriptor (its files must stay homogeneous).
-        fmt = self.table_format.get(key, "parquet")
-        pmap = self.partition_formats.get(key, {})
+        fmt = self._desc(key).format
+        pmap = self._desc(key).part_formats
         if parts and (fmt != "parquet" or pmap):
             if fully_static and not overwrite:
                 pdir = os.path.join(path, static_rel)
@@ -7685,14 +7622,12 @@ class Engine:
             written_rels=written,
         )
         if parts and (fmt != "parquet" or pmap):
-            pm = self.partition_formats.setdefault(key, {})
+            pm = self.metastore[key].part_formats
             for r in written:
                 if fmt == "parquet":
                     pm.pop(r, None)
                 else:
                     pm[r] = fmt
-            if not pm:
-                self.partition_formats.pop(key, None)
         self.register_table(key, path, parts or None)
         if auto:
             cols = None
@@ -7810,8 +7745,8 @@ class Engine:
         talias = m.group(2) or key
         src_spec, salias = m.group(3), m.group(4)
         on_cond, when_part = m.group(5), m.group(6)
-        path = self.table_paths[key]
-        parts = self.table_partitions.get(key)
+        path = self.metastore[key].path
+        parts = self._desc(key).partition_cols
         target = self._target_frame(key)
 
         if src_spec.startswith("("):
@@ -8278,7 +8213,7 @@ class Engine:
                 )
         return self._avro_native_memo
 
-    def _avro_py_frame(self, key: str, path: str) -> DataFrame:
+    def _avro_py_frame(self, key: str, desc: TableDesc) -> DataFrame:
         """Read an engine-managed avro_py table: pure-python container
         decode over a distributed binaryFile scan, or an empty relation
         with the declared schema when no files exist yet (a freshly
@@ -8287,21 +8222,18 @@ class Engine:
 
         from hive_2_3_2_spark.sources.avro_py import read_avro_py
 
-        if os.path.isdir(path) and _glob.glob(
-            os.path.join(path, "*.avro")
+        if os.path.isdir(desc.path) and _glob.glob(
+            os.path.join(desc.path, "*.avro")
         ):
-            df = read_avro_py(self.spark, path)
-        else:
-            schema = self.table_schemas.get(key)
-            if schema is None:
-                raise ValueError(
-                    f"no .avro files and no declared schema for {key!r}"
-                )
-            df = local_frame(self.spark, [], schema)
-        if key in self.table_schemas:
-            df = self._apply_char_read_semantics(
-                df, self.table_schemas[key]
+            df = read_avro_py(self.spark, desc.path)
+        elif desc.schema is None:
+            raise ValueError(
+                f"no .avro files and no declared schema for {key!r}"
             )
+        else:
+            df = local_frame(self.spark, [], desc.schema)
+        if desc.schema is not None:
+            df = self._apply_char_read_semantics(df, desc.schema)
         return df
 
     def _run_create_avro_fallback(
@@ -8340,7 +8272,7 @@ class Engine:
                 "would override the declared schema — out of scope)"
             )
         if (
-            key in self.table_paths
+            self._desc(key).path
             or key in self.views
             or self._is_catalog_table(key)
         ):
@@ -8386,8 +8318,7 @@ class Engine:
                 StructField(n, t, True)
                 for n, t in self._parse_col_defs(coldefs)
             ])
-        self.table_schemas[key] = schema
-        self.table_format[key] = "avro"
+        self.metastore[key] = TableDesc(schema=schema, format="avro")
         self.register_table(key, path)
         return self._rows_affected(0)
 
@@ -8445,7 +8376,7 @@ class Engine:
             parts[-2].lower() if len(parts) > 1
             else self.spark.catalog.currentDatabase().lower()
         )
-        if key in self.temp_tables or key in self.views:
+        if self._desc(key).temp_db is not None or key in self.views:
             # a second TEMP table of the same name is Hive's
             # "already exists"; shadowing a VIEW is not a thing the
             # session metastore does either
@@ -8462,8 +8393,8 @@ class Engine:
             df = self._body_df(body)
         elif like_src is not None:
             src_key = like_src.split(".")[-1].lower()
-            if src_key in self.tables:
-                template = self.tables[src_key].schema
+            if self._desc(src_key).frame is not None:
+                template = self.metastore[src_key].frame.schema
             else:
                 template = self.spark.table(like_src).schema
             df = local_frame(self.spark, [], template)
@@ -8475,40 +8406,19 @@ class Engine:
                 for n, t in self._parse_col_defs(coldefs)
             ]
             df = local_frame(self.spark, [], StructType(fields))
-        # Shadow snapshot: Hive's session metastore resolves temp tables
-        # FIRST, hiding a same-named permanent table until DROP
-        # (temp_table.q's `create temporary table s as select * from s`;
-        # temp_table_precedence.q). Save whatever this name resolved to.
-        if key in self.table_paths:
-            self.temp_shadowed[key] = {
-                "kind": "path",
-                "path": self.table_paths[key],
-                "partitions": self.table_partitions.get(key),
-                "schema": self.table_schemas.get(key),
-                "props": self.table_props.get(key),
-                "format": self.table_format.get(key),
-                "pformats": self.partition_formats.get(key),
-                # Pending schema-conversion epochs belong to the HIDDEN
-                # permanent table: move them into the shadow so a read
-                # (or later ALTER) of the temp table can neither apply
-                # them to the temp files nor drop the bookkeeping when
-                # no epoch file survives under the temp path.
-                "epochs": self.schema_epochs.pop(key, None),
-            }
-        elif self._is_catalog_table(name) or self._is_catalog_table(key):
-            # the temp view registered below shadows the catalog table;
-            # DROP just removes the view and the catalog wins again
-            self.temp_shadowed[key] = {"kind": "catalog"}
         path = os.path.join(
             tempfile.mkdtemp(prefix="hive232_tmp_tbl_"), key
         )
         df.write.parquet(path)
-        for store in (self.table_schemas, self.table_props,
-                      self.table_format, self.partition_formats,
-                      self.table_partitions):
-            store.pop(key, None)
+        # Hive's session metastore resolves temp tables FIRST, hiding a
+        # same-named permanent table until DROP (temp_table.q's `create
+        # temporary table s as select * from s`;
+        # temp_table_precedence.q): the temp table starts from its own
+        # empty record and keeps the one it hides, whole.
+        self.metastore[key] = TableDesc(
+            temp_db=decl_db, shadowed=self.metastore.get(key)
+        )
         self.register_table(key, path)
-        self.temp_tables[key] = decl_db
         return self._rows_affected(0)
 
     def _run_insert_directory(self, m: re.Match[str]) -> DataFrame:
@@ -8573,9 +8483,11 @@ class Engine:
         files = [re.sub(r"^file:/+", "/", f) for f in df.inputFiles()]
         tables: set[str] = set()
         part_dirs: dict[str, set[str]] = {}
-        for key, path in self.table_paths.items():
-            norm = os.path.abspath(path)
-            has_parts = bool(self.table_partitions.get(key))
+        for key, d in self.metastore.items():
+            if d.path is None:
+                continue
+            norm = os.path.abspath(d.path)
+            has_parts = bool(d.partition_cols)
             for fp in files:
                 if not (fp == norm or fp.startswith(norm + os.sep)):
                     continue
@@ -8601,8 +8513,8 @@ class Engine:
                 last_key = next(
                     (
                         k
-                        for k, p in self.table_paths.items()
-                        if os.path.abspath(p) == loc_path
+                        for k, d in self.metastore.items()
+                        if d.path and os.path.abspath(d.path) == loc_path
                     ),
                     None,
                 )
@@ -8619,12 +8531,12 @@ class Engine:
                 last_key = None
         partitions: set[str] = set()
         for key, dirs in part_dirs.items():
-            pcols = self.table_partitions[key]
+            pcols = self.metastore[key].partition_cols
             selected = dirs
             conds = filters_by_key.get(key)
             if conds:
                 try:
-                    vals = self.tables[key].select(*pcols).distinct()
+                    vals = self.metastore[key].frame.select(*pcols).distinct()
                     for c in conds:
                         vals = vals.filter(F.expr(c))
                     keep = {

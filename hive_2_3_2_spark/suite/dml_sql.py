@@ -339,7 +339,6 @@ def ddl_sql_export_import(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(exp, ignore_errors=True)
     eng = Engine(spark=spark)
     eng.register_table("orders_export_src", path, ["o_orderpriority"])
-    eng.table_paths.pop("orders_exp_roundtrip", None)
     eng.sql(f"EXPORT TABLE orders_export_src TO '{exp}'").collect()
     eng.sql(f"IMPORT TABLE orders_exp_roundtrip FROM '{exp}'").collect()
     return (

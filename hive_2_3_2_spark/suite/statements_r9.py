@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hive_2_3_2_spark.engine import Engine
+from hive_2_3_2_spark.engine import Engine, TableDesc
 from hive_2_3_2_spark.suite import query
 
 
@@ -128,9 +128,9 @@ def op_partitionwise_fileformat(
     )
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path)
-    eng.table_schemas["pwf_orders"] = spark.createDataFrame(
+    eng.metastore["pwf_orders"] = TableDesc(schema=spark.createDataFrame(
         [], "o_orderkey bigint, o_totalprice double, band string"
-    ).schema
+    ).schema)
     eng.register_table("pwf_orders", path, ["band"])
     sel = (
         "select o_orderkey, o_totalprice from orders "

@@ -13,8 +13,8 @@
    SHOW TBLPROPERTIES (merged view), and a cross-physical-format serde
    flip (OrcSerde on a parquet table) is a typed error instead of a
    silently-inert descriptor.
-5. low — register_table rolls back table_paths/table_partitions when
-   the read fails, so a failed registration leaves consistent state.
+5. low — register_table keeps the table's old path and partition
+   columns when the read fails, so a failed registration leaves consistent state.
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ import os
 
 import pytest
 
-from hive_2_3_2_spark.engine import Engine, HiveQLUnsupportedError
+from hive_2_3_2_spark.engine import Engine, HiveQLUnsupportedError, TableDesc
 
 
 @pytest.fixture()
@@ -47,7 +47,7 @@ def test_temp_table_shadow_preserves_schema_epochs(eng, spark):
         "set hive.metastore.disallow.incompatible.col.type.changes=false"
     )
     eng.sql("alter table base change key key int")
-    assert "base" in eng.schema_epochs
+    assert eng.metastore["base"].epochs
     before = sorted(
         (r.key, r.value) for r in eng.sql("select * from base").collect()
     )
@@ -56,13 +56,15 @@ def test_temp_table_shadow_preserves_schema_epochs(eng, spark):
     eng.sql(
         "create temporary table base as select 1 as key, 'x' as value"
     )
-    assert "base" not in eng.schema_epochs  # moved into the shadow
+    # the epochs stay with the hidden record, not the temp table's
+    assert eng.metastore["base"].epochs == []
+    assert eng.metastore["base"].shadowed.epochs
     assert [tuple(r) for r in eng.sql("select * from base").collect()] \
         == [(1, "x")]
     # an ALTER on the TEMP table must not touch the shadowed epochs
     eng.sql("alter table base add columns (extra string)")
     eng.sql("drop table base")
-    assert "base" in eng.schema_epochs
+    assert eng.metastore["base"].epochs
     after = sorted(
         (r.key, r.value) for r in eng.sql("select * from base").collect()
     )
@@ -72,7 +74,7 @@ def test_temp_table_shadow_preserves_schema_epochs(eng, spark):
 def test_strip_temp_db_quals_leaves_longer_chains_alone(eng):
     """ADVICE #2: a temp table declared in db 'default' must not
     rewrite the 'default.t' TAIL of spark_catalog.default.t."""
-    eng.temp_tables["t"] = "default"
+    eng.metastore["t"] = TableDesc(temp_db="default")
     out = eng._strip_temp_db_quals("select * from spark_catalog.default.t")
     assert out == "select * from spark_catalog.default.t"
     assert eng._strip_temp_db_quals("select * from default.t") \
@@ -142,19 +144,18 @@ def test_catalog_serde_props_observable_and_cross_format_refused(
 
 def test_register_table_rolls_back_metadata_on_bad_path(eng, tmp_path):
     """ADVICE #5: a failed re-registration (unreadable path) must not
-    leave table_paths pointing at the new path while the old frame
+    leave the record pointing at the new path while the old frame
     still serves."""
-    good = eng.table_paths["base"]
+    good = eng.metastore["base"].path
     bad = os.path.join(str(tmp_path), "definitely-not-there")
     with pytest.raises(Exception):
         eng.register_table("base", bad)
-    assert eng.table_paths["base"] == good
-    assert "base" not in eng.table_partitions
+    assert eng.metastore["base"].path == good
+    assert eng.metastore["base"].partition_cols == []
     # and a never-registered name leaves no metadata behind
     with pytest.raises(Exception):
         eng.register_table("ghost", bad, ["dt"])
-    assert "ghost" not in eng.table_paths
-    assert "ghost" not in eng.table_partitions
+    assert "ghost" not in eng.metastore
 
 
 def test_groupby_integer_literal_is_constant_like_hive(spark):

@@ -46,12 +46,12 @@ def test_avrocountemptytbl_flow(eng):
     got = sorted(r.a for r in eng.sql("select * from emptyavro").collect())
     assert got == [0, 100]  # golden: string '100' cast into int a
     # the files on disk are REAL avro containers
-    path = eng.table_paths["emptyavro"]
+    path = eng.metastore["emptyavro"].path
     files = glob.glob(os.path.join(path, "*.avro"))
     assert files
     assert open(files[0], "rb").read(4) == b"Obj\x01"
     eng.sql("drop table emptyavro")
-    assert "emptyavro" not in eng.table_paths
+    assert "emptyavro" not in eng.metastore
 
 
 def test_avro_ctas_and_overwrite(eng):

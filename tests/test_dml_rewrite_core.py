@@ -179,7 +179,7 @@ def test_dml_job_budget(spark, dml_eng, stmt, affected, budget):
 
 
 def test_partitioned_merge_upsert_job_budget(spark, dml_eng):
-    path = dml_eng.table_paths["tp"]
+    path = dml_eng.metastore["tp"].path
     updates = spark.createDataFrame(
         [(1, 5, "p1"), (30, 6, "p0")], "k int, v int, p string"
     )

@@ -448,7 +448,7 @@ def test_sql_concatenate_compacts_files(eng_with_copy, spark, tmp_path):
     import os
 
     eng = eng_with_copy
-    path = eng.table_paths["customer_copy"]
+    path = eng.metastore["customer_copy"].path
     # fragment the table into many small files first
     frag = spark.read.parquet(path).repartition(16)
     staging = str(tmp_path / "frag.parquet")
@@ -808,7 +808,7 @@ def test_sql_msck_repair_discovers_new_partition(eng_part_orders, spark):
     import os
 
     eng = eng_part_orders
-    path = eng.table_paths["orders_part"]
+    path = eng.metastore["orders_part"].path
     n_before = eng.sql("MSCK REPAIR TABLE orders_part").collect()[0]
     newdir = os.path.join(path, "o_orderpriority=X-OOB")
     os.makedirs(newdir)

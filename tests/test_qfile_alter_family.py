@@ -12,7 +12,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from hive_2_3_2_spark.engine import Engine, HiveQLUnsupportedError
+from hive_2_3_2_spark.engine import Engine, HiveQLUnsupportedError, TableDesc
 
 
 @pytest.fixture(scope="module")
@@ -58,9 +58,9 @@ def test_q_alter3_rename_partitioned_table(qenv, spark, tmp_path):
         "col1 string, pcol1 string, pcol2 string",
     ).write.partitionBy("pcol1", "pcol2").mode("overwrite").parquet(p)
     from pyspark.sql.types import StringType, StructField, StructType
-    eng.table_schemas["alter3_t"] = StructType(
+    eng.metastore["alter3_t"] = TableDesc(schema=StructType(
         [StructField(c, StringType()) for c in ("col1", "pcol1", "pcol2")]
-    )
+    ))
     eng.register_table("alter3_t", p, ["pcol1", "pcol2"])
     assert eng.sql(
         "select * from alter3_t where pcol1='test_part:' and "
@@ -86,9 +86,9 @@ def test_q_alter_rename_partition(qenv, spark, tmp_path):
         "col1 string, pcol1 string, pcol2 string",
     ).write.partitionBy("pcol1", "pcol2").parquet(p)
     from pyspark.sql.types import StringType, StructField, StructType
-    eng.table_schemas["arp_t"] = StructType(
+    eng.metastore["arp_t"] = TableDesc(schema=StructType(
         [StructField(c, StringType()) for c in ("col1", "pcol1", "pcol2")]
-    )
+    ))
     eng.register_table("arp_t", p, ["pcol1", "pcol2"])
     eng.sql(
         "alter table arp_t partition (pCol1='old_part1:', "
@@ -179,10 +179,10 @@ def test_q_alter_partition_coltype(qenv, spark, tmp_path):
         "key string, value string, dt string, ts string",
     ).write.partitionBy("dt", "ts").parquet(p)
     from pyspark.sql.types import StringType, StructField, StructType
-    eng.table_schemas["apc_t"] = StructType(
+    eng.metastore["apc_t"] = TableDesc(schema=StructType(
         [StructField(c, StringType())
          for c in ("key", "value", "dt", "ts")]
-    )
+    ))
     eng.register_table("apc_t", p, ["dt", "ts"])
     assert eng.sql(
         "select count(*) AS n from apc_t where dt = '100'"

@@ -52,10 +52,10 @@ def test_q_create_with_pk_variants(eng):
             "constraint pk1 primary key (a) disable novalidate)")
     eng.sql("CREATE TABLE cns9 (a STRING, b STRING, "
             "primary key (a, b) disable novalidate rely)")
-    assert eng.table_constraints["cns1"]["pk"]["cols"] == ["a"]
-    assert eng.table_constraints["cns2"]["pk"]["name"] == "pk1"
-    assert eng.table_constraints["cns9"]["pk"]["rely"] is True
-    assert eng.table_constraints["cns9"]["pk"]["cols"] == ["a", "b"]
+    assert eng.metastore["cns1"].constraints["pk"]["cols"] == ["a"]
+    assert eng.metastore["cns2"].constraints["pk"]["name"] == "pk1"
+    assert eng.metastore["cns9"].constraints["pk"]["rely"] is True
+    assert eng.metastore["cns9"].constraints["pk"]["cols"] == ["a", "b"]
     lines = _constraint_lines(eng, "cns2")
     assert any("Primary Key for default.cns2:[a], Constraint Name: pk1"
                in ln for ln in lines)
@@ -89,7 +89,7 @@ def test_q_composite_fk_key_sequence(eng):
     eng.sql("CREATE TABLE cns10 (a STRING, b STRING, "
             "constraint pk10 primary key (a) disable novalidate norely, "
             "foreign key (a, b) references cns9(a, b) disable novalidate)")
-    fk = eng.table_constraints["cns10"]["fks"][0]
+    fk = eng.metastore["cns10"].constraints["fks"][0]
     assert fk["cols"] == ["a", "b"] and fk["ref_cols"] == ["a", "b"]
     lines = _constraint_lines(eng, "cns10")
     assert any("Key Sequence: 2" in ln for ln in lines), lines
@@ -103,16 +103,16 @@ def test_q_alter_add_drop_constraint(eng):
     eng.sql("CREATE TABLE cns2 (a STRING, b STRING, "
             "constraint pk1 primary key (a) disable novalidate)")
     eng.sql("ALTER TABLE cns2 DROP CONSTRAINT pk1")
-    assert eng.table_constraints["cns2"]["pk"] is None
+    assert eng.metastore["cns2"].constraints["pk"] is None
     eng.sql("ALTER TABLE cns2 ADD CONSTRAINT pkt2 primary key (a) "
             "disable novalidate")
-    assert eng.table_constraints["cns2"]["pk"]["name"] == "pkt2"
+    assert eng.metastore["cns2"].constraints["pk"]["name"] == "pkt2"
     with pytest.raises(HiveQLUnsupportedError, match="already has a"):
         eng.sql("ALTER TABLE cns2 ADD CONSTRAINT pkt3 primary key (b) "
                 "disable novalidate")
     eng.sql("ALTER TABLE cns2 ADD CONSTRAINT fkx FOREIGN KEY (b) "
             "REFERENCES cns2(a) DISABLE NOVALIDATE RELY")
-    assert eng.table_constraints["cns2"]["fks"][0]["rely"] is True
+    assert eng.metastore["cns2"].constraints["fks"][0]["rely"] is True
     with pytest.raises(HiveQLUnsupportedError, match="already exists"):
         eng.sql("ALTER TABLE cns2 ADD CONSTRAINT fkx FOREIGN KEY (b) "
                 "REFERENCES cns2(a) DISABLE NOVALIDATE")
@@ -143,6 +143,6 @@ def test_q_constraint_negative_syntax(eng):
 def test_q_drop_table_clears_constraints(eng, spark):
     eng.sql("CREATE TABLE cns1 (a STRING, "
             "primary key (a) disable novalidate)")
-    assert "cns1" in eng.table_constraints
+    assert eng.metastore["cns1"].constraints["pk"]["cols"] == ["a"]
     eng.sql("DROP TABLE cns1")
-    assert "cns1" not in eng.table_constraints
+    assert "cns1" not in eng.metastore

@@ -16,7 +16,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from hive_2_3_2_spark.engine import Engine
+from hive_2_3_2_spark.engine import Engine, TableDesc
 
 from tests.conftest import assert_matches_oracle
 
@@ -215,9 +215,9 @@ def test_q_groupby_ppr_distinct_sum_substr(qenv, spark, tmp_path):
     spark.createDataFrame(
         prows, "key string, value string, ds string"
     ).write.partitionBy("ds").parquet(p)
-    eng.table_schemas["gb2_srcpart"] = StructType(
+    eng.metastore["gb2_srcpart"] = TableDesc(schema=StructType(
         [StructField(c, StringType()) for c in ("key", "value", "ds")]
-    )
+    ))
     eng.register_table("gb2_srcpart", p, ["ds"])
     body = ", ".join(f"('{k}','{v}','{d}')" for k, v, d in prows)
     con.execute(

@@ -16,7 +16,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from hive_2_3_2_spark.engine import Engine
+from hive_2_3_2_spark.engine import Engine, TableDesc
 
 from tests.conftest import assert_matches_oracle
 
@@ -42,10 +42,10 @@ def qenv(spark, tmp_path_factory):
     # partition-type inference would read ds as DATE and hr as INT —
     # a different type lattice than the goldens assume
     from pyspark.sql.types import StringType, StructField, StructType
-    eng.table_schemas["ip_srcpart"] = StructType(
+    eng.metastore["ip_srcpart"] = TableDesc(schema=StructType(
         [StructField(c, StringType()) for c in
          ("key", "value", "ds", "hr")]
-    )
+    ))
     eng.register_table("ip_srcpart", p, ["ds", "hr"])
     body = ", ".join(
         f"('{k}', '{v}', '{ds}', '{hr}')" for k, v, ds, hr in prows
@@ -190,10 +190,10 @@ def test_q_input24_count_over_empty_added_partition(qenv, spark,
     ).write.partitionBy("d").parquet(p)
     from pyspark.sql.types import (IntegerType, StringType, StructField,
                                    StructType)
-    eng.table_schemas["ip_tst24"] = StructType([
+    eng.metastore["ip_tst24"] = TableDesc(schema=StructType([
         StructField("a", IntegerType()), StructField("b", IntegerType()),
         StructField("d", StringType()),
-    ])
+    ]))
     eng.register_table("ip_tst24", p, ["d"])
     eng.sql("alter table ip_tst24 add partition (d='2009-01-01')")
     assert eng.sql(

@@ -19,7 +19,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from hive_2_3_2_spark.engine import Engine
+from hive_2_3_2_spark.engine import Engine, TableDesc
 from hive_2_3_2_spark.plans import explain_str
 
 from tests.conftest import assert_matches_oracle
@@ -48,7 +48,7 @@ def _mk_partitioned(eng, spark, path, schema, part_cols, seed_rows=None):
 
         df = spark.createDataFrame([], schema)
         name = os.path.basename(path)
-        eng.table_schemas[name] = df.schema
+        eng.metastore[name] = TableDesc(schema=df.schema)
 
 
 def test_q_metadataonly1_test1_battery(eng, spark, tmp_path):

@@ -86,8 +86,8 @@ def test_q_orc_merge1_concatenate_partition_files_drop(env):
             "SELECT key, value, pmod(key, 2) as part FROM orcm_src"
         )
     eng.sql("ALTER TABLE orcm1 SET FILEFORMAT ORC")  # adoption no-op
-    assert "orcm1" in eng.table_paths
-    root = eng.table_paths["orcm1"]
+    assert eng.metastore["orcm1"].path is not None
+    root = eng.metastore["orcm1"].path
     before = len(_files(root, "ds=1/part=0"))
     assert before >= 2
     eng.sql("ALTER TABLE orcm1 PARTITION (ds='1', part='0') CONCATENATE")

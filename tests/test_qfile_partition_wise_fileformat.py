@@ -26,7 +26,7 @@ import os
 import duckdb
 import pytest
 
-from hive_2_3_2_spark.engine import Engine, HiveQLUnsupportedError
+from hive_2_3_2_spark.engine import Engine, HiveQLUnsupportedError, TableDesc
 from tests.conftest import assert_matches_oracle
 
 SRC1 = [("238", "val_238"), ("", "val_empty"), ("311", "val_311"),
@@ -44,9 +44,9 @@ def env(spark, tmp_path):
     eng.register_table("src1", p)
     t = os.path.join(str(tmp_path), "ptp")
     os.makedirs(t)
-    eng.table_schemas["ptp"] = spark.createDataFrame(
+    eng.metastore["ptp"] = TableDesc(schema=spark.createDataFrame(
         [], "key string, value string, dt string"
-    ).schema
+    ).schema)
     eng.register_table("ptp", t, ["dt"])
     con = duckdb.connect()
     body = ", ".join(f"('{k}', '{v}')" for k, v in SRC1)
@@ -76,7 +76,7 @@ def test_q_fileformat1_per_partition_selects(env):
     SELECTs over three coexisting formats, plus the range predicate."""
     eng, con = env
     _fill_three_formats(eng)
-    assert eng.partition_formats["ptp"] == {
+    assert eng.metastore["ptp"].part_formats == {
         "dt=101": "orc", "dt=102": "csv"
     }
     for dt in ("100", "101", "102"):
@@ -241,7 +241,7 @@ def test_q_insert_into_keeps_partition_descriptor(env):
             "select * from src1")
     eng.sql("alter table ptp set fileformat textfile")
     eng.sql("insert into table ptp partition(dt=101) select * from src1")
-    assert eng.partition_formats["ptp"]["dt=101"] == "orc"
+    assert eng.metastore["ptp"].part_formats["dt=101"] == "orc"
     assert_matches_oracle(
         eng.sql("select key from ptp where dt=101"),
         con, "SELECT key FROM src1 UNION ALL SELECT key FROM src1",
@@ -277,7 +277,7 @@ def test_q_concatenate_partition_under_its_descriptor(env):
     for i in range(3):
         eng.sql(f"insert {'overwrite' if i == 0 else 'into'} table ptp "
                 "partition(dt=101) select * from src1")
-    pdir = os.path.join(eng.table_paths["ptp"], "dt=101")
+    pdir = os.path.join(eng.metastore["ptp"].path, "dt=101")
     files_before = [f for _r, _d, fs in os.walk(pdir) for f in fs
                     if not f.startswith(("_", "."))]
     assert len(files_before) >= 2
@@ -285,7 +285,7 @@ def test_q_concatenate_partition_under_its_descriptor(env):
     files_after = [f for _r, _d, fs in os.walk(pdir) for f in fs
                    if not f.startswith(("_", "."))]
     assert len(files_after) == 1
-    assert eng.partition_formats["ptp"]["dt=101"] == "orc"
+    assert eng.metastore["ptp"].part_formats["dt=101"] == "orc"
     assert_matches_oracle(
         eng.sql("select key from ptp where dt=101"),
         con,
@@ -312,7 +312,7 @@ def test_q_catalog_table_adoption(spark, tmp_path):
         eng.sql("insert overwrite table pwf_adopt partition(dt=100) "
                 "select * from src1b")
         eng.sql("alter table pwf_adopt set fileformat orc")
-        assert "pwf_adopt" in eng.table_paths
+        assert eng.metastore["pwf_adopt"].path is not None
         eng.sql("insert overwrite table pwf_adopt partition(dt=101) "
                 "select * from src1b")
         got = {
@@ -378,7 +378,7 @@ def test_q_set_serde_and_touch(env, spark):
         eng.sql("create table serde_cat9 (a int) stored as orc")
         eng.sql("alter table serde_cat9 set serde "
                 "'org.apache.hadoop.hive.ql.io.orc.OrcSerde'")
-        assert eng.table_props["serde_cat9"]["serialization.lib"] \
+        assert eng.metastore["serde_cat9"].props["serialization.lib"] \
             .endswith("OrcSerde")
     finally:
         spark.sql("DROP TABLE IF EXISTS serde_cat9")

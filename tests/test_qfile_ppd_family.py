@@ -21,7 +21,7 @@ import shutil
 import duckdb
 import pytest
 
-from hive_2_3_2_spark.engine import Engine
+from hive_2_3_2_spark.engine import Engine, TableDesc
 
 from tests.conftest import assert_matches_oracle
 
@@ -330,10 +330,10 @@ def test_q_ppd_union_view_partitioned_view(qenv, spark, tmp_path):
             "ds"
         ).parquet(p)
         from pyspark.sql.types import StringType, StructField, StructType
-        eng.table_schemas[name] = StructType(
+        eng.metastore[name] = TableDesc(schema=StructType(
             [StructField(f.split()[0], StringType())
              for f in schema.split(", ")]
-        )
+        ))
         eng.register_table(name, p, ["ds"])
     eng.sql("drop view if exists puv_t1")
     eng.sql(

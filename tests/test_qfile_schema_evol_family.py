@@ -179,7 +179,7 @@ def test_q_evol_int_widening_chain_and_numeric_to_string(eng, tmp_path):
     # widening stays the zero-epoch fast path
     _mk(eng, tmp_path, "evol_widen", [(1, 5)], "k int, v int")
     eng.sql("alter table evol_widen change column v v bigint")
-    assert "evol_widen" not in eng.schema_epochs
+    assert eng.metastore["evol_widen"].epochs == []
     assert eng.sql("select v from evol_widen").collect()[0].v == 5
     con.close()
 
@@ -204,7 +204,7 @@ def test_q_evol_update_rewrites_collapse_epochs(eng, tmp_path):
     eng.sql(
         "alter table evol_upd replace columns (k int, v double)"
     )
-    assert "evol_upd" in eng.schema_epochs
+    assert eng.metastore["evol_upd"].epochs
     assert {r.v for r in eng.sql("select v from evol_upd").collect()} \
         == {10.5, 20.25}
     eng.sql("update evol_upd set v = v * 2")
@@ -212,4 +212,4 @@ def test_q_evol_update_rewrites_collapse_epochs(eng, tmp_path):
         == {21.0, 40.5}
     # the rewrite replaced every pre-alter file → epochs drained
     eng.sql("select count(*) from evol_upd").collect()
-    assert "evol_upd" not in eng.schema_epochs
+    assert eng.metastore["evol_upd"].epochs == []

@@ -111,7 +111,7 @@ def test_q_regex_columns_still_work(qenv):
 @pytest.fixture(scope="module", autouse=True)
 def _plain_view(spark, qenv):
     eng, _ = qenv
-    eng.tables[
-        [k for k in eng.table_paths if k.startswith("spec_")][0]
-    ].createOrReplaceTempView("cbo_plain_view")
+    eng.metastore[
+        [k for k in eng.metastore if k.startswith("spec_")][0]
+    ].frame.createOrReplaceTempView("cbo_plain_view")
     yield

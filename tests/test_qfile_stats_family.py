@@ -28,7 +28,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from hive_2_3_2_spark.engine import Engine
+from hive_2_3_2_spark.engine import Engine, TableDesc
 from hive_2_3_2_spark.plans import explain_str
 
 from tests.conftest import assert_matches_oracle
@@ -473,9 +473,9 @@ def test_q_limit_partition_metadataonly_distinct(qenv, spark, tmp_path):
     spark.createDataFrame(
         rows, "key string, ds string, hr string"
     ).write.partitionBy("ds", "hr").parquet(p)
-    eng.table_schemas["lpm_t"] = StructType(
+    eng.metastore["lpm_t"] = TableDesc(schema=StructType(
         [StructField(c, StringType()) for c in ("key", "ds", "hr")]
-    )
+    ))
     eng.register_table("lpm_t", p, ["ds", "hr"])
     df = eng.sql("select distinct hr from lpm_t")
     plan = explain_str(df)

@@ -203,7 +203,7 @@ def test_q_temp_table_names_case_and_qualifier(env):
     assert eng.sql(
         "select c1 from default.temp_table_names").count() == 1
     eng.sql("drop table Default.TEMP_TABLE_names")
-    assert "temp_table_names" not in eng.table_paths
+    assert "temp_table_names" not in eng.metastore
 
 
 def test_q_temp_table_precedence_catalog_shadow(spark, tmp_path):

@@ -227,10 +227,7 @@ def test_q_alter_set_fileformat_dispositions(qenv, spark):
         # catalog table — drop it (and the module-scoped engine's
         # registration) so later tests see the catalog state
         spark.catalog.dropTempView("u22_dst")
-        for store in (eng.table_paths, eng.tables, eng.table_partitions,
-                      eng.table_format, eng.partition_formats,
-                      eng.table_schemas):
-            store.pop("u22_dst", None)
+        eng.metastore.pop("u22_dst", None)
 
 
 def _fileformat_dispositions(eng):
@@ -242,7 +239,7 @@ def _fileformat_dispositions(eng):
             "SEQUENCEFILE"
         )
     eng.sql("ALTER TABLE u22_dst SET FILEFORMAT ORC")
-    assert eng.table_format.get("u22_dst") == "orc"
+    assert eng.metastore["u22_dst"].format == "orc"
     with pytest.raises(HiveQLUnsupportedError, match="INSERT OVERWRITE"):
         eng.sql("ALTER TABLE u22_dst PARTITION (ds='1') SET FILEFORMAT ORC")
     eng.sql("ALTER TABLE u22_dst SET FILEFORMAT PARQUET")

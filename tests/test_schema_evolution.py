@@ -84,7 +84,10 @@ def test_add_columns_nested_type_parses(eng):
         "ALTER TABLE evo ADD COLUMNS "
         "(meta struct<a:int,b:string>, xs array<struct<p:int,q:double>>)"
     )
-    fields = {f.name: f.dataType.simpleString() for f in e.tables["evo"].schema}
+    fields = {
+        f.name: f.dataType.simpleString()
+        for f in e.metastore["evo"].frame.schema
+    }
     assert fields["meta"] == "struct<a:int,b:string>"
     assert fields["xs"] == "array<struct<p:int,q:double>>"
 
@@ -99,20 +102,20 @@ def test_change_column_rename_orphans_data(eng):
     e.sql("ALTER TABLE evo CHANGE COLUMN tag label STRING")
     vals = [r.label for r in e.sql("SELECT label FROM evo").collect()]
     assert vals == [None] * len(vals)
-    names = [f.name for f in e.tables["evo"].schema]
+    names = [f.name for f in e.metastore["evo"].frame.schema]
     assert "label" in names and "tag" not in names
 
 
 def test_change_column_widen_and_reorder(eng):
     e, _ = eng
     e.sql("ALTER TABLE evo CHANGE v v BIGINT")
-    assert dict(e.tables["evo"].dtypes)["v"] == "bigint"
+    assert dict(e.metastore["evo"].frame.dtypes)["v"] == "bigint"
     # values survive the widening
     assert {r.v for r in e.sql("SELECT v FROM evo").collect()} == {0, 2, 4, 6}
     e.sql("ALTER TABLE evo CHANGE v v BIGINT FIRST")
-    assert e.tables["evo"].columns[0] == "v"
+    assert e.metastore["evo"].frame.columns[0] == "v"
     e.sql("ALTER TABLE evo CHANGE v v BIGINT AFTER k")
-    assert e.tables["evo"].columns == ["k", "v"]
+    assert e.metastore["evo"].frame.columns == ["k", "v"]
 
 
 def test_change_column_incompatible_type_typed_error(eng):
@@ -138,13 +141,13 @@ def test_change_partition_column_typed_error(spark, tmp_path):
         e.sql("ALTER TABLE evop REPLACE COLUMNS (k BIGINT, p STRING)")
     # ADD COLUMNS goes before the partition columns (Hive order)
     e.sql("ALTER TABLE evop ADD COLUMNS (tag STRING)")
-    assert e.tables["evop"].columns == ["k", "tag", "p"]
+    assert e.metastore["evop"].frame.columns == ["k", "tag", "p"]
 
 
 def test_replace_columns_drops_from_reads(eng):
     e, _ = eng
     e.sql("ALTER TABLE evo REPLACE COLUMNS (k BIGINT)")
-    assert e.tables["evo"].columns == ["k"]
+    assert e.metastore["evo"].frame.columns == ["k"]
     assert e.sql("SELECT * FROM evo").columns == ["k"]
     with pytest.raises(HiveQLUnsupportedError, match="twice"):
         e.sql("ALTER TABLE evo REPLACE COLUMNS (k BIGINT, k BIGINT)")
@@ -230,7 +233,7 @@ def test_drop_table_external_semantics(spark, eng):
     e, path = eng
     e.sql("ALTER TABLE evo SET TBLPROPERTIES ('x'='1')")
     e.sql("DROP TABLE evo")
-    assert "evo" not in e.table_paths and "evo" not in e.table_props
+    assert "evo" not in e.metastore
     assert os.path.exists(path)  # EXTERNAL: files stay
     # no longer registered → the statement falls through to spark.sql,
     # which reports the missing relation (typed AnalysisException)
@@ -343,7 +346,7 @@ def test_drop_last_partition_keeps_table_queryable(spark, tmp_path):
     e.register_table("lp", path, ["p"])
     e.sql("ALTER TABLE lp DROP PARTITION (p='p0')")
     assert e.sql("SELECT COUNT(*) AS n FROM lp").collect()[0].n == 0
-    assert e.tables["lp"].columns == ["k", "p"]
+    assert e.metastore["lp"].frame.columns == ["k", "p"]
     # still INSERTable; data comes back
     e.sql("INSERT INTO lp VALUES (5, 'p1')")
     got = e.sql("SELECT k, p FROM lp").collect()
@@ -433,14 +436,13 @@ def test_rename_migrates_overlay_props_and_stats(spark, eng, tmp_path):
     e.sql("ANALYZE TABLE evo COMPUTE STATISTICS FOR COLUMNS v")
     e.sql("ALTER TABLE evo RENAME TO evo2")
     # the declared (evolved) column survives the rename
-    assert "tag" in e.tables["evo2"].columns
+    assert "tag" in e.metastore["evo2"].frame.columns
     assert e.sql("SELECT tag FROM evo2").collect()[0].tag is None
     # TBLPROPERTIES and column stats travel with the table
-    assert e.table_props["evo2"]["owner"] == "etl"
+    assert e.metastore["evo2"].props["owner"] == "etl"
     assert _described(e, "evo2", "v")["max"] == "6"
     # nothing orphaned under the old key
-    assert "evo" not in e.table_schemas
-    assert "evo" not in e.table_props
+    assert "evo" not in e.metastore
     e.register_table("evo", path)  # the same files under the old name
     assert _stats_values(_described(e, "evo", "v")) == [""] * 6
     # a future table registered under the old name must NOT inherit
@@ -448,7 +450,7 @@ def test_rename_migrates_overlay_props_and_stats(spark, eng, tmp_path):
     p2 = str(tmp_path / "fresh_evo")
     spark.range(3).selectExpr("id AS a", "id + 1 AS b").write.parquet(p2)
     e.register_table("evo", p2)
-    assert sorted(e.tables["evo"].columns) == ["a", "b"]
+    assert sorted(e.metastore["evo"].frame.columns) == ["a", "b"]
 
 
 def test_drop_table_drops_stale_dependent_view(spark, eng):

@@ -250,7 +250,7 @@ def test_script_transcript_round4_surface(spark, tmp_path):
     assert not os.path.exists(os.path.join(other, "p=p9"))
     assert not os.path.exists(os.path.join(other, "p=p2"))
     # tblproperties + column stats persisted on the engine
-    assert eng.table_props["r4a"]["owner"] == "cli"
+    assert eng.metastore["r4a"].props["owner"] == "cli"
     k_stats = {
         r.info_name: r.info_value
         for r in eng.sql("DESCRIBE r4a k").collect()

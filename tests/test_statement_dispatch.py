@@ -25,8 +25,12 @@ These checks read ``engine.py``'s syntax tree only; no Spark session:
   function of the package calls ``_store_cast``.
 - Only ``_fresh_stats`` decides whether gathered stats may be served:
   no other function reads a stats record's ``"fp"`` or the session's
-  verified fingerprint in ``_fp_memo``, and the five per-kind stats
-  stores it replaced are gone.
+  verified fingerprint (a table descriptor's ``fp``), and the five
+  per-kind stats stores it replaced are gone.
+- One descriptor per table and one per view: ``Engine.__init__``
+  assigns no per-table dict other than ``metastore``, ``views`` and
+  ``_catalog_schema_memo``, and the per-field stores they replaced are
+  named nowhere in ``engine.py``.
 """
 
 from __future__ import annotations
@@ -242,26 +246,25 @@ REMOVED_STATS_STORES = {
 
 def _fingerprint_reads(fn: ast.FunctionDef) -> list[int]:
     """Lines of ``fn`` that read a stats record's ``"fp"`` key
-    (``rec["fp"]``, ``rec.get("fp")``, ``"fp" in rec``) or the session
-    memo (``self._fp_memo[k]``, ``self._fp_memo.get(k)``)."""
+    (``rec["fp"]``, ``rec.get("fp")``, ``"fp" in rec``) or the session's
+    verified fingerprint (``desc.fp``)."""
 
     def is_fp(node: ast.AST) -> bool:
         return isinstance(node, ast.Constant) and node.value == "fp"
 
-    def is_memo(node: ast.AST) -> bool:
-        return isinstance(node, ast.Attribute) and node.attr == "_fp_memo"
-
     lines = []
     for node in ast.walk(fn):
         if isinstance(node, ast.Subscript) and isinstance(node.ctx, ast.Load):
-            hit = is_fp(node.slice) or is_memo(node.value)
+            hit = is_fp(node.slice)
+        elif isinstance(node, ast.Attribute):
+            hit = node.attr == "fp" and isinstance(node.ctx, ast.Load)
         elif isinstance(node, ast.Call) and isinstance(
             node.func, ast.Attribute
         ):
             hit = (
                 node.func.attr in ("get", "pop", "setdefault")
                 and bool(node.args) and is_fp(node.args[0])
-            ) or (node.func.attr == "get" and is_memo(node.func.value))
+            )
         elif isinstance(node, ast.Compare):
             hit = is_fp(node.left) and isinstance(
                 node.ops[0], (ast.In, ast.NotIn)
@@ -287,3 +290,47 @@ def test_only_fresh_stats_reads_a_stats_fingerprint():
         for node in ast.walk(TREE)
     }
     assert names & REMOVED_STATS_STORES == set()
+
+
+#: the per-field stores one TableDesc / ViewDesc per name replaced
+REMOVED_TABLE_STORES = {
+    "tables", "table_paths", "table_partitions", "table_schemas",
+    "schema_epochs", "table_format", "partition_formats", "table_props",
+    "table_constraints", "table_stats", "_fp_memo", "temp_tables",
+    "temp_shadowed", "view_partitions", "view_aliases",
+}
+#: ``Engine.__init__`` dicts keyed by something other than a table:
+#: conf keys, resource kinds, macro/function names, database names
+SESSION_DICTS = {
+    "hiveconf", "resources", "macros", "functions", "ptf_aliases",
+    "fn_aliases", "db_props",
+}
+
+
+def test_one_descriptor_per_table_and_view():
+    dicts = set()
+    for node in ast.walk(METHODS["__init__"]):
+        if isinstance(node, ast.AnnAssign):
+            target, value = node.target, node.value
+            is_dict = isinstance(value, ast.Dict) or (
+                isinstance(node.annotation, ast.Subscript)
+                and getattr(node.annotation.value, "id", None) == "dict"
+            )
+        elif isinstance(node, ast.Assign) and len(node.targets) == 1:
+            target, value = node.targets[0], node.value
+            is_dict = isinstance(value, ast.Dict)
+        else:
+            continue
+        if (
+            is_dict
+            and isinstance(target, ast.Attribute)
+            and getattr(target.value, "id", None) == "self"
+        ):
+            dicts.add(target.attr)
+    assert dicts - SESSION_DICTS == {
+        "metastore", "views", "_catalog_schema_memo"
+    }
+    named = {
+        node.attr for node in ast.walk(TREE) if isinstance(node, ast.Attribute)
+    }
+    assert named & REMOVED_TABLE_STORES == set()

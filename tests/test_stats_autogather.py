@@ -334,10 +334,10 @@ def test_column_autogather_rides_overwrite(eng, spark, tmp_path):
 def test_gathering_writes_add_no_listing_walk(
     eng, spark, tmp_path, monkeypatch
 ):
-    """The stats path of a gathering INSERT lists the table once and
-    each written partition once: an unpartitioned INSERT INTO walks its
-    staging dir and the table; a static INSERT OVERWRITE partition
-    walks the staged partition, the written partition and the table."""
+    """The stats path of a gathering INSERT lists the table once: an
+    unpartitioned INSERT INTO walks its staging dir and the table; a
+    static INSERT OVERWRITE partition walks the staged partition and
+    the table, whose one walk also sizes the written partition."""
     import os
 
     p = str(tmp_path / "wk")
@@ -361,10 +361,62 @@ def test_gathering_writes_add_no_listing_walk(
     assert len(walked) == 2 and walked[-1] == "wk", walked
     walked.clear()
     eng.sql("INSERT OVERWRITE TABLE wkp PARTITION (p='y') SELECT 7")
-    assert len(walked) == 3, walked
-    assert sorted(walked[1:]) == ["wkp", os.path.join("wkp", "p=y")], walked
+    assert len(walked) == 2 and walked[-1] == "wkp", walked
     monkeypatch.undo()
     df = eng.sql("SELECT count(*) AS c FROM wk")
     assert _answered(df) and df.collect()[0].c == 2
     df = eng.sql("SELECT count(*) AS c FROM wkp")
     assert _answered(df) and df.collect()[0].c == 2
+
+
+def test_stats_statements_walk_the_table_once(
+    eng, spark, tmp_path, monkeypatch
+):
+    """One listing walk per stats statement: the table walk returns
+    each partition's size and file count, so no partition is walked
+    again to size it. Counted on ``os.walk`` itself; the writer's
+    staging-directory walks are not stats walks. ANALYZE without NOSCAN
+    still reads each partition's footers (one walk per partition)."""
+    import os
+
+    q = str(tmp_path / "pt")
+    spark.createDataFrame([(1, "x"), (2, "y")], "k int, p string") \
+        .write.partitionBy("p").parquet(q)
+    eng.register_table("pt", q, ["p"])
+    eng.sql("ANALYZE TABLE pt COMPUTE STATISTICS")
+    walked = []
+    real = os.walk
+
+    def counting(top, *args, **kwargs):
+        rel = os.path.relpath(top, tmp_path)
+        if "__staging_" not in rel:
+            walked.append(rel)
+        return real(top, *args, **kwargs)
+
+    monkeypatch.setattr(os, "walk", counting)
+    eng.sql("INSERT OVERWRITE TABLE pt PARTITION (p='y') SELECT 7")
+    assert walked == ["pt"]
+    walked.clear()
+    eng.sql("INSERT INTO pt PARTITION (p='x') VALUES (3)")
+    assert walked == ["pt"]
+    walked.clear()
+    eng.sql("ANALYZE TABLE pt PARTITION(p) COMPUTE STATISTICS")
+    assert walked == ["pt"] + [os.path.join("pt", r) for r in ("p=x", "p=y")]
+    walked.clear()
+    rows = eng.sql(
+        "ANALYZE TABLE pt PARTITION(p) COMPUTE STATISTICS NOSCAN"
+    ).collect()
+    assert walked == ["pt"]
+    monkeypatch.undo()
+    sizes = {
+        rel: sum(
+            os.path.getsize(os.path.join(r, f))
+            for r, _d, fs in os.walk(os.path.join(q, rel)) for f in fs
+            if not f.startswith(("_", "."))
+        )
+        for rel in ("p=x", "p=y")
+    }
+    assert {(r.partition, r.num_files, r.total_size_bytes) for r in rows} \
+        == {("p=x", 2, sizes["p=x"]), ("p=y", 1, sizes["p=y"])}
+    df = eng.sql("SELECT count(*) AS c FROM pt")
+    assert _answered(df) and df.collect()[0].c == 3

@@ -52,9 +52,9 @@ def _counting_listings(eng):
     calls = []
     real = Engine._fingerprint_and_size
 
-    def counting(path):
+    def counting(path, *args):
         calls.append(path)
-        return real(path)
+        return real(path, *args)
 
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(Engine, "_fingerprint_and_size", staticmethod(counting))
@@ -168,7 +168,8 @@ def test_one_listing_per_table_per_session(senv):
             assert _is_stats_answered(df)
         assert len(calls) == 0, calls  # memoized at ANALYZE time
         # a fresh engine (new session) with carried-over state would pay 1
-        eng._fp_memo.clear()
+        for desc in eng.metastore.values():
+            desc.fp = None
         for _ in range(5):
             df = eng.sql("SELECT count(*) AS c FROM stats_t")
             assert _is_stats_answered(df)
@@ -213,7 +214,7 @@ def test_rename_carries_stats_drop_clears_them(senv):
     assert _described(eng, "stats_t", "n")["max"] == ""
     eng.sql("DROP TABLE stats_t")
     eng.sql("DROP TABLE stats_r")
-    assert "stats_r" not in eng._fp_memo
+    assert "stats_r" not in eng.metastore
     eng.register_table("stats_r", p)
     df = eng.sql("SELECT count(*) AS c, max(n) AS mx FROM stats_r")
     assert not _is_stats_answered(df)
